@@ -171,7 +171,7 @@ def compile_map_constraint(
 
     vcond = violation_cond if violation_cond is not None else full_unexpected
 
-    def violations(frame: DataFrame) -> DataFrame:
+    def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
         return frame.filter(vcond)
 
     return CompiledConstraint(
@@ -733,7 +733,7 @@ def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: boo
             unexpected_percent=(100.0 * unexpected_n / nonnull) if nonnull else None,
         )
 
-    def violations(frame: DataFrame) -> DataFrame:
+    def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
         return _diff_frame(frame).filter(F.col("__bad")).drop("__bad")
 
     return CompiledConstraint(

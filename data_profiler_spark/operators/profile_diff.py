@@ -41,6 +41,10 @@ from pyspark.sql import types as T
 
 from data_profiler_spark.functions import stats
 from data_profiler_spark.operators.profile import TableProfile, profiles_to_rows
+from data_profiler_spark.sources.results_store import (
+    arrow_append_rows,
+    read_parquet_or_empty,
+)
 
 PROFILE_SCHEMA = T.StructType(
     [
@@ -84,14 +88,7 @@ class ProfileStore:
         failure — permissions, corrupt files, wrong format — re-raises,
         because swallowing it would make a drift gate built on this store
         pass vacuously against a mistyped path."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.schema(PROFILE_SCHEMA).parquet(self.path)
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                return self.spark.createDataFrame([], PROFILE_SCHEMA)
-            raise
+        return read_parquet_or_empty(self.spark, self.path, PROFILE_SCHEMA)
 
     def append_profiles(
         self,
@@ -124,8 +121,6 @@ class ProfileStore:
         # driver-side pyarrow write (r7): sketch rows are bounded by
         # columns x groups and already driver-resident; skip the Spark
         # write job's ~0.5 s scheduling/commit for the same part file
-        from data_profiler_spark.sources.results_store import arrow_append_rows
-
         if arrow_append_rows(self.path, tuples, PROFILE_SCHEMA, mode):
             return
         df = self.spark.createDataFrame(tuples, PROFILE_SCHEMA)

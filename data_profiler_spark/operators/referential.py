@@ -101,7 +101,7 @@ def c_referential(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
         constraint=constraint,
         agg_terms=terms,
         verdict_fn=verdict,
-        violations_fn=_orphans,
+        violations_fn=lambda frame, group_by: _orphans(frame),
         post_pass_fn=post_pass,
         post_pass_needs_metrics=False,  # anti-join needs no pass-1 metrics
     )

@@ -136,9 +136,12 @@ def _compile_unique(constraint: Constraint, df: DataFrame, key_cols: list[str]) 
             ),
         )
 
-    def violations(frame: DataFrame) -> DataFrame:
-        dups = duplicate_key_counts(frame.where(key_nonnull), key_cols)
-        return frame.join(_maybe_b(dups.select(*key_cols)), on=key_cols, how="left_semi")
+    def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
+        # the rows post_pass counts: with scope="group", a key repeated only
+        # across groups is not a violation
+        keys = group_by + key_cols if scope == "group" else key_cols
+        dups = duplicate_key_counts(frame.where(key_nonnull), keys)
+        return frame.join(_maybe_b(dups.select(*keys)), on=keys, how="left_semi")
 
     return CompiledConstraint(
         constraint=constraint,

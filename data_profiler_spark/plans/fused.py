@@ -27,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_profiler_spark.core.identity import fingerprint
@@ -72,7 +72,7 @@ class CompiledConstraint:
     constraint: Constraint
     agg_terms: list[AggTerm] = field(default_factory=list)
     verdict_fn: Callable[[dict[str, Any], dict[str, Any]], ConstraintResult] | None = None
-    violations_fn: Callable[[DataFrame], DataFrame] | None = None
+    violations_fn: Callable[[DataFrame, list[str]], DataFrame] | None = None
     value_column: str | None = None
     post_pass_fn: (
         Callable[[DataFrame, list[str], list[tuple[GroupKey, dict[str, Any]]]],
@@ -134,16 +134,27 @@ def run_fused_pass(
     return out
 
 
-def deterministic_sample(df: DataFrame, limit: int) -> DataFrame:
+def deterministic_sample(
+    df: DataFrame, limit: int, group_by: list[str] | None = None
+) -> DataFrame:
     """Stable violation sampling: order by a hash of the whole row, then limit.
 
     Replaces the reference's global ``row_number().over(Window.orderBy(lit(1)))``
     (map_metric_provider.py:2373 — a single-partition shuffle) with a
-    deterministic hash order; resumed runs emit byte-identical samples."""
+    deterministic hash order; resumed runs emit byte-identical samples.
+
+    With ``group_by`` the cap is ``limit`` rows per group, so a group's
+    sample does not depend on which other groups share the frame. The
+    ``row_number()`` filter plans as a partial ``WindowGroupLimit`` before
+    the shuffle and a final one after it, so at most ``limit`` rows per
+    group and input partition cross the exchange."""
     cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in df.columns]
+    ordered = df.withColumn("__ord", F.sha2(F.concat_ws("\x01", *cols), 256))
+    if not group_by:
+        return ordered.orderBy("__ord").limit(limit).drop("__ord")
+    w = Window.partitionBy(*group_by).orderBy("__ord")
     return (
-        df.withColumn("__ord", F.sha2(F.concat_ws("\x01", *cols), 256))
-        .orderBy("__ord")
-        .limit(limit)
-        .drop("__ord")
+        ordered.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= limit)
+        .drop("__ord", "__rn")
     )

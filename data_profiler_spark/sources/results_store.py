@@ -18,7 +18,10 @@ re-runs that partition.
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import time
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +29,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DONE_SENTINEL = "__partition_done__"
+
+
+def _pa_type(dt: T.DataType):
+    import pyarrow as pa
+
+    if isinstance(dt, T.StringType):
+        return pa.string()
+    if isinstance(dt, T.LongType):
+        return pa.int64()
+    if isinstance(dt, T.IntegerType):
+        return pa.int32()
+    if isinstance(dt, T.BooleanType):
+        return pa.bool_()
+    if isinstance(dt, T.DoubleType):
+        return pa.float64()
+    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.DoubleType):
+        return pa.list_(pa.float64())
+    raise TypeError(dt.simpleString())
 
 
 def arrow_append_rows(
@@ -40,53 +61,64 @@ def arrow_append_rows(
     scheduling/commit per append; writing the part file directly with
     pyarrow is milliseconds and reads back identically (plain parquet,
     flat types + array<double>). Returns False when the schema has a type
-    this mapping doesn't cover, so callers fall back to the Spark write.
-    Only for driver-resident metadata — never for data-scale rows."""
+    this mapping doesn't cover, so callers fall back to the Spark write;
+    any other failure raises. Only for driver-resident metadata — never
+    for data-scale rows.
+
+    Crash safety: the part file is written under a ``.``-prefixed name,
+    which Spark's file listing skips, and renamed into place, so a crash
+    mid-write leaves no partial part file. An overwrite deletes the old
+    parts only after the new one is in place: a crash in between leaves
+    the old parts next to the new one, never an empty store."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     try:
-        import os
-        import shutil
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def _pa_type(dt: T.DataType):
-            if isinstance(dt, T.StringType):
-                return pa.string()
-            if isinstance(dt, T.LongType):
-                return pa.int64()
-            if isinstance(dt, T.IntegerType):
-                return pa.int32()
-            if isinstance(dt, T.BooleanType):
-                return pa.bool_()
-            if isinstance(dt, T.DoubleType):
-                return pa.float64()
-            if isinstance(dt, T.ArrayType) and isinstance(
-                dt.elementType, T.DoubleType
-            ):
-                return pa.list_(pa.float64())
-            raise TypeError(dt.simpleString())
-
         pa_schema = pa.schema(
             [(f.name, _pa_type(f.dataType)) for f in schema.fields]
         )
-        cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
-        table = pa.Table.from_arrays(
-            [
-                pa.array(list(c), type=t.type)
-                for c, t in zip(cols, pa_schema)
-            ],
-            schema=pa_schema,
-        )
-        if mode == "overwrite" and os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(
-            table, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet")
-        )
-        return True
-    except Exception:
+    except TypeError:
         return False
+    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=t.type) for c, t in zip(cols, pa_schema)],
+        schema=pa_schema,
+    )
+    os.makedirs(path, exist_ok=True)
+    old = os.listdir(path) if mode == "overwrite" else []
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    for entry in old:
+        p = os.path.join(path, entry)
+        if os.path.isdir(p):
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
+    return True
+
+
+def read_parquet_or_empty(
+    spark: SparkSession, path: str, schema: "T.StructType"
+) -> DataFrame:
+    """The parquet store at ``path``, or an empty frame when the path does
+    not exist yet (a store's first run). Any other failure raises: a store
+    that cannot be read must not look empty, or a resume would redo every
+    partition and append duplicate verdicts."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
+            return spark.createDataFrame([], schema)
+        raise
 
 
 RESULT_SCHEMA = T.StructType(
@@ -118,10 +150,7 @@ class ResultsStore:
 
     # ------------------------------------------------------------------
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(RESULT_SCHEMA).parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+        return read_parquet_or_empty(self.spark, self.path, RESULT_SCHEMA)
 
     def append_rows(self, rows: list[dict[str, Any]]) -> None:
         if not rows:

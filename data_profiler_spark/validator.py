@@ -283,7 +283,7 @@ class Validator:
             return
 
         def counts_for(c: CompiledConstraint):
-            vdf = c.violations_fn(self.df).select(
+            vdf = c.violations_fn(self.df, group_by).select(
                 *group_by, F.col(c.value_column).alias("__val")
             )
             counted = vdf.groupBy(*(group_by + ["__val"])).agg(
@@ -365,13 +365,16 @@ class Validator:
         limit: int = 20,
         only_failed_of: SuiteResult | None = None,
         key_columns: list[str] | None = None,
+        group_by: list[str] | None = None,
     ) -> dict[str, DataFrame]:
         """Violating rows per constraint id (deterministic sample).
 
         When ``only_failed_of`` is given, skips constraints that passed in
         every group (the reference's early exit). ``key_columns`` projects
         the sample down (e.g. the north-rule violation key
-        (repo, partition_id, content sha))."""
+        (repo, partition_id, content sha)); it must keep the ``group_by``
+        columns. ``group_by`` caps the sample at ``limit`` rows per group
+        instead of per constraint."""
         failed_ids: set[str] | None = None
         if only_failed_of is not None:
             failed_ids = {
@@ -383,10 +386,10 @@ class Validator:
                 continue
             if failed_ids is not None and c.constraint.id not in failed_ids:
                 continue
-            v = c.violations_fn(self.df)
+            v = c.violations_fn(self.df, group_by or [])
             if key_columns:
                 v = v.select(*key_columns)
-            out[c.constraint.id] = deterministic_sample(v, limit)
+            out[c.constraint.id] = deterministic_sample(v, limit, group_by)
         return out
 
     def prepare_violation_samples(
@@ -413,13 +416,15 @@ class Validator:
         only_failed_of: SuiteResult | None = None,
         key_columns: list[str] | None = None,
         prepared: dict[str, DataFrame] | None = None,
+        group_by: list[str] | None = None,
     ) -> DataFrame | None:
         """Every constraint's violation sample in ONE Spark job.
 
         ``violation_samples`` returns one DataFrame per failed constraint —
         one driver job round-trip each. When ``key_columns`` pins a shared
         schema, the per-constraint bounded samples (each keeps its own
-        deterministic orderBy+limit) can be tagged with their constraint_id
+        deterministic cap, per group with ``group_by``, which ``prepared``
+        plans do not take) can be tagged with their constraint_id
         and unioned, so the scheduler runs all sample branches inside one
         job: K driver round-trips collapse to 1 (a fixed serial cost that
         caps scaling efficiency at high parallelism; at 100 TB it is also
@@ -448,7 +453,7 @@ class Validator:
         else:
             samples = self.violation_samples(
                 suite, limit=limit, only_failed_of=only_failed_of,
-                key_columns=key_columns,
+                key_columns=key_columns, group_by=group_by,
             )
         if not samples:
             return None
@@ -456,24 +461,11 @@ class Validator:
             sdf.select(F.lit(cid).alias("constraint_id"), *key_columns)
             for cid, sdf in samples.items()
         ]
-        union = _reduce(lambda a, b: a.unionByName(b), parts)
-        # Each union branch re-scans the source with its own filter. When
-        # the caller has NOT already cached it (the checkpoint runner
-        # persists its chunk; ad-hoc validators don't) and enough branches
-        # exist to pay for a cache build, persist for the duration of ONE
-        # eager materialization of the (bounded, K x limit rows) union,
-        # then unpersist — the caller's collect() reads the materialized
-        # blocks, and the source parquet is scanned once, not K times
-        # (VERDICT r4 #6).
-        from pyspark import StorageLevel
-
-        if len(parts) > 2 and self.df.storageLevel == StorageLevel.NONE:
-            self.df.persist()
-            try:
-                union = union.localCheckpoint(eager=True)
-            finally:
-                self.df.unpersist()
-        return union
+        # Each branch rescans the source, reading only the columns its filter
+        # and the key columns need; caching the whole source for them would
+        # hold every column (a checkpoint run validates all pending
+        # partitions in one frame).
+        return _reduce(lambda a, b: a.unionByName(b), parts)
 
     # ------------------------------------------------------------------
     def head(self, n: int = 5):

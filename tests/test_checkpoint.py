@@ -121,10 +121,10 @@ def test_violation_samples_unioned_matches_per_constraint(spark, code_tables, su
 
 
 def test_violation_union_shares_one_cached_scan(spark, code_tables, suite):
-    """VERDICT r4 #6: the K-branch union must not re-scan the source K
-    times. Pre-persisted source -> every branch feeds from
-    InMemoryTableScan (plan check); non-persisted source -> the method
-    auto-persists for one eager materialization and unpersists after."""
+    """VERDICT r4 #6: a pre-persisted source feeds every branch of the
+    K-branch union from InMemoryTableScan (plan check). A non-persisted
+    source is left uncached (each branch rescans only the columns it
+    reads) and gives the same rows."""
     from pyspark import StorageLevel
     from data_profiler_spark.validator import Validator
 
@@ -149,7 +149,7 @@ def test_violation_union_shares_one_cached_scan(spark, code_tables, suite):
     finally:
         dfp_cached.unpersist()
 
-    # non-persisted source: auto-persist path, unpersisted after the call
+    # non-persisted source: not cached by the call
     v2 = Validator(dfp, tables={"commits": commits})
     res2 = v2.validate(suite, group_by=["partition_id"])
     uni2 = v2.violation_samples_unioned(
@@ -277,3 +277,206 @@ def test_arrow_append_matches_spark_write(spark, tmp_path):
     got = spark.read.parquet(str(tmp_path / "pa2")).collect()[0]
     assert got["quantiles"] == [0.1, 0.9] and got["hist_bins"] is None
     assert got["top_k_json"] == '{"a": 3}'
+
+
+def _many_violations(spark):
+    """16 partitions of 30 rows, 10 of them with a NULL ``content``: more
+    violations per chunk than any violation_limit below."""
+    rows = [(i, i % 16, None if i % 3 == 0 else f"c{i}") for i in range(480)]
+    return spark.createDataFrame(rows, "id long, p int, content string")
+
+
+@pytest.mark.parametrize("keys", [None, ["id"]])
+def test_violation_samples_independent_of_chunking(spark, tmp_path, keys):
+    """A partition's stored samples are the same whatever the chunking or
+    the resume history: the cap is per (constraint, partition), not per
+    (constraint, chunk)."""
+    import json
+
+    import pyspark.sql.functions as F
+
+    df = _many_violations(spark)
+    suite = ConstraintSuite("samples").add(
+        "expect_column_values_to_not_be_null", column="content"
+    )
+
+    def run(name, frames, chunk_size):
+        store = ResultsStore(spark, str(tmp_path / name))
+        runner = CheckpointRunner(store, violation_limit=3, chunk_size=chunk_size)
+        for frame in frames:
+            rep = runner.run(frame, suite, partition_col="p", snapshot_id="s",
+                             violation_key_columns=keys)
+        samples = {
+            _verdict_key(r): r["violations_json"]
+            for r in store.verdicts(suite.fingerprint, "s").collect()
+        }
+        return samples, rep
+
+    whole, _ = run("whole", [df], 64)
+    assert len(whole) == 16
+    assert all(len(json.loads(v)) == 3 for v in whole.values())
+    assert run("by8", [df], 8)[0] == whole
+    resumed, rep = run("resumed", [df.where(F.col("p") < 5), df], 8)
+    assert sorted(rep.skipped_partitions, key=int) == [str(p) for p in range(5)]
+    assert resumed == whole
+
+    if keys:
+        # a Hive-partitioned copy, whose scan the predicate prunes
+        base = str(tmp_path / "by_p")
+        df.write.partitionBy("p").parquet(base)
+        assert run("from_path", [spark.read.parquet(base)], 8)[0] == whole
+
+
+def test_unique_samples_ignore_keys_repeated_across_partitions(spark, tmp_path):
+    """A group-scoped uniqueness sample holds only the rows the verdict
+    counts: a key repeated across partitions (but not within one) is no
+    violation, however the partitions are chunked into one pass."""
+    import json
+
+    # key k repeats across every partition; partition 3 also repeats k=0
+    rows = [(p * 10 + i, p, i) for p in range(4) for i in range(5)] + [(99, 3, 0)]
+    df = spark.createDataFrame(rows, "id long, p int, k int")
+    suite = ConstraintSuite("uniq").add("expect_column_values_to_be_unique", column="k")
+
+    def run(name, chunk_size, keys):
+        store = ResultsStore(spark, str(tmp_path / name))
+        CheckpointRunner(store, chunk_size=chunk_size).run(
+            df, suite, partition_col="p", snapshot_id="s", violation_key_columns=keys
+        )
+        return {
+            r["partition_id"]: (r["unexpected_count"], json.loads(r["violations_json"]))
+            for r in store.verdicts(suite.fingerprint, "s").collect()
+        }
+
+    for tag, keys in (("rows", None), ("keys", ["id", "k"])):
+        got = run(f"c64_{tag}", 64, keys)
+        assert {p: n for p, (n, _) in got.items()} == {"0": 0, "1": 0, "2": 0, "3": 2}
+        assert all(s == [] for p, (_, s) in got.items() if p != "3")
+        assert sorted(d["id"] for d in got["3"][1]) == [30, 99]
+        assert run(f"c1_{tag}", 1, keys) == got
+
+
+def test_chunk_predicate_pushed_in_native_type(spark, tmp_path, monkeypatch):
+    """The chunk predicate compares the column in its own type, so a flat
+    parquet int column gets it as a pushed filter (row-group statistics)."""
+    from data_profiler_spark import checkpoint
+
+    path = str(tmp_path / "flat")
+    _many_violations(spark).write.parquet(path)
+    seen = []
+
+    class Spy(checkpoint.Validator):
+        def __init__(self, df, **kw):
+            seen.append(df)
+            super().__init__(df, **kw)
+
+    monkeypatch.setattr(checkpoint, "Validator", Spy)
+    suite = ConstraintSuite("push").add(
+        "expect_column_values_to_not_be_null", column="content"
+    )
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    rep = CheckpointRunner(store, chunk_size=4).run(
+        spark.read.parquet(path), suite, partition_col="p"
+    )
+    assert len(rep.validated_partitions) == 16 and len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
+    assert "In(p," in pushed
+
+
+def test_one_validation_pass_whatever_the_chunking(spark, code_tables, suite, tmp_path):
+    """A run is one validation pass: chunking changes only the commits, not
+    the Spark jobs. Every sentinel's lineage records the pass's duration."""
+    import json
+
+    files, _ = code_tables
+    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(name, chunk_size):
+        store = ResultsStore(spark, str(tmp_path / name))
+        before = set(tracker.getJobIdsForGroup())
+        rep = CheckpointRunner(store, chunk_size=chunk_size).run(
+            dfp, suite, partition_col="partition_id",
+            violation_key_columns=["repo", "path", "commit"],
+        )
+        jobs = len(set(tracker.getJobIdsForGroup()) - before)
+        return store, rep, jobs
+
+    store1, rep1, jobs1 = run("c1", 1)
+    _, rep100, jobs100 = run("c100", 100)
+    assert len(rep1.validated_partitions) == len(rep100.validated_partitions) == 6
+    assert jobs1 == jobs100
+    lineage = [
+        json.loads(r["observed_json"])
+        for r in store1.read().where("constraint_id = '__partition_done__'").collect()
+    ]
+    assert len(lineage) == 6
+    assert len({d["pass_duration_ms"] for d in lineage}) == 1
+
+
+def test_truncated_part_file_fails_loudly(spark, suite, code_tables, tmp_path):
+    """A store that cannot be read must not look empty: a resume would
+    re-validate every partition and append duplicate verdicts. Only a
+    missing path reads as an empty store."""
+    import os
+
+    files, _ = code_tables
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    assert store.completed_partitions("fp", "") == set()
+    dfp = add_partition_column(files, n_buckets=4, cols=["repo", "path"])
+    runner = CheckpointRunner(store, chunk_size=2)
+    runner.run(dfp, suite, partition_col="partition_id")
+    parts = sorted(p for p in os.listdir(store.path) if p.endswith(".parquet"))
+    with open(os.path.join(store.path, parts[0]), "r+b") as fh:
+        fh.truncate(64)
+    with pytest.raises(Exception, match="FAILED_READ_FILE|parquet"):
+        runner.run(dfp, suite, partition_col="partition_id")
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_arrow_append_crash_leaves_no_partial_part(spark, tmp_path, monkeypatch, mode):
+    """A write that fails midway leaves the store as it was: no readable
+    partial part file, no staging file, the old rows intact (an overwrite
+    deletes them only after the new part is in place). The failure is
+    raised, not turned into a silent Spark-write retry."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from data_profiler_spark.sources import results_store
+    from data_profiler_spark.sources.results_store import RESULT_SCHEMA
+
+    def row(run_id):
+        return tuple(
+            {"run_id": run_id, "constraint_id": "c"}.get(f.name)
+            for f in RESULT_SCHEMA.fields
+        )
+
+    path = str(tmp_path / "store")
+    assert results_store.arrow_append_rows(path, [row("old")], RESULT_SCHEMA)
+    before = sorted(os.listdir(path))
+
+    def crash(table, where, **kw):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1 partial")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", crash)
+    with pytest.raises(OSError, match="disk full"):
+        results_store.arrow_append_rows(path, [row("new")], RESULT_SCHEMA, mode)
+    assert sorted(os.listdir(path)) == before
+    got = spark.read.schema(RESULT_SCHEMA).parquet(path).collect()
+    assert [r["run_id"] for r in got] == ["old"]
+
+    monkeypatch.undo()
+    assert results_store.arrow_append_rows(path, [row("new")], RESULT_SCHEMA, mode)
+    got = sorted(r["run_id"] for r in spark.read.parquet(path).collect())
+    assert got == (["new"] if mode == "overwrite" else ["new", "old"])
+    assert not [p for p in os.listdir(path) if p.startswith(".")]
+
+    # a type the pyarrow mapping lacks still falls back to the Spark write
+    import pyspark.sql.types as T
+
+    mapped = T.StructType([T.StructField("m", T.MapType(T.StringType(), T.LongType()))])
+    assert not results_store.arrow_append_rows(str(tmp_path / "m"), [({},)], mapped)

@@ -116,7 +116,7 @@ def test_checkpoint_resume_over_partitioned_path(spark, tmp_path):
 
     df = read_path(spark, base, format="parquet")
     # the runner's chunk predicate must prune the scan, not post-filter it
-    pruned = df.where(F.col("lang").cast("string").isin(["go"]))
+    pruned = df.where(F.col("lang").isin(["go"]))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "lang" in plan.split(
         "PartitionFilters:"
