@@ -697,8 +697,7 @@ def connected_components(
     component. Completes the near-dup pipeline (pairs -> clusters ->
     canonical survivor); the reference has no graph operator at all.
 
-    Two physical strategies, identical results (same pattern as the
-    kmeans driver/distributed auto-switch in similarity.py):
+    Two physical strategies, identical results, chosen by edge count:
 
     - edge count <= ``driver_max_edges``: Arrow-collect the (deduped)
       edge list and union-find at the driver. Near-dup pair sets are

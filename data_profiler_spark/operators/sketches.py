@@ -79,7 +79,12 @@ def kmv_overlap(
     A ∪ B is itself the union's sketch, and the fraction of it present
     in BOTH sides is an unbiased Jaccard estimate. If a side has fewer
     than k distinct keys its sketch is exhaustive and the "estimate" is
-    exact (the count itself)."""
+    exact (the count itself).
+
+    EAGER: the call itself runs one Spark job that collects both sketches
+    (at most 2k hashes) and computes the estimate at the driver; the
+    returned frame is a one-row local relation, so acting on it runs
+    nothing over the inputs again."""
     # One distributed job per side builds the sketch (distinct +
     # TakeOrdered — the only part that touches the input); the estimate
     # itself is O(k) integer/order-statistic math, so it runs at the

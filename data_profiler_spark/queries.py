@@ -48,101 +48,65 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_DOCS_NEEDS_REPARTITION: dict[tuple, bool] = {}
-
-_TABLE_ROW_COUNTS: dict[tuple, int | None] = {}
+_INPUT_META: dict[tuple, dict | None] = {}
 
 
-def _footer_row_count(sf_dir: str, name: str) -> int | None:
-    """Exact row count from the parquet footers (milliseconds, no Spark
-    job) — the same metadata a `SELECT COUNT(*)` scan aggregates, read
-    driver-side. Used where an operator only needs N to SIZE something
-    (e.g. the adaptive IVF centroid count): replaces a full count() job
-    that would otherwise re-execute the defensive repartition exchange.
-    Returns None when the footers cannot be read (non-local path) so the
-    caller falls back to the operator's own count."""
-    key = (sf_dir, name)
-    if key not in _TABLE_ROW_COUNTS:
+def _input_meta(sf_dir: str, name: str) -> dict | None:
+    """Driver-side facts about one parquet input, read with pyarrow in
+    milliseconds and no Spark job: ``rows`` and ``row_groups`` from the
+    footers and, for ``embeddings``, the ANN ``query_rows`` (vec_id < 5,
+    sorted, as ``[(id, [float])]``). Cached on the identity (name, size,
+    mtime_ns) of every parquet file under the path, globbed recursively,
+    so a rewritten input is read again. None when the path cannot be read
+    locally; callers then fall back to Spark."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/{name}.parquet"
+    files = sorted(glob.glob(f"{path}/**/*.parquet", recursive=True)) or [path]
+    try:
+        key = tuple((f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files)
+    except OSError:
+        return None
+    if key not in _INPUT_META:
         try:
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            path = f"{sf_dir}/{name}.parquet"
-            files = _glob.glob(f"{path}/*.parquet") or [path]
-            _TABLE_ROW_COUNTS[key] = sum(
-                _pq.ParquetFile(f).metadata.num_rows for f in files
-            )
-        except Exception:
-            _TABLE_ROW_COUNTS[key] = None
-    return _TABLE_ROW_COUNTS[key]
-
-
-_EMB_QROWS: dict[tuple, list | None] = {}
-
-
-def _emb_query_rows(sf_dir: str, max_id: int = 5) -> list | None:
-    """The ANN query vectors (vec_id < max_id), read driver-side from the
-    parquet input (pyarrow row filter, milliseconds). The same rows every
-    query-side subplan scans; handing them to the similarity operators as
-    ``query_rows`` lets the Q x C probe/LUT broadcast sides be LOCAL
-    relations — no per-broadcast scan + window job. None on read failure
-    (operators then build the probe side distributed, as before)."""
-    key = (sf_dir, max_id)
-    if key not in _EMB_QROWS:
-        try:
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            path = f"{sf_dir}/embeddings.parquet"
-            files = _glob.glob(f"{path}/*.parquet") or [path]
-            rows: list = []
-            for f in files:
-                t = _pq.read_table(
-                    f,
-                    columns=["vec_id", "embedding"],
-                    filters=[("vec_id", "<", max_id)],
+            metas = [pq.ParquetFile(f).metadata for f in files]
+            meta = {
+                "rows": sum(m.num_rows for m in metas),
+                "row_groups": sum(m.num_row_groups for m in metas),
+            }
+            if name == "embeddings":
+                qrows = []
+                for f in files:
+                    t = pq.read_table(f, columns=["vec_id", "embedding"],
+                                      filters=[("vec_id", "<", 5)])
+                    qrows += zip(t.column("vec_id").to_pylist(),
+                                 t.column("embedding").to_pylist())
+                meta["query_rows"] = sorted(
+                    (vid, [float(x) for x in emb]) for vid, emb in qrows
                 )
-                rows.extend(
-                    (vid, [float(x) for x in emb])
-                    for vid, emb in zip(
-                        t.column("vec_id").to_pylist(),
-                        t.column("embedding").to_pylist(),
-                    )
-                )
-            rows.sort(key=lambda r: r[0])
-            _EMB_QROWS[key] = rows
-        except Exception:
-            _EMB_QROWS[key] = None
-    return _EMB_QROWS[key]
+        except (OSError, ValueError):
+            meta = None
+        _INPUT_META[key] = meta
+    return _INPUT_META[key]
+
+
+def _emb_query_rows(sf_dir: str) -> list | None:
+    """The ANN queries' ``query_rows`` from ``_input_meta``, or None."""
+    meta = _input_meta(sf_dir, "embeddings")
+    return meta and meta["query_rows"]
 
 
 def _split_probe(spark: SparkSession, sf_dir: str, name: str, d: DataFrame) -> bool:
     """True when the table's scan would yield fewer row-bearing splits
     than cores/4 (a parquet file written as ONE row group cannot be
-    split). r7: reads the parquet footers directly (milliseconds) instead
-    of the old ``df.rdd.getNumPartitions()`` probe, which forced a full
-    analysis + RDD DAG build (~1 s of driver time charged to the first
-    text/embedding query of a session). Falls back to the RDD probe for
-    non-local paths; either answer is cached per (session, path)."""
-    cores = spark.sparkContext.defaultParallelism
-    key = (id(spark), sf_dir, cores, name)
-    needs = _DOCS_NEEDS_REPARTITION.get(key)
-    if needs is None:
-        try:
-            import glob as _glob
-
-            import pyarrow.parquet as _pq
-
-            path = f"{sf_dir}/{name}.parquet"
-            files = _glob.glob(f"{path}/*.parquet") or [path]
-            splits = sum(_pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        except Exception:
-            splits = d.rdd.getNumPartitions()
-        needs = splits < max(2, cores // 4)
-        _DOCS_NEEDS_REPARTITION[key] = needs
-    return needs
+    split). Counts row groups from the footers (``_input_meta``); for a
+    non-local path it falls back to ``d.rdd.getNumPartitions()``."""
+    meta = _input_meta(sf_dir, name)
+    splits = meta["row_groups"] if meta else d.rdd.getNumPartitions()
+    return splits < max(2, spark.sparkContext.defaultParallelism // 4)
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1053,7 +1017,7 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ann_topk_bruteforce(
         e, q, "vec_id", "embedding", "query_id", k=5,
-        query_rows=_emb_query_rows(sf_dir, 5),
+        query_rows=_emb_query_rows(sf_dir),
     )
 
 
@@ -1093,10 +1057,9 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors: C = max(8, ceil(N/500)), mirrored in the oracle's `nc` CTE) and
     pair scoring is one numpy GEMM per bucket (VERDICT r2 #2).
 
-    r7 job diet: N comes from the parquet footers (no count() job) and the
-    lowest-id centroids are TakeOrdered off the RAW scan (no repartition
-    exchange of the full vector table just to collect C rows); same C,
-    same centroid rows, same pairs."""
+    N comes from the parquet footers (no count() job) and the lowest-id
+    centroids are TakeOrdered off the RAW scan (no repartition exchange
+    of the full vector table just to collect C rows)."""
     from data_profiler_spark.operators.similarity import (
         adaptive_n_centroids,
         embedding_near_dup_pairs,
@@ -1104,12 +1067,12 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _embs(spark, sf_dir)
-    n = _footer_row_count(sf_dir, "embeddings")
+    meta = _input_meta(sf_dir, "embeddings")
     cents = None
-    if n is not None:
+    if meta:
         cents = kmeans_like_centroids(
             _t(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-            adaptive_n_centroids(n, 500), dim=64,
+            adaptive_n_centroids(meta["rows"], 500),
         )
     return embedding_near_dup_pairs(
         e, "vec_id", "embedding", threshold=0.3, target_bucket=500,
@@ -1161,13 +1124,12 @@ def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = raw.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # centroids off the RAW scan (r7): same 8 lowest-id rows, but the
-    # TakeOrdered collect no longer re-executes _embs's repartition
-    # exchange, and dim=64 skips the builder's one-row probe job
-    cents = kmeans_like_centroids(raw, "vec_id", "embedding", 8, dim=64)
+    # centroids off the RAW scan: same 8 lowest-id rows, but the
+    # TakeOrdered collect does not re-execute _embs's repartition exchange
+    cents = kmeans_like_centroids(raw, "vec_id", "embedding", 8)
     return ann_topk_ivf(e, q, "vec_id", "embedding", "query_id", k=5,
                         n_centroids=8, nprobe=3, centroids=cents,
-                        query_rows=_emb_query_rows(sf_dir, 5))
+                        query_rows=_emb_query_rows(sf_dir))
 
 
 # Refined-IVF (VERDICT r4 #10): the Lloyd-refined centroids are iterative —
@@ -1247,7 +1209,10 @@ def q_embedding_topk_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_refined_centroids(
         e, "vec_id", "embedding", n_centroids=8, iters=2
     )
-    cents.write.mode("overwrite").parquet(_ivf_fixture_path(sf_dir))
+    spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(cents.ids, cents.vecs)],
+        "centroid_id int, centroid_vec array<double>",
+    ).write.mode("overwrite").parquet(_ivf_fixture_path(sf_dir))
     q = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -2292,12 +2257,12 @@ def q_embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _embs(spark, sf_dir)
-    n = _footer_row_count(sf_dir, "embeddings")
+    meta = _input_meta(sf_dir, "embeddings")
     cents = None
-    if n is not None:
+    if meta:
         cents = kmeans_like_centroids(
             _t(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-            adaptive_n_centroids(n, 500), dim=64,
+            adaptive_n_centroids(meta["rows"], 500),
         )
     pairs = embedding_near_dup_pairs(
         e, "vec_id", "embedding", threshold=0.3, target_bucket=500,
@@ -3658,7 +3623,7 @@ def q_embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     train, encode, asymmetric top-k — replays bit-exactly in SQL), then
     top-5 per query by asymmetric distance. The memory step for
     billion-vector ANN: the scan ships codes, never vectors. Encode is
-    one shuffle-free pass (broadcast codebook row); top-k is a
+    one shuffle-free pass (codebook in the task closure); top-k is a
     WindowGroupLimit rank."""
     from data_profiler_spark.operators.similarity import (
         kmeans_like_centroids,
@@ -3667,9 +3632,9 @@ def q_embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    cents = kmeans_like_centroids(e, "vec_id", "embedding", 16, dim=64)
-    # encode is CPU-bound per row (m x k x sub HOF evals) and the fixture
-    # is a single row group -> one task; spread it like _docs does for text
+    cents = kmeans_like_centroids(e, "vec_id", "embedding", 16)
+    # encode is CPU-bound per row and the fixture is a single row group
+    # -> one task; spread it like _docs does for text
     enc = pq_encode(
         _embs(spark, sf_dir), cents, "vec_id", "embedding", m=8,
     )
@@ -3677,8 +3642,8 @@ def q_embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     return pq_topk(
-        enc, cents, queries, "query_id", "qvec", "vec_id", m=8, k_top=5,
-        query_rows=_emb_query_rows(sf_dir, 5),
+        enc, queries, "query_id", "qvec", "vec_id", k_top=5,
+        query_rows=_emb_query_rows(sf_dir),
     )
 
 
@@ -3848,7 +3813,7 @@ def q_embedding_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, "vec_id", "embedding", "query_id", "qvec",
         n_coarse=4, nprobe=2, m=8, n_codes=16, k_top=5,
         # seeds off the RAW scan: same lowest-id rows, no repartition
-        # exchange in the seed-collect job (r7)
+        # exchange in the seed-collect job
         seed_source=e,
-        query_rows=_emb_query_rows(sf_dir, 5),
+        query_rows=_emb_query_rows(sf_dir),
     )

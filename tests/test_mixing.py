@@ -403,9 +403,10 @@ class TestProductQuantization:
         rng = random.Random(7)
         rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(40)]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        cents = kmeans_like_centroids(df, "vec_id", "embedding", 8, dim=16)
+        cents = kmeans_like_centroids(df, "vec_id", "embedding", 8)
         enc = pq_encode(df, cents, "vec_id", "embedding", m=4)
-        got = {r.vec_id: r.codes for r in enc.collect()}
+        assert enc.m == 4 and enc.codebook.shape == (8, 16)
+        got = {r.vec_id: r.codes for r in enc.frame.collect()}
         assert len(got) == 40
         assert all(len(c) == 4 and all(0 <= x < 8 for x in c) for c in got.values())
         # a codebook donor reconstructs itself exactly: codes = its own id
@@ -415,7 +416,7 @@ class TestProductQuantization:
         q = df.where(F.col("vec_id") == 2).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
         )
-        top = pq_topk(enc, cents, q, m=4, k_top=1).first()
+        top = pq_topk(enc, q, k_top=1).first()
         assert top.vec_id == 2 and top.adist == 0.0
 
     def test_dim_not_divisible_raises(self, spark):
@@ -427,7 +428,7 @@ class TestProductQuantization:
         df = spark.createDataFrame(
             [(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
         )
-        cents = kmeans_like_centroids(df, "vec_id", "embedding", 1, dim=3)
+        cents = kmeans_like_centroids(df, "vec_id", "embedding", 1)
         with pytest.raises(ValueError, match="divisible"):
             pq_encode(df, cents, m=2)
 
@@ -567,23 +568,6 @@ class TestNullHandlingFixes:
         assert kept.count() == 1
         assert kept.first().s == 4
 
-    def test_pq_topk_rejects_mismatched_m(self, spark):
-        from data_profiler_spark.operators.similarity import (
-            kmeans_like_centroids,
-            pq_encode,
-            pq_topk,
-        )
-
-        df = spark.createDataFrame(
-            [(i, [float(i), 0.0, 1.0, 2.0]) for i in range(8)],
-            "vec_id long, embedding array<double>",
-        )
-        cents = kmeans_like_centroids(df, "vec_id", "embedding", 4, dim=4)
-        enc = pq_encode(df, cents, m=2)
-        q = df.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-        with pytest.raises(ValueError, match="same m"):
-            pq_topk(enc, cents, q, m=4)
-
     def test_perplexity_buckets_empty_corpus(self, spark):
         from data_profiler_spark.operators.text import perplexity_buckets
 
@@ -625,7 +609,7 @@ def test_ivfpq_topk_self_hit_and_probe_pruning(spark):
     top = out.where(F.col("rank") == 1).first()
     assert top.vec_id == 2 and top.adist == 0.0
     # with nprobe=1, every result lives in the query's own coarse list
-    cents = kmeans_like_centroids(df, "vec_id", "embedding", 4, dim=16)
+    cents = kmeans_like_centroids(df, "vec_id", "embedding", 4)
     assigned = ivf_assign(df, cents, "vec_id", "embedding")
     own_list = assigned.where(F.col("vec_id") == 2).first()["centroid_id"]
     hits = {r.vec_id for r in out.collect()}

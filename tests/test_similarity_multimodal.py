@@ -108,11 +108,8 @@ def test_kmeans_refined_ivf_recall(spark):
     assert len(sizes) == 8 and min(sizes) >= 1
     # determinism: a second refinement run yields identical centroids
     again = kmeans_refined_centroids(df, "vec_id", "embedding", 8, iters=3)
-    a = sorted(map(tuple, refined.collect()))
-    b = sorted(map(tuple, again.collect()))
-    assert [x[0] for x in a] == [x[0] for x in b]
-    for (_, va), (_, vb) in zip(a, b):
-        assert va == pytest.approx(vb, abs=1e-12)
+    assert list(refined.ids) == list(again.ids)
+    assert (refined.vecs == again.vecs).all()
 
 
 def test_embedding_near_dup(vectors):
@@ -424,18 +421,22 @@ def test_near_dup_adaptive_centroids_and_exactness(spark):
         assert r["sim"] == pytest.approx(want, abs=1e-9)
 
 
-def test_kmeans_large_c_path_no_driver_collect(spark, monkeypatch):
-    """VERDICT r3 wrong #3: above driver_collect_max_cells the Lloyd loop
-    must cut lineage via localCheckpoint — zero per-iteration collects —
-    and produce the same centroids as the driver-collect path."""
+def test_kmeans_refined_collects_once_per_iteration(spark, monkeypatch):
+    """A refined build collects the seed rows once and the per-dimension
+    means once per Lloyd iteration — no dim probe, no other job that
+    brings rows to the driver — and moves the centroids off the seeds."""
     import numpy as np
-    from data_profiler_spark.operators.similarity import kmeans_refined_centroids
+    from data_profiler_spark.operators.similarity import (
+        kmeans_like_centroids,
+        kmeans_refined_centroids,
+    )
 
     rng = np.random.default_rng(17)
     rows = [
         (i, [float(x) for x in rng.normal(size=8)]) for i in range(300)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    seed = kmeans_like_centroids(df, "vec_id", "embedding", 8)
 
     # patch the CONCRETE class (pyspark.sql.classic overrides collect)
     DataFrame = type(df)
@@ -447,22 +448,11 @@ def test_kmeans_large_c_path_no_driver_collect(spark, monkeypatch):
         return orig_collect(self)
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    # forced checkpoint path: collects are exactly the dim probe (first()
-    # -> take -> collect) + the C-ids pick, NONE inside the 3 iterations
-    ck = kmeans_refined_centroids(
-        df, "vec_id", "embedding", 8, iters=3, driver_collect_max_cells=0
-    )
-    ck_rows = sorted(map(tuple, orig_collect(ck)))
-    assert calls["n"] == 2, f"unexpected driver collects: {calls['n']}"
-
-    calls["n"] = 0
-    drv = kmeans_refined_centroids(df, "vec_id", "embedding", 8, iters=3)
-    drv_rows = sorted(map(tuple, orig_collect(drv)))
-    assert calls["n"] == 2 + 3  # driver path collects once per iteration
-
-    assert [r[0] for r in ck_rows] == [r[0] for r in drv_rows]
-    for (_, va), (_, vb) in zip(ck_rows, drv_rows):
-        assert va == pytest.approx(vb, abs=1e-9)
+    refined = kmeans_refined_centroids(df, "vec_id", "embedding", 8, iters=3)
+    assert calls["n"] == 1 + 3, f"unexpected driver collects: {calls['n']}"
+    assert list(refined.ids) == list(range(8))
+    assert refined.vecs.shape == (8, 8)
+    assert not np.allclose(refined.vecs, seed.vecs)
 
 
 def test_autoprofile_numeric_pinned_stats(typed_small):
@@ -913,32 +903,25 @@ def test_streaming_near_dup_candidates(spark, tmp_path):
     assert per_pair[(1, 2)] == 4 and per_pair[(1, 4)] == 4
 
 
-def test_kmeans_centroid_driver_collect_gated_by_cells(spark):
-    """VERDICT r5 wrong #1: the driver-collect decision must be CELL-based
-    (C x dim), not centroid-count-based — a count that passes but a cell
-    budget that fails must take the distributed rank-join path and return
-    identical centroids."""
+def test_kmeans_centroids_are_lowest_id_rows(spark):
+    """The deterministic centroid pick is the C lowest-id vectors, in id
+    order, as centroid ids 0..C-1 and float64 values; an empty corpus
+    gives no centroids and no crash."""
     from data_profiler_spark.operators.similarity import kmeans_like_centroids
 
     rows = [(i, [float(i + j) for j in range(64)]) for i in range(40)]
+    rows.reverse()  # input order must not matter
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    driver = kmeans_like_centroids(df, "vec_id", "embedding", 8)
-    # 8 centroids x 64 dims = 512 cells > 100 -> distributed path
-    dist = kmeans_like_centroids(
-        df, "vec_id", "embedding", 8, driver_collect_max_cells=100
-    )
-    plan_driver = driver._jdf.queryExecution().executedPlan().toString()
-    plan_dist = dist._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan_driver  # collect+recreate: a local scan
-    assert "Join" in plan_dist  # rank broadcast-join against the corpus
-    a = sorted((r[0], tuple(r[1])) for r in driver.collect())
-    b = sorted((r[0], tuple(r[1])) for r in dist.collect())
-    assert a == b
+    cents = kmeans_like_centroids(df, "vec_id", "embedding", 8)
+    assert list(cents.ids) == list(range(8))
+    assert cents.vecs.dtype.name == "float64"
+    assert cents.vecs.tolist() == [
+        [float(i + j) for j in range(64)] for i in range(8)
+    ]
 
-    # empty corpus: no centroids, no crash, on either path
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert kmeans_like_centroids(empty, "vec_id", "embedding", 4).count() == 0
+    assert len(kmeans_like_centroids(empty, "vec_id", "embedding", 4).ids) == 0
 
 
 def test_parse_duration_units(spark):
@@ -1088,9 +1071,9 @@ def test_streaming_drift_parity_with_batch_property(spark):
 
 
 def test_pq_encode_numpy_matches_expr(vectors):
-    """r7: the vectorized mapInPandas encode must reproduce the pure-Column
-    r6 encode bit-for-bit — same left-fold accumulation order, pow(d,2) ==
-    d*d, first-min argmin tie-break."""
+    """The numpy encode must reproduce the pure-Column encode bit-for-bit
+    — same left-fold accumulation order, pow(d,2) == d*d, first-min
+    argmin tie-break."""
     from data_profiler_spark.operators.similarity import (
         _pq_encode_expr,
         kmeans_like_centroids,
@@ -1098,52 +1081,103 @@ def test_pq_encode_numpy_matches_expr(vectors):
     )
 
     df, _ = vectors
-    cents = kmeans_like_centroids(df, "vec_id", "embedding", 4, dim=8)
+    cents = kmeans_like_centroids(df, "vec_id", "embedding", 4)
     got = {
         r["vec_id"]: list(r["codes"])
-        for r in pq_encode(df, cents, "vec_id", "embedding", m=4).collect()
+        for r in pq_encode(df, cents, "vec_id", "embedding", m=4).frame.collect()
     }
     ref = {
         r["vec_id"]: list(r["codes"])
-        for r in _pq_encode_expr(
-            df, cents, "vec_id", "embedding", 4, 2, None
-        ).collect()
+        for r in _pq_encode_expr(df, cents, "vec_id", "embedding", 4).collect()
     }
     assert got == ref and len(got) == 40
 
 
-def test_ivf_assign_numpy_matches_column_path(vectors):
-    """r7: the vectorized assign (taken when centroid rows are
-    driver-resident) must reproduce the Column HOF argmax bit-for-bit —
-    same ascending dot fold, same |c| divisor, first-max == the
-    (csim DESC, cid ASC) tie-break."""
+def test_ivf_assign_numpy_matches_column_path(spark, vectors):
+    """The numpy assign must pick the centroid a plain ascending-index
+    fold picks — the arithmetic of the Column fold it replaced and of the
+    oracle: dot(v, c) folded from 0.0, divided by sqrt of the folded
+    c*c, FIRST max (lowest centroid_id) on ties. Vector 40 scores an
+    exact tie between centroids 1 and 2 (dot/|c| = 7/5 for both)."""
+    import math
+
     from data_profiler_spark.operators.similarity import (
         ivf_assign,
         kmeans_like_centroids,
     )
 
     df, _ = vectors
-    cents = kmeans_like_centroids(df, "vec_id", "embedding", 6, dim=8)
-    assert getattr(cents, "_centroid_rows", None)  # numpy path taken
+    rows = [(r["vec_id"], list(r["embedding"])) for r in df.collect()]
+    rows[1] = (1, [3.0, 4.0] + [0.0] * 6)
+    rows[2] = (2, [4.0, 3.0] + [0.0] * 6)
+    rows.append((40, [1.0, 1.0] + [0.0] * 6))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = kmeans_like_centroids(df, "vec_id", "embedding", 6)
+
+    def fold_assign(v):
+        best, best_sim = None, None
+        for cid, c in zip(cents.ids, cents.vecs.tolist()):
+            d = 0.0
+            for x, y in zip(v, c):
+                d += x * y
+            n = 0.0
+            for y in c:
+                n += y * y
+            sim = d / math.sqrt(n)
+            if best_sim is None or sim > best_sim:
+                best, best_sim = int(cid), sim
+        return best
+
     got = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(df, cents, "vec_id", "embedding").collect()
     }
-    # strip the rider: forces the Column HOF path on identical centroids
-    bare = cents.sparkSession.createDataFrame(
-        cents.collect(), cents.schema
+    assert got == {vid: fold_assign(v) for vid, v in rows} and len(got) == 41
+    assert got[40] == 1
+
+
+def test_ivf_assign_rejects_bad_vectors_by_id(spark):
+    """Null, ragged and NaN vectors and zero-norm centroids raise a
+    ValueError naming the offending id instead of crashing a task
+    opaquely or returning a plausible assignment; a zero-norm query does
+    the same in ann_topk_ivf."""
+    from data_profiler_spark.operators.similarity import (
+        ann_topk_ivf,
+        ivf_assign,
+        kmeans_like_centroids,
     )
-    ref = {
-        r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign(df, bare, "vec_id", "embedding").collect()
+
+    base = [(i, [float(i + 1), 1.0, 0.0, 2.0]) for i in range(6)]
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    good = frame(base)
+    cents = kmeans_like_centroids(good, "vec_id", "embedding", 2)
+    bad_rows = {
+        "vec_id 9: vector is null": None,
+        "vec_id 9: vector has length 3, expected 4": [1.0, 2.0, 3.0],
+        "vec_id 9: vector contains NaN": [1.0, float("nan"), 0.0, 2.0],
     }
-    assert got == ref and len(got) == 40
+    for msg, vec in bad_rows.items():
+        with pytest.raises(Exception, match=msg):
+            ivf_assign(frame(base + [(9, vec)]), cents, "vec_id", "embedding").collect()
+
+    zero = frame([(0, [0.0, 0.0, 0.0, 0.0])] + base[1:])
+    zcents = kmeans_like_centroids(zero, "vec_id", "embedding", 2)
+    with pytest.raises(ValueError, match="centroid 0: zero-norm"):
+        ivf_assign(zero, zcents, "vec_id", "embedding")
+
+    q = good.select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(ValueError, match="query 7: zero-norm"):
+        ann_topk_ivf(good, q, centroids=cents,
+                     query_rows=[(7, [0.0, 0.0, 0.0, 0.0])])
 
 
 def test_ann_query_rows_paths_match_distributed(vectors):
-    """r7: the local-relation probe sides (query_rows=) must produce
-    exactly the rows of the distributed subplans for bruteforce, IVF and
-    PQ top-k."""
+    """Pre-collected ``query_rows`` must produce exactly the rows of the
+    query frame collected by the operator, for bruteforce, IVF and PQ
+    top-k."""
     from data_profiler_spark.operators.similarity import (
         ann_topk_bruteforce,
         ann_topk_ivf,
@@ -1167,25 +1201,21 @@ def test_ann_query_rows_paths_match_distributed(vectors):
         ann_topk_bruteforce(df, q, k=4, query_rows=qrows)
     ) == rows(ann_topk_bruteforce(df, q, k=4))
 
-    cents = kmeans_like_centroids(df, "vec_id", "embedding", 6, dim=8)
-    assert rows(
-        ann_topk_ivf(df, q, k=4, n_centroids=6, nprobe=2, centroids=cents,
-                     query_rows=qrows)
-    ) == rows(
-        ann_topk_ivf(df, q, k=4, n_centroids=6, nprobe=2, centroids=cents)
-    )
+    cents = kmeans_like_centroids(df, "vec_id", "embedding", 6)
+    ivf = rows(ann_topk_ivf(df, q, k=4, nprobe=2, centroids=cents, query_rows=qrows))
+    assert ivf == rows(ann_topk_ivf(df, q, k=4, nprobe=2, centroids=cents))
+    assert len(ivf) == 12
 
     qv = df.where("vec_id < 3").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     enc = pq_encode(df, cents, "vec_id", "embedding", m=4)
-    assert rows(
-        pq_topk(enc, cents, qv, m=4, k_top=4, query_rows=qrows)
-    ) == rows(pq_topk(enc, cents, qv, m=4, k_top=4))
+    pq = rows(pq_topk(enc, qv, k_top=4, query_rows=qrows))
+    assert pq == rows(pq_topk(enc, qv, k_top=4)) and len(pq) == 12
 
 
 def test_ivfpq_fused_matches_seedwise_reference(vectors):
-    """r7: the fused assign+residual+encode pass must keep ivfpq's top-k
+    """The fused assign+residual+encode pass must keep ivfpq's top-k
     identical to an independent numpy reference replaying the documented
     arithmetic (coarse dot/|c| argmax, residual, per-subspace argmin,
     ADC sums)."""

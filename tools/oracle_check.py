@@ -52,6 +52,15 @@ def canon_rows(cols, rows):
     return sorted(cols), sorted(out)
 
 
+def retarget(sql: str, sf_dir: str) -> str:
+    """The fixture-replay oracles bake the DRIVER gate's sf0.01 fixture
+    path into their static SQL (per-sf paths). The driver always runs at
+    sf0.01; when checking another scale, point the SQL at that scale's
+    fixture so the replay stays engine-run-fresh instead of failing."""
+    sf_name = Path(sf_dir.rstrip("/")).name
+    return sql.replace("/tmp/dps_fixture/sf0.01/", f"/tmp/dps_fixture/{sf_name}/")
+
+
 def main() -> int:
     import duckdb
 
@@ -87,18 +96,7 @@ def main() -> int:
             n_rows_only += 1
             continue
         try:
-            sql = oracles[name]
-            # The IVF-refined oracle bakes the DRIVER gate's sf0.01 fixture
-            # path into its static SQL (per-sf paths, ADVICE r5). The
-            # driver always runs at sf0.01; this local replica retargets
-            # the path when checking other scales so the fixture replay
-            # stays engine-run-fresh instead of failing loudly.
-            sf_name = Path(sf_dir.rstrip("/")).name
-            if sf_name != "sf0.01":
-                sql = sql.replace(
-                    "/tmp/dps_fixture/sf0.01/", f"/tmp/dps_fixture/{sf_name}/"
-                )
-            res = con.sql(sql)
+            res = con.sql(retarget(oracles[name], sf_dir))
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as exc:
