@@ -14,12 +14,13 @@ chunk would decode the whole table to keep its slice). The pass is one
 fused aggregation grouped by the partition column, the bounded post-pass
 jobs, and violation sampling (one job when the samples share key columns,
 else one per failed constraint). Results are then committed per CHUNK of
-``chunk_size`` partitions, verdict rows first and the sentinel last, so a
-crash during the commits loses at most the uncommitted chunks; a crash
-before the first commit loses the pass. The partition predicate compares
-values in the column's own type, so a Hive-style partitioned path prunes
-to the pending partitions, and parquet row-group statistics and DSv2
-pushdown can use it on a flat column.
+``chunk_size`` partitions, each chunk's verdict rows and sentinels in one
+store append (``ResultsStore.mark_done``), so a crash during the commits
+loses at most the uncommitted chunks and never leaves a chunk's verdicts
+without its sentinels; a crash before the first commit loses the pass.
+The partition predicate compares values in the column's own type, so a
+Hive-style partitioned path prunes to the pending partitions, and parquet
+row-group statistics and DSv2 pushdown can use it on a flat column.
 
 Scale notes: the pass groups by the partition column, so Spark's hash
 aggregation distributes naturally; violation samples are capped per
@@ -131,8 +132,6 @@ class CheckpointRunner:
                                 "duration_ms": pass_ms,
                             }
                         )
-                self.store.append_rows(rows)
-                # sentinel LAST: a crash before this point re-runs the chunk
                 self.store.mark_done(
                     run_id, fp, snapshot_id, chunk,
                     lineage={
@@ -141,6 +140,7 @@ class CheckpointRunner:
                         "row_counts": per_part_rowcount,
                         "pass_duration_ms": pass_ms,
                     },
+                    verdicts=rows,
                 )
                 validated.extend(chunk)
 

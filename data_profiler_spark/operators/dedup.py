@@ -78,15 +78,6 @@ def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as strings (distinct), tokenizing inline.
-
-    PERF: prefer projecting ``tokens(col)`` into a named column and calling
-    ``shingles_of_tokens`` — inlining re-evaluates the tokenizer per lambda
-    element (no CSE into HOF lambdas). Kept for small/one-shot inputs."""
-    return shingles_of_tokens(tokens(col), n)
-
-
 def minhash_signature_of_shingles(sh: Column, n_hashes: int = 8) -> Column:
     """Array of n lexicographic-min md5 digests over a MATERIALIZED shingle
     array column (same named-attribute requirement as
@@ -104,11 +95,6 @@ def minhash_signature_of_shingles(sh: Column, n_hashes: int = 8) -> Column:
     return F.array(
         *[F.array_min(F.transform(sh, salted(i))) for i in range(n_hashes)]
     )
-
-
-def minhash_signature(col: Column, n_hashes: int = 8, shingle_n: int = 3) -> Column:
-    """Inline-tokenizing minhash signature (see perf note on ``shingles``)."""
-    return minhash_signature_of_shingles(shingles(col, shingle_n), n_hashes)
 
 
 def minhash_band_buckets(

@@ -693,10 +693,12 @@ def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: boo
         AggTerm(miss_a, F.sum(F.when(col.isNull(), 1).otherwise(0))),
     ]
 
-    def _diff_frame(frame: DataFrame) -> DataFrame:
+    def _diff_frame(frame: DataFrame, group_by: list[str]) -> DataFrame:
         from pyspark.sql import Window
 
-        w = Window.partitionBy(*(part_cols or [F.lit(0)])).orderBy(
+        # within the validation group too: a group's verdict must not see
+        # rows of whichever other groups the same pass validates
+        w = Window.partitionBy(*([*group_by, *part_cols] or [F.lit(0)])).orderBy(
             F.col(order_col) if order_col else col
         )
         diff = col - F.lag(col).over(w)
@@ -708,7 +710,7 @@ def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: boo
         return frame.withColumn("__bad", col.isNotNull() & F.coalesce(bad, F.lit(False)))
 
     def post_pass(frame: DataFrame, group_by: list[str], groups):
-        flagged = _diff_frame(frame)
+        flagged = _diff_frame(frame, group_by)
         if not group_by:
             n = flagged.agg(F.sum(F.col("__bad").cast("long")).alias("n")).first()["n"]
             return {(): {unex_a: int(n or 0)}}
@@ -734,7 +736,7 @@ def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: boo
         )
 
     def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
-        return _diff_frame(frame).filter(F.col("__bad")).drop("__bad")
+        return _diff_frame(frame, group_by).filter(F.col("__bad")).drop("__bad")
 
     return CompiledConstraint(
         constraint=constraint,

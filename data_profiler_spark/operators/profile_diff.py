@@ -107,9 +107,8 @@ class ProfileStore:
         snapshot_id: str = "",
         mode: str = "append",
     ) -> None:
-        """Persist several runs' profiles in ONE write job (r7: the drift
-        query's baseline+current pair previously paid two ~0.5 s write
-        jobs for a handful of rows each)."""
+        """Persist several runs' profiles as ONE part file (the drift
+        query writes its baseline+current pair in one append)."""
         rows = [
             r
             for profiles, run_id in runs
@@ -118,18 +117,7 @@ class ProfileStore:
         tuples = [
             tuple(r.get(f.name) for f in PROFILE_SCHEMA.fields) for r in rows
         ]
-        # driver-side pyarrow write (r7): sketch rows are bounded by
-        # columns x groups and already driver-resident; skip the Spark
-        # write job's ~0.5 s scheduling/commit for the same part file
-        if arrow_append_rows(self.path, tuples, PROFILE_SCHEMA, mode):
-            return
-        df = self.spark.createDataFrame(tuples, PROFILE_SCHEMA)
-        # repartition(1), NOT coalesce(1): coalescing a python-local
-        # relation folds every default-parallelism slice into one task
-        # that re-enters the Python runner per slice (~5 s for 6 rows at
-        # local[32], measured); a 1-partition shuffle of a few rows is
-        # ~0.5 s and writes the same single file
-        df.repartition(1).write.mode(mode).parquet(self.path)
+        arrow_append_rows(self.path, tuples, PROFILE_SCHEMA, mode)
 
     def run_rows(self, run_id: str, suite_id: str | None = None) -> list[dict]:
         """One run's sketch rows, collected — bounded by columns x groups

@@ -41,15 +41,6 @@ def tokens(col: Column, lowercase: bool = True) -> Column:
     return F.filter(F.split(c, TOKEN_PATTERN), lambda t: t != F.lit(""))
 
 
-def bpe_ish_tokens(col: Column) -> Column:
-    """A BPE-ish subword proxy: split on whitespace AND punctuation/symbol
-    boundaries, keeping numbers and words separate (regex-only, native)."""
-    pieces = F.split(
-        F.regexp_replace(F.lower(col), r"([^\w\s]|_|\d+)", r" $1 "), r"\s+"
-    )
-    return F.filter(pieces, lambda t: t != F.lit(""))
-
-
 def token_count(col: Column) -> Column:
     """Size arithmetic, not a higher-order filter: splitting the TRIMMED
     string on \\s+ leaves no interior/edge empties, so size(split(trim))

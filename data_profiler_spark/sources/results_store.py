@@ -11,8 +11,16 @@ same API) table keyed
 On re-submission the runner anti-joins planned partitions against completed
 ones and skips them (FIXTURES.md §5 resumability contract). A partition is
 "completed" when its sentinel row (constraint_id = '__partition_done__') is
-present — written LAST, after all verdict rows, so a crash mid-partition
-re-runs that partition.
+present. A chunk's verdict rows and its sentinels are ONE part file, renamed
+into place in one step (one append commit in production), so a crash
+leaves either the whole chunk or none of it, and a resume re-runs exactly
+the partitions with no sentinel.
+
+Stores written before verdicts and sentinels shared a part file may hold
+orphan verdict sets: rows from a ``run_id`` that has no sentinel for that
+partition, left by a crash between the two files. ``verdicts()`` returns
+them as written; so does a store that a caller appends verdicts to without
+sentinels (``urn_cross_suite_verdicts`` in queries.py).
 """
 
 from __future__ import annotations
@@ -22,7 +30,7 @@ import os
 import shutil
 import time
 import uuid
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,9 +39,10 @@ from pyspark.sql import types as T
 DONE_SENTINEL = "__partition_done__"
 
 
-def _pa_type(dt: T.DataType):
+def _pa_type(field: T.StructField):
     import pyarrow as pa
 
+    dt = field.dataType
     if isinstance(dt, T.StringType):
         return pa.string()
     if isinstance(dt, T.LongType):
@@ -46,7 +55,10 @@ def _pa_type(dt: T.DataType):
         return pa.float64()
     if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.DoubleType):
         return pa.list_(pa.float64())
-    raise TypeError(dt.simpleString())
+    raise TypeError(
+        f"store field {field.name!r} has type {dt.simpleString()}, "
+        "which the parquet writer does not map"
+    )
 
 
 def arrow_append_rows(
@@ -54,31 +66,26 @@ def arrow_append_rows(
     rows: list[tuple],
     schema: "T.StructType",
     mode: str = "append",
-) -> bool:
+) -> str:
     """Driver-side parquet write for BOUNDED metadata rows (store appends
     are a handful of verdict/sketch rows that already live at the driver).
-    A Spark write job — even repartition(1) — costs ~0.3-0.5 s of
-    scheduling/commit per append; writing the part file directly with
-    pyarrow is milliseconds and reads back identically (plain parquet,
-    flat types + array<double>). Returns False when the schema has a type
-    this mapping doesn't cover, so callers fall back to the Spark write;
-    any other failure raises. Only for driver-resident metadata — never
-    for data-scale rows.
+    A Spark write job costs ~0.3-0.5 s of scheduling/commit per append;
+    writing the part file directly with pyarrow is milliseconds and reads
+    back identically (plain parquet, flat types + array<double>). Returns
+    the path of the committed part file. A schema field whose type the
+    mapping does not cover raises ``TypeError`` naming the field. Only for
+    driver-resident metadata — never for data-scale rows.
 
     Crash safety: the part file is written under a ``.``-prefixed name,
     which Spark's file listing skips, and renamed into place, so a crash
-    mid-write leaves no partial part file. An overwrite deletes the old
-    parts only after the new one is in place: a crash in between leaves
-    the old parts next to the new one, never an empty store."""
+    mid-write leaves no partial part file and all of ``rows`` commit in
+    one ``os.replace``. An overwrite deletes the old parts only after the
+    new one is in place: a crash in between leaves the old parts next to
+    the new one, never an empty store."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    try:
-        pa_schema = pa.schema(
-            [(f.name, _pa_type(f.dataType)) for f in schema.fields]
-        )
-    except TypeError:
-        return False
+    pa_schema = pa.schema([(f.name, _pa_type(f)) for f in schema.fields])
     cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
     table = pa.Table.from_arrays(
         [pa.array(list(c), type=t.type) for c, t in zip(cols, pa_schema)],
@@ -101,7 +108,7 @@ def arrow_append_rows(
             shutil.rmtree(p)
         else:
             os.remove(p)
-    return True
+    return os.path.join(path, name)
 
 
 def read_parquet_or_empty(
@@ -153,23 +160,15 @@ class ResultsStore:
         return read_parquet_or_empty(self.spark, self.path, RESULT_SCHEMA)
 
     def append_rows(self, rows: list[dict[str, Any]]) -> None:
+        """Append ``rows`` as one part file: they commit together or not
+        at all."""
         if not rows:
             return
-        tuples = [
-            tuple(r.get(f.name) for f in RESULT_SCHEMA.fields) for r in rows
-        ]
-        # driver-side pyarrow append (r7): the rows are already at the
-        # driver and bounded; a Spark write job costs ~0.3-0.5 s of
-        # scheduling/commit for the same single part file
-        if arrow_append_rows(self.path, tuples, RESULT_SCHEMA, "append"):
-            return
-        df = self.spark.createDataFrame(tuples, RESULT_SCHEMA)
-        # repartition(1), NOT coalesce(1): coalescing a python-local
-        # relation folds every default-parallelism slice into one task
-        # that re-enters the Python runner per slice (~5 s for a handful
-        # of rows at local[32], measured round 6); the 1-partition shuffle
-        # is ~10x cheaper and writes the same single file per append
-        df.repartition(1).write.mode("append").parquet(self.path)
+        arrow_append_rows(
+            self.path,
+            [tuple(r.get(f.name) for f in RESULT_SCHEMA.fields) for r in rows],
+            RESULT_SCHEMA,
+        )
 
     # ------------------------------------------------------------------
     def completed_partitions(self, suite_fingerprint: str, snapshot_id: str) -> set[str]:
@@ -193,25 +192,26 @@ class ResultsStore:
         snapshot_id: str,
         partition_ids: list[str],
         lineage: dict[str, Any] | None = None,
+        verdicts: Iterable[dict[str, Any]] = (),
     ) -> None:
+        """Commit ``partition_ids`` as completed: the ``verdicts`` rows
+        and one sentinel per partition, in ONE append, so the partitions'
+        verdicts are stored if and only if their sentinels are."""
         now = int(time.time() * 1000)
+        sentinel = {
+            "run_id": run_id,
+            "suite_fingerprint": suite_fingerprint,
+            "snapshot_id": snapshot_id,
+            "constraint_id": DONE_SENTINEL,
+            "constraint_type": DONE_SENTINEL,
+            "success": True,
+            "observed_json": json.dumps(lineage or {}, default=str),
+            "started_at_ms": now,
+            "finished_at_ms": now,
+            "duration_ms": 0,
+        }
         self.append_rows(
-            [
-                {
-                    "run_id": run_id,
-                    "suite_fingerprint": suite_fingerprint,
-                    "snapshot_id": snapshot_id,
-                    "partition_id": pid,
-                    "constraint_id": DONE_SENTINEL,
-                    "constraint_type": DONE_SENTINEL,
-                    "success": True,
-                    "observed_json": json.dumps(lineage or {}, default=str),
-                    "started_at_ms": now,
-                    "finished_at_ms": now,
-                    "duration_ms": 0,
-                }
-                for pid in partition_ids
-            ]
+            [*verdicts, *({**sentinel, "partition_id": p} for p in partition_ids)]
         )
 
     def verdicts(
@@ -245,8 +245,6 @@ class ResultsStore:
         fingerprint id; grouped runs get a ``:<group_json>`` suffix per
         group. The collect is bounded by one suite's verdict rows for one
         run — never the whole store."""
-        import json as _json
-
         df = self.verdicts(suite_fingerprint, snapshot_id)
         if run_id is None:
             row = df.agg(F.max_by("run_id", "started_at_ms").alias("r")).first()
@@ -255,7 +253,7 @@ class ResultsStore:
                 return {}
         params: dict[str, Any] = {}
         for r in df.where(F.col("run_id") == run_id).collect():
-            obs = _json.loads(r["observed_json"] or "{}")
+            obs = json.loads(r["observed_json"] or "{}")
             group = r["group_json"]
             suffix = "" if group in (None, "", "{}") else f":{group}"
             base = f"urn:validations:{r['constraint_id']}"

@@ -55,12 +55,6 @@ def hash_bucket(col: Column, buckets: int) -> Column:
 
 # ---- samplers -------------------------------------------------------------
 
-def sample_using_random(df: DataFrame, p: float, seed: int = 42) -> DataFrame:
-    """ref: _sample_using_random (F.rand(seed) < p). df.sample is the
-    idiomatic equivalent (per-partition Bernoulli, no extra column)."""
-    return df.sample(fraction=p, seed=seed)
-
-
 def sample_using_mod(df: DataFrame, column: str, mod: int, value: int) -> DataFrame:
     return df.where(F.pmod(F.col(column), F.lit(mod)) == F.lit(value))
 

@@ -475,8 +475,157 @@ def test_arrow_append_crash_leaves_no_partial_part(spark, tmp_path, monkeypatch,
     assert got == (["new"] if mode == "overwrite" else ["new", "old"])
     assert not [p for p in os.listdir(path) if p.startswith(".")]
 
-    # a type the pyarrow mapping lacks still falls back to the Spark write
+    # a type the pyarrow mapping lacks raises, naming the field
     import pyspark.sql.types as T
 
     mapped = T.StructType([T.StructField("m", T.MapType(T.StringType(), T.LongType()))])
-    assert not results_store.arrow_append_rows(str(tmp_path / "m"), [({},)], mapped)
+    with pytest.raises(TypeError, match="'m'"):
+        results_store.arrow_append_rows(str(tmp_path / "m"), [({},)], mapped)
+
+
+class _Killed(BaseException):
+    """A kill -9: not an ``Exception``, so no handler in the store catches
+    it."""
+
+
+class _KillAt:
+    """Stands in for ``os`` inside ``results_store``: counts calls of
+    ``fn`` and kills the process at the ``k``-th (never when ``k`` is
+    None). Like a real kill, nothing after that point runs: every later
+    ``os`` use raises too, so no cleanup removes a staging file."""
+
+    def __init__(self, fn: str, k: int | None = None) -> None:
+        self.fn, self.k, self.calls, self.dead = fn, k, 0, False
+
+    def __getattr__(self, name):
+        import os
+
+        if self.dead:
+            raise _Killed(name)
+        if name != self.fn:
+            return getattr(os, name)
+
+        def call(*args):
+            self.calls += 1
+            if self.calls == self.k:
+                self.dead = True
+                raise _Killed(f"{name}{args}")
+            return getattr(os, name)(*args)
+
+        return call
+
+
+def _four_partitions(spark):
+    rows = [(i, i % 4, None if i % 5 == 0 else f"c{i}") for i in range(40)]
+    return spark.createDataFrame(rows, "id long, p int, content string")
+
+
+_KILL_SUITE = (
+    ConstraintSuite("kill")
+    .add("expect_column_values_to_not_be_null", column="content")
+    .add("expect_column_values_to_be_unique", column="id")
+)
+
+
+def _one_verdict_set_each(store, parts):
+    """Exactly one sentinel per partition, and one verdict row per
+    (partition, constraint) in both the raw store and ``verdicts()``."""
+    from collections import Counter
+
+    from data_profiler_spark.sources.results_store import DONE_SENTINEL
+
+    fp = _KILL_SUITE.fingerprint
+    rows = store.read().collect()
+    sentinels = Counter(r["partition_id"] for r in rows if r["constraint_id"] == DONE_SENTINEL)
+    stored = Counter(_verdict_key(r) for r in rows if r["constraint_id"] != DONE_SENTINEL)
+    read = Counter(_verdict_key(r) for r in store.verdicts(fp, "").collect())
+    want = {(p, c.id): 1 for p in parts for c in _KILL_SUITE.constraints}
+    return sentinels == {p: 1 for p in parts} and stored == want and read == want
+
+
+def test_killed_commit_resumes_to_one_verdict_set(spark, tmp_path, monkeypatch):
+    """A run killed at any part-file rename resumes to exactly one sentinel
+    and one verdict set per partition. Each chunk commits as ONE part
+    file, so 4 partitions in chunks of 2 take 2 renames; a commit split
+    into a verdict file and a sentinel file doubles the chunk's verdicts
+    when the kill lands between the two."""
+    from data_profiler_spark.sources import results_store
+
+    df = _four_partitions(spark)
+    parts = ["0", "1", "2", "3"]
+
+    counter = _KillAt("replace")
+    with monkeypatch.context() as m:
+        m.setattr(results_store, "os", counter)
+        CheckpointRunner(ResultsStore(spark, str(tmp_path / "ref")), chunk_size=2).run(
+            df, _KILL_SUITE, partition_col="p"
+        )
+    renames = counter.calls
+
+    bad = []
+    for k in range(1, renames + 1):
+        store = ResultsStore(spark, str(tmp_path / f"k{k}"))
+        with monkeypatch.context() as m:
+            m.setattr(results_store, "os", _KillAt("replace", k))
+            with pytest.raises(_Killed):
+                CheckpointRunner(store, chunk_size=2).run(df, _KILL_SUITE, partition_col="p")
+        CheckpointRunner(store, chunk_size=2).run(df, _KILL_SUITE, partition_col="p")
+        if not _one_verdict_set_each(store, parts):
+            bad.append(k)
+    assert bad == []
+    assert renames == 2
+
+
+def test_stale_staging_file_is_invisible(spark, tmp_path, monkeypatch):
+    """A kill before the second chunk's rename leaves its complete staging
+    file (``.part-*.parquet``) in the store. The store reads, the resume
+    and the final verdicts ignore it."""
+    import os
+
+    from data_profiler_spark.sources import results_store
+
+    df = _four_partitions(spark)
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    with monkeypatch.context() as m:
+        m.setattr(results_store, "os", _KillAt("replace", 2))
+        with pytest.raises(_Killed):
+            CheckpointRunner(store, chunk_size=2).run(df, _KILL_SUITE, partition_col="p")
+    staged = [f for f in os.listdir(store.path) if f.startswith(".part-")]
+    assert len(staged) == 1 and staged[0].endswith(".parquet")
+
+    fp = _KILL_SUITE.fingerprint
+    assert store.completed_partitions(fp, "") == {"0", "1"}
+    assert {r["partition_id"] for r in store.verdicts(fp, "").collect()} == {"0", "1"}
+    rep = CheckpointRunner(store, chunk_size=2).run(df, _KILL_SUITE, partition_col="p")
+    assert rep.validated_partitions == ["2", "3"]
+    assert _one_verdict_set_each(store, ["0", "1", "2", "3"])
+
+
+def test_profile_overwrite_killed_before_old_parts_deleted(spark, tmp_path, monkeypatch):
+    """An overwrite killed after its part file is in place but before the
+    old parts are deleted leaves both copies; the next overwrite leaves
+    exactly one copy of each run's rows."""
+    from data_profiler_spark.operators.profile import profile
+    from data_profiler_spark.operators.profile_diff import ProfileStore
+    from data_profiler_spark.sources import results_store
+
+    prof = profile(_four_partitions(spark), columns=["id"])
+    store = ProfileStore(spark, str(tmp_path / "profiles"))
+    store.append_runs([(prof, "base")], "s")
+    store.append_runs([(prof, "cur")], "s")
+    n = len(store.run_rows("base"))
+    assert n > 0
+
+    runs = [(prof, "base"), (prof, "cur")]
+    with monkeypatch.context() as m:
+        m.setattr(results_store, "os", _KillAt("remove", 1))
+        with pytest.raises(_Killed):
+            store.append_runs(runs, "s", mode="overwrite")
+    assert {k: len(v) for k, v in store.runs_rows(["base", "cur"]).items()} == {
+        "base": 2 * n, "cur": 2 * n,
+    }
+
+    store.append_runs(runs, "s", mode="overwrite")
+    assert {k: len(v) for k, v in store.runs_rows(["base", "cur"]).items()} == {
+        "base": n, "cur": n,
+    }

@@ -208,6 +208,32 @@ def test_increasing(spark):
     assert r2.unexpected_count == 2
 
 
+def test_monotonic_verdicts_window_within_group(spark):
+    """Rows of p=0 and p=1 interleave in ``order_by`` order and increase
+    within each p. Validated by p, each group's verdict is the same whether
+    the other group is in the same pass or not."""
+    rows = [(o, o % 2, float(o // 2 + (10 if o % 2 == 0 else 0))) for o in range(1, 9)]
+    df = spark.createDataFrame(rows, "ord int, p int, v double")
+    suite = (
+        ConstraintSuite("mono")
+        .add("expect_column_values_to_be_increasing", column="v", order_by="ord")
+        .add("expect_column_values_to_be_decreasing", column="v", order_by="ord")
+    )
+
+    def verdicts(frame):
+        return {
+            (r.group["p"], r.constraint_type): (r.success, r.element_count, r.unexpected_count)
+            for r in Validator(frame).validate(suite, group_by=["p"]).results
+        }
+
+    together = verdicts(df)
+    alone = {**verdicts(df.where("p = 0")), **verdicts(df.where("p = 1"))}
+    assert together == alone
+    assert together[(0, "expect_column_values_to_be_increasing")] == (True, 4, 0)
+    assert together[(1, "expect_column_values_to_be_increasing")] == (True, 4, 0)
+    assert together[(1, "expect_column_values_to_be_decreasing")] == (False, 4, 3)
+
+
 def test_pair_equal(typed_small, pdf):
     r = run_one(
         typed_small, "expect_column_pair_values_to_be_equal",
