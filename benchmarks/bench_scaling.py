@@ -2,7 +2,9 @@
 uniqueness + referential + drift + verdict write) at two parallelism levels
 (local[8] vs local[32] — the sandbox proxy for N vs 4N executors), reporting
 validated files/sec at each and the scaling efficiency
-(throughput_32 / throughput_8) / 4 (target >= 0.8, BASELINE.json).
+(throughput_32 / throughput_8) / 4 (target >= 0.8, BASELINE.json), and the
+CPU the measured run cost: the whole process tree's and the executor
+tasks' (Spark's executorCpuTime).
 
 Protocol (BASELINE.md):
   1. materialize the deterministic code table ONCE to local parquet;
@@ -12,6 +14,7 @@ Protocol (BASELINE.md):
 
 Usage:
   python benchmarks/bench_scaling.py [--rows 1000000] [--reps 3]
+      [--levels 2,8] [--recover 75] [--data-dir /tmp/dps_bench_data]
       [--out BENCH.md]
   python benchmarks/bench_scaling.py --worker <cpus> <data_dir>   # internal
 """
@@ -19,6 +22,7 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -27,16 +31,13 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-DATA_DIR = Path("/tmp/dps_bench_data")
-
-
 WARMUP_ROWS = 20_000
 
 
-def materialize(rows: int) -> tuple[Path, Path, Path]:
-    files_path = DATA_DIR / f"code_files_{rows}"
-    warm_path = DATA_DIR / f"code_files_{WARMUP_ROWS}"
-    commits_path = DATA_DIR / "commits"
+def materialize(rows: int, data_dir: Path) -> tuple[Path, Path, Path]:
+    files_path = data_dir / f"code_files_{rows}"
+    warm_path = data_dir / f"code_files_{WARMUP_ROWS}"
+    commits_path = data_dir / "commits"
     if files_path.exists() and commits_path.exists() and warm_path.exists():
         return files_path, commits_path, warm_path
     from data_profiler_spark.core.session import get_spark_session
@@ -84,6 +85,7 @@ def run_job(
         _pipeline(spark, warm_path, commits_path)
         warmup_sec = round(time.time() - t0, 3)
 
+    cpu0, task0 = tree_cpu_sec(), executor_cpu_sec(spark)
     phases, n_files, n_results, n_samples = _pipeline(
         spark, files_path, commits_path
     )
@@ -94,6 +96,9 @@ def run_job(
         "total_sec": round(total, 3),
         "warmup_sec": warmup_sec,
         "files_per_sec": round(n_files / total, 1),
+        "cpu_sec": round(tree_cpu_sec() - cpu0, 2),
+        "task_cpu_sec": round(executor_cpu_sec(spark) - task0, 2),
+        "process_cpu_sec": round(tree_cpu_sec(), 2),
         "phases": {k: round(v, 3) for k, v in phases.items()},
         "n_constraint_results": n_results,
         "n_violation_samples": n_samples,
@@ -182,6 +187,41 @@ def _pipeline(spark, files_path: Path, commits_path: Path):
     return phases, n_files, len(result.results), n_samples
 
 
+TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_sec() -> float:
+    """CPU seconds used so far by this worker's session: the interpreter,
+    its JVM, the JVM's Python workers and the children they have reaped
+    (``run_worker`` starts each worker as a session leader)."""
+    sid, ticks = os.getsid(0), 0
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue  # the process ended
+        if int(fields[3]) == sid:
+            ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    return ticks / TICK
+
+
+def executor_cpu_sec(spark) -> float:
+    """Executor-task CPU seconds of every stage of the jobs in the status
+    store."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = store.jobsList(None)
+    stages = {
+        int(s)
+        for i in range(jobs.size())
+        for s in jobs.apply(i).stageIds().mkString(",").split(",")
+        if s
+    }
+    return sum(store.lastStageAttempt(s).executorCpuTime() for s in stages) / 1e9
+
+
 def cpu_calibration() -> float:
     """Seconds for a fixed single-core workload (sha256 over 256 MiB).
 
@@ -217,8 +257,8 @@ def run_worker(
     if shutil.which("taskset"):
         cmd = ["taskset", "-c", f"0-{cpus - 1}" if cpus > 1 else "0"] + cmd
     proc = subprocess.run(
-        cmd,
-        capture_output=True, text=True, cwd=str(Path(__file__).parent.parent),
+        cmd, capture_output=True, text=True,
+        cwd=str(Path(__file__).parent.parent), start_new_session=True,
     )
     line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
     if not line:
@@ -272,6 +312,7 @@ def main() -> None:
     out_md = None
     levels = [2, 8]
     recover = 75
+    data_dir = Path("/tmp/dps_bench_data")
     args = sys.argv[1:]
     if "--rows" in args:
         rows = int(args[args.index("--rows") + 1])
@@ -283,10 +324,12 @@ def main() -> None:
         levels = [int(x) for x in args[args.index("--levels") + 1].split(",")]
     if "--recover" in args:
         recover = int(args[args.index("--recover") + 1])
+    if "--data-dir" in args:
+        data_dir = Path(args[args.index("--data-dir") + 1])
     n_lvl, n4_lvl = levels[0], levels[1]
     cold = "--cold" in args  # skip the plan warm-up run
 
-    files_path, commits_path, warm_path = materialize(rows)
+    files_path, commits_path, warm_path = materialize(rows, data_dir)
     all_runs = measure_interleaved(
         levels, files_path, commits_path, reps, recover,
         warm_path=None if cold else warm_path,
@@ -299,6 +342,10 @@ def main() -> None:
             "min_sec": best,
             "median_sec": statistics.median(times),
             "files_per_sec": round(runs[0]["n_files"] / best, 1),
+            **{
+                f"median_{k}": statistics.median(r[k] for r in runs)
+                for k in ("cpu_sec", "task_cpu_sec", "process_cpu_sec")
+            },
             "runs": runs,
         }
     eff = (results[n4_lvl]["files_per_sec"] / results[n_lvl]["files_per_sec"]) / 4.0
@@ -345,6 +392,15 @@ def main() -> None:
             f"({results[n4_lvl]['files_per_sec']} files/sec)",
             f"- **scaling efficiency (throughput_4N/throughput_N)/4 = "
             f"{eff:.3f}** (target >= 0.8)",
+            "- CPU, median per level: measured run's process tree / its "
+            "executor tasks / the whole worker (session start and warm-up "
+            "included): "
+            + "; ".join(
+                f"local[{c}]: {results[c]['median_cpu_sec']}s / "
+                f"{results[c]['median_task_cpu_sec']}s / "
+                f"{results[c]['median_process_cpu_sec']}s"
+                for c in levels
+            ),
             f"- phases (local[{n4_lvl}], best run): "
             f"{json.dumps(best4['phases'])}",
             f"- per-run (total_sec @ calibration_sec; calibration = fixed "

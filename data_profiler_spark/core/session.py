@@ -2,14 +2,36 @@
 
 Mirrors the intent of the reference's ``get_or_create_spark_application``
 (/root/reference/src/data_profiler/core/util.py:549-608) but tuned for an
-analytics engine: AQE on, Arrow on, shuffle partitions sized to cores.
+analytics engine: AQE on, Arrow on, shuffle partitions sized to cores, and
+a driver JVM that promotes methods to C2 later (``DRIVER_JIT_OPTIONS``).
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+# Driver JVM JIT policy. All four HotSpot tiers stay; only the point at
+# which a method is promoted to C2 (tier 4) moves, to 10x the JDK 17
+# defaults. The driver plans every query, and planner code that runs
+# briefly per query otherwise pays for full C2 compiles it never earns
+# back (JIT was 44% of a cold operator pass). Measured on 4 cores
+# (CHANGES.md): perfbench operator_suite run_cpu_s fell 17% at x3, 27% at
+# x10 and 24% at x30. The cost: in local mode the driver also runs the
+# tasks, and at x10 their steady-state CPU on a 2M-row run rose about
+# 11% (x3: about 5%). Executor JVMs keep the defaults. spark-submit users
+# pass the same string with --driver-java-options (README).
+DRIVER_JIT_OPTIONS = " ".join(
+    f"-XX:{flag}={default * 10}"
+    for flag, default in (
+        ("Tier4InvocationThreshold", 5000),
+        ("Tier4MinInvocationThreshold", 600),
+        ("Tier4CompileThreshold", 15000),
+        ("Tier4BackEdgeThreshold", 40000),
+    )
+)
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -64,11 +86,16 @@ def get_spark_session(
     conf["spark.sql.files.minPartitionNum"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    # The caller's options go after ours: HotSpot keeps the last value of
+    # a repeated flag, so a caller can still override a threshold.
+    conf["spark.driver.extraJavaOptions"] = " ".join(
+        filter(None, [DRIVER_JIT_OPTIONS, conf.get("spark.driver.extraJavaOptions")])
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_SESSION_WARM", "1") == "1":
+    if spark.sparkContext.master.startswith("local"):
         _warm_session(spark)
     return spark
 
@@ -77,7 +104,8 @@ _WARMED: set[str] = set()
 
 
 def _warm_session(spark: SparkSession) -> None:
-    """One-time, data-independent session initialization (~1-2 s).
+    """One-time, data-independent session initialization (~1-2 s), run on
+    local masters only.
 
     First use of each executor facility pays a class-load + codegen +
     worker-spawn tax that otherwise lands on whichever QUERY happens to
@@ -85,48 +113,58 @@ def _warm_session(spark: SparkSession) -> None:
     the first Python-worker stage of a session while every worker imports
     pandas/numpy concurrently). Real clusters front-load this with
     executor preload / warm pools; locally we run three tiny synthetic
-    jobs at session build: a parquet write+read+aggregate over /tmp (scan
-    + HashAggregate + codegen paths), a rank window (sort exchange +
+    jobs at session build: a parquet write+read+aggregate over a temp dir
+    (scan + HashAggregate + codegen paths), a rank window (sort exchange +
     WindowGroupLimit), and a trivial mapInPandas over one batch per core
     (spawns the Python worker pool and imports pandas/pyarrow once,
     amortized for every later Arrow stage). Synthetic inputs only — no
-    engine table is touched, nothing is cached or reused by queries."""
+    engine table is touched, nothing is cached or reused by queries. A
+    step that fails is logged as a warning naming it, with its traceback;
+    it never blocks session creation."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     key = spark.sparkContext.applicationId
     if key in _WARMED:
         return
     _WARMED.add(key)
-    try:
-        import shutil
-        import tempfile
+    cores = spark.sparkContext.defaultParallelism
+    tmp = tempfile.mkdtemp(prefix="dps_warm_")
+    path = os.path.join(tmp, "w.parquet")
 
-        from pyspark.sql import functions as F
+    def parquet_aggregate():
+        spark.range(1000).selectExpr(
+            "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS x"
+        ).write.mode("overwrite").parquet(path)
+        spark.read.parquet(path).groupBy("k").agg(
+            F.count(F.lit(1)), F.sum("x"), F.min("x"), F.max("x"),
+            F.count_distinct("id"),
+        ).collect()
 
-        sc = spark.sparkContext
-        cores = sc.defaultParallelism
-        tmp = tempfile.mkdtemp(prefix="dps_warm_")
-        try:
-            path = os.path.join(tmp, "w.parquet")
-            spark.range(1000).selectExpr(
-                "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS x"
-            ).write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
-            df.groupBy("k").agg(
-                F.count(F.lit(1)), F.sum("x"), F.min("x"), F.max("x"),
-                F.count_distinct("id"),
-            ).collect()
-            from pyspark.sql import Window
+    def rank_window():
+        w = Window.partitionBy("k").orderBy(F.desc("x"))
+        spark.read.schema("id long, k long, x double").parquet(path).withColumn(
+            "r", F.row_number().over(w)
+        ).where("r <= 2").count()
 
-            w = Window.partitionBy("k").orderBy(F.desc("x"))
-            df.withColumn("r", F.row_number().over(w)).where("r <= 2").count()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+    def _touch(batches):
+        yield from batches
 
-        def _touch(batches):
-            for b in batches:
-                yield b
-
+    def python_workers():
         spark.range(cores).repartition(cores).mapInPandas(
             _touch, "id long"
         ).count()
-    except Exception:
-        pass  # warm-up is best-effort; never block session creation
+
+    try:
+        for step in (parquet_aggregate, rank_window, python_workers):
+            try:
+                step()
+            except Exception:  # best-effort: warn, go on to the next step
+                logging.getLogger(__name__).warning(
+                    "session warm-up step %r failed", step.__name__, exc_info=True
+                )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -45,7 +45,19 @@ def oracle_sql() -> dict[str, str]:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """One input table. Spark's parquet schema inference is a Spark job,
+    so the schema it inferred at the first read is kept in the table's
+    ``_input_meta`` entry and every later read of the same files passes it
+    with ``.schema(...)``: no job. A rewritten file is a new entry and is
+    inferred again. Inputs ``_input_meta`` cannot key are always inferred."""
+    path = f"{sf_dir}/{name}.parquet"
+    meta = _input_meta(sf_dir, name)
+    if meta is not None and "schema" in meta:
+        return spark.read.schema(meta["schema"]).parquet(path)
+    df = spark.read.parquet(path)
+    if meta is not None:
+        meta["schema"] = df.schema
+    return df
 
 
 _INPUT_META: dict[tuple, dict | None] = {}
@@ -55,7 +67,8 @@ def _input_meta(sf_dir: str, name: str) -> dict | None:
     """Driver-side facts about one parquet input, read with pyarrow in
     milliseconds and no Spark job: ``rows`` and ``row_groups`` from the
     footers and, for ``embeddings``, the ANN ``query_rows`` (vec_id < 5,
-    sorted, as ``[(id, [float])]``). Cached on the identity (name, size,
+    sorted, as ``[(id, [float])]``); ``_t`` adds the ``schema`` Spark
+    inferred at its first read. Cached on the identity (name, size,
     mtime_ns) of every parquet file under the path, globbed recursively,
     so a rewritten input is read again. None when the path cannot be read
     locally; callers then fall back to Spark."""

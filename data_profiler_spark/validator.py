@@ -16,10 +16,11 @@ graph machinery it needed for three backends):
   5. violation rows are extracted ONLY for failed constraints (ref early
      exit, dataset/sparkdf_dataset.py:139-141), deterministically sampled
 
-The input DataFrame is persisted across steps 2-5 only when violations will
-be extracted (ref ``persist=True`` engine option,
-sparkdf_execution_engine.py:151-156); callers validating pure aggregates pay
-a single scan.
+The input DataFrame is persisted across the fused pass and the post passes
+only when the caller asks for it with ``validate(persist=True)`` and more
+than one job will scan it (ref ``persist=True`` engine option,
+sparkdf_execution_engine.py:151-156); by default every job re-scans the
+input, and callers validating pure aggregates pay a single scan.
 """
 
 from __future__ import annotations

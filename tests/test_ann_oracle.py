@@ -1,5 +1,5 @@
 """The ANN queries against their DuckDB oracles, plus the driver-side
-input metadata those queries read."""
+input metadata those queries and every table read use."""
 
 from __future__ import annotations
 
@@ -80,3 +80,36 @@ def test_input_meta_follows_rewritten_file(tmp_path):
     second = _input_meta(str(tmp_path), "embeddings")
     assert second["rows"] == 20
     assert second["query_rows"] == [(i, [2.0 * i, 1.0]) for i in range(5)]
+
+
+def test_table_read_infers_schema_once(spark, tmp_path):
+    """``_t`` submits Spark's schema-inference job at the first read of a
+    table only; a rewritten file is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_profiler_spark.queries import _t
+
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    sc = spark.sparkContext
+
+    def read(group: str):
+        sc.setJobGroup(group, group)
+        try:
+            df = _t(spark, str(tmp_path), "t")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pq.write_table(pa.table({"a": [1, 2]}), table / "data.parquet")
+    first, jobs = read("schema-first")
+    assert jobs == 1 and first.columns == ["a"]
+    again, jobs = read("schema-again")
+    assert jobs == 0 and again.schema == first.schema
+    assert sorted(r.a for r in again.collect()) == [1, 2]
+
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), table / "data.parquet")
+    rewritten, jobs = read("schema-rewritten")
+    assert jobs == 1 and rewritten.columns == ["a", "b"]
+    assert [tuple(r) for r in rewritten.collect()] == [(3, "x")]
