@@ -158,28 +158,21 @@ def _pipeline(spark, files_path: Path, commits_path: Path):
     from concurrent.futures import ThreadPoolExecutor as _TPE
 
     _SAMPLE_KEYS = ["partition_id", "repo", "path", "commit"]
-    with _TPE(max_workers=2) as hx:
+    with _TPE(max_workers=1) as hx:
         hist_fut = hx.submit(finish_hist)
         v = Validator(files, tables={"commits": commits})
-        # pre-build the violation-sample plans (pure driver py4j work) on a
-        # side thread while the constraint agg runs on the executors — the
-        # plan-construction slice of the serial F term overlaps with
-        # executor time instead of extending the violations phase
-        prep_fut = hx.submit(
-            v.prepare_violation_samples, suite, 20, _SAMPLE_KEYS
-        )
         result = v.validate(suite, group_by=["partition_id"])
         hist_fut.result()
-        prepared = prep_fut.result()
     phases["constraints_and_hist"] = time.time() - t0
 
     t0 = time.time()
-    # all failed constraints' samples in ONE job (shared key schema) —
-    # K driver round-trips -> 1; the per-job fixed cost was a measurable
-    # slice of the serial F term at high parallelism
+    # all failed constraints' samples in ONE job (shared key schema), at
+    # most 20 per (constraint, partition) as the CheckpointRunner stores
+    # them — K driver round-trips -> 1; the per-job fixed cost was a
+    # measurable slice of the serial F term at high parallelism
     sdf = v.violation_samples_unioned(
         suite, limit=20, only_failed_of=result,
-        key_columns=_SAMPLE_KEYS, prepared=prepared,
+        key_columns=_SAMPLE_KEYS, group_by=["partition_id"],
     )
     n_samples = sdf.count() if sdf is not None else 0
     phases["violations"] = time.time() - t0

@@ -2,8 +2,9 @@
 
 Field semantics follow /root/reference/src/data_profiler/expectations/
 expectation.py:1321-1369 (map verdicts) and :1760-1871 (_format_map_output):
-- ``success`` for map constraints = (nonnull - unexpected)/nonnull >= mostly,
-  vacuously True when the domain is empty (expectation.py:1354-1356);
+- ``success`` for every row-count constraint (map constraints, uniqueness,
+  referential, z-score, monotonicity) = (nonnull - unexpected)/nonnull >=
+  mostly, vacuously True when the domain is empty (expectation.py:1354-1356);
 - ``unexpected_percent`` is relative to nonnull values,
   ``unexpected_percent_total`` relative to all rows (expectation.py:1793-1825);
 - suite ``statistics`` mirror validator.py:1465-1488.

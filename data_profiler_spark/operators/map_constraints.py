@@ -9,7 +9,10 @@ Each constraint lowers to fused aggregate terms:
 /root/reference/src/data_profiler/expectations/metrics/map_metric_provider.py:2299-2314)
 
 plus a violations builder ``df.filter(nonnull & unexpected)`` used only for
-failed constraints. Null handling composes exactly like the reference's
+failed constraints. Uniqueness, referential, z-score and monotonicity
+share this lowering (``compile_map_constraint``) and its verdict; their
+unexpected count is not a row predicate, so they supply a count plan,
+which one post pass collects per group. Null handling composes exactly like the reference's
 ``column_condition_partial`` Spark branch (map_metric_provider.py:478-490):
 ``column.isNotNull() & ~expected_condition``.
 
@@ -30,7 +33,7 @@ from __future__ import annotations
 import json
 import re
 from functools import reduce
-from typing import Any
+from typing import Any, Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -40,7 +43,12 @@ from pyspark.sql import types as T
 from data_profiler_spark.core.result import ConstraintResult
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.registry import register
-from data_profiler_spark.plans.fused import AggTerm, CompiledConstraint, metric_alias
+from data_profiler_spark.plans.fused import (
+    AggTerm,
+    CompiledConstraint,
+    GroupKey,
+    metric_alias,
+)
 
 
 class ConditionParserError(ValueError):
@@ -115,32 +123,70 @@ def _guard(rc: Column | None, cond: Column) -> Column:
     return cond if rc is None else (rc & cond)
 
 
+# (frame, group_by, groups) -> (rows, n): ``rows.groupBy(*group_by).agg(n)``
+# counts each group's unexpected rows; None when there is nothing to count.
+# ``groups`` holds the fused-pass metrics, or is empty for a post pass that
+# does not wait for them.
+UnexpectedCount = Callable[
+    [DataFrame, list[str], list[tuple[GroupKey, dict[str, Any]]]],
+    tuple[DataFrame, Column] | None,
+]
+
+
 def compile_map_constraint(
     constraint: Constraint,
-    df: DataFrame,
     *,
-    unexpected: Column,
     domain_nonnull: Column,
+    unexpected: Column | None = None,
+    unexpected_count: UnexpectedCount | None = None,
+    violations: Callable[[DataFrame, list[str]], DataFrame] | None = None,
     denominator: str = "nonnull",  # "nonnull" | "element"
-    violation_cond: Column | None = None,
+    extra_terms: list[AggTerm] | None = None,
+    details: Callable[[dict[str, Any]], dict[str, Any]] | None = None,
+    post_pass_needs_metrics: bool = False,
 ) -> CompiledConstraint:
-    """Shared lowering for every map constraint."""
+    """The one lowering of every constraint whose verdict is the ``mostly``
+    ratio: map constraints, uniqueness, referential, z-score, monotonicity.
+
+    The unexpected count is either a row predicate (``unexpected``), summed
+    in the fused pass, or an ``unexpected_count`` plan, which one post pass
+    counts per group with ``groupBy(*group_by)`` (no keys: Spark's global
+    aggregate). The row condition scopes the element and missing terms, the
+    count plan and the ``violations`` plan alike."""
     kw = constraint.kwargs
     rc = _row_condition(constraint)
     rc_key = _row_condition_sql(constraint)
 
     elem_a = metric_alias("element_count", rc=rc_key)
-    full_unexpected = _guard(rc, domain_nonnull & unexpected) if denominator == "nonnull" else _guard(rc, unexpected)
     miss_a = metric_alias("missing_count", domain=str(domain_nonnull), rc=rc_key)
-    unex_a = metric_alias(
-        "unexpected_count", constraint_id=constraint.id
-    )
+    unex_a = metric_alias("unexpected_count", constraint_id=constraint.id)
 
     terms = [
         AggTerm(elem_a, F.count(F.when(rc, F.lit(1)) if rc is not None else F.lit(1))),
         AggTerm(miss_a, F.sum(F.when(_guard(rc, ~domain_nonnull), 1).otherwise(0))),
-        AggTerm(unex_a, F.sum(F.when(full_unexpected, 1).otherwise(0))),
+        *(extra_terms or []),
     ]
+
+    def scoped(frame: DataFrame) -> DataFrame:
+        return frame if rc is None else frame.where(rc)
+
+    post_pass = None
+    if unexpected is not None:
+        cond = domain_nonnull & unexpected if denominator == "nonnull" else unexpected
+        terms.append(AggTerm(unex_a, F.sum(F.when(_guard(rc, cond), 1).otherwise(0))))
+
+        def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
+            return frame.filter(cond)
+    else:
+        def post_pass(frame: DataFrame, group_by: list[str], groups):
+            plan = unexpected_count(scoped(frame), group_by, groups)
+            if plan is None:
+                return {}
+            rows, n = plan
+            return {
+                tuple(r[k] for k in group_by): {unex_a: int(r["n"] or 0)}
+                for r in rows.groupBy(*group_by).agg(n.alias("n")).collect()
+            }
 
     mostly = float(kw.get("mostly", 1.0))
 
@@ -148,17 +194,13 @@ def compile_map_constraint(
         element_count = int(metrics.get(elem_a) or 0)
         missing = int(metrics.get(miss_a) or 0)
         unexpected_n = int(metrics.get(unex_a) or 0)
-        nonnull = element_count - missing
-        denom = nonnull if denominator == "nonnull" else element_count
-        if denom <= 0:
-            success = True  # vacuous truth (expectation.py:1354-1356)
-        else:
-            success = (denom - unexpected_n) / denom >= mostly
+        denom = element_count - missing if denominator == "nonnull" else element_count
         return ConstraintResult(
             constraint_id=constraint.id,
             constraint_type=constraint.type,
             kwargs=dict(kw),
-            success=bool(success),
+            # vacuous truth on an empty domain (expectation.py:1354-1356)
+            success=denom <= 0 or (denom - unexpected_n) / denom >= mostly,
             group=group,
             element_count=element_count,
             unexpected_count=unexpected_n,
@@ -167,19 +209,20 @@ def compile_map_constraint(
             unexpected_percent_total=(
                 (100.0 * unexpected_n / element_count) if element_count else None
             ),
+            details=details(metrics) if details else {},
         )
 
-    vcond = violation_cond if violation_cond is not None else full_unexpected
-
-    def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
-        return frame.filter(vcond)
+    def violations_fn(frame: DataFrame, group_by: list[str]) -> DataFrame:
+        return violations(scoped(frame), group_by)
 
     return CompiledConstraint(
         constraint=constraint,
         agg_terms=terms,
         verdict_fn=verdict,
-        violations_fn=violations,
+        violations_fn=violations_fn if violations is not None else None,
         value_column=kw.get("column"),
+        post_pass_fn=post_pass,
+        post_pass_needs_metrics=post_pass_needs_metrics,
     )
 
 
@@ -193,7 +236,7 @@ def c_not_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
     """ref: column_values_non_null.py:36; domain = ALL rows (no null filter)."""
     col = F.col(constraint.kwargs["column"])
     return compile_map_constraint(
-        constraint, df,
+        constraint,
         unexpected=col.isNull(),
         domain_nonnull=F.lit(True),
         denominator="element",
@@ -204,7 +247,7 @@ def c_not_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
 def c_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     col = F.col(constraint.kwargs["column"])
     return compile_map_constraint(
-        constraint, df,
+        constraint,
         unexpected=col.isNotNull(),
         domain_nonnull=F.lit(True),
         denominator="element",
@@ -216,10 +259,10 @@ def c_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstrai
 # --------------------------------------------------------------------------
 
 
-def _std_map(constraint: Constraint, df: DataFrame, expected: Column) -> CompiledConstraint:
+def _std_map(constraint: Constraint, expected: Column) -> CompiledConstraint:
     col = F.col(constraint.kwargs["column"])
     return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=col.isNotNull()
+        constraint, unexpected=~expected, domain_nonnull=col.isNotNull()
     )
 
 
@@ -234,7 +277,7 @@ def c_between(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConst
     if kw.get("max_value") is not None:
         conds.append(col < kw["max_value"] if kw.get("strict_max") else col <= kw["max_value"])
     expected = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-    return _std_map(constraint, df, expected)
+    return _std_map(constraint, expected)
 
 
 @register("expect_column_values_to_be_in_set")
@@ -243,7 +286,7 @@ def c_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
     kw = constraint.kwargs
     vs = list(kw.get("value_set") or [])
     expected = F.col(kw["column"]).isin(vs) if vs else F.lit(True)
-    return _std_map(constraint, df, expected)
+    return _std_map(constraint, expected)
 
 
 @register("expect_column_values_to_not_be_in_set")
@@ -251,20 +294,20 @@ def c_not_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCo
     kw = constraint.kwargs
     vs = list(kw.get("value_set") or [])
     expected = ~F.col(kw["column"]).isin(vs) if vs else F.lit(True)
-    return _std_map(constraint, df, expected)
+    return _std_map(constraint, expected)
 
 
 @register("expect_column_values_to_match_regex")
 def c_match_regex(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_values_match_regex.py:39-40 (rlike)."""
     kw = constraint.kwargs
-    return _std_map(constraint, df, F.col(kw["column"]).rlike(kw["regex"]))
+    return _std_map(constraint, F.col(kw["column"]).rlike(kw["regex"]))
 
 
 @register("expect_column_values_to_not_match_regex")
 def c_not_match_regex(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    return _std_map(constraint, df, ~F.col(kw["column"]).rlike(kw["regex"]))
+    return _std_map(constraint, ~F.col(kw["column"]).rlike(kw["regex"]))
 
 
 @register("expect_column_values_to_match_regex_list")
@@ -274,7 +317,7 @@ def c_match_regex_list(constraint: Constraint, df: DataFrame, ctx: dict) -> Comp
     col = F.col(kw["column"])
     conds = [col.rlike(r) for r in kw["regex_list"]]
     op = (lambda a, b: a & b) if kw.get("match_on", "any") == "all" else (lambda a, b: a | b)
-    return _std_map(constraint, df, reduce(op, conds))
+    return _std_map(constraint, reduce(op, conds))
 
 
 @register("expect_column_values_to_not_match_regex_list")
@@ -282,7 +325,7 @@ def c_not_match_regex_list(constraint: Constraint, df: DataFrame, ctx: dict) -> 
     """ref: column_values_not_match_regex_list.py:55-61 (must match none)."""
     kw = constraint.kwargs
     col = F.col(kw["column"])
-    return _std_map(constraint, df, reduce(lambda a, b: a & b, [~col.rlike(r) for r in kw["regex_list"]]))
+    return _std_map(constraint, reduce(lambda a, b: a & b, [~col.rlike(r) for r in kw["regex_list"]]))
 
 
 @register("expect_column_values_to_match_like_pattern")
@@ -291,13 +334,13 @@ def c_like(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstrai
     (column_values_match_like_pattern.py:21-59); Spark's Column.like fills
     the gap."""
     kw = constraint.kwargs
-    return _std_map(constraint, df, F.col(kw["column"]).like(kw["like_pattern"]))
+    return _std_map(constraint, F.col(kw["column"]).like(kw["like_pattern"]))
 
 
 @register("expect_column_values_to_not_match_like_pattern")
 def c_not_like(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    return _std_map(constraint, df, ~F.col(kw["column"]).like(kw["like_pattern"]))
+    return _std_map(constraint, ~F.col(kw["column"]).like(kw["like_pattern"]))
 
 
 @register("expect_column_values_to_match_like_pattern_list")
@@ -312,7 +355,7 @@ def c_like_list(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCon
         else (lambda a, b: a | b),
         conds,
     )
-    return _std_map(constraint, df, comb)
+    return _std_map(constraint, comb)
 
 
 @register("expect_column_values_to_not_match_like_pattern_list")
@@ -322,7 +365,7 @@ def c_not_like_list(constraint: Constraint, df: DataFrame, ctx: dict) -> Compile
     kw = constraint.kwargs
     col = F.col(kw["column"])
     comb = reduce(lambda a, b: a | b, [col.like(p) for p in kw["like_pattern_list"]])
-    return _std_map(constraint, df, ~comb)
+    return _std_map(constraint, ~comb)
 
 
 @register("expect_column_value_lengths_to_be_between")
@@ -336,13 +379,13 @@ def c_length_between(constraint: Constraint, df: DataFrame, ctx: dict) -> Compil
     if kw.get("max_value") is not None:
         conds.append(ln < kw["max_value"] if kw.get("strict_max") else ln <= kw["max_value"])
     expected = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-    return _std_map(constraint, df, expected)
+    return _std_map(constraint, expected)
 
 
 @register("expect_column_value_lengths_to_equal")
 def c_length_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    return _std_map(constraint, df, F.length(F.col(kw["column"])) == kw["value"])
+    return _std_map(constraint, F.length(F.col(kw["column"])) == kw["value"])
 
 
 _STRFTIME_TO_SPARK = {
@@ -462,11 +505,11 @@ def c_strftime(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
         expected = _strptime_fallback_udf(kw["strftime_format"])(
             col.cast("string")
         )
-        return _std_map(constraint, df, expected)
+        return _std_map(constraint, expected)
     expected = F.try_to_timestamp(col, F.lit(fmt)).isNotNull() & (
         F.length(col) == F.length(F.date_format(F.try_to_timestamp(col, F.lit(fmt)), fmt))
     )
-    return _std_map(constraint, df, expected)
+    return _std_map(constraint, expected)
 
 
 @F.pandas_udf(T.BooleanType())
@@ -503,7 +546,7 @@ def c_dateutil(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
             | F.try_to_timestamp(col, F.lit("yyyy/MM/dd")).isNotNull()
             | F.try_to_timestamp(col, F.lit("MM/dd/yyyy")).isNotNull()
         )
-        return _std_map(constraint, df, expected)
+        return _std_map(constraint, expected)
     if not isinstance(df.schema[kw["column"]].dataType, T.StringType):
         raise TypeError(
             "Values passed to expect_column_values_to_be_dateutil_parseable "
@@ -511,7 +554,7 @@ def c_dateutil(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
             "dates or timestamps, please call the expectation before "
             "converting from string format."
         )
-    return _std_map(constraint, df, _dateutil_parseable_udf(col))
+    return _std_map(constraint, _dateutil_parseable_udf(col))
 
 
 @F.pandas_udf(T.BooleanType())
@@ -533,7 +576,7 @@ def c_json_parseable(constraint: Constraint, df: DataFrame, ctx: dict) -> Compil
     """Arrow-batched replacement for the row UDF at
     column_values_json_parseable.py:29-39."""
     kw = constraint.kwargs
-    return _std_map(constraint, df, _json_parseable_udf(F.col(kw["column"])))
+    return _std_map(constraint, _json_parseable_udf(F.col(kw["column"])))
 
 
 @register("expect_column_values_to_match_json_schema")
@@ -561,7 +604,7 @@ def c_json_schema(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
 
         return s.map(ok)
 
-    return _std_map(constraint, df, matches(F.col(kw["column"])))
+    return _std_map(constraint, matches(F.col(kw["column"])))
 
 
 # --------------------------------------------------------------------------
@@ -573,94 +616,50 @@ def c_json_schema(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
 def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_values_z_score.py:83-96 — condition |(x-mean)/std| < t.
 
-    Phase 1 (fused): mean/stddev/element/missing. Phase 2 (post-pass, ONE
-    extra job for all groups): per-group scalars are broadcast-joined back
-    and the unexpected counts aggregated — no window over a global ordering.
+    Phase 1 (fused): mean/stddev over the rows the row condition keeps.
+    Phase 2 (post pass, ONE extra job for all groups): the per-group
+    scalars are broadcast-joined back — no window over a global ordering.
     """
     kw = constraint.kwargs
     colname = kw["column"]
     col = F.col(colname)
     threshold = float(kw["threshold"])
     double_sided = bool(kw.get("double_sided", True))
-    mostly = float(kw.get("mostly", 1.0))
+    rc = _row_condition(constraint)
+    rc_key = _row_condition_sql(constraint)
+    # with no row condition, these are the terms the column mean/stddev
+    # aggregates use, so the fused pass computes them once
+    on = {"column": colname} if rc_key is None else {"column": colname, "rc": rc_key}
+    mean_a = metric_alias("column.mean", **on)
+    std_a = metric_alias("column.stddev", **on)
+    values = col if rc is None else F.when(rc, col)
 
-    elem_a = metric_alias("element_count", rc=None)
-    miss_a = metric_alias("missing_count", domain=colname, rc=None)
-    mean_a = metric_alias("column.mean", column=colname)
-    std_a = metric_alias("column.stddev", column=colname)
-    unex_a = metric_alias("unexpected_count", constraint_id=constraint.id)
-
-    terms = [
-        AggTerm(elem_a, F.count(F.lit(1))),
-        AggTerm(miss_a, F.sum(F.when(col.isNull(), 1).otherwise(0))),
-        AggTerm(mean_a, F.mean(col)),
-        AggTerm(std_a, F.stddev_samp(col)),
-    ]
-
-    def _zcond(mean_c: Column, std_c: Column) -> Column:
-        z = (col - mean_c) / std_c
-        bad = (F.abs(z) >= threshold) if double_sided else (z >= threshold)
-        return col.isNotNull() & bad
-
-    def post_pass(frame: DataFrame, group_by: list[str], groups):
-        spark = frame.sparkSession
-        if not group_by:
-            (_, m0) = groups[0]
-            mean_v, std_v = m0.get(mean_a), m0.get(std_a)
-            if mean_v is None or std_v is None or std_v == 0:
-                return {(): {unex_a: 0}}
-            n = frame.agg(
-                F.sum(F.when(_zcond(F.lit(mean_v), F.lit(std_v)), 1).otherwise(0)).alias("n")
-            ).first()["n"]
-            return {(): {unex_a: int(n or 0)}}
-        # grouped: broadcast the per-group scalars, one fused count job
+    def unexpected_count(frame: DataFrame, group_by: list[str], groups):
         rows = [
             tuple(k) + (float(m.get(mean_a) or 0.0), float(m.get(std_a) or 0.0))
             for k, m in groups
         ]
-        if not rows:  # empty grouped input: vacuously-true verdicts, no job
-            return {}
-        scalars = spark.createDataFrame(rows, group_by + ["__mean", "__std"])
-        joined = frame.join(F.broadcast(scalars), on=group_by, how="inner")
-        agg = (
-            joined.groupBy(*group_by)
-            .agg(
-                F.sum(
-                    F.when(
-                        (F.col("__std") > 0)
-                        & _zcond(F.col("__mean"), F.col("__std")),
-                        1,
-                    ).otherwise(0)
-                ).alias("n")
-            )
-            .collect()
-        )
-        return {tuple(r[k] for k in group_by): {unex_a: int(r["n"] or 0)} for r in agg}
-
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        element_count = int(metrics.get(elem_a) or 0)
-        missing = int(metrics.get(miss_a) or 0)
-        unexpected_n = int(metrics.get(unex_a) or 0)
-        nonnull = element_count - missing
-        success = True if nonnull <= 0 else (nonnull - unexpected_n) / nonnull >= mostly
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(success),
-            group=group,
-            element_count=element_count,
-            unexpected_count=unexpected_n,
-            missing_count=missing,
-            unexpected_percent=(100.0 * unexpected_n / nonnull) if nonnull else None,
-            unexpected_percent_total=(
-                100.0 * unexpected_n / element_count if element_count else None
-            ),
-            details={"mean": metrics.get(mean_a), "stddev": metrics.get(std_a)},
+        if not rows:  # empty grouped input: no verdicts, no job
+            return None
+        scalars = frame.sparkSession.createDataFrame(rows, group_by + ["__mean", "__std"])
+        # no keys: the one-row scalars join every row (PySpark's join
+        # rejects an empty ``on`` list)
+        joined = frame.join(F.broadcast(scalars), on=group_by or None, how="inner")
+        z = (col - F.col("__mean")) / F.col("__std")
+        bad = (F.abs(z) >= threshold) if double_sided else (z >= threshold)
+        return joined, F.sum(
+            F.when((F.col("__std") > 0) & (col.isNotNull() & bad), 1).otherwise(0)
         )
 
-    return CompiledConstraint(
-        constraint=constraint, agg_terms=terms, verdict_fn=verdict, post_pass_fn=post_pass
+    return compile_map_constraint(
+        constraint,
+        domain_nonnull=col.isNotNull(),
+        unexpected_count=unexpected_count,
+        extra_terms=[
+            AggTerm(mean_a, F.mean(values)), AggTerm(std_a, F.stddev_samp(values))
+        ],
+        details=lambda m: {"mean": m.get(mean_a), "stddev": m.get(std_a)},
+        post_pass_needs_metrics=True,
     )
 
 
@@ -669,7 +668,7 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
 # --------------------------------------------------------------------------
 
 
-def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: bool) -> CompiledConstraint:
+def _monotonic(constraint: Constraint, increasing: bool) -> CompiledConstraint:
     """ref: column_values_increasing.py:51-120 / decreasing.py:46-112.
 
     The reference orders by a CONSTANT window (single partition — its own
@@ -683,15 +682,6 @@ def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: boo
     strictly = bool(kw.get("strictly", False))
     part_cols = kw.get("partition_by") or []
     order_col = kw.get("order_by")
-    mostly = float(kw.get("mostly", 1.0))
-
-    elem_a = metric_alias("element_count", rc=None)
-    miss_a = metric_alias("missing_count", domain=colname, rc=None)
-    unex_a = metric_alias("unexpected_count", constraint_id=constraint.id)
-    terms = [
-        AggTerm(elem_a, F.count(F.lit(1))),
-        AggTerm(miss_a, F.sum(F.when(col.isNull(), 1).otherwise(0))),
-    ]
 
     def _diff_frame(frame: DataFrame, group_by: list[str]) -> DataFrame:
         from pyspark.sql import Window
@@ -709,52 +699,26 @@ def _monotonic(constraint: Constraint, df: DataFrame, ctx: dict, increasing: boo
         # null diff (first row / null neighbor) is OK, like the reference
         return frame.withColumn("__bad", col.isNotNull() & F.coalesce(bad, F.lit(False)))
 
-    def post_pass(frame: DataFrame, group_by: list[str], groups):
-        flagged = _diff_frame(frame, group_by)
-        if not group_by:
-            n = flagged.agg(F.sum(F.col("__bad").cast("long")).alias("n")).first()["n"]
-            return {(): {unex_a: int(n or 0)}}
-        rows = flagged.groupBy(*group_by).agg(F.sum(F.col("__bad").cast("long")).alias("n")).collect()
-        return {tuple(r[k] for k in group_by): {unex_a: int(r["n"] or 0)} for r in rows}
-
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        element_count = int(metrics.get(elem_a) or 0)
-        missing = int(metrics.get(miss_a) or 0)
-        unexpected_n = int(metrics.get(unex_a) or 0)
-        nonnull = element_count - missing
-        success = True if nonnull <= 0 else (nonnull - unexpected_n) / nonnull >= mostly
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(success),
-            group=group,
-            element_count=element_count,
-            unexpected_count=unexpected_n,
-            missing_count=missing,
-            unexpected_percent=(100.0 * unexpected_n / nonnull) if nonnull else None,
-        )
-
-    def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
-        return _diff_frame(frame, group_by).filter(F.col("__bad")).drop("__bad")
-
-    return CompiledConstraint(
-        constraint=constraint,
-        agg_terms=terms,
-        verdict_fn=verdict,
-        violations_fn=violations,
-        post_pass_fn=post_pass,
+    return compile_map_constraint(
+        constraint,
+        domain_nonnull=col.isNotNull(),
+        unexpected_count=lambda frame, group_by, groups: (
+            _diff_frame(frame, group_by), F.sum(F.col("__bad").cast("long"))
+        ),
+        violations=lambda frame, group_by: (
+            _diff_frame(frame, group_by).filter(F.col("__bad")).drop("__bad")
+        ),
     )
 
 
 @register("expect_column_values_to_be_increasing")
 def c_increasing(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    return _monotonic(constraint, df, ctx, increasing=True)
+    return _monotonic(constraint, increasing=True)
 
 
 @register("expect_column_values_to_be_decreasing")
 def c_decreasing(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    return _monotonic(constraint, df, ctx, increasing=False)
+    return _monotonic(constraint, increasing=False)
 
 
 # --------------------------------------------------------------------------
@@ -779,7 +743,7 @@ def c_pair_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCo
     kw = constraint.kwargs
     a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
     return compile_map_constraint(
-        constraint, df, unexpected=~a.eqNullSafe(b), domain_nonnull=_pair_domain(kw)
+        constraint, unexpected=~a.eqNullSafe(b), domain_nonnull=_pair_domain(kw)
     )
 
 
@@ -790,7 +754,7 @@ def c_pair_greater(constraint: Constraint, df: DataFrame, ctx: dict) -> Compiled
     a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
     expected = (a >= b) if kw.get("or_equal") else (a > b)
     return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_pair_domain(kw)
+        constraint, unexpected=~expected, domain_nonnull=_pair_domain(kw)
     )
 
 
@@ -805,7 +769,7 @@ def c_pair_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
         [a.eqNullSafe(F.lit(va)) & b.eqNullSafe(F.lit(vb)) for va, vb in pairs],
     ) if pairs else F.lit(True)
     return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_pair_domain(kw)
+        constraint, unexpected=~expected, domain_nonnull=_pair_domain(kw)
     )
 
 
@@ -826,7 +790,7 @@ def c_multicol_sum(constraint: Constraint, df: DataFrame, ctx: dict) -> Compiled
     total = kw["sum_total"]
     expected = reduce(lambda a, b: a + b, [F.col(c) for c in kw["column_list"]]) == F.lit(total)
     return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
+        constraint, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
     )
 
 
@@ -843,5 +807,5 @@ def c_unique_within_record(constraint: Constraint, df: DataFrame, ctx: dict) -> 
     nn = F.filter(arr, lambda x: x.isNotNull())
     expected = F.size(F.array_distinct(nn)) == F.size(nn)
     return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
+        constraint, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
     )

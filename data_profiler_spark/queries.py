@@ -1257,8 +1257,8 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generated data itself (VERDICT r2 #8): the query WRITES its deterministic
 # input (seed 42, pure function of (rows, seed) — identical bytes every run)
 # to a fixture path, and the oracle recomputes each constraint's
-# element/unexpected/success arithmetic (compile_map_constraint /
-# _compile_unique / c_referential verdict math) from that parquet.
+# element/unexpected/success arithmetic (compile_map_constraint's verdict
+# math) from that parquet.
 _NORTH_FIXTURE = "/tmp/dps_fixture/north_code_files.parquet"
 _NORTH_COMMITS_FIXTURE = "/tmp/dps_fixture/north_commits.parquet"
 

@@ -393,30 +393,12 @@ class Validator:
             out[c.constraint.id] = deterministic_sample(v, limit, group_by)
         return out
 
-    def prepare_violation_samples(
-        self,
-        suite: ConstraintSuite,
-        limit: int = 20,
-        key_columns: list[str] | None = None,
-    ) -> dict[str, DataFrame]:
-        """BUILD (don't run) every violation-capable constraint's bounded
-        sample plan: pure driver-side py4j/Catalyst expression work, no
-        Spark job. Call it from a second thread WHILE an executor job (the
-        fused profile / constraint agg) is running — the driver is
-        otherwise idle inside py4j waits, so the plan-construction slice of
-        the serial F term overlaps with executor time instead of extending
-        the wall clock (VERDICT r4 #5). Pass the result to
-        ``violation_samples_unioned(prepared=...)``, which subsets it to
-        the failed constraints once verdicts exist."""
-        return self.violation_samples(suite, limit=limit, key_columns=key_columns)
-
     def violation_samples_unioned(
         self,
         suite: ConstraintSuite,
         limit: int = 20,
         only_failed_of: SuiteResult | None = None,
         key_columns: list[str] | None = None,
-        prepared: dict[str, DataFrame] | None = None,
         group_by: list[str] | None = None,
     ) -> DataFrame | None:
         """Every constraint's violation sample in ONE Spark job.
@@ -424,13 +406,12 @@ class Validator:
         ``violation_samples`` returns one DataFrame per failed constraint —
         one driver job round-trip each. When ``key_columns`` pins a shared
         schema, the per-constraint bounded samples (each keeps its own
-        deterministic cap, per group with ``group_by``, which ``prepared``
-        plans do not take) can be tagged with their constraint_id
-        and unioned, so the scheduler runs all sample branches inside one
-        job: K driver round-trips collapse to 1 (a fixed serial cost that
-        caps scaling efficiency at high parallelism; at 100 TB it is also
-        K-1 fewer driver scheduling cycles). Returns None when nothing
-        failed / no extractable constraints."""
+        deterministic cap, per group with ``group_by``) can be tagged with
+        their constraint_id and unioned, so the scheduler runs all sample
+        branches inside one job: K driver round-trips collapse to 1 (a
+        fixed serial cost that caps scaling efficiency at high parallelism;
+        at 100 TB it is also K-1 fewer driver scheduling cycles). Returns
+        None when nothing failed / no extractable constraints."""
         if not key_columns:
             raise ValueError(
                 "violation_samples_unioned requires key_columns (a shared "
@@ -438,24 +419,10 @@ class Validator:
             )
         from functools import reduce as _reduce
 
-        if prepared is not None:
-            # plans were pre-built (overlapped with an executor job);
-            # subset to the constraints that actually failed
-            failed_ids = (
-                {r.constraint_id for r in only_failed_of.results if not r.success}
-                if only_failed_of is not None
-                else None
-            )
-            samples = {
-                cid: sdf
-                for cid, sdf in prepared.items()
-                if failed_ids is None or cid in failed_ids
-            }
-        else:
-            samples = self.violation_samples(
-                suite, limit=limit, only_failed_of=only_failed_of,
-                key_columns=key_columns, group_by=group_by,
-            )
+        samples = self.violation_samples(
+            suite, limit=limit, only_failed_of=only_failed_of,
+            key_columns=key_columns, group_by=group_by,
+        )
         if not samples:
             return None
         parts = [

@@ -9,7 +9,7 @@ import pytest
 from data_profiler_spark.checkpoint import CheckpointRunner
 from data_profiler_spark.core.suite import ConstraintSuite
 from data_profiler_spark.sources.results_store import ResultsStore
-from data_profiler_spark.validator import add_partition_column
+from data_profiler_spark.validator import Validator, add_partition_column
 
 
 @pytest.fixture()
@@ -161,37 +161,6 @@ def test_violation_union_shares_one_cached_scan(spark, code_tables, suite):
             (r["constraint_id"], tuple(r)[1:]) for r in uni2.collect()
         }
         assert rows_auto == rows_cached
-
-
-def test_violation_samples_prepared_overlap(spark, code_tables, suite):
-    """prepare_violation_samples (plan pre-build, overlappable with an
-    executor job) + prepared= must yield exactly the rows of the direct
-    path, subset to the failed constraints (VERDICT r4 #5 F-shave)."""
-    from data_profiler_spark.validator import Validator
-
-    files, commits = code_tables
-    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
-    v = Validator(dfp, tables={"commits": commits})
-    keys = ["partition_id", "repo", "path", "commit"]
-    prepared = v.prepare_violation_samples(suite, limit=20, key_columns=keys)
-    res = v.validate(suite, group_by=["partition_id"])
-    direct = v.violation_samples_unioned(
-        suite, limit=20, only_failed_of=res, key_columns=keys
-    )
-    via_prep = v.violation_samples_unioned(
-        suite, limit=20, only_failed_of=res, key_columns=keys,
-        prepared=prepared,
-    )
-    if direct is None:
-        assert via_prep is None
-        return
-    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert as_set(via_prep) == as_set(direct)
-    # prepared carries ALL violation-capable constraints; the union keeps
-    # only the failed subset
-    failed = {r.constraint_id for r in res.results if not r.success}
-    assert failed <= set(prepared)
-    assert {r["constraint_id"] for r in via_prep.collect()} <= failed
 
 
 def test_evaluation_parameters_from_store(spark, code_tables, tmp_path):
@@ -413,6 +382,36 @@ def test_one_validation_pass_whatever_the_chunking(spark, code_tables, suite, tm
     ]
     assert len(lineage) == 6
     assert len({d["pass_duration_ms"] for d in lineage}) == 1
+
+
+def test_north_suite_job_count(spark, code_tables):
+    """The north suite's grouped validation pass (null, length,
+    compound-unique, referential, drift) submits 8 Spark jobs. A change to
+    the lowering that adds a job to every checkpoint run fails here."""
+    files, commits = code_tables
+    counts = {r["lang"]: r["count"] for r in files.groupBy("lang").count().collect()}
+    total = sum(counts.values())
+    langs = sorted(counts)
+    baseline = {"values": langs, "weights": [counts[x] / total for x in langs], "n": total}
+    north = (
+        ConstraintSuite("north")
+        .add("expect_column_values_to_not_be_null", column="content", mostly=0.98)
+        .add("expect_column_value_lengths_to_be_between",
+             column="content", min_value=0, max_value=1_000_000)
+        .add("expect_compound_columns_to_be_unique", column_list=["repo", "path", "commit"])
+        .add("expect_compound_columns_to_exist_in_table", column_list=["repo", "commit"],
+             other_table_name="commits", mostly=0.99)
+        .add("expect_column_distribution_to_match_baseline",
+             column="lang", baseline=baseline, p=0.001)
+    )
+    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    res = Validator(dfp, tables={"commits": commits}).validate(
+        north, group_by=["partition_id"]
+    )
+    assert len(res.results) == 6 * 5
+    assert len(set(tracker.getJobIdsForGroup()) - before) <= 8
 
 
 def test_truncated_part_file_fails_loudly(spark, suite, code_tables, tmp_path):
