@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_spark.core.result import ConstraintResult
+from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.registry import register
 from data_profiler_spark.plans.fused import AggTerm, CompiledConstraint, metric_alias
@@ -265,8 +266,8 @@ def c_most_common(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
                     # OR-chain of per-group predicates (an O(G)-deep boolean
                     # tree chokes Catalyst analysis at high group
                     # cardinality — ADVICE r4)
-                    spark = frame.sparkSession
-                    kdf = spark.createDataFrame(
+                    kdf = local_frame(
+                        frame.sparkSession,
                         [tuple(g) for g in trunc_keys],
                         frame.select(*group_by).schema,
                     )

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.operators.text import tokens
 
 
@@ -748,7 +749,7 @@ def connected_components(
                 # union by min keeps every root = its component's min id
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(n, find(n)) for n in parent]
-        return spark.createDataFrame(rows, "node long, component long")
+        return local_frame(spark, rows, "node long, component long")
     prev_fp: tuple | None = None
     for _ in range(max_iter):
         # large-star: every neighbor v > u links to m(u) = min(N(u) ∪ {u})

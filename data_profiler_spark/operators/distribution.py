@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_spark.core.result import ConstraintResult
+from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.functions import stats
 from data_profiler_spark.operators.registry import register
@@ -792,9 +793,8 @@ def c_cramers_phi(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
         # stack risk at high group cardinality — ADVICE r4)
         if not group_by:
             return frame
-        spark = frame.sparkSession
-        kdf = spark.createDataFrame(
-            [tuple(g) for g in keys], frame.select(*group_by).schema
+        kdf = local_frame(
+            frame.sparkSession, [tuple(g) for g in keys], frame.select(*group_by).schema
         )
         cond = None
         for k in group_by:

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_profiler_spark.core.result import ConstraintResult
+from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.registry import register
 from data_profiler_spark.plans.fused import (
@@ -641,10 +642,16 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
         ]
         if not rows:  # empty grouped input: no verdicts, no job
             return None
-        scalars = frame.sparkSession.createDataFrame(rows, group_by + ["__mean", "__std"])
-        # no keys: the one-row scalars join every row (PySpark's join
-        # rejects an empty ``on`` list)
-        joined = frame.join(F.broadcast(scalars), on=group_by or None, how="inner")
+        keys = [f"__key{i}" for i in range(len(group_by))]
+        schema = T.StructType(
+            [T.StructField(k, frame.schema[g].dataType) for k, g in zip(keys, group_by)]
+        ).add("__mean", T.DoubleType()).add("__std", T.DoubleType())
+        scalars = local_frame(frame.sparkSession, rows, schema)
+        # null-safe key equality, so a NULL group key is a group too. No
+        # keys: the one-row scalars join every row (PySpark's join rejects
+        # an empty ``on`` list)
+        on = [frame[g].eqNullSafe(scalars[k]) for g, k in zip(group_by, keys)]
+        joined = frame.join(F.broadcast(scalars), on=on or None, how="inner")
         z = (col - F.col("__mean")) / F.col("__std")
         bad = (F.abs(z) >= threshold) if double_sided else (z >= threshold)
         return joined, F.sum(

@@ -39,6 +39,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.functions import stats
 from data_profiler_spark.operators.profile import TableProfile, profiles_to_rows
 from data_profiler_spark.sources.results_store import (
@@ -261,7 +262,8 @@ def compare_profile_runs(
     (joinable / storable / gateable)."""
     by_run = store.runs_rows([run_a, run_b], suite_id)
     rows = profile_compare(by_run[run_a], by_run[run_b], alpha)
-    return store.spark.createDataFrame(
+    return local_frame(
+        store.spark,
         [
             (
                 r["group_json"], r["column_name"], r["test"], r["stat"],

@@ -30,6 +30,7 @@ from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.operators import vectors
 
 # the kernel runs inside mapInPandas tasks: ship it with the closures so
@@ -106,7 +107,8 @@ def ann_topk_bruteforce(
     same doubles either way."""
     if query_rows is not None:
         qid_type = queries.schema[query_id_col].dataType.simpleString()
-        q = corpus.sparkSession.createDataFrame(
+        q = local_frame(
+            corpus.sparkSession,
             [(qid, [float(x) for x in v]) for qid, v in query_rows],
             f"`{query_id_col}` {qid_type}, __qvec array<double>",
         ).select(
@@ -267,7 +269,8 @@ def ann_topk_ivf(
     )
     probe = vectors.top(sims, nprobe)
     qid_type = queries.schema[query_id_col].dataType.simpleString()
-    probes = corpus.sparkSession.createDataFrame(
+    probes = local_frame(
+        corpus.sparkSession,
         [
             (qid, Q[i].tolist(), int(cents.ids[c]))
             for i, qid in enumerate(qids)
@@ -388,7 +391,7 @@ def embedding_near_dup_pairs(
 def _cb_row(spark, codebook: np.ndarray) -> DataFrame:
     """The codebook as ONE broadcastable row: the array of entry vectors
     in id order."""
-    return spark.createDataFrame([(codebook.tolist(),)], "__cb array<array<double>>")
+    return local_frame(spark, [(codebook.tolist(),)], "__cb array<array<double>>")
 
 
 def _subdist(v: Column, cb: Column, j: Column, c: Column, sub: int) -> Column:
@@ -532,7 +535,8 @@ def pq_topk(
     qids, Q = _query_matrix(queries, query_id, query_vec, query_rows, CB.shape[1])
     luts = vectors.subdist(Q, CB, codes.m)
     qid_type = queries.schema[query_id].dataType.simpleString()
-    qlut = queries.sparkSession.createDataFrame(
+    qlut = local_frame(
+        queries.sparkSession,
         [(qid, luts[i].tolist()) for i, qid in enumerate(qids)],
         f"`{query_id}` {qid_type}, __lut array<array<double>>",
     )
@@ -610,7 +614,8 @@ def ivfpq_topk(
     R = (Q[:, None, :] - C[probe]).reshape(-1, dim)
     luts = vectors.subdist(R, RCB, m).reshape(*probe.shape, m, len(RCB))
     qid_type = queries.schema[query_id].dataType.simpleString()
-    probes_lut = corpus.sparkSession.createDataFrame(
+    probes_lut = local_frame(
+        corpus.sparkSession,
         [
             (qid, int(c), luts[i, p].tolist())
             for i, qid in enumerate(qids)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_spark.core.session import local_frame
 # 15 hex digits = 60 bits: exact in a BIGINT in both Spark and DuckDB
 # (16 digits could overflow the signed range), exact as a double's
 # 60-bit integer? no — but h/SPACE is only used as a ratio estimate,
@@ -130,7 +131,8 @@ def kmv_overlap(
 
     n_u = len(merged)
     jac = rnd(float(k_int) / float(n_u)) if n_u else float("nan")
-    return df_a.sparkSession.createDataFrame(
+    return local_frame(
+        df_a.sparkSession,
         [(int(k), d_est(hs_a), d_est(hs_b), d_est(merged), k_int, jac)],
         "k int, est_distinct_a double, est_distinct_b double, "
         "est_distinct_union double, k_intersect bigint, est_jaccard double",

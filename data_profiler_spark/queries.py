@@ -23,6 +23,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_profiler_spark.core.session import local_frame
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
@@ -656,7 +658,7 @@ def q_unexpected_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = Validator(o).validate(suite, result_format="SUMMARY")
     r = res.results[0]
     rows = [(d["value"], d["count"]) for d in (r.partial_unexpected_counts or [])]
-    return spark.createDataFrame(rows, "value string, n long")
+    return local_frame(spark, rows, "value string, n long")
 
 
 _KS_UNIFORM_ORACLE = """
@@ -687,8 +689,8 @@ def q_ks_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     d, p, n = ks_test_parameterized(
         li, "l_quantity", "uniform", {"min": 1.0, "max": 49.0}
     )[()]
-    return spark.createDataFrame(
-        [(round(d, 6), n)], "ks_d double, n_values long"
+    return local_frame(
+        spark, [(round(d, 6), n)], "ks_d double, n_values long"
     )
 
 
@@ -1222,7 +1224,8 @@ def q_embedding_topk_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_refined_centroids(
         e, "vec_id", "embedding", n_centroids=8, iters=2
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(i), v.tolist()) for i, v in zip(cents.ids, cents.vecs)],
         "centroid_id int, centroid_vec array<double>",
     ).write.mode("overwrite").parquet(_ivf_fixture_path(sf_dir))
@@ -1424,8 +1427,8 @@ def q_north_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in res.results
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "partition_id int, constraint_type string, success boolean, "
         "element_count long, unexpected_count long",
     )
@@ -1480,7 +1483,8 @@ def q_cramers_v_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     res = sparse_chi2_cramers(li, "l_partkey", "l_returnflag")[()]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             round(res["v"], 6),
             round(res["chi2"], 2),
@@ -1647,8 +1651,8 @@ def q_rule_profile_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in suite.constraints
         if c.type == "expect_column_values_to_be_between"
     ]
-    return spark.createDataFrame(
-        rows, "column_name string, min_value double, max_value double"
+    return local_frame(
+        spark, rows, "column_name string, min_value double, max_value double"
     )
 
 
@@ -1766,8 +1770,8 @@ def q_rule_profile_bootstrap_ranges(spark: SparkSession, sf_dir: str) -> DataFra
                 contained,
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "column_name string, min_value double, max_value double, "
         "boot_contained boolean",
     )
@@ -1874,7 +1878,7 @@ def q_validator_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("sum_quantity", round(float(res[2].observed_value), 4)),
         ("unique_prop_orderkey", round(float(res[3].observed_value), 8)),
     ]
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")
 
 
 @register_query(
@@ -1920,7 +1924,7 @@ def q_validator_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("distinct_linestatus", ",".join(res[1].observed_value)),
         ("distinct_returnflag", ",".join(res[2].observed_value)),
     ]
-    return spark.createDataFrame(rows, "metric string, observed string")
+    return local_frame(spark, rows, "metric string, observed string")
 
 
 @register_query(
@@ -1997,8 +2001,8 @@ def q_validator_like_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r.constraint_type, r.element_count, r.unexpected_count, bool(r.success))
         for r in res
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "ctype string, element_count long, unexpected_count long, success boolean",
     )
 
@@ -2053,8 +2057,8 @@ def q_validator_multicol(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = Validator(li).validate(suite).results
     rows = [(r.constraint_type, r.element_count, r.unexpected_count) for r in res]
-    return spark.createDataFrame(
-        rows, "ctype string, element_count long, unexpected_count long"
+    return local_frame(
+        spark, rows, "ctype string, element_count long, unexpected_count long"
     )
 
 
@@ -2083,8 +2087,8 @@ def q_row_count_other(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r.observed_value["self"]), int(r.observed_value["other"]),
          bool(r.success))
     ]
-    return spark.createDataFrame(
-        rows, "self_rows long, other_rows long, success boolean"
+    return local_frame(
+        spark, rows, "self_rows long, other_rows long, success boolean"
     )
 
 
@@ -2118,7 +2122,7 @@ def q_kl_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = Validator(docs).validate(suite).results[0]
     rows = [(round(float(r.observed_value), 6), bool(r.success))]
-    return spark.createDataFrame(rows, "kl_divergence double, success boolean")
+    return local_frame(spark, rows, "kl_divergence double, success boolean")
 
 
 @register_query(
@@ -2166,7 +2170,7 @@ def q_drift_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = Validator(docs).validate(suite).results[0]
     rows = [(round(float(r.details["chi2"]), 6), int(r.details["dof"]))]
-    return spark.createDataFrame(rows, "chi2_stat double, dof long")
+    return local_frame(spark, rows, "chi2_stat double, dof long")
 
 
 @register_query(
@@ -2354,8 +2358,8 @@ def q_json_parseable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = Validator(ev).validate(suite).results[0]
     rows = [(r.element_count, r.unexpected_count, bool(r.success))]
-    return spark.createDataFrame(
-        rows, "element_count long, unexpected_count long, success boolean"
+    return local_frame(
+        spark, rows, "element_count long, unexpected_count long, success boolean"
     )
 
 
@@ -2413,8 +2417,8 @@ def q_strftime_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = Validator(ev).validate(suite).results[0]
     rows = [(r.element_count, r.unexpected_count, bool(r.success))]
-    return spark.createDataFrame(
-        rows, "element_count long, unexpected_count long, success boolean"
+    return local_frame(
+        spark, rows, "element_count long, unexpected_count long, success boolean"
     )
 
 
@@ -2487,8 +2491,8 @@ def q_table_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("quantity_type", str(res[3].observed_value), bool(res[3].success)),
         ("orderkey_type", str(res[4].observed_value), bool(res[4].success)),
     ]
-    return spark.createDataFrame(
-        rows, "metric string, observed string, success boolean"
+    return local_frame(
+        spark, rows, "metric string, observed string, success boolean"
     )
 
 
@@ -2691,8 +2695,8 @@ def q_urn_cross_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ("prior_run_was_successful", prior_ok, 1.0),
     ]
-    return spark.createDataFrame(
-        rows, "metric string, success boolean, value double"
+    return local_frame(
+        spark, rows, "metric string, success boolean, value double"
     )
 
 
@@ -2841,8 +2845,8 @@ def q_profile_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in verdicts.collect()
         if r["test"] in keep
     ]
-    return spark.createDataFrame(
-        rows, "column_name string, test string, stat double, drift boolean"
+    return local_frame(
+        spark, rows, "column_name string, test string, stat double, drift boolean"
     )
 
 

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_profiler_spark.core.session import local_frame
+
 DONE_SENTINEL = "__partition_done__"
 
 
@@ -124,7 +126,7 @@ def read_parquet_or_empty(
         return spark.read.schema(schema).parquet(path)
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         raise
 
 

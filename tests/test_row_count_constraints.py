@@ -130,3 +130,26 @@ def test_summary_lists_unexpected_values(spark, dim):
     assert [r.partial_unexpected_counts for r in res.results] == [
         [{"value": 1, "count": 2}], [{"value": 0.5, "count": 1}],
     ]
+
+
+Z_ROWS = [(None, 1.0)] * 9 + [(None, 100.0)]
+
+
+@pytest.mark.parametrize(
+    "other", [[], [("a", 1.0), ("a", 2.0)]], ids=["all_keys_null", "null_and_other_key"]
+)
+def test_zscore_null_group_key(spark, other):
+    """The rows under a NULL group key are a group: their z-score verdict is
+    the one the same rows give ungrouped, whether or not other keys exist."""
+    suite = ConstraintSuite("z").add(
+        "expect_column_value_z_scores_to_be_less_than", column="x", threshold=1
+    )
+    (flat,) = Validator(spark.createDataFrame(Z_ROWS, "g string, x double")).validate(
+        suite
+    ).results
+    assert (flat.success, flat.unexpected_count) == (False, 1)
+    df = spark.createDataFrame(Z_ROWS + other, "g string, x double")
+    grouped = Validator(df).validate(suite, group_by=["g"]).results
+    verdicts = {r.group["g"]: (r.success, r.unexpected_count) for r in grouped}
+    assert verdicts[None] == (False, 1)
+    assert len(verdicts) == 1 + bool(other)

@@ -1,15 +1,22 @@
-"""The session factory: the driver JVM's JIT options and the local
-warm-up."""
+"""The session factory: the driver JVM's JIT options, the master's thread
+count and the local warm-up."""
 
 from __future__ import annotations
 
 import json
 import logging
+import os
 import subprocess
 import sys
 from pathlib import Path
 
-from data_profiler_spark.core.session import DRIVER_JIT_OPTIONS, _warm_session
+import pytest
+
+from data_profiler_spark.core.session import (
+    DRIVER_JIT_OPTIONS,
+    _master_threads,
+    _warm_session,
+)
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -89,3 +96,22 @@ def test_warm_up_warns_with_the_failing_step(spark, caplog):
         for step in ("parquet_aggregate", "rank_window", "python_workers")
     ]
     assert all(str(e) == "no executors" for _, e in warned)
+
+
+@pytest.mark.parametrize(
+    "master, threads",
+    [
+        ("local[3]", 3),
+        ("local[4,2]", 4),
+        ("local[*]", None),
+        ("local[*,3]", None),
+        ("local-cluster[2,1,1024]", None),
+        ("local", None),
+        ("spark://host:7077", None),
+    ],
+)
+def test_master_thread_count(master, threads):
+    """Shuffle partitions follow the master's thread count: the number
+    before the comma of ``local[N,F]``; any other master gets the host's
+    core count. No session starts here."""
+    assert _master_threads(master) == (threads or os.cpu_count())
