@@ -59,13 +59,24 @@ _DEFAULTS = {
 }
 
 
+# ``local``, ``local[N]``, ``local[*]`` and ``local[N,F]`` / ``local[*,F]``
+# (F is the task retry count): every task runs in the driver JVM.
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
+
+
 def _master_threads(master: str) -> int:
     """The thread count a master asks for: N of ``local[N]`` or
-    ``local[N,F]`` (F is the task retry count). Any other master,
-    ``local[*]``, ``local-cluster[...]`` or a cluster URL included, gets
-    the host's core count."""
-    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master)
-    return int(m.group(1)) if m else os.cpu_count() or 8
+    ``local[N,F]``. Any other master, ``local[*]``, ``local-cluster[...]``
+    or a cluster URL included, gets the host's core count."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    n = m.group(1) if m else None
+    return int(n) if n and n.isdigit() else os.cpu_count() or 8
+
+
+def _is_local(master: str) -> bool:
+    """Whether ``master`` runs every task in the driver JVM.
+    ``local-cluster[...]`` does not: it starts executor JVMs."""
+    return _LOCAL_MASTER.fullmatch(master) is not None
 
 
 def get_spark_session(
@@ -106,9 +117,37 @@ def get_spark_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if spark.sparkContext.master.startswith("local"):
+    if _is_local(spark.sparkContext.master):
         _warm_session(spark)
     return spark
+
+
+def arrow_table(rows: Iterable, schema: T.StructType):
+    """Driver-side rows (tuples or Rows in ``schema``'s field order) as one
+    ``pyarrow.Table`` in the Arrow form Spark itself uses for ``schema``,
+    nullability included. Values go through the schema's ``toInternal``
+    first, so a naive ``datetime`` reads as local time, as ``collect()``
+    returns it. A field type Arrow does not map raises ``TypeError``, and
+    a ``None`` in a non-nullable field ``ValueError``, each naming the
+    field."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    fields = []
+    for f in schema.fields:
+        try:
+            fields.append(pa.field(f.name, to_arrow_type(f.dataType), f.nullable))
+        except TypeError as exc:
+            raise TypeError(
+                f"field {f.name!r} has type {f.dataType.simpleString()}, "
+                "which Arrow does not map"
+            ) from exc
+    cols = list(zip(*(schema.toInternal(r) for r in rows))) or [()] * len(fields)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, fields)]
+    for a, f in zip(arrays, fields):
+        if a.null_count and not f.nullable:
+            raise ValueError(f"field {f.name!r} is not nullable, but got None")
+    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
 def local_frame(
@@ -116,27 +155,16 @@ def local_frame(
 ) -> DataFrame:
     """Driver-side rows as a DataFrame planned as a ``LocalRelation``.
 
-    The rows travel to the JVM as one Arrow table, so collecting the frame
-    runs no Spark job, no action on it starts a Python worker, and the
-    planner knows its exact size when it picks a join strategy. (``createDataFrame`` on
-    a Python list plans a Python RDD instead: every action on it runs a
-    Python-worker stage.) ``schema`` is a ``StructType`` or a DDL string;
-    the frame has exactly that schema, nullability included. Values go
-    through the schema's ``toInternal`` first, so a naive ``datetime``
-    reads as local time, as ``collect()`` returns it. A ``None`` in a
-    non-nullable field raises ``ValueError`` naming the field."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    The rows travel to the JVM as one Arrow table (:func:`arrow_table`), so
+    collecting the frame runs no Spark job, no action on it starts a
+    Python worker, and the planner knows its exact size when it picks a
+    join strategy. (``createDataFrame`` on a Python list plans a Python
+    RDD instead: every action on it runs a Python-worker stage.)
+    ``schema`` is a ``StructType`` or a DDL string; the frame has exactly
+    that schema, nullability included."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*(schema.toInternal(r) for r in rows))) or [()] * len(schema)
-    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow)]
-    for a, f in zip(arrays, schema.fields):
-        if a.null_count and not f.nullable:
-            raise ValueError(f"field {f.name!r} is not nullable, but got None")
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema=schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema=schema)
 
 
 _WARMED: set[str] = set()

@@ -303,8 +303,7 @@ def chi2_critical(dof: int, alpha: float = 0.05) -> float:
     """Inverse survival function: the stat value where chi2_sf == alpha.
 
     Bisection on the (monotone) survival function — a few dozen driver-side
-    evaluations, used to push streaming drift verdicts into pure Column
-    math (stat < critical) where no per-row Python can run."""
+    evaluations, so a query can fix its drift threshold at plan time."""
     if dof <= 0 or not (0.0 < alpha < 1.0):
         return float("nan")
     lo, hi = 0.0, float(dof)
@@ -319,25 +318,5 @@ def chi2_critical(dof: int, alpha: float = 0.05) -> float:
         else:
             hi = mid
         if hi - lo <= 1e-12 * max(1.0, hi):
-            break
-    return (lo + hi) / 2.0
-
-
-def kolmogorov_critical(alpha: float = 0.05) -> float:
-    """Inverse Kolmogorov survival function: lambda where Q(lambda)=alpha.
-
-    Bisection on the monotone SF (driver-side, once per plan) — lets a
-    streaming two-sample KS express its verdict as pure Column math:
-    D >= K_alpha / (en + 0.12 + 0.11/en)."""
-    if not (0.0 < alpha < 1.0):
-        return float("nan")
-    lo, hi = 1e-6, 10.0
-    for _ in range(200):
-        mid = (lo + hi) / 2.0
-        if kolmogorov_sf(mid) > alpha:
-            lo = mid
-        else:
-            hi = mid
-        if hi - lo <= 1e-12:
             break
     return (lo + hi) / 2.0

@@ -5,11 +5,9 @@ native DataFrame ops (no Python row path). Scale notes per operator:
 
 - exact: hash-groupBy on a 256-bit digest; partial aggregation makes the
   shuffle proportional to the number of DISTINCT digests.
-- MinHash+LSH: shingle -> k min-hashes -> band buckets -> self-join within
-  buckets. The band join shuffles only (doc_id, bucket) pairs; hot buckets
-  (boilerplate docs) are capped with a per-bucket size limit.
-- SimHash: 64 fused conditional sums per doc compute all bit majorities in
-  ONE aggregation; near-pairs via band-rotation join + xor bit_count.
+- MinHash+LSH: shingle -> k min-hashes -> band buckets, one
+  (doc_id, band, bucket) row per band: a narrow projection, no shuffle.
+- SimHash: one ``aggregate`` fold per doc computes all bit majorities.
 - n-gram Jaccard: token/shingle inverted-index self-join with document
   frequency pruning (drop shingles occurring in > max_df docs — the
   standard prefix/frequency filter for set-similarity joins).
@@ -150,44 +148,6 @@ def minhash_band_buckets(
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
-def near_dup_pairs_minhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int = 8,
-    band_size: int = 2,
-    shingle_n: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing an LSH bucket.
-
-    ``max_bucket`` caps degenerate buckets (e.g. empty/boilerplate content):
-    a bucket with B docs would emit B^2/2 pairs — the classic LSH skew
-    blow-up — so oversized buckets are dropped.
-
-    Physical shape: bucket SELF-JOIN on (band, bucket) after a semi-join
-    against the size-qualified bucket set. (The round-1 version expanded
-    pairs inside one row via collect_list + nested transform — up to
-    max_bucket^2 structs allocated in a single row buffer; the join streams
-    pairs instead and parallelizes across buckets.)"""
-    bb = minhash_band_buckets(df, id_col, text_col, n_hashes, band_size, shingle_n)
-    ok_buckets = (
-        bb.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("bsize"))
-        .where(F.col("bsize").between(2, max_bucket))
-        .select("band", "bucket")
-    )
-    member = bb.join(ok_buckets, on=["band", "bucket"], how="left_semi")
-    a = member.select("band", "bucket", F.col(id_col).alias("id_a"))
-    b = member.select("band", "bucket", F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, on=["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
@@ -226,59 +186,6 @@ def simhash(col: Column, bits: int = 32) -> Column:
         lambda b, w: F.when(b > 0, w).otherwise(F.lit(0).cast("long")),
     )
     return F.aggregate(bit_values, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
-def near_dup_pairs_simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 32,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming.
-
-    Pigeonhole LSH: split the b-bit hash into ``bands`` chunks; any pair
-    within hamming d < bands must agree on >= one chunk, so the self-join
-    runs per (band, chunk-value) bucket, then filters on exact xor
-    bit_count. Shuffles only (id, chunk) pairs."""
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-    sh = df.select(F.col(id_col), simhash(F.col(text_col), bits).alias("sh"))
-    chunks = sh.select(
-        id_col,
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sh"), b * band_bits)
-                        .bitwiseAND(mask)
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("c"),
-    ).select(id_col, "sh", "c.band", "c.chunk")
-    a = chunks.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"), "band", "chunk"
-    )
-    b = chunks.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"), "band", "chunk"
-    )
-    return (
-        a.join(b, on=["band", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # ---------------------------------------------------------------------------

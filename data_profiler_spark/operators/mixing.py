@@ -462,25 +462,3 @@ def split_by_cluster(
             F.lit("train")
         ),
     ).drop("__comp")
-
-
-def write_packed_shards(
-    packed: DataFrame,
-    path: str,
-    mode: str = "error",
-    format: str = "parquet",
-) -> None:
-    """Materialize :func:`pack_sequences` output as a shard-addressable
-    dataset: ``partitionBy(stream, shard)`` so a training loader reads
-    shard (s, k) as one directory listing — no index, no manifest, and
-    partition pruning makes "read shards 0..9 of stream 3" a metadata
-    operation.
-
-    Scale note: rows arrive already hash-partitioned by ``stream`` (the
-    packing window's shuffle), so each task writes only its own streams'
-    directories — no extra repartition, no small-file explosion beyond
-    one file per (task, shard). For very fine shards repartition by
-    (stream, shard) first to get exactly one file per shard."""
-    packed.write.mode(mode).format(format).partitionBy("stream", "shard").save(
-        path
-    )

@@ -43,10 +43,6 @@ IMAGE_FEATURES_SCHEMA = (
     "sharpness double, content_sha string"
 )
 
-FRAME_SAMPLE_SCHEMA = (
-    "media_id long, frame_index int, frame_sha string"
-)
-
 
 class DecodeBackend:
     """Codec seam. Swap FakeDeterministicBackend for a real one (PIL/ffmpeg)
@@ -56,11 +52,6 @@ class DecodeBackend:
         raise NotImplementedError(
             "real backend: PIL.Image.open(BytesIO(data)) -> size/mode; "
             "cv2.Laplacian(...).var() for sharpness"
-        )
-
-    def video_frame_shas(self, data: bytes, n_frames: int) -> list[str]:
-        raise NotImplementedError(
-            "real backend: ffmpeg -i pipe: -vf fps=... frame extraction"
         )
 
 
@@ -77,11 +68,6 @@ class FakeDeterministicBackend(DecodeBackend):
             "sharpness": round(h[3] / 255.0, 6),
             "content_sha": hashlib.sha256(data).hexdigest(),
         }
-
-    def video_frame_shas(self, data: bytes, n_frames: int) -> list[str]:
-        return [
-            hashlib.sha256(data + bytes([i])).hexdigest() for i in range(n_frames)
-        ]
 
 
 def extract_image_features(
@@ -108,27 +94,6 @@ def extract_image_features(
 
     return media.where(F.col("media_type") == "image").mapInPandas(
         op, schema=IMAGE_FEATURES_SCHEMA
-    )
-
-
-def sample_video_frames(
-    media: DataFrame, n_frames: int = 4, backend: DecodeBackend | None = None
-) -> DataFrame:
-    """Frame sampling as a 1->N mapInPandas (flatMap shape)."""
-    backend = backend or FakeDeterministicBackend()
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                for i, sha in enumerate(
-                    backend.video_frame_shas(bytes(r["data"]), n_frames)
-                ):
-                    rows.append((r["media_id"], i, sha))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "frame_sha"])
-
-    return media.where(F.col("media_type") == "video").mapInPandas(
-        op, schema=FRAME_SAMPLE_SCHEMA
     )
 
 

@@ -149,19 +149,6 @@ def normalized_fingerprint(col: Column) -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
 
 
-def rolling_fingerprint(col: Column, prime: int = 1_000_000_007, base: int = 31) -> Column:
-    """Polynomial rolling hash over tokens: h = fold(h*base + hash(tok)) mod p.
-
-    Token hash is the first 15 hex chars of md5 (60 bits, engine-portable).
-    Implemented as a native higher-order ``aggregate`` fold — no UDF."""
-    tok_h = lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")  # noqa: E731
-    return F.aggregate(
-        tokens(col),
-        F.lit(0).cast("long"),
-        lambda acc, t: F.pmod(acc * base + tok_h(t), F.lit(prime)),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Passage-level exact dedup (Lee et al. 2022 "Deduplicating Training Data";
 # the hashed sliding-window approximation of exact-substring dedup)

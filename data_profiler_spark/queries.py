@@ -621,7 +621,7 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     # ts is TIMESTAMP_NTZ in the parquet: not castable to BIGINT directly —
-    # go through `timestamp` first (same as streaming/profile_stream.py)
+    # go through `timestamp` first
     ep = F.col("ts").cast("timestamp").cast("long")
     prev_ep = prev.cast("timestamp").cast("long")
     new_session = F.when(prev.isNull() | (ep - prev_ep > 1800), 1).otherwise(0)

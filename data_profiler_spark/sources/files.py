@@ -1,6 +1,6 @@
 """File-level checks — the Spark rebuild of the reference's FileDataAsset
 (/root/reference/src/data_profiler/data_asset/file_data_asset.py:173-643):
-line-regex match counts, file hash equality, file size bounds, valid JSON.
+line-regex match counts, file hash equality and file size bounds.
 
 The reference reads files on the driver with hashlib/json/re; here every
 check is a distributed read:
@@ -8,9 +8,7 @@ check is a distributed read:
 - hashes / sizes via the ``binaryFile`` source (one row per file, columnar
   metadata — the size check never reads content thanks to column pruning);
 - line-regex counts via ``spark.read.text`` + native ``rlike`` (one fused
-  agg per file, parallel across files AND within large files);
-- JSON validity via ``text(wholetext=True)`` + a batched Arrow UDF
-  (json.loads per FILE, not per row — bounded by file count).
+  agg per file, parallel across files AND within large files).
 
 At scale the same calls run over millions of objects in a manifest; nothing
 here collects more than one row per file.
@@ -18,10 +16,8 @@ here collects more than one row per file.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def file_metadata(spark: SparkSession, path: str) -> DataFrame:
@@ -146,27 +142,3 @@ def expect_file_line_regex_match_count_to_equal(
         "success": bool(success),
         "observed_value": {"element_count": total, "match_count": matched},
     }
-
-
-def expect_file_to_be_valid_json(spark: SparkSession, path: str) -> DataFrame:
-    """(path, is_valid) per file — whole-file parse in a BATCHED Arrow UDF
-    (one invocation per Arrow batch of files, not per line; the reference
-    json.loads's on the driver, file_data_asset.py:595-643)."""
-
-    @pandas_udf("boolean")
-    def _valid(texts: pd.Series) -> pd.Series:
-        import json
-
-        def ok(t):
-            try:
-                json.loads(t)
-                return True
-            except Exception:
-                return False
-
-        return texts.map(ok)
-
-    whole = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("path"), F.col("value")
-    )
-    return whole.select("path", _valid(F.col("value")).alias("is_valid"))

@@ -58,65 +58,3 @@ def read_table(spark: SparkSession, table: str, snapshot_id: str | None = None) 
     if snapshot_id is not None:
         return spark.read.option("snapshot-id", snapshot_id).table(table)
     return spark.read.table(table)
-
-
-def list_table_partitions(spark: SparkSession, table: str) -> list[dict[str, Any]]:
-    """Partition inventory for the checkpoint runner (Iceberg metadata table;
-    falls back to SHOW PARTITIONS for Hive-style tables)."""
-    try:
-        rows = spark.sql(f"SELECT partition FROM {table}.partitions").collect()
-        return [r.asDict(recursive=True) for r in rows]
-    except Exception:
-        rows = spark.sql(f"SHOW PARTITIONS {table}").collect()
-        return [{"partition": r[0]} for r in rows]
-
-
-def list_path_partitions(
-    spark: SparkSession, path: str, format: str = "parquet"
-) -> list[dict[str, str]]:
-    """Hive-style partition discovery straight from the file layout — no
-    catalog required (the third leg next to Iceberg metadata and SHOW
-    PARTITIONS). One metadata-only job: a zero-data-column projection of
-    ``input_file_name`` (column pruning keeps the scan to footers), then
-    the ``key=value`` directory segments are parsed relative to ``path``.
-
-    Returns one sorted dict per distinct partition tuple, e.g.
-    ``[{"lang": "go", "year": "2021"}, ...]`` — the unit the
-    CheckpointRunner iterates."""
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    df = read_path(spark, path, format=format)
-    files = [
-        r["f"]
-        for r in df.select(F.input_file_name().alias("f")).distinct().collect()
-    ]
-
-    def _strip_scheme(p: str) -> str:
-        if "://" in p:
-            return p.split("://", 1)[1]
-        if p.startswith("file:"):
-            return p[len("file:"):]
-        return p
-
-    # parse key=value segments RELATIVE to `path` — a base directory with
-    # an '=' in a parent segment (e.g. /data/run=5/tbl/) must not inject
-    # spurious keys into every partition dict (ADVICE r3)
-    base = _strip_scheme(path).rstrip("/")
-    parts: set[tuple] = set()
-    for f in files:
-        rel = _strip_scheme(f)
-        if base and rel.startswith(base + "/"):
-            rel = rel[len(base) + 1 :]
-        kv = []
-        for seg in rel.split("/")[:-1]:  # directories only
-            if "=" in seg and not seg.startswith("="):
-                k, _, v = seg.partition("=")
-                kv.append((unquote(k), unquote(v)))
-        if kv:
-            parts.add(tuple(kv))
-    return sorted(
-        (dict(kv) for kv in parts),
-        key=lambda d: tuple(sorted(d.items())),
-    )

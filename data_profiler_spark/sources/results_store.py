@@ -36,31 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_profiler_spark.core.session import local_frame
+from data_profiler_spark.core.session import arrow_table, local_frame
 
 DONE_SENTINEL = "__partition_done__"
-
-
-def _pa_type(field: T.StructField):
-    import pyarrow as pa
-
-    dt = field.dataType
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.BooleanType):
-        return pa.bool_()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.DoubleType):
-        return pa.list_(pa.float64())
-    raise TypeError(
-        f"store field {field.name!r} has type {dt.simpleString()}, "
-        "which the parquet writer does not map"
-    )
 
 
 def arrow_append_rows(
@@ -73,10 +51,11 @@ def arrow_append_rows(
     are a handful of verdict/sketch rows that already live at the driver).
     A Spark write job costs ~0.3-0.5 s of scheduling/commit per append;
     writing the part file directly with pyarrow is milliseconds and reads
-    back identically (plain parquet, flat types + array<double>). Returns
-    the path of the committed part file. A schema field whose type the
-    mapping does not cover raises ``TypeError`` naming the field. Only for
-    driver-resident metadata — never for data-scale rows.
+    back identically (plain parquet, converted by :func:`arrow_table`, as
+    ``local_frame`` converts). Returns the path of the committed part file.
+    A schema field whose type Arrow does not map raises ``TypeError``
+    naming the field. Only for driver-resident metadata — never for
+    data-scale rows.
 
     Crash safety: the part file is written under a ``.``-prefixed name,
     which Spark's file listing skips, and renamed into place, so a crash
@@ -84,15 +63,9 @@ def arrow_append_rows(
     one ``os.replace``. An overwrite deletes the old parts only after the
     new one is in place: a crash in between leaves the old parts next to
     the new one, never an empty store."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pa_schema = pa.schema([(f.name, _pa_type(f)) for f in schema.fields])
-    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=t.type) for c, t in zip(cols, pa_schema)],
-        schema=pa_schema,
-    )
+    table = arrow_table(rows, schema)
     os.makedirs(path, exist_ok=True)
     old = os.listdir(path) if mode == "overwrite" else []
     name = f"part-{uuid.uuid4().hex}.parquet"

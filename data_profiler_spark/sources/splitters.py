@@ -43,16 +43,6 @@ def split_on_multi_column_values(df: DataFrame, values: dict[str, Any]) -> DataF
     return out
 
 
-def split_on_hashed_column(df: DataFrame, column: str, buckets: int, value: int) -> DataFrame:
-    """Native replacement for the reference's sha256-UDF split
-    (sparkdf_execution_engine.py:766-795)."""
-    return df.where(hash_bucket(F.col(column), buckets) == F.lit(value))
-
-
-def hash_bucket(col: Column, buckets: int) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
-
-
 # ---- samplers -------------------------------------------------------------
 
 def sample_using_mod(df: DataFrame, column: str, mod: int, value: int) -> DataFrame:
@@ -61,13 +51,6 @@ def sample_using_mod(df: DataFrame, column: str, mod: int, value: int) -> DataFr
 
 def sample_using_a_list(df: DataFrame, column: str, value_list: list[Any]) -> DataFrame:
     return df.where(F.col(column).isin(value_list))
-
-
-def sample_using_hash(df: DataFrame, column: str, buckets: int = 10, value: int = 0) -> DataFrame:
-    """Native replacement for the md5-UDF sampler
-    (sparkdf_execution_engine.py:832-864): deterministic, seedable via the
-    bucket count, and pushes into codegen."""
-    return df.where(hash_bucket(F.col(column), buckets) == F.lit(value))
 
 
 def sample_stratified_by_hash(

@@ -248,6 +248,44 @@ def test_arrow_append_matches_spark_write(spark, tmp_path):
     assert got["top_k_json"] == '{"a": 3}'
 
 
+def test_store_round_trips_date_timestamp_decimal(spark, tmp_path):
+    """A store schema with date, timestamp and decimal fields (NULLs
+    included) reads back through the store's reader as the rows written
+    and as a Spark write of the same rows reads. The store converts rows
+    to Arrow as ``local_frame`` does."""
+    import datetime
+    from decimal import Decimal
+
+    import pyspark.sql.types as T
+
+    from data_profiler_spark.sources.results_store import (
+        arrow_append_rows,
+        read_parquet_or_empty,
+    )
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("day", T.DateType()),
+        T.StructField("at", T.TimestampType()),
+        T.StructField("amount", T.DecimalType(12, 2)),
+    ])
+    rows = [
+        (1, datetime.date(2024, 2, 29), datetime.datetime(2024, 2, 29, 23, 59, 58, 123456),
+         Decimal("1234567890.12")),
+        (2, None, None, None),
+        (3, datetime.date(1969, 12, 31), datetime.datetime(1970, 1, 1, 0, 0, 1),
+         Decimal("-0.05")),
+    ]
+    path, sp_path = str(tmp_path / "pa"), str(tmp_path / "sp")
+    assert arrow_append_rows(path, rows, schema)
+    got = read_parquet_or_empty(spark, path, schema).orderBy("id").collect()
+    assert [tuple(r) for r in got] == rows
+    spark.createDataFrame(rows, schema).write.parquet(sp_path)
+    assert spark.read.parquet(path).schema == spark.read.parquet(sp_path).schema
+    with pytest.raises(ValueError, match="'id'"):
+        arrow_append_rows(str(tmp_path / "null_id"), [(None, None, None, None)], schema)
+
+
 def _many_violations(spark):
     """16 partitions of 30 rows, 10 of them with a NULL ``content``: more
     violations per chunk than any violation_limit below."""
@@ -474,12 +512,12 @@ def test_arrow_append_crash_leaves_no_partial_part(spark, tmp_path, monkeypatch,
     assert got == (["new"] if mode == "overwrite" else ["new", "old"])
     assert not [p for p in os.listdir(path) if p.startswith(".")]
 
-    # a type the pyarrow mapping lacks raises, naming the field
+    # a type Arrow does not map raises, naming the field
     import pyspark.sql.types as T
 
-    mapped = T.StructType([T.StructField("m", T.MapType(T.StringType(), T.LongType()))])
+    interval = T.StructType([T.StructField("m", T.YearMonthIntervalType())])
     with pytest.raises(TypeError, match="'m'"):
-        results_store.arrow_append_rows(str(tmp_path / "m"), [({},)], mapped)
+        results_store.arrow_append_rows(str(tmp_path / "m"), [(1,)], interval)
 
 
 class _Killed(BaseException):

@@ -96,15 +96,3 @@ def test_skip_deterministic_line_order(spark, tmp_path):
     q.write_text("h1\nh2\nbody")
     got = [r["value"] for r in _file_lines(spark, str(q), skip=2).collect()]
     assert got == ["body"]
-
-
-def test_valid_json(spark, file_fixture):
-    from data_profiler_spark.sources.files import expect_file_to_be_valid_json
-
-    out = {
-        r["path"].rsplit("/", 1)[-1]: r["is_valid"]
-        for r in expect_file_to_be_valid_json(
-            spark, str(file_fixture / "*.json")
-        ).collect()
-    }
-    assert out == {"good.json": True, "bad.json": False}

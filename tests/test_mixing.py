@@ -283,41 +283,6 @@ class TestThresholdDrivenLsh:
         assert out.count() == plan["bands"]  # one bucket row per band
 
 
-def test_streaming_cap_per_source(spark, tmp_path):
-    """First cap arrivals per source pass; later batches can't reopen an
-    exhausted budget; an under-budget source keeps admitting."""
-    from data_profiler_spark.streaming.profile_stream import (
-        streaming_cap_per_source,
-    )
-
-    src = str(tmp_path / "cap_src")
-
-    def write(rows):
-        spark.createDataFrame(rows, "doc_id long, source string").write.mode(
-            "append"
-        ).parquet(src)
-
-    write([(1, "a"), (2, "a"), (3, "a"), (10, "b")])
-    stream = spark.readStream.schema("doc_id long, source string").parquet(src)
-    out = streaming_cap_per_source(stream, "source", "doc_id", cap=2)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_cap_out")
-        .option("checkpointLocation", str(tmp_path / "cap_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write([(4, "a"), (11, "b"), (20, "c")])  # a exhausted, b has 1 left
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM stream_cap_out").collect()
-    finally:
-        q.stop()
-    got = {(r.source, r.doc_id) for r in rows}
-    assert got == {("a", 1), ("a", 2), ("b", 10), ("b", 11), ("c", 20)}
-
-
 class TestCountMinSketch:
     def test_estimates_upper_bound_and_merge(self, spark):
         from data_profiler_spark.operators.sketches import cms_estimate, cms_sketch
@@ -500,26 +465,6 @@ class TestSplitByCluster:
         cl = spark.createDataFrame([], "node long, component long")
         with pytest.raises(ValueError, match="integral"):
             split_by_cluster(docs, cl, "doc_id")
-
-
-def test_write_packed_shards(spark, tmp_path):
-    from data_profiler_spark.operators.mixing import (
-        pack_sequences,
-        write_packed_shards,
-    )
-
-    rows = [(i, 50) for i in range(100)]
-    df = spark.createDataFrame(rows, "k long, tok long")
-    packed = pack_sequences(df, "k", "tok", budget=200, n_streams=2)
-    out = str(tmp_path / "shards")
-    write_packed_shards(packed, out)
-    back = spark.read.parquet(out)
-    assert back.count() == 100
-    # partition pruning: reading one (stream, shard) dir touches one group
-    one = spark.read.parquet(out).where("stream = 0 AND shard = 0")
-    assert 0 < one.count() <= 4  # 200-token shards of 50-token docs
-    import os
-    assert any(p.startswith("stream=") for p in os.listdir(out))
 
 
 class TestNullHandlingFixes:

@@ -115,3 +115,45 @@ def test_master_thread_count(master, threads):
     before the comma of ``local[N,F]``; any other master gets the host's
     core count. No session starts here."""
     assert _master_threads(master) == (threads or os.cpu_count())
+
+
+@pytest.mark.parametrize(
+    "master, local",
+    [
+        ("local[3]", True),
+        ("local[4,2]", True),
+        ("local[*]", True),
+        ("local[*,3]", True),
+        ("local-cluster[2,1,1024]", False),
+        ("local", True),
+        ("spark://host:7077", False),
+    ],
+)
+def test_warm_up_only_on_local_masters(monkeypatch, master, local):
+    """``get_spark_session`` warms local masters only, whose tasks run in
+    the driver JVM; ``local-cluster[...]`` starts executor JVMs. The
+    builder is a stand-in, so no session starts here."""
+    from types import SimpleNamespace
+
+    from data_profiler_spark.core import session
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, m):
+            self.m = m
+            return self
+
+        def config(self, key, value):
+            return self
+
+        def getOrCreate(self):
+            ctx = SimpleNamespace(master=self.m, setLogLevel=lambda level: None)
+            return SimpleNamespace(sparkContext=ctx)
+
+    warmed = []
+    monkeypatch.setattr(session.SparkSession, "builder", Builder())
+    monkeypatch.setattr(session, "_warm_session", warmed.append)
+    spark = session.get_spark_session(master=master)
+    assert warmed == ([spark] if local else [])

@@ -1,4 +1,4 @@
-"""ANN similarity + multimodal plumbing + streaming + autoprofile."""
+"""ANN similarity + multimodal plumbing + autoprofile."""
 
 from __future__ import annotations
 
@@ -123,7 +123,6 @@ def test_embedding_near_dup(vectors):
 def test_multimodal_image_features(spark):
     from data_profiler_spark.operators.multimodal import (
         extract_image_features,
-        sample_video_frames,
         synthetic_media,
     )
 
@@ -135,102 +134,6 @@ def test_multimodal_image_features(spark):
     f1 = {r["media_id"]: r for r in extract_image_features(media).collect()}
     assert all(tuple(f0[k]) == tuple(f1[k]) for k in f0)
     assert all(r["width"] >= 64 and r["content_sha"] for r in feats)
-
-    frames = sample_video_frames(media, n_frames=3).collect()
-    vids = media.where("media_type = 'video'").count()
-    assert len(frames) == 3 * vids
-    assert len({(r["media_id"], r["frame_index"]) for r in frames}) == len(frames)
-
-
-def test_streaming_profile(spark, tmp_path):
-    from data_profiler_spark.streaming.profile_stream import streaming_profile
-
-    src = str(tmp_path / "stream_src")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    agg = streaming_profile(
-        stream, time_col="ts", columns=["event_type", "value"], window="1 day"
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_profile_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM stream_profile_out").collect()
-    finally:
-        q.stop()
-    assert len(rows) > 0
-    total = sum(r["row_count"] for r in rows)
-    assert total == spark.read.parquet(src).count()
-    assert all(r["value__mean"] is not None for r in rows)
-
-
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization: in-batch gap closure AND
-    event-time-timeout closure across micro-batches."""
-    import datetime as dt
-
-    from data_profiler_spark.streaming.profile_stream import streaming_sessionize
-
-    src = str(tmp_path / "sess_src")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def write_batch(rows, name):
-        spark.createDataFrame(rows, "user_id string, ts timestamp").write.mode(
-            "append"
-        ).parquet(src)
-
-    # batch 1: user a has TWO sessions split by a >30min in-batch gap;
-    # user b has one open session
-    write_batch(
-        [
-            ("a", t0),
-            ("a", t0 + dt.timedelta(minutes=5)),
-            ("a", t0 + dt.timedelta(minutes=90)),  # gap 85min -> new session
-            ("b", t0 + dt.timedelta(minutes=10)),
-        ],
-        "b1",
-    )
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    sess = streaming_sessionize(
-        stream, "user_id", "ts", gap="30 minutes", watermark="10 minutes"
-    )
-    q = (
-        sess.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = spark.sql("SELECT * FROM sessions_out").collect()
-        # a's first session closes by the in-batch gap; b's closes by
-        # timeout in the follow-up trigger (batch-1 watermark t0+80min is
-        # already past b's last_ts + gap). a's second stays open.
-        assert {(r["user_id"], r["n_events"]) for r in first} == {("a", 2), ("b", 1)}
-        # batch 2: much later event advances the watermark past
-        # last_ts + gap for a's 2nd session and b's session -> timeouts fire
-        write_batch([("c", t0 + dt.timedelta(hours=6))], "b2")
-        q.processAllAvailable()
-        # one more batch so timeouts scheduled at watermark W fire
-        write_batch([("c", t0 + dt.timedelta(hours=7))], "b3")
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM sessions_out").collect()
-    finally:
-        q.stop()
-    got = {(r["user_id"], r["n_events"]) for r in rows}
-    assert ("a", 2) in got      # in-batch gap closure
-    assert ("a", 1) in got      # timeout closure of a's second session
-    assert ("b", 1) in got      # timeout closure of b's session
-    a2 = [r for r in rows if r["user_id"] == "a" and r["n_events"] == 2][0]
-    assert a2["session_start"] == t0
-    assert a2["session_end"] == t0 + dt.timedelta(minutes=5)
 
 
 def test_autoprofile_suite(typed_small):
@@ -325,13 +228,7 @@ def test_splitters_samplers(spark):
 
     df = spark.range(1000).withColumn("k", F.col("id") % 7)
     assert S.split_on_mod_integer(df, "id", 10, 3).count() == 100
-    parts = [S.split_on_hashed_column(df, "id", 4, v).count() for v in range(4)]
-    assert sum(parts) == 1000 and all(p > 0 for p in parts)
     assert S.sample_using_a_list(df, "k", [0, 1]).count() == df.where("k in (0,1)").count()
-    s = S.sample_using_hash(df, "id", buckets=5, value=2)
-    assert 0 < s.count() < 1000
-    # deterministic
-    assert s.count() == S.sample_using_hash(df, "id", buckets=5, value=2).count()
 
 
 def test_stratified_hash_sampler(spark):
@@ -657,252 +554,6 @@ def test_basic_suite_end_to_end(spark):
     assert failed == [], [(r.constraint_type, r.kwargs) for r in failed]
 
 
-def test_streaming_drift(spark, tmp_path):
-    """Windowed two-sample chi-square vs a baseline: the statistic matches
-    the batch chi2_contingency per window, and a deliberately skewed
-    baseline flips drift_detected."""
-    from data_profiler_spark.functions import stats
-    from data_profiler_spark.streaming.profile_stream import streaming_drift
-
-    src = str(tmp_path / "drift_src")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
-    batch = spark.read.parquet(src)
-    types = sorted(
-        r["event_type"]
-        for r in batch.select("event_type").distinct().collect()
-        if r["event_type"] is not None
-    )
-    k = len(types)
-    matched = {"values": types, "weights": [1.0 / k] * k, "n": 10_000}
-
-    # batch equivalence: the same Column pipeline runs on a static frame
-    out = {
-        r["window_start"]: r
-        for r in streaming_drift(
-            batch, "ts", "event_type", matched, window="1 day"
-        ).collect()
-    }
-    counts = {
-        (r["d"], r["event_type"]): r["n"]
-        for r in batch.groupBy(
-            F.date_trunc("day", F.col("ts").cast("timestamp")).alias("d"),
-            "event_type",
-        ).agg(F.count("*").alias("n")).collect()
-    }
-    for ws, row in out.items():
-        # the engine's tail column counts NON-NULL unlisted values only
-        # (isNotNull & ~listed); `types` covers every non-null value here,
-        # so the expected tail is exactly 0 — NULL rows are outside the
-        # domain in both the streaming and batch paths
-        obs = [counts.get((ws, t), 0) for t in types] + [0]
-        base = [w * matched["n"] for w in matched["weights"]] + [0.0]
-        stat, _, dof = stats.chi2_contingency([obs, base])
-        assert abs(row["chi2_stat"] - stat) < 1e-6
-        assert dof == k
-
-    # streaming smoke + verdict flip on a skewed baseline
-    schema = batch.schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    skewed = {
-        "values": types,
-        "weights": [0.97] + [0.03 / (k - 1)] * (k - 1),
-        "n": 10_000,
-    }
-    agg = streaming_drift(stream, "ts", "event_type", skewed, window="1 day")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_drift_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM stream_drift_out").collect()
-    finally:
-        q.stop()
-    assert len(rows) > 0
-    assert all(r["drift_detected"] for r in rows)  # uniform data vs 97% skew
-
-
-def test_streaming_drift_ks(spark, tmp_path):
-    """Continuous drift: per-window KS statistic matches
-    stats.ks_2samp_from_hist on the same histogram, and the verdict
-    equals the batch p <= alpha decision (Stephens-corrected)."""
-    from data_profiler_spark.functions import stats
-    from data_profiler_spark.streaming.profile_stream import streaming_drift_ks
-
-    src = str(tmp_path / "driftks_src")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
-    batch = spark.read.parquet(src)
-    bins = [0.0, 25.0, 50.0, 75.0, 100.0]
-    # baseline deliberately bottom-heavy vs the roughly uniform data
-    baseline = {"bins": bins, "weights": [0.7, 0.1, 0.1, 0.1], "n": 5000}
-
-    out = streaming_drift_ks(
-        batch, "ts", "value", baseline, window="1 day", alpha=0.05
-    ).collect()
-    assert len(out) > 0
-    vals_by_day: dict = {}
-    for r in batch.select(
-        F.date_trunc("day", F.col("ts").cast("timestamp")).alias("d"), "value"
-    ).collect():
-        vals_by_day.setdefault(r["d"], []).append(r["value"])
-    for row in out:
-        vals = [v for v in vals_by_day[row["window_start"]] if v is not None]
-        counts = [sum(1 for v in vals if v < bins[0])]
-        for i in range(len(bins) - 1):
-            if i == len(bins) - 2:
-                counts.append(sum(1 for v in vals if bins[i] <= v <= bins[i + 1]))
-            else:
-                counts.append(sum(1 for v in vals if bins[i] <= v < bins[i + 1]))
-        counts.append(sum(1 for v in vals if v > bins[-1]))
-        w2 = [0.0] + [w * baseline["n"] for w in baseline["weights"]] + [0.0]
-        d, p = stats.ks_2samp_from_hist(counts, w2, len(vals), baseline["n"])
-        assert row["n"] == len(vals)
-        assert abs(row["ks_stat"] - d) < 1e-9
-        assert row["drift_detected"] == (p <= 0.05)
-
-    # one big window has the power the tiny daily ones may lack:
-    # roughly-uniform data vs a 70%-bottom-bin baseline must drift
-    big = streaming_drift_ks(
-        batch, "ts", "value", baseline, window="30 days", alpha=0.05
-    ).collect()
-    assert any(r["drift_detected"] for r in big)
-
-    # matched baseline -> no drift
-    import numpy as np
-
-    allv = [v for vs in vals_by_day.values() for v in vs if v is not None]
-    hist, _ = np.histogram(allv, bins=bins)
-    matched = {
-        "bins": bins,
-        "weights": [float(h) / len(allv) for h in hist],
-        "n": 100_000,
-    }
-    out2 = streaming_drift_ks(
-        batch, "ts", "value", matched, window="7 days", alpha=0.001
-    ).collect()
-    assert any(not r["drift_detected"] for r in out2)
-
-    # streaming smoke
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    agg = streaming_drift_ks(stream, "ts", "value", baseline, window="1 day")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_driftks_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM stream_driftks_out").collect()
-    finally:
-        q.stop()
-    assert len(rows) == len(out)
-
-
-def test_streaming_dedup_exact(spark, tmp_path):
-    """One survivor per content digest; in-batch and cross-batch
-    duplicates within the watermark are dropped (in-batch survivor is an
-    arbitrary representative — Spark defines no intra-batch order)."""
-    import datetime as dt
-
-    from data_profiler_spark.streaming.profile_stream import streaming_dedup_exact
-
-    src = str(tmp_path / "dedup_src")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def write(rows):
-        spark.createDataFrame(
-            rows, "doc_id long, ts timestamp, text string"
-        ).write.mode("append").parquet(src)
-
-    write([
-        (1, t0, "alpha content"),
-        (2, t0 + dt.timedelta(minutes=1), "alpha content"),   # in-batch dup
-        (3, t0 + dt.timedelta(minutes=2), "beta content"),
-    ])
-    stream = spark.readStream.schema(
-        "doc_id long, ts timestamp, text string"
-    ).parquet(src)
-    out = streaming_dedup_exact(stream, "ts", "text", watermark="2 hours")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write([
-            (4, t0 + dt.timedelta(minutes=3), "beta content"),   # cross-batch dup
-            (5, t0 + dt.timedelta(minutes=4), "gamma content"),
-        ])
-        q.processAllAvailable()
-        rows = spark.sql("SELECT doc_id FROM stream_dedup_out").collect()
-    finally:
-        q.stop()
-    kept = sorted(r["doc_id"] for r in rows)
-    assert len(kept) == 3
-    assert kept[0] in (1, 2)      # one alpha survivor (in-batch pick)
-    assert kept[1] == 3           # beta's first batch wins...
-    assert 4 not in kept          # ...its cross-batch dup is dropped
-    assert kept[2] == 5
-
-
-def test_streaming_near_dup_candidates(spark, tmp_path):
-    """Identical docs collide in every band; the later arrival emits a
-    candidate pair against the earlier anchor, in-batch and cross-batch;
-    unrelated docs emit nothing."""
-    import datetime as dt
-
-    from data_profiler_spark.streaming.profile_stream import (
-        streaming_near_dup_candidates,
-    )
-
-    src = str(tmp_path / "nd_src")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    shared = "the quick brown fox jumps over the lazy dog again and again"
-
-    def write(rows):
-        spark.createDataFrame(
-            rows, "doc_id long, ts timestamp, text string"
-        ).write.mode("append").parquet(src)
-
-    write([
-        (1, t0, shared),
-        (2, t0 + dt.timedelta(minutes=1), shared),            # in-batch dup
-        (3, t0 + dt.timedelta(minutes=2), "totally unrelated content here xyz"),
-    ])
-    stream = spark.readStream.schema(
-        "doc_id long, ts timestamp, text string"
-    ).parquet(src)
-    out = streaming_near_dup_candidates(
-        stream, "ts", "doc_id", "text", watermark="2 hours"
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_nd_out")
-        .option("checkpointLocation", str(tmp_path / "nd_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write([(4, t0 + dt.timedelta(minutes=3), shared)])     # cross-batch dup
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM stream_nd_out").collect()
-    finally:
-        q.stop()
-    pairs = {(r["id_a"], r["id_b"]) for r in rows}
-    assert pairs == {(1, 2), (1, 4)}  # anchor 1; doc 3 never collides
-    # identical docs collide in EVERY band (4 bands at 8 hashes / size 2)
-    from collections import Counter
-    per_pair = Counter((r["id_a"], r["id_b"]) for r in rows)
-    assert per_pair[(1, 2)] == 4 and per_pair[(1, 4)] == 4
-
-
 def test_kmeans_centroids_are_lowest_id_rows(spark):
     """The deterministic centroid pick is the C lowest-id vectors, in id
     order, as centroid ids 0..C-1 and float64 values; an empty corpus
@@ -922,152 +573,6 @@ def test_kmeans_centroids_are_lowest_id_rows(spark):
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert len(kmeans_like_centroids(empty, "vec_id", "embedding", 4).ids) == 0
-
-
-def test_parse_duration_units(spark):
-    """VERDICT r5 wrong #2: week/millisecond are valid Spark watermark
-    units; unknown units raise a clear ValueError, not a KeyError."""
-    import pytest
-
-    from data_profiler_spark.streaming.profile_stream import _parse_duration_sec
-
-    assert _parse_duration_sec("1 week") == 604800.0
-    assert _parse_duration_sec("500 milliseconds") == 0.5
-    assert _parse_duration_sec("2 hours") == 7200.0
-    assert _parse_duration_sec("90 seconds") == 90.0
-    with pytest.raises(ValueError, match="2 fortnights"):
-        _parse_duration_sec("2 fortnights")
-    with pytest.raises(ValueError, match="expected"):
-        _parse_duration_sec("soon")
-
-
-def test_streaming_drift_unnormalized_baseline(spark, tmp_path):
-    """ADVICE r5: a baseline whose weights do NOT sum to 1 (unnormalized /
-    truncated) must still produce the table-derived chi2_contingency
-    statistic — the baseline row total is n * sum(weights), not n."""
-    from data_profiler_spark.functions import stats
-    from data_profiler_spark.streaming.profile_stream import streaming_drift
-
-    batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    types = sorted(
-        r["event_type"]
-        for r in batch.select("event_type").distinct().collect()
-        if r["event_type"] is not None
-    )
-    k = len(types)
-    # weights sum to 2.0 deliberately
-    baseline = {"values": types, "weights": [2.0 / k] * k, "n": 5000}
-    out = {
-        r["window_start"]: r
-        for r in streaming_drift(
-            batch, "ts", "event_type", baseline, window="1 day"
-        ).collect()
-    }
-    counts = {
-        (r["d"], r["event_type"]): r["n"]
-        for r in batch.groupBy(
-            F.date_trunc("day", F.col("ts").cast("timestamp")).alias("d"),
-            "event_type",
-        ).agg(F.count("*").alias("n")).collect()
-    }
-    assert out
-    for ws, row in out.items():
-        obs = [counts.get((ws, t), 0) for t in types] + [0]
-        base = [w * baseline["n"] for w in baseline["weights"]] + [0.0]
-        stat, _, _ = stats.chi2_contingency([obs, base])
-        assert abs(row["chi2_stat"] - stat) < 1e-6
-
-    import pytest
-
-    with pytest.raises(ValueError, match="positive sum"):
-        streaming_drift(
-            batch, "ts", "event_type",
-            {"values": types, "weights": [0.0] * k, "n": 5000},
-        )
-
-
-def test_streaming_drift_parity_with_batch_property(spark):
-    """VERDICT r5 #9 (stretch): the closed-form streaming chi2/KS verdicts
-    equal the batch c_drift verdicts on identical window data — the
-    bit-identical claim in the docstrings, property-tested across seeded
-    random datasets/baselines instead of spot-tested."""
-    import datetime
-
-    import numpy as np
-
-    from data_profiler_spark.core.suite import ConstraintSuite
-    from data_profiler_spark.functions import stats
-    from data_profiler_spark.streaming.profile_stream import (
-        streaming_drift,
-        streaming_drift_ks,
-    )
-    from data_profiler_spark.validator import Validator
-
-    day = datetime.datetime(2024, 3, 1)
-    alpha = 0.05
-
-    for seed in range(10):
-        rng = np.random.default_rng(seed)
-
-        # --- categorical / chi-square -----------------------------------
-        k = int(rng.integers(2, 6))
-        values = [f"v{i}" for i in range(k)]
-        # random window data: listed values + occasional unlisted + NULLs
-        draws = rng.choice(values + ["other"], size=200,
-                           p=np.r_[rng.dirichlet(np.ones(k)) * 0.9, [0.1]])
-        rows = [
-            (day + datetime.timedelta(seconds=int(i)),
-             None if rng.random() < 0.05 else str(v))
-            for i, v in enumerate(draws)
-        ]
-        df = spark.createDataFrame(rows, "ts timestamp, cat string")
-        w = rng.dirichlet(np.ones(k))
-        baseline = {"values": values, "weights": [float(x) for x in w],
-                    "n": int(rng.integers(100, 5000))}
-
-        suite = ConstraintSuite("drift").add(
-            "expect_column_distribution_to_match_baseline",
-            column="cat", baseline=baseline, p=alpha,
-        )
-        batch_res = Validator(df).validate(suite).results[0]
-        (srow,) = streaming_drift(
-            df, "ts", "cat", baseline, window="1 day", alpha=alpha
-        ).collect()
-        assert srow["drift_detected"] == (not batch_res.success), (
-            f"chi2 verdict mismatch seed={seed}"
-        )
-        # same statistic the batch path feeds chi2_contingency
-        assert abs(srow["chi2_stat"] - batch_res.details["chi2"]) < 1e-9
-
-        # --- continuous / KS --------------------------------------------
-        edges = sorted(set(np.round(rng.uniform(0, 100, size=5), 2)))
-        while len(edges) < 3:
-            edges.append(edges[-1] + 10.0)
-        bw = rng.dirichlet(np.ones(len(edges) - 1))
-        kbase = {"bins": [float(e) for e in edges],
-                 "weights": [float(x) for x in bw],
-                 "n": int(rng.integers(100, 5000))}
-        xs = rng.uniform(min(edges) - 5, max(edges) + 5, size=200)
-        krows = [
-            (day + datetime.timedelta(seconds=int(i)),
-             None if rng.random() < 0.05 else float(x))
-            for i, x in enumerate(xs)
-        ]
-        kdf = spark.createDataFrame(krows, "ts timestamp, x double")
-        ksuite = ConstraintSuite("kdrift").add(
-            "expect_column_distribution_to_match_baseline",
-            column="x", baseline=kbase, p=alpha,
-        )
-        kbatch = Validator(kdf).validate(ksuite).results[0]
-        (krow,) = streaming_drift_ks(
-            kdf, "ts", "x", kbase, window="1 day", alpha=alpha
-        ).collect()
-        assert krow["drift_detected"] == (not kbatch.success), (
-            f"ks verdict mismatch seed={seed}"
-        )
-        assert abs(krow["ks_stat"] - kbatch.details["ks_d"]) < 1e-9, (
-            f"ks D mismatch seed={seed}"
-        )
 
 
 def test_pq_encode_numpy_matches_expr(vectors):

@@ -45,20 +45,15 @@ def test_language_id(docs):
 
 
 def test_fingerprints(docs, spark):
-    from data_profiler_spark.operators.text import (
-        normalized_fingerprint,
-        rolling_fingerprint,
-    )
+    from data_profiler_spark.operators.text import normalized_fingerprint
 
     out = docs.select(
         "doc_id",
         normalized_fingerprint(F.col("text")).alias("fp"),
-        rolling_fingerprint(F.col("text")).alias("rh"),
     ).collect()
     by_id = {r["doc_id"]: r for r in out}
-    # identical docs -> identical fingerprints (both kinds)
+    # identical docs -> identical fingerprints
     assert by_id[0]["fp"] == by_id[1]["fp"]
-    assert by_id[0]["rh"] == by_id[1]["rh"]
     assert by_id[0]["fp"] != by_id[2]["fp"]
     # oracle: md5 of normalized text
     assert (
@@ -76,37 +71,6 @@ def test_exact_dedup(docs):
     kept = dedup_exact(docs, "doc_id", "text")
     assert kept.count() == 7
     assert kept.where("doc_id = 1").count() == 0
-
-
-def test_minhash_near_dup(docs):
-    from data_profiler_spark.operators.dedup import near_dup_pairs_minhash
-
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in near_dup_pairs_minhash(
-            docs.where("doc_id < 6"), "doc_id", "text", n_hashes=8, band_size=2
-        ).collect()
-    }
-    assert (0, 1) in pairs  # identical docs always collide on every band
-    assert (0, 5) not in pairs and (3, 4) not in pairs
-
-
-def test_simhash_near_dup(docs):
-    from data_profiler_spark.operators.dedup import near_dup_pairs_simhash, simhash
-
-    sh = {
-        r["doc_id"]: r["s"]
-        for r in docs.select("doc_id", simhash(F.col("text"), 32).alias("s")).collect()
-    }
-    assert sh[0] == sh[1]
-    assert 0 <= sh[0] < 2**32
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in near_dup_pairs_simhash(
-            docs.where("doc_id < 6"), "doc_id", "text", bits=32, bands=4, max_hamming=6
-        ).collect()
-    }
-    assert pairs.get((0, 1)) == 0
 
 
 def test_jaccard_pairs(docs):
