@@ -76,8 +76,7 @@ def run_job(
     warmup_sec in every per-run record."""
     from data_profiler_spark.core.session import get_spark_session
 
-    spark = get_spark_session(app_name=f"bench_{cpus}", master=f"local[{cpus}]",
-                              shuffle_partitions=cpus)
+    spark = get_spark_session(app_name=f"bench_{cpus}", master=f"local[{cpus}]")
     spark.range(10).count()
     warmup_sec = None
     if warm_path is not None:

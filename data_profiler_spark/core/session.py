@@ -2,8 +2,10 @@
 
 Mirrors the intent of the reference's ``get_or_create_spark_application``
 (/root/reference/src/data_profiler/core/util.py:549-608) but tuned for an
-analytics engine: AQE on, Arrow on, shuffle partitions sized to cores, and
-a driver JVM that promotes methods to C2 later (``DRIVER_JIT_OPTIONS``).
+analytics engine: Arrow on, a fixed UTC session time zone, shuffle
+partitions sized to the master's threads, and a driver JVM that promotes
+methods to C2 later (``DRIVER_JIT_OPTIONS``). Adaptive query execution is
+Spark's default and is left to it.
 """
 
 from __future__ import annotations
@@ -37,9 +39,6 @@ DRIVER_JIT_OPTIONS = " ".join(
 )
 
 _DEFAULTS = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
@@ -51,11 +50,9 @@ _DEFAULTS = {
     "spark.sql.join.preferSortMergeJoin": "false",
     # guide §3.1: 10 MB default is sized for ~1 GB executors; dims that
     # this engine broadcasts (probe indexes, centroid tables, store
-    # slices) are safe well above it on any modern executor. Env-tunable
-    # for small-memory clusters.
-    "spark.sql.autoBroadcastJoinThreshold": os.environ.get(
-        "SPARK_GRAFT_AUTOBC", "64m"
-    ),
+    # slices) are safe well above it on any modern executor. A
+    # small-memory cluster lowers it through ``extra_conf``.
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
 }
 
 
@@ -82,30 +79,29 @@ def _is_local(master: str) -> bool:
 def get_spark_session(
     app_name: str = "data_profiler_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
-    ``shuffle_partitions`` defaults to the local core count — the default 200
-    over-parallelizes local mode and under-parallelizes a real cluster; on a
-    cluster leave AQE to coalesce.
+    Shuffle partitions follow the master's thread count
+    (:func:`_master_threads`): Spark's default 200 over-parallelizes local
+    mode and under-parallelizes a real cluster, where AQE coalesces.
+    ``extra_conf`` overrides any key.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = _master_threads(master)
+    threads = str(_master_threads(master))
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf["spark.default.parallelism"] = str(shuffle_partitions)
+    conf["spark.sql.shuffle.partitions"] = threads
+    conf["spark.default.parallelism"] = threads
     # File scans bin-pack by COMPRESSED bytes; highly compressible text
     # (source code) otherwise collapses to 1-2 scan partitions and serializes
     # every aggregate. Force at least one split per core.
-    conf["spark.sql.files.minPartitionNum"] = str(shuffle_partitions)
+    conf["spark.sql.files.minPartitionNum"] = threads
     if extra_conf:
         conf.update(extra_conf)
     # The caller's options go after ours: HotSpot keeps the last value of
@@ -172,39 +168,36 @@ _WARMED: set[str] = set()
 
 def _warm_session(spark: SparkSession) -> None:
     """One-time, data-independent session initialization, run on local
-    masters only. Measured on 4 cores it takes 9.3-9.9 s of wall time and
-    16-18 CPU-s; the ``python_workers`` step alone takes 2.5-3.5 s and
-    4.8-5.9 CPU-s.
+    masters only: a parquet write, read and aggregate over a temp dir
+    (scan, HashAggregate and codegen paths), so that this first-use cost
+    does not land on whichever query touches them first. Synthetic input
+    only: no engine table is touched, nothing is cached or reused by
+    queries. If the step fails, a warning names it with its traceback; it
+    never blocks session creation.
 
-    First use of each executor facility pays a class-load + codegen +
-    worker-spawn tax that otherwise lands on whichever QUERY happens to
-    touch it first (measured: ~2 s on the first parquet aggregate, ~5 s on
-    the first Python-worker stage of a session while every worker imports
-    pandas/numpy concurrently). Real clusters front-load this with
-    executor preload / warm pools; locally we run three tiny synthetic
-    jobs at session build: a parquet write+read+aggregate over a temp dir
-    (scan + HashAggregate + codegen paths), a rank window (sort exchange +
-    WindowGroupLimit), and a trivial mapInPandas over one batch per core
-    (spawns the Python worker pool and imports pandas/pyarrow once,
-    amortized for every later Arrow stage). Synthetic inputs only — no
-    engine table is touched, nothing is cached or reused by queries. A
-    step that fails is logged as a warning naming it, with its traceback;
-    it never blocks session creation."""
+    Measured on 4 cores (perfbench ``--seconds 10``, medians [quartiles]),
+    against the earlier three steps, which added a rank window and a
+    ``mapInPandas`` over one batch per core to start the Python worker
+    pool (no perfbench pass starts a Python worker):
+    operator_suite ``setup_s`` 19.7 [19.1-20.5] -> 15.8 [15.2-16.6] s,
+    ``run_cpu_s`` 42.6 [41.9-45.8] -> 44.0 [43.1-46.5] s; north_resume
+    ``setup_s`` 19.9 [19.4-21.3] -> 15.6-15.7 s; the warm-up's jobs
+    11 -> 5. With no warm-up at all ``setup_s`` is 7.9 s, but
+    operator_suite ``run_cpu_s`` rises to 54.4 [53.9-55.6] s: the first
+    parquet aggregate of a session pays about 2 s of class load and
+    codegen."""
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     key = spark.sparkContext.applicationId
     if key in _WARMED:
         return
     _WARMED.add(key)
-    cores = spark.sparkContext.defaultParallelism
     tmp = tempfile.mkdtemp(prefix="dps_warm_")
     path = os.path.join(tmp, "w.parquet")
-
-    def parquet_aggregate():
+    try:
         spark.range(1000).selectExpr(
             "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS x"
         ).write.mode("overwrite").parquet(path)
@@ -212,28 +205,9 @@ def _warm_session(spark: SparkSession) -> None:
             F.count(F.lit(1)), F.sum("x"), F.min("x"), F.max("x"),
             F.count_distinct("id"),
         ).collect()
-
-    def rank_window():
-        w = Window.partitionBy("k").orderBy(F.desc("x"))
-        spark.read.schema("id long, k long, x double").parquet(path).withColumn(
-            "r", F.row_number().over(w)
-        ).where("r <= 2").count()
-
-    def _touch(batches):
-        yield from batches
-
-    def python_workers():
-        spark.range(cores).repartition(cores).mapInPandas(
-            _touch, "id long"
-        ).count()
-
-    try:
-        for step in (parquet_aggregate, rank_window, python_workers):
-            try:
-                step()
-            except Exception:  # best-effort: warn, go on to the next step
-                logging.getLogger(__name__).warning(
-                    "session warm-up step %r failed", step.__name__, exc_info=True
-                )
+    except Exception:  # best-effort: a cold query is slower, not wrong
+        logging.getLogger(__name__).warning(
+            "session warm-up step 'parquet_aggregate' failed", exc_info=True
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -38,14 +38,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep the min-id row per exact content hash."""
-    keep = exact_dup_groups(df, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, on=id_col, how="left_semi")
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -482,7 +474,7 @@ def cluster_survivors(
     dedup pipeline (pairs -> connected_components -> ONE doc per cluster):
     for every cluster keep the member with the highest ``score_col``
     (ties broken by MIN id, so the choice is total and deterministic),
-    instead of :func:`dedup_exact`'s blind min-id rule. Docs absent from
+    instead of :func:`exact_dup_groups`'s blind min-id rule. Docs absent from
     ``clusters`` are singleton survivors of their own component (= their
     id, which is why ids must be integral — same contract as
     :func:`connected_components`).

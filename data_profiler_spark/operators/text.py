@@ -23,18 +23,6 @@ STOPWORDS = {
 CJK_REGEX = r"[一-鿿]"
 
 
-def _stopword_array():
-    r"""The flattened multilingual stopword list as a Column literal —
-    shared by with_quality_features and gopher_like_filter so the two
-    never drift apart. (Their punct_ratio definitions DO differ on
-    purpose: with_quality_features uses unicode word classes [\w\s];
-    gopher_like_filter uses ASCII classes for exact SQL-oracle
-    portability.)"""
-    from pyspark.sql import functions as _F
-
-    return _F.array(*[_F.lit(w) for ws in STOPWORDS.values() for w in ws])
-
-
 def tokens(col: Column, lowercase: bool = True) -> Column:
     """Whitespace tokens, empties removed."""
     c = F.lower(col) if lowercase else col
@@ -49,55 +37,6 @@ def token_count(col: Column) -> Column:
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, TOKEN_PATTERN))
     )
-
-
-def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword quality features + a composite score
-    in [0, 1]. One projection, zero shuffles."""
-    c = F.col(text_col)
-    # tokenize once into a named column (referenced by size + the stopword
-    # filter below; inline it would split twice per row)
-    df = df.withColumn("__toks", tokens(c))
-    toks = F.col("__toks")
-    n_chars = F.length(c)
-    n_tokens = F.size(toks)
-    stop_arr = _stopword_array()
-    out = (
-        df.withColumn("n_chars", n_chars)
-        .withColumn("n_tokens", n_tokens)
-        .withColumn(
-            "avg_token_len",
-            F.when(n_tokens > 0, (n_chars - (n_tokens - 1)) / n_tokens).otherwise(0.0),
-        )
-        .withColumn(
-            "punct_ratio",
-            F.when(
-                n_chars > 0,
-                F.length(F.regexp_replace(c, r"[\w\s]", "")) / n_chars,
-            ).otherwise(0.0),
-        )
-        .withColumn(
-            "digit_ratio",
-            F.when(n_chars > 0, F.length(F.regexp_replace(c, r"[^0-9]", "")) / n_chars)
-            .otherwise(0.0),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.when(
-                n_tokens > 0,
-                F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))) / n_tokens,
-            ).otherwise(0.0),
-        )
-    )
-    # Composite quality: favor moderate length, low punct/digit noise, some
-    # stopwords (prose-likeness). Clamped to [0,1].
-    score = (
-        F.least(F.col("n_tokens") / 100.0, F.lit(1.0)) * 0.35
-        + (1.0 - F.least(F.col("punct_ratio") * 4.0, F.lit(1.0))) * 0.25
-        + (1.0 - F.least(F.col("digit_ratio") * 4.0, F.lit(1.0))) * 0.15
-        + F.least(F.col("stopword_ratio") * 3.0, F.lit(1.0)) * 0.25
-    )
-    return out.withColumn("quality_score", F.round(score, 6)).drop("__toks")
 
 
 def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -346,7 +285,7 @@ def gopher_like_filter(
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
         ),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-    stop_arr = _stopword_array()
+    stop_arr = F.array(*[F.lit(w) for ws in STOPWORDS.values() for w in ws])
     mid = base.select(
         *[F.col(k) for k in keep_names],
         F.col("__nc"),

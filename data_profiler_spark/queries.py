@@ -3357,7 +3357,7 @@ FROM r WHERE rn = 1
 def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/dedup.py cluster_survivors: quality-aware survivor
     selection — per cluster keep the HIGHEST-scoring member (token count
-    here; ties to min id) instead of dedup_exact's blind min-id. Clusters
+    here; ties to min id) instead of exact_dup_groups' blind min-id. Clusters
     = exact content groups (md5), the deterministic cluster input that
     DuckDB can rebuild; near-dup cluster inputs (connected_components
     output) flow through the identical code path. One broadcast-eligible

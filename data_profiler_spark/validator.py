@@ -15,12 +15,6 @@ graph machinery it needed for three backends):
   4. verdicts are pure Python over the resolved scalars
   5. violation rows are extracted ONLY for failed constraints (ref early
      exit, dataset/sparkdf_dataset.py:139-141), deterministically sampled
-
-The input DataFrame is persisted across the fused pass and the post passes
-only when the caller asks for it with ``validate(persist=True)`` and more
-than one job will scan it (ref ``persist=True`` engine option,
-sparkdf_execution_engine.py:151-156); by default every job re-scans the
-input, and callers validating pure aggregates pay a single scan.
 """
 
 from __future__ import annotations
@@ -162,17 +156,11 @@ class Validator:
         self,
         suite: ConstraintSuite,
         group_by: list[str] | None = None,
-        persist: bool = False,
         result_format: str = "BASIC",
         partial_unexpected_count: int = 20,
         complete_limit: int = 10000,
     ) -> SuiteResult:
-        """``persist=True`` caches the input across the fused pass and the
-        post-pass jobs (worth it when the input is expensive to recompute
-        and >1 job will scan it — the reference's ``persist`` engine option,
-        sparkdf_execution_engine.py:151-156).
-
-        ``result_format`` is the reference's ladder (expectation.py:1760-1871):
+        """``result_format`` is the reference's ladder (expectation.py:1760-1871):
           BOOLEAN_ONLY: success flags only (count fields stripped);
           BASIC: counts/percents (no violating-value extraction — one step
             leaner than the reference's BASIC, which samples values);
@@ -186,47 +174,39 @@ class Validator:
         group_by = list(group_by or [])
         compiled = self.compile(suite)
         terms = dedup_terms(compiled)
-        n_jobs = 1 + sum(1 for c in compiled if c.post_pass_fn is not None)
-        do_persist = persist and n_jobs > 1
-        if do_persist:
-            self.df.persist()
-        try:
-            # post passes: one extra bounded job per constraint that needs
-            # one — submitted CONCURRENTLY (Spark's scheduler interleaves
-            # jobs from separate threads; serially, each small job leaves
-            # most cores idle and the dead time is pure Amdahl loss at high
-            # parallelism). Post passes that never read the fused metrics
-            # (post_pass_needs_metrics=False) start BEFORE the fused pass so
-            # they overlap it too; metric-consuming ones (z-score phase 2,
-            # crosstab guard) run after pass 1 resolves. Each constraint
-            # writes its own metric aliases, so merges are conflict-free.
-            post = [c for c in compiled if c.post_pass_fn is not None]
-            early = [c for c in post if not c.post_pass_needs_metrics]
-            late = [c for c in post if c.post_pass_needs_metrics]
-            if post:
-                from concurrent.futures import ThreadPoolExecutor
+        # post passes: one extra bounded job per constraint that needs
+        # one — submitted CONCURRENTLY (Spark's scheduler interleaves
+        # jobs from separate threads; serially, each small job leaves
+        # most cores idle and the dead time is pure Amdahl loss at high
+        # parallelism). Post passes that never read the fused metrics
+        # (post_pass_needs_metrics=False) start BEFORE the fused pass so
+        # they overlap it too; metric-consuming ones (z-score phase 2,
+        # crosstab guard) run after pass 1 resolves. Each constraint
+        # writes its own metric aliases, so merges are conflict-free.
+        post = [c for c in compiled if c.post_pass_fn is not None]
+        early = [c for c in post if not c.post_pass_needs_metrics]
+        late = [c for c in post if c.post_pass_needs_metrics]
+        if post:
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=min(8, len(post))) as ex:
-                    early_futs = [
-                        ex.submit(c.post_pass_fn, self.df, group_by, [])
-                        for c in early
-                    ]
-                    groups = run_fused_pass(self.df, terms, group_by)
-                    late_futs = [
-                        ex.submit(c.post_pass_fn, self.df, group_by, groups)
-                        for c in late
-                    ]
-                    all_updates = [f.result() for f in early_futs + late_futs]
-            else:
+            with ThreadPoolExecutor(max_workers=min(8, len(post))) as ex:
+                early_futs = [
+                    ex.submit(c.post_pass_fn, self.df, group_by, [])
+                    for c in early
+                ]
                 groups = run_fused_pass(self.df, terms, group_by)
-                all_updates = []
-            for updates in all_updates:
-                for key, metrics in groups:
-                    if key in updates:
-                        metrics.update(updates[key])
-        finally:
-            if do_persist:
-                self.df.unpersist()
+                late_futs = [
+                    ex.submit(c.post_pass_fn, self.df, group_by, groups)
+                    for c in late
+                ]
+                all_updates = [f.result() for f in early_futs + late_futs]
+        else:
+            groups = run_fused_pass(self.df, terms, group_by)
+            all_updates = []
+        for updates in all_updates:
+            for key, metrics in groups:
+                if key in updates:
+                    metrics.update(updates[key])
 
         results: list[ConstraintResult] = []
         by_cid: dict[str, list[ConstraintResult]] = {}
@@ -434,13 +414,6 @@ class Validator:
         # hold every column (a checkpoint run validates all pending
         # partitions in one frame).
         return _reduce(lambda a, b: a.unionByName(b), parts)
-
-    # ------------------------------------------------------------------
-    def head(self, n: int = 5):
-        """First n rows as pandas (ref ``table.head``,
-        expectations/metrics/table_metrics/table_head.py:140-153 — a bounded
-        ``limit`` collect, never a full scan)."""
-        return self.df.limit(n).toPandas()
 
     # ------------------------------------------------------------------
     def expect(self, type: str, **kwargs: Any) -> ConstraintResult:

@@ -10,7 +10,6 @@ def spark():
     s = get_spark_session(
         app_name="data_profiler_spark_tests",
         master="local[4]",
-        shuffle_partitions=4,
         extra_conf={"spark.driver.memory": "8g"},
     )
     yield s

@@ -33,22 +33,6 @@ ALLOWED_TEST_ONLY = {
     "_pq_encode_expr",
 }
 
-# Reached only from their own tests, found by this scan but not yet deleted:
-# each goes together with the tests that call it. An entry that the scan no
-# longer finds fails the guard, so the list only shrinks.
-KNOWN_TEST_ONLY = {
-    "data_profiler_spark.operators.dedup:dedup_exact",
-    "data_profiler_spark.operators.text:with_quality_features",
-    # the FileDataAsset checks: no query or entry point calls them
-    "data_profiler_spark.sources.files:file_metadata",
-    "data_profiler_spark.sources.files:file_sizes",
-    "data_profiler_spark.sources.files:expect_file_hash_to_equal",
-    "data_profiler_spark.sources.files:expect_file_size_to_be_between",
-    "data_profiler_spark.sources.files:_file_lines",
-    "data_profiler_spark.sources.files:line_regex_match_counts",
-    "data_profiler_spark.sources.files:expect_file_line_regex_match_count_to_equal",
-}
-
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -150,4 +134,4 @@ def test_no_package_code_only_tests_reach():
     for name in ENTRY_POINTS:
         p = REPO / name
         entry += [f.read_text() for f in (sorted(p.rglob("*.py")) if p.is_dir() else [p])]
-    assert unreached(package, entry, ALLOWED_TEST_ONLY) == KNOWN_TEST_ONLY
+    assert unreached(package, entry, ALLOWED_TEST_ONLY) == set()

@@ -182,6 +182,19 @@ def test_json_schema(spark):
     assert r.unexpected_count == 2  # "a" non-number + unparseable
 
 
+def test_json_schema_typo_is_a_compile_error(spark):
+    """A malformed schema gives one failed verdict naming ``SchemaError``,
+    not every row unexpected."""
+    df = spark.createDataFrame([('{"a": 1}',), ("nope",)], ["j"])
+    r = run_one(
+        df, "expect_column_values_to_match_json_schema",
+        column="j", json_schema={"type": "objekt"},
+    )
+    assert r.success is False
+    assert "SchemaError" in (r.exception_info or "")
+    assert r.unexpected_count is None
+
+
 def test_zscore(typed_small, pdf):
     r = run_one(
         typed_small, "expect_column_value_z_scores_to_be_less_than",

@@ -76,26 +76,38 @@ class _NoExecutors:
 
     class sparkContext:
         applicationId = "no-executors"
-        defaultParallelism = 1
 
     def range(self, *a):
         raise RuntimeError("no executors")
 
-    @property
-    def read(self):
-        raise RuntimeError("no executors")
 
-
-def test_warm_up_warns_with_the_failing_step(spark, caplog):
-    # ``spark``: the window spec of a step is built on the active context
+def test_warm_up_warns_with_the_failing_step(caplog):
     with caplog.at_level(logging.WARNING, logger="data_profiler_spark.core.session"):
         _warm_session(_NoExecutors())
     warned = [(r.getMessage(), r.exc_info[1]) for r in caplog.records]
-    assert [m for m, _ in warned] == [
-        f"session warm-up step {step!r} failed"
-        for step in ("parquet_aggregate", "rank_window", "python_workers")
-    ]
-    assert all(str(e) == "no executors" for _, e in warned)
+    assert [m for m, _ in warned] == ["session warm-up step 'parquet_aggregate' failed"]
+    assert str(warned[0][1]) == "no executors"
+
+
+# Jobs one warm-up submits, measured on Spark 4.1.2 at local[4]: its parquet
+# write, read and aggregate.
+WARM_UP_JOBS = 5
+
+
+def test_warm_up_job_count(spark, monkeypatch):
+    """The warm-up submits at most ``WARM_UP_JOBS`` jobs, so a step added
+    back without a measurement fails here."""
+    from data_profiler_spark.core import session
+
+    monkeypatch.setattr(session, "_WARMED", set())
+    sc = spark.sparkContext
+    sc.setJobGroup("test_warm_up_job_count", "warm-up")
+    try:
+        _warm_session(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_warm_up_job_count")
+    assert 0 < len(jobs) <= WARM_UP_JOBS
 
 
 @pytest.mark.parametrize(
