@@ -64,10 +64,38 @@ class ConstraintResult:
 
 
 @dataclass
+class ViolationSets:
+    """Frames the post passes of one ``validate(keep_violations=True)``
+    kept for violation sampling to plan from, by constraint id: a
+    group-scoped uniqueness constraint's duplicate keys and a referential
+    constraint's orphan keys, so sampling skips the duplicate search or
+    the anti-join. They hold for ``group_by`` only. Whoever asked for
+    them calls ``release()``; nothing else does."""
+
+    group_by: list[str]
+    frames: dict[str, Any] = field(default_factory=dict)
+
+    def keep(self, constraint_id: str, df: Any) -> Any:
+        # A lazy local checkpoint is written by the post pass's own action
+        # and adds no job. ``cache()`` adds one to every post pass:
+        # adaptive execution materializes a table cache as a stage of its
+        # own.
+        self.frames[constraint_id] = df = df.localCheckpoint(eager=False)
+        return df
+
+    def release(self) -> None:
+        for df in self.frames.values():
+            # DataFrame has no public handle on its checkpointed RDD
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+        self.frames.clear()
+
+
+@dataclass
 class SuiteResult:
     suite_name: str
     suite_fingerprint: str
     results: list[ConstraintResult]
+    violation_sets: ViolationSets | None = field(default=None, repr=False, compare=False)
 
     @property
     def success(self) -> bool:

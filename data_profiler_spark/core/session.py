@@ -118,14 +118,10 @@ def get_spark_session(
     return spark
 
 
-def arrow_table(rows: Iterable, schema: T.StructType):
-    """Driver-side rows (tuples or Rows in ``schema``'s field order) as one
-    ``pyarrow.Table`` in the Arrow form Spark itself uses for ``schema``,
-    nullability included. Values go through the schema's ``toInternal``
-    first, so a naive ``datetime`` reads as local time, as ``collect()``
-    returns it. A field type Arrow does not map raises ``TypeError``, and
-    a ``None`` in a non-nullable field ``ValueError``, each naming the
-    field."""
+def arrow_schema(schema: T.StructType):
+    """``schema`` as the ``pyarrow.Schema`` Spark itself uses for it,
+    nullability included. A field type Arrow does not map raises
+    ``TypeError`` naming the field."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -138,12 +134,26 @@ def arrow_table(rows: Iterable, schema: T.StructType):
                 f"field {f.name!r} has type {f.dataType.simpleString()}, "
                 "which Arrow does not map"
             ) from exc
+    return pa.schema(fields)
+
+
+def arrow_table(rows: Iterable, schema: T.StructType):
+    """Driver-side rows (tuples or Rows in ``schema``'s field order) as one
+    ``pyarrow.Table`` in :func:`arrow_schema`'s form. Values go through the
+    schema's ``toInternal`` first, so a naive ``datetime`` reads as local
+    time, as ``collect()`` returns it. A field type Arrow does not map
+    raises ``TypeError``, and a ``None`` in a non-nullable field
+    ``ValueError``, each naming the field."""
+    import pyarrow as pa
+
+    pa_schema = arrow_schema(schema)
+    fields = list(pa_schema)
     cols = list(zip(*(schema.toInternal(r) for r in rows))) or [()] * len(fields)
     arrays = [pa.array(c, type=f.type) for c, f in zip(cols, fields)]
     for a, f in zip(arrays, fields):
         if a.null_count and not f.nullable:
             raise ValueError(f"field {f.name!r} is not nullable, but got None")
-    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+    return pa.Table.from_arrays(arrays, schema=pa_schema)
 
 
 def local_frame(

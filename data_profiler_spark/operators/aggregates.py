@@ -216,7 +216,7 @@ def c_most_common(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
     mode_a = metric_alias("column.mode_set", column=colname)
     any_a = metric_alias("column.mode_any_in_set", column=colname)
 
-    def post_pass(frame: DataFrame, group_by: list[str], groups):
+    def post_pass(frame: DataFrame, group_by: list[str], groups, kept):
         from pyspark.sql import Window
 
         counted = (

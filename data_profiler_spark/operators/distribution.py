@@ -380,7 +380,7 @@ def c_ks_test(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConst
             "column.bootstrapped_ks", column=colname, tag=constraint.id[:8]
         )
 
-        def post_pass(frame: DataFrame, group_by: list[str], groups):
+        def post_pass(frame: DataFrame, group_by: list[str], groups, kept):
             n_by_group = {g: float(m.get(nn_a) or 0) for g, m in groups}
             res = bootstrap_ks_pvalues(
                 frame, colname, po, n_by_group, group_by,
@@ -658,7 +658,7 @@ def c_parameterized_ks(constraint: Constraint, df: DataFrame, ctx: dict) -> Comp
         params=str(kw.get("params")),
     )
 
-    def post_pass(frame: DataFrame, group_by: list[str], groups):
+    def post_pass(frame: DataFrame, group_by: list[str], groups, kept):
         res = ks_test_parameterized(
             frame, colname, distribution, kw.get("params") or {}, group_by
         )
@@ -804,7 +804,7 @@ def c_cramers_phi(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
             F.broadcast(kdf), on=cond, how="left_semi" if keep else "left_anti"
         )
 
-    def post_pass(frame: DataFrame, group_by: list[str], groups):
+    def post_pass(frame: DataFrame, group_by: list[str], groups, kept):
         out: dict = {}
         dense_cand: list[tuple[float, tuple]] = []
         sparse_keys: list[tuple] = []

@@ -141,6 +141,7 @@ def compile_map_constraint(
     unexpected: Column | None = None,
     unexpected_count: UnexpectedCount | None = None,
     violations: Callable[[DataFrame, list[str]], DataFrame] | None = None,
+    violations_from: Callable[[DataFrame, list[str], DataFrame], DataFrame] | None = None,
     denominator: str = "nonnull",  # "nonnull" | "element"
     extra_terms: list[AggTerm] | None = None,
     details: Callable[[dict[str, Any]], dict[str, Any]] | None = None,
@@ -153,7 +154,12 @@ def compile_map_constraint(
     in the fused pass, or an ``unexpected_count`` plan, which one post pass
     counts per group with ``groupBy(*group_by)`` (no keys: Spark's global
     aggregate). The row condition scopes the element and missing terms, the
-    count plan and the ``violations`` plan alike."""
+    count plan and the ``violations`` plan alike.
+
+    ``violations_from(frame, group_by, counted)`` plans the violation rows
+    from the frame the post pass counted (the duplicate or orphan keys).
+    A kind that gives it lets that frame be kept: a post pass handed a
+    ``ViolationSets`` keeps it there, and sampling plans from it."""
     kw = constraint.kwargs
     rc = _row_condition(constraint)
     rc_key = _row_condition_sql(constraint)
@@ -179,11 +185,13 @@ def compile_map_constraint(
         def violations(frame: DataFrame, group_by: list[str]) -> DataFrame:
             return frame.filter(cond)
     else:
-        def post_pass(frame: DataFrame, group_by: list[str], groups):
+        def post_pass(frame: DataFrame, group_by: list[str], groups, kept):
             plan = unexpected_count(scoped(frame), group_by, groups)
             if plan is None:
                 return {}
             rows, n = plan
+            if kept is not None and violations_from is not None:
+                rows = kept.keep(constraint.id, rows)
             return {
                 tuple(r[k] for k in group_by): {unex_a: int(r["n"] or 0)}
                 for r in rows.groupBy(*group_by).agg(n.alias("n")).collect()
@@ -213,7 +221,11 @@ def compile_map_constraint(
             details=details(metrics) if details else {},
         )
 
-    def violations_fn(frame: DataFrame, group_by: list[str]) -> DataFrame:
+    def violations_fn(
+        frame: DataFrame, group_by: list[str], counted: DataFrame | None = None
+    ) -> DataFrame:
+        if counted is not None:
+            return violations_from(scoped(frame), group_by, counted)
         return violations(scoped(frame), group_by)
 
     return CompiledConstraint(

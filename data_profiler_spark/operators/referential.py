@@ -10,7 +10,9 @@ real foreign-key check over Spark is an anti-join:
     orphans = facts LEFT ANTI JOIN dim ON key
 
 which is both the violations plan and, counted per group, the unexpected
-count. Physical strategy: broadcast the dimension when small (explicit
+count. A post pass asked to keep its orphan key projection checkpoints it,
+and sampling semi-joins the rows against those keys instead of repeating
+the anti-join. Physical strategy: broadcast the dimension when small (explicit
 ``F.broadcast`` under ``broadcast=True`` or when the caller knows the dim is
 bounded); otherwise let Catalyst/AQE pick sort-merge with skew-join
 splitting. The join key (repo, commit) is high-cardinality, so no salting is
@@ -55,11 +57,20 @@ def c_referential(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
     def orphans(frame: DataFrame, group_by: list[str]) -> DataFrame:
         return frame.where(key_nonnull).join(dim, on=key_cols, how="left_anti")
 
+    def orphan_keys(frame: DataFrame, group_by: list[str], groups):
+        # the count reads only these columns, and a kept frame holds only them
+        keys = orphans(frame, group_by).select(*dict.fromkeys(group_by + key_cols))
+        return keys, F.count(F.lit(1))
+
+    def orphans_of(frame: DataFrame, group_by: list[str], keys: DataFrame) -> DataFrame:
+        # a row whose key is an orphan key is an orphan; the equi-join
+        # drops NULL keys itself
+        return frame.join(keys.select(*key_cols), on=key_cols, how="left_semi")
+
     return compile_map_constraint(
         constraint,
         domain_nonnull=key_nonnull,
-        unexpected_count=lambda frame, group_by, groups: (
-            orphans(frame, group_by), F.count(F.lit(1))
-        ),
+        unexpected_count=orphan_keys,
         violations=orphans,
+        violations_from=orphans_of,
     )

@@ -14,7 +14,9 @@ verdict are ``compile_map_constraint``'s; this module plans the rest.
   combiner, e.g. collect_list.)
 - Violating rows: a left semi-join of the rows against the duplicate keys,
   broadcast when the dup-key set is small, which it is in any passing or
-  near-passing run.
+  near-passing run. A group-scoped post pass asked to keep its duplicate
+  keys checkpoints them, and sampling joins against those instead of repeating
+  the aggregation.
 """
 
 from __future__ import annotations
@@ -80,8 +82,13 @@ def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledCons
     def dup_keys(frame: DataFrame, group_by: list[str]) -> DataFrame:
         return duplicate_key_counts(frame.where(key_nonnull), keys(group_by))
 
-    def dup_rows(frame: DataFrame, group_by: list[str]) -> DataFrame:
-        dups = dup_keys(frame, group_by).select(*keys(group_by))
+    def dup_rows(
+        frame: DataFrame, group_by: list[str], dups: DataFrame | None = None
+    ) -> DataFrame:
+        """``dups``: the duplicate keys, when a post pass kept them."""
+        if dups is None:
+            dups = dup_keys(frame, group_by)
+        dups = dups.select(*keys(group_by))
         # the equi-join drops NULL keys itself
         return frame.join(
             F.broadcast(dups) if do_broadcast else dups,
@@ -98,6 +105,8 @@ def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledCons
         domain_nonnull=key_nonnull,
         unexpected_count=unexpected_count,
         violations=dup_rows,
+        # a table-scope count is of the duplicate rows, too wide to keep
+        violations_from=dup_rows if by_group else None,
     )
 
 

@@ -53,11 +53,14 @@ class CompiledConstraint:
     """A constraint lowered to: fused agg terms + a pure verdict function.
 
     ``verdict(metrics, group)`` consumes the resolved per-group metric dict.
-    ``violations(df)`` (optional) returns the violating rows as a DataFrame —
-    only planned/executed for failed constraints.
-    ``post_pass(df, groups)`` (optional) runs ONE extra fused job for
-    two-phase metrics (e.g. z-score needs mean/stddev first); returns
-    {group_key: {alias: value}} merged into the metric dicts.
+    ``violations(df, group_by, kept=None)`` (optional) returns the
+    violating rows as a DataFrame — only planned/executed for failed
+    constraints; ``kept`` is the frame its post pass kept, if any.
+    ``post_pass(df, group_by, groups, kept)`` (optional) runs ONE extra
+    fused job for two-phase metrics (e.g. z-score needs mean/stddev first);
+    returns {group_key: {alias: value}} merged into the metric dicts. A post
+    pass that can keep the frame it counts for sampling adds it to
+    ``kept`` (a ``ViolationSets``) when that is not None.
     ``value_column`` (column-domain map constraints) names the column whose
     violating VALUES populate the result-format ladder
     (partial_unexpected_list / counts / unexpected_list).
@@ -72,10 +75,10 @@ class CompiledConstraint:
     constraint: Constraint
     agg_terms: list[AggTerm] = field(default_factory=list)
     verdict_fn: Callable[[dict[str, Any], dict[str, Any]], ConstraintResult] | None = None
-    violations_fn: Callable[[DataFrame, list[str]], DataFrame] | None = None
+    violations_fn: Callable[..., DataFrame] | None = None
     value_column: str | None = None
     post_pass_fn: (
-        Callable[[DataFrame, list[str], list[tuple[GroupKey, dict[str, Any]]]],
+        Callable[[DataFrame, list[str], list[tuple[GroupKey, dict[str, Any]]], Any],
                  dict[GroupKey, dict[str, Any]]]
         | None
     ) = None

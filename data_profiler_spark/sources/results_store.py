@@ -8,8 +8,9 @@ same API) table keyed
 
     (run_id, suite_fingerprint, snapshot_id, partition_id, constraint_id)
 
-On re-submission the runner anti-joins planned partitions against completed
-ones and skips them (FIXTURES.md §5 resumability contract). A partition is
+On re-submission the runner reads the completed partitions
+(``completed_partitions``, on the driver) and validates only the rows of
+the others (FIXTURES.md §5 resumability contract). A partition is
 "completed" when its sentinel row (constraint_id = '__partition_done__') is
 present. A chunk's verdict rows and its sentinels are ONE part file, renamed
 into place in one step (one append commit in production), so a crash
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_profiler_spark.core.session import arrow_table, local_frame
+from data_profiler_spark.core.session import arrow_schema, arrow_table, local_frame
 
 DONE_SENTINEL = "__partition_done__"
 
@@ -147,18 +148,28 @@ class ResultsStore:
 
     # ------------------------------------------------------------------
     def completed_partitions(self, suite_fingerprint: str, snapshot_id: str) -> set[str]:
-        df = self.read()
-        rows = (
-            df.where(
-                (F.col("suite_fingerprint") == suite_fingerprint)
-                & (F.col("snapshot_id") == snapshot_id)
-                & (F.col("constraint_id") == DONE_SENTINEL)
-            )
-            .select("partition_id")
-            .distinct()
-            .collect()
+        """The partitions with a sentinel for this suite and snapshot.
+
+        Read on the driver with pyarrow, so no Spark job runs. Files are
+        listed as Spark lists them: a ``.``/``_``-prefixed name is hidden,
+        so a staged part file is invisible. The store schema is passed
+        explicitly, so a store with no visible file reads as empty. A
+        missing path is an empty store; a part file that cannot be read
+        raises, as it does for Spark."""
+        import pyarrow.dataset as ds
+
+        if not os.path.exists(self.path):
+            return set()
+        done = ds.dataset(
+            self.path, schema=arrow_schema(RESULT_SCHEMA), format="parquet",
+            ignore_prefixes=[".", "_"],
+        ).to_table(
+            columns=["partition_id"],
+            filter=(ds.field("suite_fingerprint") == suite_fingerprint)
+            & (ds.field("snapshot_id") == snapshot_id)
+            & (ds.field("constraint_id") == DONE_SENTINEL),
         )
-        return {r["partition_id"] for r in rows}
+        return set(done.column("partition_id").to_pylist())
 
     def mark_done(
         self,

@@ -24,11 +24,12 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_profiler_spark.core.result import ConstraintResult, SuiteResult
+from data_profiler_spark.core.result import ConstraintResult, SuiteResult, ViolationSets
 from data_profiler_spark.core.suite import Constraint, ConstraintSuite
 from data_profiler_spark.operators.registry import compile_constraint, ensure_registered
 from data_profiler_spark.plans.fused import (
     CompiledConstraint,
+    GroupKey,
     dedup_terms,
     deterministic_sample,
     run_fused_pass,
@@ -159,6 +160,7 @@ class Validator:
         result_format: str = "BASIC",
         partial_unexpected_count: int = 20,
         complete_limit: int = 10000,
+        keep_violations: bool = False,
     ) -> SuiteResult:
         """``result_format`` is the reference's ladder (expectation.py:1760-1871):
           BOOLEAN_ONLY: success flags only (count fields stripped);
@@ -170,43 +172,22 @@ class Validator:
             instead of the reference's input-order sample);
           COMPLETE: + unexpected_list, capped at ``complete_limit`` (the
             reference collects unbounded — its self-admitted perf hazard,
-            sparkdf_dataset.py:92-95)."""
+            sparkdf_dataset.py:92-95).
+
+        ``keep_violations=True`` returns the frames the post passes can keep
+        for sampling, checkpointed, in ``result.violation_sets``. Pass the
+        result as ``only_failed_of`` to this Validator's sampling, then
+        call ``result.violation_sets.release()``. Without it nothing stays
+        persisted."""
         group_by = list(group_by or [])
         compiled = self.compile(suite)
-        terms = dedup_terms(compiled)
-        # post passes: one extra bounded job per constraint that needs
-        # one — submitted CONCURRENTLY (Spark's scheduler interleaves
-        # jobs from separate threads; serially, each small job leaves
-        # most cores idle and the dead time is pure Amdahl loss at high
-        # parallelism). Post passes that never read the fused metrics
-        # (post_pass_needs_metrics=False) start BEFORE the fused pass so
-        # they overlap it too; metric-consuming ones (z-score phase 2,
-        # crosstab guard) run after pass 1 resolves. Each constraint
-        # writes its own metric aliases, so merges are conflict-free.
-        post = [c for c in compiled if c.post_pass_fn is not None]
-        early = [c for c in post if not c.post_pass_needs_metrics]
-        late = [c for c in post if c.post_pass_needs_metrics]
-        if post:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(post))) as ex:
-                early_futs = [
-                    ex.submit(c.post_pass_fn, self.df, group_by, [])
-                    for c in early
-                ]
-                groups = run_fused_pass(self.df, terms, group_by)
-                late_futs = [
-                    ex.submit(c.post_pass_fn, self.df, group_by, groups)
-                    for c in late
-                ]
-                all_updates = [f.result() for f in early_futs + late_futs]
-        else:
-            groups = run_fused_pass(self.df, terms, group_by)
-            all_updates = []
-        for updates in all_updates:
-            for key, metrics in groups:
-                if key in updates:
-                    metrics.update(updates[key])
+        kept = ViolationSets(group_by) if keep_violations else None
+        try:
+            groups = self._resolve_metrics(compiled, group_by, kept)
+        except BaseException:
+            if kept is not None:
+                kept.release()
+            raise
 
         results: list[ConstraintResult] = []
         by_cid: dict[str, list[ConstraintResult]] = {}
@@ -233,7 +214,53 @@ class Validator:
             suite_name=suite.name,
             suite_fingerprint=suite.fingerprint,
             results=results,
+            violation_sets=kept,
         )
+
+    def _resolve_metrics(
+        self,
+        compiled: list[CompiledConstraint],
+        group_by: list[str],
+        kept: ViolationSets | None,
+    ) -> list[tuple[GroupKey, dict[str, Any]]]:
+        """Every group's metrics: the fused pass's aggregates merged with
+        the post passes' updates. Post passes that can keep a frame for
+        sampling add it to ``kept`` (when not None)."""
+        terms = dedup_terms(compiled)
+        # post passes: one extra bounded job per constraint that needs
+        # one — submitted CONCURRENTLY (Spark's scheduler interleaves
+        # jobs from separate threads; serially, each small job leaves
+        # most cores idle and the dead time is pure Amdahl loss at high
+        # parallelism). Post passes that never read the fused metrics
+        # (post_pass_needs_metrics=False) start BEFORE the fused pass so
+        # they overlap it too; metric-consuming ones (z-score phase 2,
+        # crosstab guard) run after pass 1 resolves. Each constraint
+        # writes its own metric aliases, so merges are conflict-free.
+        post = [c for c in compiled if c.post_pass_fn is not None]
+        early = [c for c in post if not c.post_pass_needs_metrics]
+        late = [c for c in post if c.post_pass_needs_metrics]
+        if post:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(8, len(post))) as ex:
+                early_futs = [
+                    ex.submit(c.post_pass_fn, self.df, group_by, [], kept)
+                    for c in early
+                ]
+                groups = run_fused_pass(self.df, terms, group_by)
+                late_futs = [
+                    ex.submit(c.post_pass_fn, self.df, group_by, groups, kept)
+                    for c in late
+                ]
+                all_updates = [f.result() for f in early_futs + late_futs]
+        else:
+            groups = run_fused_pass(self.df, terms, group_by)
+            all_updates = []
+        for updates in all_updates:
+            for key, metrics in groups:
+                if key in updates:
+                    metrics.update(updates[key])
+        return groups
 
     def _attach_unexpected_values(
         self,
@@ -355,19 +382,26 @@ class Validator:
         the sample down (e.g. the north-rule violation key
         (repo, partition_id, content sha)); it must keep the ``group_by``
         columns. ``group_by`` caps the sample at ``limit`` rows per group
-        instead of per constraint."""
+        instead of per constraint. A constraint whose frame ``only_failed_of``
+        kept for this ``group_by`` (``validate(keep_violations=True)`` on
+        this Validator) plans its violations from that frame."""
+        group_by = list(group_by or [])
         failed_ids: set[str] | None = None
+        kept: dict[str, DataFrame] = {}
         if only_failed_of is not None:
             failed_ids = {
                 r.constraint_id for r in only_failed_of.results if not r.success
             }
+            sets = only_failed_of.violation_sets
+            if sets is not None and sets.group_by == group_by:
+                kept = sets.frames
         out: dict[str, DataFrame] = {}
         for c in self.compile(suite):
             if c.violations_fn is None:
                 continue
             if failed_ids is not None and c.constraint.id not in failed_ids:
                 continue
-            v = c.violations_fn(self.df, group_by or [])
+            v = c.violations_fn(self.df, group_by, kept.get(c.constraint.id))
             if key_columns:
                 v = v.select(*key_columns)
             out[c.constraint.id] = deterministic_sample(v, limit, group_by)

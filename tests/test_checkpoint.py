@@ -364,12 +364,22 @@ def test_unique_samples_ignore_keys_repeated_across_partitions(spark, tmp_path):
 
 
 def test_chunk_predicate_pushed_in_native_type(spark, tmp_path, monkeypatch):
-    """The chunk predicate compares the column in its own type, so a flat
-    parquet int column gets it as a pushed filter (row-group statistics)."""
+    """A resume excludes the done partitions with a predicate in the
+    column's own type, so a flat parquet int column gets it as a pushed
+    filter (row-group statistics)."""
+    import pyspark.sql.functions as F
+
     from data_profiler_spark import checkpoint
 
     path = str(tmp_path / "flat")
     _many_violations(spark).write.parquet(path)
+    suite = ConstraintSuite("push").add(
+        "expect_column_values_to_not_be_null", column="content"
+    )
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    CheckpointRunner(store, chunk_size=4).run(
+        spark.read.parquet(path).where(F.col("p") < 4), suite, partition_col="p"
+    )
     seen = []
 
     class Spy(checkpoint.Validator):
@@ -378,17 +388,13 @@ def test_chunk_predicate_pushed_in_native_type(spark, tmp_path, monkeypatch):
             super().__init__(df, **kw)
 
     monkeypatch.setattr(checkpoint, "Validator", Spy)
-    suite = ConstraintSuite("push").add(
-        "expect_column_values_to_not_be_null", column="content"
-    )
-    store = ResultsStore(spark, str(tmp_path / "store"))
     rep = CheckpointRunner(store, chunk_size=4).run(
         spark.read.parquet(path), suite, partition_col="p"
     )
-    assert len(rep.validated_partitions) == 16 and len(seen) == 1
+    assert len(rep.validated_partitions) == 12 and len(seen) == 1
     plan = seen[0]._jdf.queryExecution().executedPlan().toString()
-    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
-    assert "In(p," in pushed
+    pushed = plan.split("PushedFilters: [")[1]
+    assert "Not(In(p, [0,1,2,3]))" in pushed
 
 
 def test_one_validation_pass_whatever_the_chunking(spark, code_tables, suite, tmp_path):
@@ -450,6 +456,59 @@ def test_north_suite_job_count(spark, code_tables):
     )
     assert len(res.results) == 6 * 5
     assert len(set(tracker.getJobIdsForGroup()) - before) <= 8
+
+
+# Spark jobs of a north-suite resume (test_resume_pass_job_count): the
+# fused pass, the post passes and one sampling job.
+RESUME_JOBS = 11
+
+
+def _north_suite(files):
+    """The north suite: null, length, compound-unique, referential, drift."""
+    counts = {r["lang"]: r["count"] for r in files.groupBy("lang").count().collect()}
+    total = sum(counts.values())
+    langs = sorted(counts)
+    baseline = {"values": langs, "weights": [counts[x] / total for x in langs], "n": total}
+    return (
+        ConstraintSuite("north")
+        .add("expect_column_values_to_not_be_null", column="content", mostly=0.98)
+        .add("expect_column_value_lengths_to_be_between",
+             column="content", min_value=0, max_value=1_000_000)
+        .add("expect_compound_columns_to_be_unique", column_list=["repo", "path", "commit"])
+        .add("expect_compound_columns_to_exist_in_table", column_list=["repo", "commit"],
+             other_table_name="commits", mostly=0.99)
+        .add("expect_column_distribution_to_match_baseline",
+             column="lang", baseline=baseline, p=0.001)
+    )
+
+
+def test_resume_pass_job_count(spark, code_tables, tmp_path):
+    """A resume of the north suite submits only the validation pass's and
+    the sampling's jobs: a partition listing scan or a Spark read of the
+    store would add jobs and fail here. Nothing stays persisted after the
+    run, nor after a bare ``validate``."""
+    files, commits = code_tables
+    north = _north_suite(files)
+    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    store.mark_done("earlier", north.fingerprint, "", ["0", "1", "2"])
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cached = set(persistent().keys())
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    rep = CheckpointRunner(store).run(
+        dfp, north, partition_col="partition_id", tables={"commits": commits},
+        violation_key_columns=["repo", "path", "commit"],
+    )
+    jobs = len(set(tracker.getJobIdsForGroup()) - before)
+    assert rep.validated_partitions == ["3", "4", "5"]
+    assert rep.skipped_partitions == ["0", "1", "2"]
+    assert jobs <= RESUME_JOBS, jobs
+    assert set(persistent().keys()) == cached
+    Validator(dfp, tables={"commits": commits}).validate(
+        north, group_by=["partition_id"]
+    )
+    assert set(persistent().keys()) == cached
 
 
 def test_truncated_part_file_fails_loudly(spark, suite, code_tables, tmp_path):
@@ -666,3 +725,116 @@ def test_profile_overwrite_killed_before_old_parts_deleted(spark, tmp_path, monk
     assert {k: len(v) for k, v in store.runs_rows(["base", "cur"]).items()} == {
         "base": n, "cur": n,
     }
+
+
+def test_completed_partitions_ignores_staged_part(spark, tmp_path):
+    """The done set is read as Spark lists the store: a staged
+    ``.part-*.parquet`` (a commit killed before its rename) and ``_``-files
+    are invisible, next to committed parts and alone."""
+    import os
+    import shutil
+
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    store.mark_done("r1", "fp", "", ["a"])
+    (committed,) = os.listdir(store.path)
+    other = ResultsStore(spark, str(tmp_path / "other"))
+    other.mark_done("r2", "fp", "", ["b"])
+    (part,) = os.listdir(other.path)
+    shutil.copy(os.path.join(other.path, part), os.path.join(store.path, "." + part))
+    open(os.path.join(store.path, "_SUCCESS"), "w").close()
+    assert store.completed_partitions("fp", "") == {"a"}
+    assert store.completed_partitions("fp", "other-snapshot") == set()
+    os.remove(os.path.join(store.path, committed))
+    assert store.completed_partitions("fp", "") == set()
+
+
+@pytest.mark.parametrize("ddl", ["int", "string", "date"])
+def test_resume_validates_exactly_the_pending_partitions(spark, tmp_path, ddl):
+    """A resume validates the partitions with no sentinel and no others,
+    whatever the partition column's type: the done keys are compared as
+    values of that type."""
+    import datetime
+
+    import pyspark.sql.functions as F
+
+    values = {
+        "int": [0, 1, 2, 3],
+        "string": ["a", "b", "c", "d"],
+        "date": [datetime.date(2024, 2, d) for d in (27, 28, 29)] + [datetime.date(2024, 3, 1)],
+    }[ddl]
+    keys = [str(v) for v in values]
+    rows = [(i, values[i % 4], None if i % 5 == 0 else f"c{i}") for i in range(40)]
+    df = spark.createDataFrame(rows, f"id long, p {ddl}, content string")
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    runner = CheckpointRunner(store, chunk_size=1)
+    first = runner.run(df.where(F.col("p").isin(values[:2])), _KILL_SUITE, partition_col="p")
+    assert first.validated_partitions == keys[:2]
+    rep = runner.run(df, _KILL_SUITE, partition_col="p")
+    assert rep.validated_partitions == keys[2:]
+    assert rep.skipped_partitions == keys[:2]
+    assert rep.planned_partitions == keys
+    stored = store.verdicts(_KILL_SUITE.fingerprint, "").collect()
+    assert {r["partition_id"] for r in stored if r["run_id"] == rep.run_id} == set(keys[2:])
+    assert {r["partition_id"]: r["element_count"] for r in stored} == {k: 10 for k in keys}
+
+
+def test_unconvertible_done_key_does_not_empty_the_pass(spark, tmp_path):
+    """A done key that names no value of the column's type (``x``, and
+    ``1.0`` / ``01``, which no int prints as) is left out of the
+    predicate: as a NULL in the ``NOT IN`` list it would filter out every
+    row."""
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    store.mark_done("earlier", _KILL_SUITE.fingerprint, "", ["x", "1.0", "01", "2"])
+    rep = CheckpointRunner(store, chunk_size=2).run(
+        _four_partitions(spark), _KILL_SUITE, partition_col="p"
+    )
+    assert rep.validated_partitions == ["0", "1", "3"]
+
+
+def test_null_partition_value_fails_before_any_append(spark, tmp_path):
+    """Rows with a NULL partition value reach the pass, and the run raises,
+    naming the column and the row count, before anything is stored: a
+    sentinel for them would mark rows done that no verdict covers."""
+    import os
+
+    rows = [(i, None if i < 3 else i % 2, f"c{i}") for i in range(10)]
+    df = spark.createDataFrame(rows, "id long, p int, content string")
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    with pytest.raises(ValueError, match="3 rows have a NULL partition column 'p'"):
+        CheckpointRunner(store).run(df, _KILL_SUITE, partition_col="p")
+    assert not os.path.exists(store.path)
+
+
+def test_kept_violation_sets_sample_like_a_recomputation(spark, code_tables, suite):
+    """Samples planned from the duplicate keys and orphan keys the post
+    passes kept are the samples a recomputed duplicate search and
+    anti-join give, and ``release`` leaves nothing persisted."""
+    files, commits = code_tables
+    suite = ConstraintSuite("kept", constraints=list(suite.constraints)).add(
+        "expect_compound_columns_to_exist_in_table", column_list=["repo", "commit"],
+        other_table_name="commits",
+    )
+    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
+    keys = ["partition_id", "repo", "path", "commit"]
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cached = set(persistent().keys())
+
+    def samples(keep):
+        v = Validator(dfp, tables={"commits": commits})
+        res = v.validate(suite, group_by=["partition_id"], keep_violations=keep)
+        assert (res.violation_sets is not None) == keep
+        try:
+            uni = v.violation_samples_unioned(
+                suite, limit=5, only_failed_of=res, key_columns=keys,
+                group_by=["partition_id"],
+            )
+            return sorted(tuple(r) for r in uni.collect())
+        finally:
+            if keep:
+                assert set(res.violation_sets.frames) == {c.id for c in suite.constraints[1:]}
+                res.violation_sets.release()
+
+    kept = samples(True)
+    assert {r[0] for r in kept} == {c.id for c in suite.constraints[1:]}
+    assert kept == samples(False)
+    assert set(persistent().keys()) == cached

@@ -79,3 +79,56 @@ def test_checkpoint_resume_over_partitioned_path(spark, tmp_path):
     # verdicts present for all three partitions
     got = {r["partition_id"] for r in store.verdicts(suite.fingerprint, "s1").collect()}
     assert got == {"go", "py", "rs"}
+
+
+def test_resume_predicate_prunes_a_partitioned_path(spark, tmp_path, monkeypatch):
+    """On a Hive-style path the resume predicate (``lang IS NULL OR NOT
+    lang IN (done)``) is a partition filter, so the scan lists only the
+    pending partitions, and a rerun with every partition done reads no
+    data file."""
+    import pyspark.sql.functions as F
+
+    from data_profiler_spark import checkpoint
+    from data_profiler_spark.core.suite import ConstraintSuite
+    from data_profiler_spark.sources.results_store import ResultsStore
+
+    base = str(tmp_path / "code")
+    spark.createDataFrame(
+        [(i, ["go", "py", "rs"][i % 3], f"body {i}") for i in range(30)],
+        "id long, lang string, content string",
+    ).write.partitionBy("lang").parquet(base)
+    df = spark.read.parquet(base)
+    suite = ConstraintSuite("prune").add(
+        "expect_column_values_to_not_be_null", column="content"
+    )
+    runner = checkpoint.CheckpointRunner(ResultsStore(spark, str(tmp_path / "store")))
+    runner.run(df.where(F.col("lang") == "go"), suite, partition_col="lang")
+
+    seen = []
+
+    class Spy(checkpoint.Validator):
+        def __init__(self, frame, **kw):
+            seen.append(frame)
+            super().__init__(frame, **kw)
+
+    monkeypatch.setattr(checkpoint, "Validator", Spy)
+    rep = runner.run(df, suite, partition_col="lang")
+    assert rep.validated_partitions == ["py", "rs"]
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    filters = plan.split("PartitionFilters: [")[1].split("], ")[0]
+    assert "isnull(lang#" in filters and "NOT (lang#" in filters
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    rep = runner.run(df, suite, partition_col="lang")
+    assert rep.validated_partitions == []
+    assert rep.skipped_partitions == ["go", "py", "rs"]
+    status = spark.sparkContext._jsc.sc().statusStore()
+    read = 0
+    for job in set(tracker.getJobIdsForGroup()) - before:
+        stages = status.job(job).stageIds()
+        read += sum(
+            status.lastStageAttempt(stages.apply(i)).inputBytes()
+            for i in range(stages.size())
+        )
+    assert read == 0
