@@ -156,7 +156,6 @@ def _pipeline(spark, files_path: Path, commits_path: Path):
     t0 = time.time()
     from concurrent.futures import ThreadPoolExecutor as _TPE
 
-    _SAMPLE_KEYS = ["partition_id", "repo", "path", "commit"]
     with _TPE(max_workers=1) as hx:
         hist_fut = hx.submit(finish_hist)
         v = Validator(files, tables={"commits": commits})
@@ -165,13 +164,10 @@ def _pipeline(spark, files_path: Path, commits_path: Path):
     phases["constraints_and_hist"] = time.time() - t0
 
     t0 = time.time()
-    # all failed constraints' samples in ONE job (shared key schema), at
-    # most 20 per (constraint, partition) as the CheckpointRunner stores
-    # them — K driver round-trips -> 1; the per-job fixed cost was a
-    # measurable slice of the serial F term at high parallelism
+    # all failed constraints' samples in ONE job, at most 20 per
+    # (constraint, partition) as the CheckpointRunner stores them
     sdf = v.violation_samples_unioned(
-        suite, limit=20, only_failed_of=result,
-        key_columns=_SAMPLE_KEYS, group_by=["partition_id"],
+        result, limit=20, key_columns=["repo", "path", "commit"]
     )
     n_samples = sdf.count() if sdf is not None else 0
     phases["violations"] = time.time() - t0

@@ -22,10 +22,10 @@ runs the pass over rows it then filters out. Rows with a NULL partition
 value reach the pass and fail the run before anything is stored.
 
 The pass is one fused aggregation grouped by the partition column, the
-bounded post-pass jobs, and violation sampling (one job when the samples
-share key columns, else one per failed constraint), which plans from the
-duplicate keys the uniqueness post pass kept instead of searching again;
-they are released before the run returns. Results are then committed per
+bounded post-pass jobs, and one violation-sampling job over every failed
+constraint, which plans from the duplicate and orphan keys the uniqueness
+and referential post passes kept instead of searching again; they are
+released before the run returns. Results are then committed per
 CHUNK of ``chunk_size`` partitions, each chunk's verdict rows and
 sentinels in one store append (``ResultsStore.mark_done``), so a crash
 during the commits loses at most the uncommitted chunks and never leaves
@@ -170,11 +170,9 @@ class CheckpointRunner:
         suite_result = v.validate(suite, group_by=[partition_col], keep_violations=True)
         try:
             by_part = _by_partition(suite_result, partition_col)
-            sampled = self._samples(
-                v, suite, suite_result, partition_col, violation_key_columns
-            )
+            sampled = self._samples(v, suite_result, partition_col, violation_key_columns)
         finally:
-            suite_result.violation_sets.release()
+            suite_result.plan.release()
         # a verdict row's times are those of the pass that produced it
         pass_start_ms = int(t_pass * 1000)
         pass_ms = int((time.time() - t_pass) * 1000)
@@ -229,38 +227,22 @@ class CheckpointRunner:
     def _samples(
         self,
         v: Validator,
-        suite: ConstraintSuite,
         suite_result: SuiteResult,
         partition_col: str,
         violation_key_columns: list[str] | None,
     ) -> dict[tuple[str, str], list[dict[str, Any]]]:
         """Violation samples of the failed constraints, keyed by
-        (constraint_id, partition), at most ``violation_limit`` each."""
-        found: list[tuple[str, dict[str, Any]]] = []
-        if violation_key_columns:
-            # shared schema -> ALL constraints' samples in one job
-            # (violation_samples_unioned): 1 driver round-trip per run
-            # instead of one per failed constraint
-            udf = v.violation_samples_unioned(
-                suite,
-                limit=self.violation_limit,
-                only_failed_of=suite_result,
-                key_columns=[partition_col] + violation_key_columns,
-                group_by=[partition_col],
-            )
-            for row in udf.collect() if udf is not None else []:
-                d = row.asDict(recursive=True)
-                found.append((d.pop("constraint_id"), d))
-        else:
-            samples = v.violation_samples(
-                suite,
-                limit=self.violation_limit,
-                only_failed_of=suite_result,
-                group_by=[partition_col],
-            )
-            for cid, sdf in samples.items():
-                found.extend((cid, row.asDict(recursive=True)) for row in sdf.collect())
+        (constraint_id, partition), at most ``violation_limit`` each, from
+        one Spark job."""
+        udf = v.violation_samples_unioned(
+            suite_result, self.violation_limit, violation_key_columns or None
+        )
         sampled: dict[tuple[str, str], list[dict[str, Any]]] = {}
-        for cid, d in found:
+        if udf is None:
+            return sampled
+        tag = udf.columns[0]
+        for row in udf.collect():
+            d = row.asDict(recursive=True)
+            cid = d.pop(tag)
             sampled.setdefault((cid, str(d.get(partition_col))), []).append(d)
         return sampled

@@ -64,14 +64,17 @@ class ConstraintResult:
 
 
 @dataclass
-class ViolationSets:
-    """Frames the post passes of one ``validate(keep_violations=True)``
-    kept for violation sampling to plan from, by constraint id: a
-    group-scoped uniqueness constraint's duplicate keys and a referential
-    constraint's orphan keys, so sampling skips the duplicate search or
-    the anti-join. They hold for ``group_by`` only. Whoever asked for
-    them calls ``release()``; nothing else does."""
+class ValidationPlan:
+    """What one ``validate`` compiled, for violation sampling to plan
+    from: the ``validator`` that ran it, its ``compiled`` constraints, its
+    ``group_by``, and, under ``validate(keep_violations=True)``, the
+    ``frames`` the post passes kept by constraint id: a group-scoped
+    uniqueness constraint's duplicate keys and a referential constraint's
+    orphan keys, so sampling skips the duplicate search or the anti-join.
+    Whoever asked for kept frames calls ``release()``; nothing else does."""
 
+    validator: Any
+    compiled: list[Any]
     group_by: list[str]
     frames: dict[str, Any] = field(default_factory=dict)
 
@@ -85,8 +88,10 @@ class ViolationSets:
 
     def release(self) -> None:
         for df in self.frames.values():
-            # DataFrame has no public handle on its checkpointed RDD
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
+            # DataFrame has no public handle on its checkpointed RDD, and
+            # ``RDD.unpersist`` logs a WARN for every locally checkpointed one
+            rdd = df._jdf.queryExecution().logical().rdd()
+            df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
         self.frames.clear()
 
 
@@ -95,7 +100,7 @@ class SuiteResult:
     suite_name: str
     suite_fingerprint: str
     results: list[ConstraintResult]
-    violation_sets: ViolationSets | None = field(default=None, repr=False, compare=False)
+    plan: ValidationPlan | None = field(default=None, repr=False, compare=False)
 
     @property
     def success(self) -> bool:

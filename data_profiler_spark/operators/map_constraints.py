@@ -159,7 +159,7 @@ def compile_map_constraint(
     ``violations_from(frame, group_by, counted)`` plans the violation rows
     from the frame the post pass counted (the duplicate or orphan keys).
     A kind that gives it lets that frame be kept: a post pass handed a
-    ``ViolationSets`` keeps it there, and sampling plans from it."""
+    ``ValidationPlan`` keeps it there, and sampling plans from it."""
     kw = constraint.kwargs
     rc = _row_condition(constraint)
     rc_key = _row_condition_sql(constraint)

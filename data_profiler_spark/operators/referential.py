@@ -12,12 +12,11 @@ real foreign-key check over Spark is an anti-join:
 which is both the violations plan and, counted per group, the unexpected
 count. A post pass asked to keep its orphan key projection checkpoints it,
 and sampling semi-joins the rows against those keys instead of repeating
-the anti-join. Physical strategy: broadcast the dimension when small (explicit
-``F.broadcast`` under ``broadcast=True`` or when the caller knows the dim is
-bounded); otherwise let Catalyst/AQE pick sort-merge with skew-join
-splitting. The join key (repo, commit) is high-cardinality, so no salting is
-needed — skew handling matters on the per-group count, which groups by the
-fused-pass group keys.
+the anti-join. Physical strategy: the planner broadcasts the dimension when
+its size estimate is under the session's broadcast threshold; otherwise
+Catalyst/AQE picks a shuffled join with skew-join splitting. The join key
+(repo, commit) is high-cardinality, so no salting is needed — skew handling
+matters on the per-group count, which groups by the fused-pass group keys.
 """
 
 from __future__ import annotations
@@ -36,8 +35,7 @@ from data_profiler_spark.plans.fused import CompiledConstraint
 @register("expect_compound_columns_to_exist_in_table")
 def c_referential(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """kwargs: column_list, other_table_name (in ctx["tables"]),
-    other_column_list (defaults to column_list), broadcast (default True),
-    mostly."""
+    other_column_list (defaults to column_list), mostly."""
     kw = constraint.kwargs
     key_cols = list(kw["column_list"])
     other_cols = list(kw.get("other_column_list", key_cols))
@@ -50,8 +48,6 @@ def c_referential(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
     dim = other.select(
         *[F.col(o).alias(k) for o, k in zip(other_cols, key_cols)]
     )
-    if bool(kw.get("broadcast", True)):
-        dim = F.broadcast(dim)
     key_nonnull = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols])
 
     def orphans(frame: DataFrame, group_by: list[str]) -> DataFrame:

@@ -12,11 +12,12 @@ verdict are ``compile_map_constraint``'s; this module plans the rest.
   bound while paying a second full exchange over the partial rows. An
   explicit salt stays necessary only for aggregates with no map-side
   combiner, e.g. collect_list.)
-- Violating rows: a left semi-join of the rows against the duplicate keys,
-  broadcast when the dup-key set is small, which it is in any passing or
-  near-passing run. A group-scoped post pass asked to keep its duplicate
-  keys checkpoints them, and sampling joins against those instead of repeating
-  the aggregation.
+- Violating rows: a left semi-join of the rows against the duplicate keys.
+  The planner broadcasts the dup-key set when its size estimate is under
+  the session's broadcast threshold, which it is in any passing or
+  near-passing run, and shuffles both sides when it is not. A group-scoped
+  post pass asked to keep its duplicate keys checkpoints them, and sampling
+  joins against those instead of repeating the aggregation.
 """
 
 from __future__ import annotations
@@ -70,10 +71,6 @@ def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledCons
     """
     kw = constraint.kwargs
     by_group = str(kw.get("scope", "group")) == "group"
-    # broadcast the dup-key set into attribution joins (right for the small
-    # dup sets of near-passing runs); set False on suites expected to fail
-    # wholesale so AQE picks a shuffled join instead of shipping a huge set
-    do_broadcast = bool(kw.get("broadcast_dup_join", True))
     key_nonnull = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols])
 
     def keys(group_by: list[str]) -> list[str]:
@@ -90,10 +87,7 @@ def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledCons
             dups = dup_keys(frame, group_by)
         dups = dups.select(*keys(group_by))
         # the equi-join drops NULL keys itself
-        return frame.join(
-            F.broadcast(dups) if do_broadcast else dups,
-            on=keys(group_by), how="left_semi",
-        )
+        return frame.join(dups, on=keys(group_by), how="left_semi")
 
     def unexpected_count(frame: DataFrame, group_by: list[str], groups):
         if by_group:

@@ -60,7 +60,7 @@ class CompiledConstraint:
     fused job for two-phase metrics (e.g. z-score needs mean/stddev first);
     returns {group_key: {alias: value}} merged into the metric dicts. A post
     pass that can keep the frame it counts for sampling adds it to
-    ``kept`` (a ``ViolationSets``) when that is not None.
+    ``kept`` (a ``ValidationPlan``) when that is not None.
     ``value_column`` (column-domain map constraints) names the column whose
     violating VALUES populate the result-format ladder
     (partial_unexpected_list / counts / unexpected_list).

@@ -1,8 +1,8 @@
 """Validator — the engine's top-level API.
 
     v = Validator(df, tables={"commits": commits_df})
-    result = v.validate(suite, group_by=["repo"])          # SuiteResult(s)
-    samples = v.violation_samples(suite, limit=20)          # per constraint
+    result = v.validate(suite, group_by=["repo"])          # SuiteResult
+    samples = v.violation_samples_unioned(result, limit=20)  # one DataFrame
 
 Execution model (the reference's lifecycle §3.1 of SURVEY.md, minus the
 graph machinery it needed for three backends):
@@ -19,12 +19,13 @@ graph machinery it needed for three backends):
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_profiler_spark.core.result import ConstraintResult, SuiteResult, ViolationSets
+from data_profiler_spark.core.result import ConstraintResult, SuiteResult, ValidationPlan
 from data_profiler_spark.core.suite import Constraint, ConstraintSuite
 from data_profiler_spark.operators.registry import compile_constraint, ensure_registered
 from data_profiler_spark.plans.fused import (
@@ -49,59 +50,9 @@ class Validator:
             "tables": tables or {},
             "evaluation_parameters": evaluation_parameters or {},
         }
-        self._compile_cache: dict[str, list[CompiledConstraint]] = {}
-
-    # compiled-plan cache bound: a long-lived Validator whose parameters
-    # change per validate() call (the URN flow) would otherwise keep one
-    # fully-compiled plan per distinct parameter dict forever (ADVICE r5)
-    _COMPILE_CACHE_MAX = 32
-
-    @staticmethod
-    def _cache_norm(v: Any) -> Any:
-        """Normalize parameter values for the cache key so semantically
-        equal values hash equal (1 vs 1.0, numpy scalars vs python) while
-        DISTINCT values stay distinct: ints are widened to float only when
-        exactly representable (|v| <= 2^53), so no two different values can
-        collide onto one key."""
-        if isinstance(v, bool):
-            return v
-        if type(v).__module__ == "numpy" and hasattr(v, "item"):
-            v = v.item()
-        if isinstance(v, int) and abs(v) <= 2**53:
-            return float(v)
-        if isinstance(v, dict):
-            # keep the key's type in the normalized form: {1: x} and
-            # {"1": x} are semantically distinct parameter dicts and must
-            # not share a compiled plan (ADVICE r6)
-            return {repr(k): Validator._cache_norm(x) for k, x in v.items()}
-        if isinstance(v, (list, tuple)):
-            return [Validator._cache_norm(x) for x in v]
-        return v
 
     # ------------------------------------------------------------------
     def compile(self, suite: ConstraintSuite) -> list[CompiledConstraint]:
-        # memoized per (suite fingerprint, evaluation-parameter values):
-        # validate + unexpected-value attachment + violation sampling all
-        # need the compiled plan, and rebuilding hundreds of Column
-        # expressions is pure driver/py4j serial cost (part of the F term
-        # that caps scaling efficiency). Compiled constraints embed the
-        # RESOLVED $PARAMETER values (and sticky failed-compile verdicts),
-        # so mutating ctx["evaluation_parameters"] between validate() calls
-        # must miss the cache (ADVICE r4). Bounded LRU, normalized keys
-        # (ADVICE r5).
-        import json
-
-        params = self.ctx.get("evaluation_parameters") or {}
-        key = suite.fingerprint + "|" + json.dumps(
-            self._cache_norm(params), sort_keys=True, default=repr
-        )
-        cached = self._compile_cache.get(key)
-        if cached is not None:
-            # move-to-end: dict preserves insertion order, so re-inserting
-            # marks this entry most-recently-used
-            del self._compile_cache[key]
-            self._compile_cache[key] = cached
-            return cached
         out: list[CompiledConstraint] = []
         for c in suite.constraints:
             try:
@@ -109,9 +60,6 @@ class Validator:
                 out.append(compile_constraint(resolved, self.df, self.ctx))
             except Exception as exc:  # compile-time failure -> failed verdict
                 out.append(self._failed_compile(c, exc))
-        while len(self._compile_cache) >= self._COMPILE_CACHE_MAX:
-            self._compile_cache.pop(next(iter(self._compile_cache)))
-        self._compile_cache[key] = out
         return out
 
     @staticmethod
@@ -174,19 +122,20 @@ class Validator:
             reference collects unbounded — its self-admitted perf hazard,
             sparkdf_dataset.py:92-95).
 
-        ``keep_violations=True`` returns the frames the post passes can keep
-        for sampling, checkpointed, in ``result.violation_sets``. Pass the
-        result as ``only_failed_of`` to this Validator's sampling, then
-        call ``result.violation_sets.release()``. Without it nothing stays
-        persisted."""
+        ``result.plan`` holds what this call compiled, for this Validator's
+        ``violation_samples_unioned`` to sample from. ``keep_violations=True``
+        also keeps there the frames the post passes can keep for sampling,
+        checkpointed; call ``result.plan.release()`` after sampling. Without
+        it nothing stays persisted."""
         group_by = list(group_by or [])
         compiled = self.compile(suite)
-        kept = ViolationSets(group_by) if keep_violations else None
+        plan = ValidationPlan(self, compiled, group_by)
         try:
-            groups = self._resolve_metrics(compiled, group_by, kept)
+            groups = self._resolve_metrics(
+                compiled, group_by, plan if keep_violations else None
+            )
         except BaseException:
-            if kept is not None:
-                kept.release()
+            plan.release()
             raise
 
         results: list[ConstraintResult] = []
@@ -214,14 +163,14 @@ class Validator:
             suite_name=suite.name,
             suite_fingerprint=suite.fingerprint,
             results=results,
-            violation_sets=kept,
+            plan=plan,
         )
 
     def _resolve_metrics(
         self,
         compiled: list[CompiledConstraint],
         group_by: list[str],
-        kept: ViolationSets | None,
+        kept: ValidationPlan | None,
     ) -> list[tuple[GroupKey, dict[str, Any]]]:
         """Every group's metrics: the fused pass's aggregates merged with
         the post passes' updates. Post passes that can keep a frame for
@@ -367,87 +316,59 @@ class Validator:
                         )
 
     # ------------------------------------------------------------------
-    def violation_samples(
-        self,
-        suite: ConstraintSuite,
-        limit: int = 20,
-        only_failed_of: SuiteResult | None = None,
-        key_columns: list[str] | None = None,
-        group_by: list[str] | None = None,
-    ) -> dict[str, DataFrame]:
-        """Violating rows per constraint id (deterministic sample).
-
-        When ``only_failed_of`` is given, skips constraints that passed in
-        every group (the reference's early exit). ``key_columns`` projects
-        the sample down (e.g. the north-rule violation key
-        (repo, partition_id, content sha)); it must keep the ``group_by``
-        columns. ``group_by`` caps the sample at ``limit`` rows per group
-        instead of per constraint. A constraint whose frame ``only_failed_of``
-        kept for this ``group_by`` (``validate(keep_violations=True)`` on
-        this Validator) plans its violations from that frame."""
-        group_by = list(group_by or [])
-        failed_ids: set[str] | None = None
-        kept: dict[str, DataFrame] = {}
-        if only_failed_of is not None:
-            failed_ids = {
-                r.constraint_id for r in only_failed_of.results if not r.success
-            }
-            sets = only_failed_of.violation_sets
-            if sets is not None and sets.group_by == group_by:
-                kept = sets.frames
-        out: dict[str, DataFrame] = {}
-        for c in self.compile(suite):
-            if c.violations_fn is None:
-                continue
-            if failed_ids is not None and c.constraint.id not in failed_ids:
-                continue
-            v = c.violations_fn(self.df, group_by, kept.get(c.constraint.id))
-            if key_columns:
-                v = v.select(*key_columns)
-            out[c.constraint.id] = deterministic_sample(v, limit, group_by)
-        return out
-
     def violation_samples_unioned(
         self,
-        suite: ConstraintSuite,
+        result: SuiteResult,
         limit: int = 20,
-        only_failed_of: SuiteResult | None = None,
         key_columns: list[str] | None = None,
-        group_by: list[str] | None = None,
     ) -> DataFrame | None:
-        """Every constraint's violation sample in ONE Spark job.
+        """The violating rows of every constraint that failed in ``result``
+        (the reference's early exit), deterministically sampled, in ONE
+        Spark job: at most ``limit`` rows per constraint and per group of
+        the validation's ``group_by``. The first column is the constraint
+        id, named ``constraint_id`` unless a data column has that name.
 
-        ``violation_samples`` returns one DataFrame per failed constraint —
-        one driver job round-trip each. When ``key_columns`` pins a shared
-        schema, the per-constraint bounded samples (each keeps its own
-        deterministic cap, per group with ``group_by``) can be tagged with
-        their constraint_id and unioned, so the scheduler runs all sample
-        branches inside one job: K driver round-trips collapse to 1 (a
-        fixed serial cost that caps scaling efficiency at high parallelism;
-        at 100 TB it is also K-1 fewer driver scheduling cycles). Returns
-        None when nothing failed / no extractable constraints."""
-        if not key_columns:
+        ``result`` must come from this Validator's ``validate``, whose plan
+        and kept frames the samples are planned from. The sample columns are
+        the ``group_by`` columns then ``key_columns`` (e.g. the north-rule
+        violation key (repo, path, commit)), or, when ``key_columns`` is
+        None, the frame's own columns. Returns None when no failed
+        constraint has violating rows to extract."""
+        plan = result.plan
+        if plan is None or plan.validator is not self:
             raise ValueError(
-                "violation_samples_unioned requires key_columns (a shared "
-                "schema is what makes the samples unionable)"
+                "violation_samples_unioned needs a result of this Validator's validate()"
             )
-        from functools import reduce as _reduce
-
-        samples = self.violation_samples(
-            suite, limit=limit, only_failed_of=only_failed_of,
-            key_columns=key_columns, group_by=group_by,
-        )
-        if not samples:
+        group_by = plan.group_by
+        if key_columns is None:
+            cols = self.df.columns
+        else:
+            cols = list(dict.fromkeys(group_by + key_columns))
+        tag = "constraint_id"
+        while tag in cols:
+            tag = "_" + tag
+        failed = {r.constraint_id for r in result.results if not r.success}
+        parts = []
+        for c in plan.compiled:
+            cid = c.constraint.id
+            if c.violations_fn is None or cid not in failed:
+                continue
+            v = c.violations_fn(self.df, group_by, plan.frames.get(cid))
+            if key_columns is not None:
+                v = v.select(*cols)
+            # hashed in the violation frame's own column order (a join puts
+            # its keys first), which keeps the sampled rows those existing
+            # stores hold; only the projection aligns the branches
+            parts.append(
+                deterministic_sample(v, limit, group_by).select(F.lit(cid).alias(tag), *cols)
+            )
+        if not parts:
             return None
-        parts = [
-            sdf.select(F.lit(cid).alias("constraint_id"), *key_columns)
-            for cid, sdf in samples.items()
-        ]
         # Each branch rescans the source, reading only the columns its filter
-        # and the key columns need; caching the whole source for them would
+        # and the sample columns need; caching the whole source for them would
         # hold every column (a checkpoint run validates all pending
         # partitions in one frame).
-        return _reduce(lambda a, b: a.unionByName(b), parts)
+        return reduce(lambda a, b: a.unionByName(b), parts)
 
     # ------------------------------------------------------------------
     def expect(self, type: str, **kwargs: Any) -> ConstraintResult:

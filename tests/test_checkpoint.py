@@ -88,38 +88,6 @@ def test_rerun_is_noop(spark, code_tables, suite, tmp_path):
     assert len(rep3.validated_partitions) == 4
 
 
-def test_violation_samples_unioned_matches_per_constraint(spark, code_tables, suite):
-    """One-job union of all violation samples must carry exactly the same
-    rows as the per-constraint DataFrames (VERDICT r3 #8 — the per-job
-    fixed cost was a serial scaling term)."""
-    from data_profiler_spark.validator import Validator
-
-    files, commits = code_tables
-    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
-    v = Validator(dfp, tables={"commits": commits})
-    res = v.validate(suite, group_by=["partition_id"])
-    keys = ["partition_id", "repo", "path", "commit"]
-    per = v.violation_samples(suite, limit=20, only_failed_of=res, key_columns=keys)
-    uni = v.violation_samples_unioned(
-        suite, limit=20, only_failed_of=res, key_columns=keys
-    )
-    if not per:
-        assert uni is None
-        return
-    want = {
-        (cid, tuple(r)) for cid, sdf in per.items() for r in sdf.collect()
-    }
-    got = {
-        (r["constraint_id"], tuple(r)[1:]) for r in uni.collect()
-    }
-    assert got == want
-    # requires a shared schema
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        v.violation_samples_unioned(suite, limit=20)
-
-
 def test_violation_union_shares_one_cached_scan(spark, code_tables, suite):
     """VERDICT r4 #6: a pre-persisted source feeds every branch of the
     K-branch union from InMemoryTableScan (plan check). A non-persisted
@@ -130,16 +98,14 @@ def test_violation_union_shares_one_cached_scan(spark, code_tables, suite):
 
     files, commits = code_tables
     dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
-    keys = ["partition_id", "repo", "path", "commit"]
+    keys = ["repo", "path", "commit"]
 
     # caller-persisted chunk (the checkpoint-runner shape): plan check
     dfp_cached = dfp.persist()
     try:
         v = Validator(dfp_cached, tables={"commits": commits})
         res = v.validate(suite, group_by=["partition_id"])
-        uni = v.violation_samples_unioned(
-            suite, limit=20, only_failed_of=res, key_columns=keys
-        )
+        uni = v.violation_samples_unioned(res, limit=20, key_columns=keys)
         if uni is not None:
             plan = uni._jdf.queryExecution().executedPlan().toString()
             assert "InMemoryTableScan" in plan
@@ -152,9 +118,7 @@ def test_violation_union_shares_one_cached_scan(spark, code_tables, suite):
     # non-persisted source: not cached by the call
     v2 = Validator(dfp, tables={"commits": commits})
     res2 = v2.validate(suite, group_by=["partition_id"])
-    uni2 = v2.violation_samples_unioned(
-        suite, limit=20, only_failed_of=res2, key_columns=keys
-    )
+    uni2 = v2.violation_samples_unioned(res2, limit=20, key_columns=keys)
     assert dfp.storageLevel == StorageLevel.NONE
     if uni2 is not None:
         rows_auto = {
@@ -815,26 +779,110 @@ def test_kept_violation_sets_sample_like_a_recomputation(spark, code_tables, sui
         other_table_name="commits",
     )
     dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
-    keys = ["partition_id", "repo", "path", "commit"]
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     cached = set(persistent().keys())
 
     def samples(keep):
         v = Validator(dfp, tables={"commits": commits})
         res = v.validate(suite, group_by=["partition_id"], keep_violations=keep)
-        assert (res.violation_sets is not None) == keep
         try:
             uni = v.violation_samples_unioned(
-                suite, limit=5, only_failed_of=res, key_columns=keys,
-                group_by=["partition_id"],
+                res, limit=5, key_columns=["repo", "path", "commit"]
             )
             return sorted(tuple(r) for r in uni.collect())
         finally:
-            if keep:
-                assert set(res.violation_sets.frames) == {c.id for c in suite.constraints[1:]}
-                res.violation_sets.release()
+            kept = {c.id for c in suite.constraints[1:]} if keep else set()
+            assert set(res.plan.frames) == kept
+            res.plan.release()
 
     kept = samples(True)
     assert {r[0] for r in kept} == {c.id for c in suite.constraints[1:]}
     assert kept == samples(False)
     assert set(persistent().keys()) == cached
+
+
+def test_validate_then_sample_compiles_each_constraint_once(
+    spark, code_tables, suite, monkeypatch
+):
+    """Sampling plans from the constraints ``validate`` compiled: the pair
+    compiles each constraint once."""
+    from data_profiler_spark import validator
+
+    files, commits = code_tables
+    suite = ConstraintSuite("once", constraints=list(suite.constraints)).add(
+        "expect_compound_columns_to_exist_in_table", column_list=["repo", "commit"],
+        other_table_name="commits",
+    )
+    compile_constraint = validator.compile_constraint
+    calls = []
+
+    def counted(*a, **kw):
+        calls.append(a[0].id)
+        return compile_constraint(*a, **kw)
+
+    monkeypatch.setattr(validator, "compile_constraint", counted)
+    dfp = add_partition_column(files, n_buckets=6, cols=["repo", "path"])
+    v = Validator(dfp, tables={"commits": commits})
+    res = v.validate(suite, group_by=["partition_id"], keep_violations=True)
+    try:
+        assert not res.success
+        v.violation_samples_unioned(res, limit=5).collect()
+        v.violation_samples_unioned(res, limit=5, key_columns=["repo"]).collect()
+    finally:
+        res.plan.release()
+    assert len(calls) == len(suite.constraints)
+
+
+def test_samples_without_key_columns_take_one_job(spark, tmp_path):
+    """A run that stores whole violating rows samples every failed
+    constraint in one job, as a run with key columns does: both submit the
+    same number of jobs."""
+    df = _many_violations(spark)
+    suite = (
+        ConstraintSuite("three_failing")
+        .add("expect_column_values_to_not_be_null", column="content")
+        .add("expect_column_values_to_be_between", column="id", min_value=0, max_value=100)
+        .add("expect_column_value_lengths_to_be_between", column="content",
+             min_value=0, max_value=2)
+    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(name, keys):
+        store = ResultsStore(spark, str(tmp_path / name))
+        before = set(tracker.getJobIdsForGroup())
+        CheckpointRunner(store, violation_limit=3).run(
+            df, suite, partition_col="p", violation_key_columns=keys
+        )
+        n = len(set(tracker.getJobIdsForGroup()) - before)
+        failed = {
+            r["constraint_id"] for r in store.verdicts(suite.fingerprint, "").collect()
+            if r["success"] is False
+        }
+        assert failed == {c.id for c in suite.constraints}
+        return n
+
+    assert jobs("rows", None) == jobs("keys", ["id"])
+
+
+@pytest.mark.parametrize("keys", [None, ["constraint_id"]])
+def test_data_column_named_like_the_tag_is_kept(spark, tmp_path, keys):
+    """The union's constraint-id tag takes another name when a data column
+    is called ``constraint_id``: the stored sample keeps the data value,
+    and the verdict row the sample is filed under is the constraint's."""
+    import json
+
+    rows = [(i, i % 2, None if i % 3 == 0 else f"c{i}", f"data{i}") for i in range(12)]
+    df = spark.createDataFrame(rows, "id long, p int, content string, constraint_id string")
+    store = ResultsStore(spark, str(tmp_path / "store"))
+    CheckpointRunner(store, violation_limit=5).run(
+        df, _KILL_SUITE, partition_col="p", violation_key_columns=keys
+    )
+    cid = _KILL_SUITE.constraints[0].id  # content not null; ids are unique
+    stored = {
+        r["partition_id"]: json.loads(r["violations_json"])
+        for r in store.verdicts(_KILL_SUITE.fingerprint, "").collect()
+        if r["constraint_id"] == cid
+    }
+    assert {p: sorted(d["constraint_id"] for d in ds) for p, ds in stored.items()} == {
+        "0": ["data0", "data6"], "1": ["data3", "data9"],
+    }

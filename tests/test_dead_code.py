@@ -31,6 +31,9 @@ ALLOWED_TEST_ONLY = {
     # the pure-Column PQ encode, the reference the numpy encode in
     # pq_encode is asserted against
     "_pq_encode_expr",
+    # Cramer's V from a dense table, the numpy oracle the distributed
+    # sparse Pearson sum in c_cramers_phi is asserted against
+    "cramers_v",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

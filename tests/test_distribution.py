@@ -151,7 +151,7 @@ def test_cramers_phi_sparse_over_cap_computes(spark):
     )
     r = Validator(df).expect(
         "expect_column_pair_cramers_phi_value_to_be_less_than",
-        column_A="a", column_B="b", threshold=1.01, max_cells=10_000,
+        column_A="a", column_B="b", threshold=1.01,
     )
     assert r.exception_info is None
     # numpy oracle on the full table (feasible at test scale only)
@@ -168,17 +168,21 @@ def test_cramers_phi_sparse_over_cap_computes(spark):
     # hint naming the knob (VERDICT r3 #10)
     bad = Validator(df).expect(
         "expect_column_pair_cramers_phi_value_to_be_less_than",
-        column_A="a", column_B="b", threshold=0.5,
-        max_cells=100, max_distributed_cells=1_000,
+        column_A="a", column_B="b", threshold=0.5, max_distributed_cells=1_000,
     )
     assert bad.success is False
     assert bad.exception_info and "max_distributed_cells" in bad.exception_info
 
 
 def test_cramers_phi_grouped_mixed_paths(spark):
-    """Grouped: dense, sparse, and guarded groups coexist in one run and
-    each takes its own path."""
+    """Grouped: computed and guarded groups coexist in one run. Each
+    computed group matches the numpy oracle on its own table, a group with
+    no row holding both values reads 0.0, and a guarded group fails with
+    the knob named."""
+    import numpy as np
     import pyspark.sql.functions as SF
+
+    from data_profiler_spark.functions import stats as S
 
     big = spark.range(4000).select(
         SF.lit("g_big").alias("g"),
@@ -190,6 +194,11 @@ def test_cramers_phi_grouped_mixed_paths(spark):
         (SF.col("id") % 3).cast("string").alias("a"),
         (SF.col("id") % 2).cast("string").alias("b"),
     )
+    no_pairs = spark.range(10).select(
+        SF.lit("g_none").alias("g"),
+        SF.when(SF.col("id") % 2 == 0, SF.col("id").cast("string")).alias("a"),
+        SF.when(SF.col("id") % 2 == 1, SF.col("id").cast("string")).alias("b"),
+    )
     huge = spark.range(3000).select(
         SF.lit("g_huge").alias("g"),
         SF.col("id").cast("string").alias("a"),
@@ -199,19 +208,27 @@ def test_cramers_phi_grouped_mixed_paths(spark):
 
     suite = ConstraintSuite("phi_mixed").add(
         "expect_column_pair_cramers_phi_value_to_be_less_than",
-        column_A="a", column_B="b", threshold=1.01,
-        max_cells=10_000, max_distributed_cells=1_000_000,
+        column_A="a", column_B="b", threshold=1.01, max_distributed_cells=1_000_000,
     )
-    res = Validator(big.unionByName(small).unionByName(huge)).validate(
-        suite, group_by=["g"]
-    )
+    df = big.unionByName(small).unionByName(no_pairs).unionByName(huge)
+    res = Validator(df).validate(suite, group_by=["g"])
     by_g = {r.group["g"]: r for r in res.results}
-    assert by_g["g_small"].success is True  # dense driver path
-    assert by_g["g_small"].observed_value is not None
-    assert by_g["g_big"].success is True  # sparse distributed path
-    assert 0.0 <= by_g["g_big"].observed_value <= 1.0
+    for g, frame in (("g_big", big), ("g_small", small)):
+        rows = frame.groupBy("a", "b").count().collect()
+        avals = sorted({x["a"] for x in rows})
+        bvals = sorted({x["b"] for x in rows})
+        t = np.zeros((len(avals), len(bvals)))
+        for x in rows:
+            t[avals.index(x["a"]), bvals.index(x["b"])] = x["count"]
+        assert by_g[g].success is True
+        assert by_g[g].observed_value == pytest.approx(S.cramers_v(t), rel=1e-9)
+    assert by_g["g_none"].success is True
+    assert by_g["g_none"].observed_value == 0.0
     assert by_g["g_huge"].success is False  # guarded
-    assert by_g["g_huge"].exception_info
+    assert "max_distributed_cells" in by_g["g_huge"].exception_info
+    # ungrouped, no row holding both values: no pair to count, no failure
+    (flat,) = Validator(no_pairs).validate(suite).results
+    assert (flat.success, flat.observed_value, flat.exception_info) == (True, 0.0, None)
 
 
 def test_drift_baseline_categorical_negative(typed_small):

@@ -309,14 +309,19 @@ def test_violation_samples(typed_small):
     )
     v = Validator(typed_small)
     res = v.validate(suite)
-    samples = v.violation_samples(suite, limit=5, only_failed_of=res)
-    (sdf,) = samples.values()
+    sdf = v.violation_samples_unioned(res, limit=5)
+    # the constraint id, then the frame's own columns
+    assert sdf.columns == ["constraint_id"] + typed_small.columns
     rows = sdf.collect()
     assert len(rows) == 5
+    assert all(r["constraint_id"] == suite.constraints[0].id for r in rows)
     assert all(r["cat"] == "c" for r in rows)
     # determinism: re-extraction yields identical rows
-    samples2 = v.violation_samples(suite, limit=5, only_failed_of=res)
-    assert [tuple(r) for r in rows] == [tuple(r) for r in list(samples2.values())[0].collect()]
+    again = v.violation_samples_unioned(res, limit=5).collect()
+    assert [tuple(r) for r in rows] == [tuple(r) for r in again]
+    # a result of another Validator has no plan here
+    with pytest.raises(ValueError):
+        Validator(typed_small).violation_samples_unioned(res, limit=5)
 
 
 def test_result_format_ladder(spark):

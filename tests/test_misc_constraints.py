@@ -248,46 +248,6 @@ def test_ge_validation_result_format(typed_small):
     assert r["exception_info"]["raised_exception"] is False
 
 
-def test_compile_cache_is_bounded_lru_with_normalized_keys(typed_small):
-    """ADVICE r5: per-parameter-dict compiled plans must not accumulate
-    unboundedly, and semantically equal parameter values (1 vs 1.0, numpy
-    scalars) must hit the same cache entry."""
-    import numpy as np
-
-    suite = ConstraintSuite("lru").add(
-        "expect_table_row_count_to_equal", value={"$PARAMETER": "expected_rows"}
-    )
-    v = Validator(typed_small, evaluation_parameters={"expected_rows": 30})
-
-    # int / float / numpy scalar of the same value -> ONE cache entry
-    plan_int = v.compile(suite)
-    v.ctx["evaluation_parameters"]["expected_rows"] = 30.0
-    assert v.compile(suite) is plan_int
-    v.ctx["evaluation_parameters"]["expected_rows"] = np.int64(30)
-    assert v.compile(suite) is plan_int
-    assert len(v._compile_cache) == 1
-
-    # distinct values never collide (bool vs int, big ints beyond 2^53)
-    v.ctx["evaluation_parameters"]["expected_rows"] = True
-    assert v.compile(suite) is not plan_int
-    v.ctx["evaluation_parameters"]["expected_rows"] = 2**60
-    p_big = v.compile(suite)
-    v.ctx["evaluation_parameters"]["expected_rows"] = 2**60 + 1
-    assert v.compile(suite) is not p_big
-
-    # the cache stays bounded under a per-call parameter churn
-    for i in range(2 * Validator._COMPILE_CACHE_MAX):
-        v.ctx["evaluation_parameters"]["expected_rows"] = 1000 + i
-        v.compile(suite)
-    assert len(v._compile_cache) <= Validator._COMPILE_CACHE_MAX
-
-    # LRU: a fresh hit survives the next eviction wave
-    v.ctx["evaluation_parameters"]["expected_rows"] = 30
-    plan_int2 = v.compile(suite)  # re-insert (old entry was evicted)
-    v.ctx["evaluation_parameters"]["expected_rows"] = 30.0
-    assert v.compile(suite) is plan_int2
-
-
 def test_experimental_condition_dsl_translation(typed_small):
     """VERDICT r5 #8: GE suites with condition_parser=
     data_profiler__experimental__ (ref row_conditions.py:27-96) run
