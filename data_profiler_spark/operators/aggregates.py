@@ -2,7 +2,11 @@
 
 Every observed value here is ONE fused aggregate Column (the reference's
 AGGREGATE_FN partials, column_aggregate_metric_provider.py:171-228), so all
-aggregate constraints of a suite resolve in the same single pass.
+aggregate constraints of a suite resolve in the same single pass. Each comes
+from the metric catalog (``plans/fused.metric_term``), so a float/double NaN
+counts as NULL: min, max, sum, mean, stdev, median and quantiles skip it, and
+distinct and non-null counts drop it (pandas skipna). A NaN that arises
+anyway (the mean of ``[inf, -inf]``) satisfies no bound.
 
 Notable Spark-first upgrades vs the reference:
 - median: native exact ``F.median`` (Spark >=3.4) instead of the
@@ -18,47 +22,52 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_spark.core.result import ConstraintResult
 from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.registry import register
-from data_profiler_spark.plans.fused import AggTerm, CompiledConstraint, metric_alias
+from data_profiler_spark.plans.fused import (
+    AggTerm,
+    CompiledConstraint,
+    metric_alias,
+    metric_term,
+)
 
 
 def _between_success(v: Any, kw: dict[str, Any]) -> bool:
+    """``v`` lies within the bounds. Each bound is a comparison that must
+    hold, so a NaN satisfies none."""
     if v is None:
         return False
     lo, hi = kw.get("min_value"), kw.get("max_value")
-    if lo is not None and (v < lo if not kw.get("strict_min") else v <= lo):
+    if lo is not None and not (lo < v if kw.get("strict_min") else lo <= v):
         return False
-    if hi is not None and (v > hi if not kw.get("strict_max") else v >= hi):
+    if hi is not None and not (v < hi if kw.get("strict_max") else v <= hi):
         return False
     return True
 
 
 def _agg_between(
-    constraint: Constraint, observed_col: Column, metric_name: str, **alias_kw: Any
+    constraint: Constraint, term: AggTerm, success=_between_success
 ) -> CompiledConstraint:
+    """Observed value: the term's; verdict: ``success(value, kwargs)``."""
     kw = constraint.kwargs
-    a = metric_alias(metric_name, **alias_kw)
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        v = metrics.get(a)
+        v = metrics.get(term.alias)
         return ConstraintResult(
             constraint_id=constraint.id,
             constraint_type=constraint.type,
             kwargs=dict(kw),
-            success=_between_success(v, kw),
+            success=success(v, kw),
             group=group,
             observed_value=v,
         )
 
-    return CompiledConstraint(
-        constraint=constraint, agg_terms=[AggTerm(a, observed_col)], verdict_fn=verdict
-    )
+    return CompiledConstraint(constraint=constraint, agg_terms=[term], verdict_fn=verdict)
 
 
 def _numeric_gate(constraint: Constraint, df: DataFrame) -> CompiledConstraint | None:
@@ -85,31 +94,26 @@ def _numeric_gate(constraint: Constraint, df: DataFrame) -> CompiledConstraint |
     return CompiledConstraint(constraint=constraint, agg_terms=[], verdict_fn=verdict)
 
 
-def _simple_agg_registrar(type_name: str, metric: str, fn, numeric: bool = False) -> None:
+def _simple_agg_registrar(type_name: str, metric: str, numeric: bool = False) -> None:
     @register(type_name)
     def _compile(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
         if numeric:
             gate = _numeric_gate(constraint, df)
             if gate is not None:
                 return gate
-        col = F.col(constraint.kwargs["column"])
-        return _agg_between(
-            constraint, fn(col), metric, column=constraint.kwargs["column"]
-        )
+        return _agg_between(constraint, metric_term(df, metric, constraint.kwargs["column"]))
 
 
 # ref files: column_min.py:32, column_max.py:28, column_sum.py:28,
 # column_mean.py:33, column_standard_deviation.py:48, F.median (ours)
-_simple_agg_registrar("expect_column_min_to_be_between", "column.min", F.min)
-_simple_agg_registrar("expect_column_max_to_be_between", "column.max", F.max)
-_simple_agg_registrar("expect_column_sum_to_be_between", "column.sum", F.sum, numeric=True)
-_simple_agg_registrar("expect_column_mean_to_be_between", "column.mean", F.mean, numeric=True)
+_simple_agg_registrar("expect_column_min_to_be_between", "column.min")
+_simple_agg_registrar("expect_column_max_to_be_between", "column.max")
+_simple_agg_registrar("expect_column_sum_to_be_between", "column.sum", numeric=True)
+_simple_agg_registrar("expect_column_mean_to_be_between", "column.mean", numeric=True)
 _simple_agg_registrar(
-    "expect_column_stdev_to_be_between", "column.stddev", F.stddev_samp, numeric=True
+    "expect_column_stdev_to_be_between", "column.standard_deviation", numeric=True
 )
-_simple_agg_registrar(
-    "expect_column_median_to_be_between", "column.median", F.median, numeric=True
-)
+_simple_agg_registrar("expect_column_median_to_be_between", "column.median", numeric=True)
 
 
 @register("expect_column_quantile_values_to_be_between")
@@ -120,23 +124,15 @@ def c_quantiles(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCon
     ``exact=True`` for the exact ``percentile`` aggregate (test oracle mode).
     """
     kw = constraint.kwargs
-    col = F.col(kw["column"])
     qs = [float(q) for q in kw["quantile_ranges"]["quantiles"]]
     ranges = kw["quantile_ranges"]["value_ranges"]
-    accuracy = int(kw.get("accuracy", 10000))
-    qarr = F.array(*[F.lit(q) for q in qs])
-    observed = (
-        F.percentile(col, qarr)
-        if kw.get("exact")
-        else F.percentile_approx(col, qarr, F.lit(accuracy))
-    )
-    a = metric_alias(
-        "column.quantile_values", column=kw["column"], q=qs,
-        exact=bool(kw.get("exact")), accuracy=accuracy,
+    t = metric_term(
+        df, "column.quantile_values", kw["column"], quantiles=qs,
+        accuracy=None if kw.get("exact") else int(kw.get("accuracy", 10000)),
     )
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        vals = metrics.get(a)
+        vals = metrics.get(t.alias)
         ok = vals is not None and all(
             (lo is None or v >= lo) and (hi is None or v <= hi)
             for v, (lo, hi) in zip(vals, ranges)
@@ -150,37 +146,30 @@ def c_quantiles(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCon
             observed_value={"quantiles": qs, "values": list(vals) if vals else None},
         )
 
-    return CompiledConstraint(
-        constraint=constraint, agg_terms=[AggTerm(a, observed)], verdict_fn=verdict
-    )
+    return CompiledConstraint(constraint=constraint, agg_terms=[t], verdict_fn=verdict)
 
 
 @register("expect_column_unique_value_count_to_be_between")
 def c_distinct_count(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    col = F.col(kw["column"])
-    approx = bool(kw.get("approximate", False))
-    observed = F.approx_count_distinct(col) if approx else F.count_distinct(col)
-    return _agg_between(
-        constraint, observed, "column.distinct_count", column=kw["column"], approx=approx
-    )
+    return _agg_between(constraint, metric_term(
+        df, "column.distinct_values.count", kw["column"],
+        approx=bool(kw.get("approximate", False)),
+    ))
 
 
 @register("expect_column_proportion_of_unique_values_to_be_between")
 def c_unique_proportion(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_proportion_of_unique_values.py:25-35 — distinct/nonnull."""
     kw = constraint.kwargs
-    col = F.col(kw["column"])
-    approx = bool(kw.get("approximate", False))
-    d_a = metric_alias("column.distinct_count", column=kw["column"], approx=approx)
-    nn_a = metric_alias("column.nonnull_count", column=kw["column"])
-    terms = [
-        AggTerm(d_a, F.approx_count_distinct(col) if approx else F.count_distinct(col)),
-        AggTerm(nn_a, F.count(col)),
-    ]
+    d_t = metric_term(
+        df, "column.distinct_values.count", kw["column"],
+        approx=bool(kw.get("approximate", False)),
+    )
+    nn_t = metric_term(df, "column_values.nonnull.count", kw["column"])
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        d, nn = metrics.get(d_a) or 0, metrics.get(nn_a) or 0
+        d, nn = metrics.get(d_t.alias) or 0, metrics.get(nn_t.alias) or 0
         v = (d / nn) if nn else 0.0
         return ConstraintResult(
             constraint_id=constraint.id,
@@ -191,7 +180,7 @@ def c_unique_proportion(constraint: Constraint, df: DataFrame, ctx: dict) -> Com
             observed_value=v,
         )
 
-    return CompiledConstraint(constraint=constraint, agg_terms=terms, verdict_fn=verdict)
+    return CompiledConstraint(constraint=constraint, agg_terms=[d_t, nn_t], verdict_fn=verdict)
 
 
 @register("expect_column_most_common_value_to_be_in_set")
@@ -382,27 +371,13 @@ _distinct_set_constraint(
 @register("expect_table_row_count_to_be_between")
 def c_row_count_between(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: table_row_count.py:55-69."""
-    return _agg_between(constraint, F.count(F.lit(1)), "table.row_count")
+    return _agg_between(constraint, metric_term(df, "table.row_count"))
 
 
 @register("expect_table_row_count_to_equal")
 def c_row_count_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    kw = constraint.kwargs
-    a = metric_alias("table.row_count")
-
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        v = metrics.get(a)
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=v == kw["value"],
-            group=group,
-            observed_value=v,
-        )
-
-    return CompiledConstraint(
-        constraint=constraint, agg_terms=[AggTerm(a, F.count(F.lit(1)))], verdict_fn=verdict
+    return _agg_between(
+        constraint, metric_term(df, "table.row_count"), lambda v, kw: v == kw["value"]
     )
 
 
@@ -413,12 +388,12 @@ def c_row_count_other(constraint: Constraint, df: DataFrame, ctx: dict) -> Compi
     The other table comes from ctx["tables"][kwargs["other_table_name"]];
     its count is one extra tiny job at verdict-build time."""
     kw = constraint.kwargs
-    a = metric_alias("table.row_count")
+    t = metric_term(df, "table.row_count")
     other: DataFrame = ctx["tables"][kw["other_table_name"]]
     other_count = other.count()
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        v = metrics.get(a)
+        v = metrics.get(t.alias)
         return ConstraintResult(
             constraint_id=constraint.id,
             constraint_type=constraint.type,
@@ -428,9 +403,7 @@ def c_row_count_other(constraint: Constraint, df: DataFrame, ctx: dict) -> Compi
             observed_value={"self": v, "other": other_count},
         )
 
-    return CompiledConstraint(
-        constraint=constraint, agg_terms=[AggTerm(a, F.count(F.lit(1)))], verdict_fn=verdict
-    )
+    return CompiledConstraint(constraint=constraint, agg_terms=[t], verdict_fn=verdict)
 
 
 def _schema_constraint(type_name: str, check) -> None:

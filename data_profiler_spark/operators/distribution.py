@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_spark.core.result import ConstraintResult
@@ -29,56 +29,42 @@ from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.functions import stats
 from data_profiler_spark.operators.registry import register
-from data_profiler_spark.plans.fused import AggTerm, CompiledConstraint, metric_alias
+from data_profiler_spark.plans.fused import (
+    AggTerm,
+    CompiledConstraint,
+    metric_alias,
+    metric_term,
+    nan_as_null,
+)
 
 
 def histogram_terms(
-    colname: str, bins: list[float], tag: str
+    df: DataFrame, colname: str, bins: list[float]
 ) -> tuple[list[str], list[AggTerm], str, str]:
     """Fused histogram: one conditional-sum term per bin + below/above tails.
 
     Last bin is right-INCLUSIVE (numpy convention, as the reference enforces
     with its extra filter job at column_histogram.py:205-212)."""
-    col = F.col(colname)
-    aliases, terms = [], []
-    for i in range(len(bins) - 1):
-        lo, hi = bins[i], bins[i + 1]
-        last = i == len(bins) - 2
-        cond: Column = (col >= lo) & ((col <= hi) if last else (col < hi))
-        a = metric_alias("column.histogram.bin", column=colname, tag=tag, i=i, lo=lo, hi=hi)
-        aliases.append(a)
-        terms.append(AggTerm(a, F.sum(F.when(cond, 1).otherwise(0))))
-    below_a = metric_alias("column.histogram.below", column=colname, tag=tag, lo=bins[0])
-    above_a = metric_alias("column.histogram.above", column=colname, tag=tag, hi=bins[-1])
-    terms.append(AggTerm(below_a, F.sum(F.when(col < bins[0], 1).otherwise(0))))
-    terms.append(AggTerm(above_a, F.sum(F.when(col > bins[-1], 1).otherwise(0))))
-    return aliases, terms, below_a, above_a
+    terms = [
+        metric_term(
+            df, "column.histogram.bin", colname,
+            lo=bins[i], hi=bins[i + 1], closed_right=i == len(bins) - 2,
+        )
+        for i in range(len(bins) - 1)
+    ]
+    below = metric_term(df, "column.histogram.below", colname, lo=bins[0])
+    above = metric_term(df, "column.histogram.above", colname, hi=bins[-1])
+    return [t.alias for t in terms], terms + [below, above], below.alias, above.alias
 
 
 def value_count_terms(
-    colname: str, values: list[Any], tag: str
+    df: DataFrame, colname: str, values: list[Any]
 ) -> tuple[list[str], list[AggTerm], str]:
     """Fused categorical counts: one term per expected value + an
     'unlisted' remainder term (for NaN-alignment / tail holdout)."""
-    col = F.col(colname)
-    aliases, terms = [], []
-    for i, v in enumerate(values):
-        a = metric_alias("column.value_count", column=colname, tag=tag, v=str(v), i=i)
-        aliases.append(a)
-        terms.append(AggTerm(a, F.sum(F.when(col == F.lit(v), 1).otherwise(0))))
-    other_a = metric_alias("column.value_count.other", column=colname, tag=tag)
-    terms.append(
-        AggTerm(
-            other_a,
-            F.sum(F.when(col.isNotNull() & ~col.isin(list(values)), 1).otherwise(0)),
-        )
-    )
-    return aliases, terms, other_a
-
-
-def _nonnull_term(colname: str) -> tuple[str, AggTerm]:
-    a = metric_alias("column.nonnull_count", column=colname)
-    return a, AggTerm(a, F.count(F.col(colname)))
+    terms = [metric_term(df, "column.value_count", colname, value=v) for v in values]
+    other = metric_term(df, "column.value_count.other", colname, values=list(values))
+    return [t.alias for t in terms], terms + [other], other.alias
 
 
 @register("expect_column_kl_divergence_to_be_less_than")
@@ -99,18 +85,18 @@ def c_kl_divergence(constraint: Constraint, df: DataFrame, ctx: dict) -> Compile
     threshold = None if kw.get("threshold") is None else float(kw["threshold"])
     tail_holdout = float(kw.get("tail_weight_holdout", 0.0))
     internal_holdout = float(kw.get("internal_weight_holdout", 0.0))
-    nn_a, nn_t = _nonnull_term(colname)
+    nn_t = metric_term(df, "column_values.nonnull.count", colname)
 
     if "values" in po:  # categorical
         values = list(po["values"])
         exp_w = [float(w) for w in po["weights"]]
-        aliases, terms, other_a = value_count_terms(colname, values, tag=constraint.id[:8])
+        aliases, terms, other_a = value_count_terms(df, colname, values)
         terms.append(nn_t)
 
         def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
             obs = [float(metrics.get(a) or 0) for a in aliases]
             other = float(metrics.get(other_a) or 0)
-            nonnull = float(metrics.get(nn_a) or 0)
+            nonnull = float(metrics.get(nn_t.alias) or 0)
             if nonnull == 0:
                 return ConstraintResult(
                     constraint_id=constraint.id, constraint_type=constraint.type,
@@ -136,14 +122,14 @@ def c_kl_divergence(constraint: Constraint, df: DataFrame, ctx: dict) -> Compile
     bins = [float(b) for b in po["bins"]]
     exp_w = [float(w) for w in po["weights"]]
     exp_tails = [float(t) for t in po.get("tail_weights", [0.0, 0.0])]
-    aliases, terms, below_a, above_a = histogram_terms(colname, bins, tag=constraint.id[:8])
+    aliases, terms, below_a, above_a = histogram_terms(df, colname, bins)
     terms.append(nn_t)
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
         obs = [float(metrics.get(a) or 0) for a in aliases]
         below = float(metrics.get(below_a) or 0)
         above = float(metrics.get(above_a) or 0)
-        nonnull = float(metrics.get(nn_a) or 0)
+        nonnull = float(metrics.get(nn_t.alias) or 0)
         if nonnull == 0:
             return ConstraintResult(
                 constraint_id=constraint.id, constraint_type=constraint.type,
@@ -191,14 +177,14 @@ def c_chisquare(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCon
     tail_holdout = float(kw.get("tail_weight_holdout", 0.0))
     values = list(po["values"])
     exp_w = [float(w) for w in po["weights"]]
-    aliases, terms, other_a = value_count_terms(colname, values, tag=constraint.id[:8])
-    nn_a, nn_t = _nonnull_term(colname)
+    aliases, terms, other_a = value_count_terms(df, colname, values)
+    nn_t = metric_term(df, "column_values.nonnull.count", colname)
     terms.append(nn_t)
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
         obs = [float(metrics.get(a) or 0) for a in aliases]
         other = float(metrics.get(other_a) or 0)
-        nonnull = float(metrics.get(nn_a) or 0)
+        nonnull = float(metrics.get(nn_t.alias) or 0)
         if nonnull == 0:
             return ConstraintResult(
                 constraint_id=constraint.id, constraint_type=constraint.type,
@@ -258,10 +244,8 @@ def bootstrap_ks_pvalues(
     test_cdf = np.append([0.0], np.cumsum([float(w) for w in po["weights"]]))
     R = int(bootstrap_samples)
     s = int(bootstrap_sample_size or 2 * len(po["weights"]))
-    c = F.col(colname).cast("double")
-    vals = df.select(*[F.col(k) for k in gb], c.alias("__v")).where(
-        c.isNotNull() & ~F.isnan(c)
-    )
+    c = nan_as_null(df, colname).cast("double")
+    vals = df.select(*[F.col(k) for k in gb], c.alias("__v")).where(c.isNotNull())
     rates = {g: (R * s / n) for g, n in n_by_group.items() if n > 0}
     out_schema = ", ".join(
         [f"`{k}` {vals.schema[k].dataType.simpleString()}" for k in gb]
@@ -362,8 +346,8 @@ def c_ks_test(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConst
         or kw.get("bootstrap_samples") is not None
         or kw.get("bootstrap_sample_size") is not None
     )
-    aliases, terms, below_a, above_a = histogram_terms(colname, bins, tag=constraint.id[:8])
-    nn_a, nn_t = _nonnull_term(colname)
+    aliases, terms, below_a, above_a = histogram_terms(df, colname, bins)
+    nn_t = metric_term(df, "column_values.nonnull.count", colname)
     terms.append(nn_t)
 
     if use_bootstrap:
@@ -381,7 +365,7 @@ def c_ks_test(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConst
         )
 
         def post_pass(frame: DataFrame, group_by: list[str], groups, kept):
-            n_by_group = {g: float(m.get(nn_a) or 0) for g, m in groups}
+            n_by_group = {g: float(m.get(nn_t.alias) or 0) for g, m in groups}
             res = bootstrap_ks_pvalues(
                 frame, colname, po, n_by_group, group_by,
                 bootstrap_samples=int(kw.get("bootstrap_samples") or 1000),
@@ -419,7 +403,7 @@ def c_ks_test(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConst
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
         obs = [float(metrics.get(a) or 0) for a in aliases]
-        nonnull = float(metrics.get(nn_a) or 0)
+        nonnull = float(metrics.get(nn_t.alias) or 0)
         if nonnull == 0:
             return ConstraintResult(
                 constraint_id=constraint.id, constraint_type=constraint.type,
@@ -503,10 +487,8 @@ def ks_test_parameterized(
 
     group_by = list(group_by or [])
     cdf = stats.parameterized_cdf(distribution, params)
-    c = F.col(colname).cast("double")
-    vals = df.select(
-        *[F.col(k) for k in group_by], c.alias("__v")
-    ).where(c.isNotNull() & ~F.isnan(c))
+    c = nan_as_null(df, colname).cast("double")
+    vals = df.select(*[F.col(k) for k in group_by], c.alias("__v")).where(c.isNotNull())
 
     if max_driver_values > 0:
         est = vals.agg(
@@ -777,13 +759,11 @@ def c_cramers_phi(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
     max_distributed_cells = int(kw.get("max_distributed_cells", 10**12))
     phi_a = metric_alias("pair.cramers_phi", a=a_col, b=b_col)
     guard_a = metric_alias("pair.cramers_phi_guard", a=a_col, b=b_col)
-    da_a = metric_alias("column.distinct", column=a_col, approx=True)
-    db_a = metric_alias("column.distinct", column=b_col, approx=True)
-
     terms = [
-        AggTerm(da_a, F.approx_count_distinct(F.col(a_col))),
-        AggTerm(db_a, F.approx_count_distinct(F.col(b_col))),
+        metric_term(df, "column.distinct_values.count", c, approx=True)
+        for c in (a_col, b_col)
     ]
+    da_a, db_a = (t.alias for t in terms)
 
     def _drop_groups(frame: DataFrame, group_by: list[str], keys: list[tuple]):
         # broadcast anti join against the dropped-keys table, NOT an
@@ -852,26 +832,30 @@ def c_drift(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstra
 
     kwargs:
       column, baseline: categorical {"values","weights","n"} or continuous
-      {"bins","weights","n"}, test: "ks"|"chisquare" (default by shape),
-      p: significance level (drift verdict FAILS when p <= threshold).
+      {"bins","weights","n"}, p: significance level (drift verdict FAILS
+      when p <= threshold).
+
+    The baseline's shape picks the test: a two-sample chi-square on value
+    counts for a categorical baseline, a two-sample KS on the baseline's
+    bins for a continuous one.
     """
     kw = constraint.kwargs
     colname = kw["column"]
     baseline = kw["baseline"]
     p_threshold = float(kw.get("p", 0.05))
     n2 = float(baseline.get("n", 0) or 0)
-    nn_a, nn_t = _nonnull_term(colname)
+    nn_t = metric_term(df, "column_values.nonnull.count", colname)
 
     if "values" in baseline:  # categorical -> two-sample chi-square
         values = list(baseline["values"])
         base_w = [float(w) for w in baseline["weights"]]
-        aliases, terms, other_a = value_count_terms(colname, values, tag=constraint.id[:8])
+        aliases, terms, other_a = value_count_terms(df, colname, values)
         terms.append(nn_t)
 
         def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
             obs = [float(metrics.get(a) or 0) for a in aliases]
             other = float(metrics.get(other_a) or 0)
-            nonnull = float(metrics.get(nn_a) or 0)
+            nonnull = float(metrics.get(nn_t.alias) or 0)
             if nonnull == 0 or n2 == 0:
                 return ConstraintResult(
                     constraint_id=constraint.id, constraint_type=constraint.type,
@@ -893,14 +877,14 @@ def c_drift(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstra
 
     bins = [float(b) for b in baseline["bins"]]
     base_w = [float(w) for w in baseline["weights"]]
-    aliases, terms, below_a, above_a = histogram_terms(colname, bins, tag=constraint.id[:8])
+    aliases, terms, below_a, above_a = histogram_terms(df, colname, bins)
     terms.append(nn_t)
 
     def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
         obs = [float(metrics.get(a) or 0) for a in aliases]
         below = float(metrics.get(below_a) or 0)
         above = float(metrics.get(above_a) or 0)
-        nonnull = float(metrics.get(nn_a) or 0)
+        nonnull = float(metrics.get(nn_t.alias) or 0)
         if nonnull == 0 or n2 == 0:
             return ConstraintResult(
                 constraint_id=constraint.id, constraint_type=constraint.type,

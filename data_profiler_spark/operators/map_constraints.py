@@ -49,6 +49,7 @@ from data_profiler_spark.plans.fused import (
     CompiledConstraint,
     GroupKey,
     metric_alias,
+    metric_term,
 )
 
 
@@ -641,14 +642,12 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
     col = F.col(colname)
     threshold = float(kw["threshold"])
     double_sided = bool(kw.get("double_sided", True))
-    rc = _row_condition(constraint)
+    # the catalog terms: with no row condition, the mean and stdev
+    # constraints read the same ones, so the fused pass computes them once
     rc_key = _row_condition_sql(constraint)
-    # with no row condition, these are the terms the column mean/stddev
-    # aggregates use, so the fused pass computes them once
-    on = {"column": colname} if rc_key is None else {"column": colname, "rc": rc_key}
-    mean_a = metric_alias("column.mean", **on)
-    std_a = metric_alias("column.stddev", **on)
-    values = col if rc is None else F.when(rc, col)
+    mean_t = metric_term(df, "column.mean", colname, row_condition=rc_key)
+    std_t = metric_term(df, "column.standard_deviation", colname, row_condition=rc_key)
+    mean_a, std_a = mean_t.alias, std_t.alias
 
     def unexpected_count(frame: DataFrame, group_by: list[str], groups):
         rows = [
@@ -677,9 +676,7 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
         constraint,
         domain_nonnull=col.isNotNull(),
         unexpected_count=unexpected_count,
-        extra_terms=[
-            AggTerm(mean_a, F.mean(values)), AggTerm(std_a, F.stddev_samp(values))
-        ],
+        extra_terms=[mean_t, std_t],
         details=lambda m: {"mean": m.get(mean_a), "stddev": m.get(std_a)},
         post_pass_needs_metrics=True,
     )

@@ -10,6 +10,12 @@ Categorical top-k histograms run one bounded ``groupBy(col).count()`` top-k
 job per low-cardinality column (partial aggregation shrinks the shuffle to
 the distinct-value count).
 
+Every pass-1 and pass-2 term comes from the metric catalog
+(``plans/fused.metric_term``), so the profile names a metric as a constraint
+suite does, and a float/double NaN counts as NULL (the pandas skipna rule):
+``null_count`` counts it, the distinct count, moments, quantiles and
+histogram skip it, and the top-k drops it with the NULLs.
+
 This is the Spark-first rebuild of the reference's
 ``BasicDatasetProfiler._profile`` (profile/basic_dataset_profiler.py:118-335)
 + partition-object builders (dataset/util.py:205-274): same outputs, but a
@@ -26,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType, StringType
 
-from data_profiler_spark.plans.fused import AggTerm, metric_alias, run_fused_pass
+from data_profiler_spark.plans.fused import AggTerm, metric_term, nan_as_null, run_fused_pass
 
 DEFAULT_QUANTILES = [0.05, 0.25, 0.5, 0.75, 0.95]
 
@@ -114,23 +120,11 @@ class TableProfile:
 
 
 def _numeric_expr(df: DataFrame, colname: str):
-    """Numeric view of a column: itself if numeric, length() for strings
-    (the north-rule content-length distribution), None otherwise.
-
-    Float/double columns are NaN-masked (NaN -> NULL) so min/max/mean/
-    stddev/quantiles/histograms skip NaN like the pandas oracle — Spark
-    would otherwise propagate NaN into mean and sort it above max."""
-    from pyspark.sql.types import DoubleType, FloatType
-
-    dt = df.schema[colname].dataType
-    if isinstance(dt, (DoubleType, FloatType)):
-        c = F.col(colname)
-        return F.when(~F.isnan(c), c), False
-    if isinstance(dt, NumericType):
-        return F.col(colname), False
-    if isinstance(dt, StringType):
-        return F.length(F.col(colname)), True
-    return None, False
+    """The length view of a string column (the north-rule content-length
+    distribution), as a double; None for every other type."""
+    if isinstance(df.schema[colname].dataType, StringType):
+        return F.length(F.col(colname)).cast("double")
+    return None
 
 
 def profile(
@@ -169,64 +163,39 @@ def profile(
     qs = list(DEFAULT_QUANTILES if quantiles is None else quantiles)
     categorical_columns = list(categorical_columns or [])
 
-    # Project derived numeric views ONCE. Catalyst does not reliably
-    # eliminate the common length(col) subexpression ACROSS aggregate
-    # expressions, so min/max/mean/stddev/quantiles would each re-walk the
-    # (potentially megabyte) string — at 100 TB that is the difference
-    # between one blob read and five.
+    # Project the length views ONCE. Catalyst does not reliably eliminate
+    # the common length(col) subexpression ACROSS aggregate expressions, so
+    # min/max/mean/stddev/quantiles would each re-walk the (potentially
+    # megabyte) string — at 100 TB that is the difference between one blob
+    # read and five.
     proj: list = [F.col(c) for c in dict.fromkeys(group_by + columns)]
-    len_cols: dict[str, str] = {}
+    num_cols: dict[str, str] = {}  # column -> the numeric column its stats read
     for c in columns:
-        num, is_len = _numeric_expr(df, c)
-        if num is not None and is_len:
-            len_cols[c] = f"__len_{c}"
-            proj.append(num.cast("double").alias(len_cols[c]))
+        length = _numeric_expr(df, c)
+        if length is not None:
+            num_cols[c] = f"__len_{c}"
+            proj.append(length.alias(num_cols[c]))
+        elif isinstance(df.schema[c].dataType, NumericType):
+            num_cols[c] = c
     base = df.select(*proj)
 
-    def _num(c: str):
-        if c in len_cols:
-            return F.col(len_cols[c])
-        num, _ = _numeric_expr(df, c)
-        return num.cast("double") if num is not None else None
-
     # ---- pass 1: one fused agg for everything scalar -------------------
-    terms: list[AggTerm] = [AggTerm(metric_alias("table.row_count"), F.count(F.lit(1)))]
-    aliases: dict[tuple[str, str], str] = {("table", "row_count"): terms[0].alias}
-
+    stats = {"min": "column.min", "max": "column.max", "mean": "column.mean",
+             "stddev": "column.standard_deviation"}
+    terms = {("table", "row_count"): metric_term(base, "table.row_count")}
     for c in columns:
-        col = F.col(c)
-        a_null = metric_alias("column.null_count", column=c)
-        a_dist = metric_alias("column.distinct", column=c, approx=approx_distinct)
-        aliases[(c, "null_count")] = a_null
-        aliases[(c, "distinct")] = a_dist
-        terms.append(AggTerm(a_null, F.sum(F.when(col.isNull(), 1).otherwise(0))))
-        terms.append(
-            AggTerm(
-                a_dist,
-                F.approx_count_distinct(col) if approx_distinct else F.count_distinct(col),
-            )
+        terms[(c, "null_count")] = metric_term(base, "column_values.null.count", c)
+        terms[(c, "distinct")] = metric_term(
+            base, "column.distinct_values.count", c, approx=approx_distinct
         )
-        num_d = _num(c)
-        if num_d is not None:
-            stat_exprs = [
-                ("min", F.min(num_d)),
-                ("max", F.max(num_d)),
-                ("mean", F.mean(num_d)),
-                ("stddev", F.stddev_samp(num_d)),
-            ]
+        if c in num_cols:
+            for stat, name in stats.items():
+                terms[(c, stat)] = metric_term(base, name, num_cols[c])
             if qs:
-                stat_exprs.append(
-                    (
-                        "quantiles",
-                        F.percentile_approx(
-                            num_d, F.array(*[F.lit(q) for q in qs]), F.lit(quantile_accuracy)
-                        ),
-                    )
+                terms[(c, "quantiles")] = metric_term(
+                    base, "column.quantile_values", num_cols[c],
+                    quantiles=qs, accuracy=quantile_accuracy,
                 )
-            for stat, expr in stat_exprs:
-                a = metric_alias(f"column.{stat}", column=c, q=qs if stat == "quantiles" else None)
-                aliases[(c, stat)] = a
-                terms.append(AggTerm(a, expr))
 
     # ---- categorical top-k: independent of pass 1 — submitted BEFORE it so
     # the two scans overlap (job-scheduling dead time between serial jobs is
@@ -245,7 +214,7 @@ def profile(
         cv = F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(c).alias("colname"), F.col(c).alias("value"))
+                    F.struct(F.lit(c).alias("colname"), nan_as_null(df, c).alias("value"))
                     for c in cols_d
                 ]
             )
@@ -273,29 +242,27 @@ def profile(
         else []
     )
 
-    groups = run_fused_pass(base, terms, group_by)
+    groups = run_fused_pass(base, list(terms.values()), group_by)
 
     profiles: dict[tuple, TableProfile] = {}
     for key, metrics in groups:
         tp = TableProfile(group=dict(zip(group_by, key)))
-        rc = int(metrics[aliases[("table", "row_count")]] or 0)
+        m = {k: metrics[t.alias] for k, t in terms.items()}
         for c in columns:
-            num, is_len = _numeric_expr(df, c)
             cp = ColumnProfile(
                 column_name=c,
                 spark_type=df.schema[c].dataType.simpleString(),
-                row_count=rc,
-                null_count=int(metrics[aliases[(c, "null_count")]] or 0),
-                approx_distinct=int(metrics[aliases[(c, "distinct")]] or 0),
-                is_length_profile=is_len,
+                row_count=int(m[("table", "row_count")] or 0),
+                null_count=int(m[(c, "null_count")] or 0),
+                approx_distinct=int(m[(c, "distinct")] or 0),
+                is_length_profile=num_cols.get(c) == f"__len_{c}",
             )
-            if num is not None:
-                cp.min_v = metrics.get(aliases[(c, "min")])
-                cp.max_v = metrics.get(aliases[(c, "max")])
-                cp.mean_v = metrics.get(aliases[(c, "mean")])
-                cp.stddev_v = metrics.get(aliases[(c, "stddev")])
+            if c in num_cols:
+                cp.min_v, cp.max_v, cp.mean_v, cp.stddev_v = (
+                    None if m[(c, s)] is None else float(m[(c, s)]) for s in stats
+                )
                 if qs:
-                    qv = metrics.get(aliases[(c, "quantiles")])
+                    qv = m[(c, "quantiles")]
                     cp.quantiles = [float(x) for x in qv] if qv is not None else None
                     cp.quantile_qs = qs
             tp.columns[c] = cp
@@ -306,9 +273,8 @@ def profile(
     hterms: list[AggTerm] = []
     q25_i = qs.index(0.25) if 0.25 in qs else None
     q75_i = qs.index(0.75) if 0.75 in qs else None
-    for c in columns:
-        num_d = _num(c)
-        if num_d is None or (isinstance(hist_bins, int) and hist_bins <= 0):
+    for c in num_cols:
+        if isinstance(hist_bins, int) and hist_bins <= 0:
             continue
         lo = min(
             (tp.columns[c].min_v for tp in profiles.values() if tp.columns[c].min_v is not None),
@@ -344,15 +310,15 @@ def profile(
         else:
             n_bins = hist_bins
         edges = [lo + (hi - lo) * i / n_bins for i in range(n_bins + 1)]
-        bin_aliases = []
-        for i in range(n_bins):
-            blo, bhi = edges[i], edges[i + 1]
-            last = i == n_bins - 1
-            cond = (num_d >= blo) & ((num_d <= bhi) if last else (num_d < bhi))
-            a = metric_alias("column.hist.bin", column=c, i=i, lo=blo, hi=bhi)
-            bin_aliases.append(a)
-            hterms.append(AggTerm(a, F.sum(F.when(cond, 1).otherwise(0))))
-        hist_specs[c] = (edges, bin_aliases)
+        bins = [
+            metric_term(
+                base, "column.histogram.bin", num_cols[c],
+                lo=edges[i], hi=edges[i + 1], closed_right=i == n_bins - 1,
+            )
+            for i in range(n_bins)
+        ]
+        hterms.extend(bins)
+        hist_specs[c] = (edges, [t.alias for t in bins])
 
     # ---- pass 2 (histograms): needs pass-1 min/max; overlaps any still-
     # running top-k jobs, or is deferred entirely (defer_histograms) -------

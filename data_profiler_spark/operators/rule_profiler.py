@@ -35,12 +35,11 @@ from numbers import Number
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_profiler_spark.core.identity import fingerprint
 from data_profiler_spark.core.suite import ConstraintSuite
-from data_profiler_spark.plans.fused import AggTerm, metric_alias, run_fused_pass
+from data_profiler_spark.plans.fused import AggTerm, metric_term, run_fused_pass
 
 
 class ProfilerConfigurationError(ValueError):
@@ -196,37 +195,17 @@ class SemanticTypeColumnDomainBuilder:
 # metric lowering (fused)
 # ---------------------------------------------------------------------------
 
-# metric name -> Column factory(column_expr, value_kwargs). Names mirror the
-# reference's metric registry (expectations/metrics/*): the subset that
-# resolves to a single aggregate value — exactly what MetricParameterBuilder
-# consumes. ``column_expr`` is already NaN-masked (NaN -> NULL) for
-# float/double columns so every lowering inherits the reference's pandas
-# skipna semantics in one place: min/max/mean/sum/median/stddev/quantiles
-# skip NaN, null.count counts NaN as null, nonnull.count and
-# distinct_values.count drop it (pandas count()/nunique(dropna=True)).
-# Spark would otherwise sort NaN above max and propagate it through mean.
-_METRIC_LOWERINGS: dict[str, Any] = {
-    "table.row_count": lambda c, vk: F.count(F.lit(1)),
-    "column.min": lambda c, vk: F.min(c),
-    "column.max": lambda c, vk: F.max(c),
-    "column.mean": lambda c, vk: F.mean(c),
-    "column.sum": lambda c, vk: F.sum(c),
-    "column.median": lambda c, vk: F.median(c),
-    "column.standard_deviation": lambda c, vk: F.stddev(c),
-    "column.distinct_values.count": lambda c, vk: F.count_distinct(c),
-    "column_values.null.count": lambda c, vk: F.count(
-        F.when(c.isNull(), 1)
-    ),
-    "column_values.nonnull.count": lambda c, vk: F.count(c),
-    "column.quantile_values": lambda c, vk: F.percentile(
-        c.cast("double"),
-        F.array(*[F.lit(float(q)) for q in (vk or {}).get("quantiles", [0.5])]),
-    ),
-}
-
-
-def supported_metrics() -> list[str]:
-    return sorted(_METRIC_LOWERINGS)
+# The catalog metrics (plans/fused.metric_term) a MetricParameterBuilder
+# accepts: the reference's (expectations/metrics/*) that resolve to one
+# aggregate value. The catalog makes a float/double NaN read as NULL, the
+# reference's pandas skipna rule: min/max/mean/sum/median/stddev/quantiles
+# skip NaN, null.count counts it, nonnull.count and distinct_values.count
+# drop it (pandas count()/nunique(dropna=True)).
+_PROFILER_METRICS = (
+    "table.row_count", "column.min", "column.max", "column.mean", "column.sum",
+    "column.median", "column.standard_deviation", "column.distinct_values.count",
+    "column_values.null.count", "column_values.nonnull.count", "column.quantile_values",
+)
 
 
 class MetricParameterBuilder:
@@ -247,10 +226,10 @@ class MetricParameterBuilder:
         replace_nan_with_zero: bool = False,
         **_: Any,
     ) -> None:
-        if metric_name not in _METRIC_LOWERINGS:
+        if metric_name not in _PROFILER_METRICS:
             raise ProfilerConfigurationError(
                 f"unsupported metric {metric_name!r}; supported: "
-                f"{supported_metrics()}"
+                f"{sorted(_PROFILER_METRICS)}"
             )
         self.parameter_name = parameter_name
         self.metric_name = metric_name
@@ -274,26 +253,16 @@ class MetricParameterBuilder:
         self, df: DataFrame, domain: Domain, variables: dict[str, Any]
     ) -> AggTerm:
         dk = self._domain_kwargs(domain, variables)
-        col = dk.get("column")
+        col = None
         if self.metric_name != "table.row_count":
+            col = dk.get("column")
             if not col:
                 raise ProfilerConfigurationError(
                     f"metric {self.metric_name!r} needs a column domain"
                 )
             if col not in df.columns:
                 raise ProfilerConfigurationError(f"unknown column {col!r}")
-        alias = metric_alias(
-            self.metric_name, column=col, **self.metric_value_kwargs
-        )
-        expr = None
-        if col is not None:
-            expr = F.col(col)
-            if isinstance(
-                df.schema[col].dataType, (T.DoubleType, T.FloatType)
-            ):
-                expr = F.when(~F.isnan(F.col(col)), F.col(col))
-        column = _METRIC_LOWERINGS[self.metric_name](expr, self.metric_value_kwargs)
-        return AggTerm(alias=alias, column=column)
+        return metric_term(df, self.metric_name, col, **self.metric_value_kwargs)
 
     def build(
         self,

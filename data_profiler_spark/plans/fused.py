@@ -11,6 +11,9 @@ same single pass).
 Metric dedup across constraints uses the fingerprint identity of the
 reference's MetricConfiguration (core/id_dict.py:12-23): two constraints
 requesting the same (metric, kwargs) share one aggregate column.
+``metric_term`` is the one place a column metric becomes an aggregate: its
+alias, its NaN rule and its Column, so the constraints, the rule profiler and
+``profile()`` name and compute a metric the same way.
 
 Scale notes:
 - one scan, map-side partial aggregation, whole-stage codegen — all free
@@ -29,6 +32,7 @@ from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_profiler_spark.core.identity import fingerprint
 from data_profiler_spark.core.result import ConstraintResult
@@ -46,6 +50,92 @@ def metric_alias(name: str, **kwargs: Any) -> str:
 class AggTerm:
     alias: str
     column: Column
+
+
+def nan_as_null(df: DataFrame, column: str) -> Column:
+    """``column`` as every metric reads it: a float/double NaN is NULL (the
+    pandas skipna rule). Spark would otherwise sort NaN above every value,
+    carry it through mean and sum, and count it as a distinct value."""
+    c = F.col(column)
+    if isinstance(df.schema[column].dataType, (T.FloatType, T.DoubleType)):
+        return F.when(~F.isnan(c), c)
+    return c
+
+
+def _count_if(cond: Column) -> Column:
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _quantiles(c: Column, one: Column, vk: dict[str, Any]) -> Column:
+    qs = F.array(*[F.lit(q) for q in vk["quantiles"]])
+    if vk["accuracy"] is None:
+        return F.percentile(c.cast("double"), qs)
+    return F.percentile_approx(c, qs, F.lit(vk["accuracy"]))
+
+
+# The metric catalog: name -> (default value kwargs, lowering). A lowering
+# maps (the column's values, a per-row 1, the value kwargs) to one
+# aggregate; both inputs are NULL on rows a row condition drops. Names are
+# the reference's (expectations/metrics/*); the histogram and value-count
+# names are this engine's per-bin and per-value drift terms.
+_METRICS: dict[str, tuple[dict[str, Any], Callable[[Column, Column, dict], Column]]] = {
+    "table.row_count": ({}, lambda c, one, vk: F.count(one)),
+    "column.min": ({}, lambda c, one, vk: F.min(c)),
+    "column.max": ({}, lambda c, one, vk: F.max(c)),
+    "column.mean": ({}, lambda c, one, vk: F.mean(c)),
+    "column.sum": ({}, lambda c, one, vk: F.sum(c)),
+    "column.median": ({}, lambda c, one, vk: F.median(c)),
+    "column.standard_deviation": ({}, lambda c, one, vk: F.stddev_samp(c)),
+    "column.distinct_values.count": (
+        {"approx": False},
+        lambda c, one, vk: F.approx_count_distinct(c) if vk["approx"] else F.count_distinct(c),
+    ),
+    "column_values.null.count": ({}, lambda c, one, vk: F.count(F.when(c.isNull(), one))),
+    "column_values.nonnull.count": ({}, lambda c, one, vk: F.count(c)),
+    # accuracy None: the exact percentile; else percentile_approx's accuracy
+    "column.quantile_values": ({"quantiles": [0.5], "accuracy": None}, _quantiles),
+    # [lo, hi), or [lo, hi] for the last bin (numpy's convention)
+    "column.histogram.bin": (
+        {},
+        lambda c, one, vk: _count_if(
+            (c >= vk["lo"]) & ((c <= vk["hi"]) if vk["closed_right"] else (c < vk["hi"]))
+        ),
+    ),
+    "column.histogram.below": ({}, lambda c, one, vk: _count_if(c < vk["lo"])),
+    "column.histogram.above": ({}, lambda c, one, vk: _count_if(c > vk["hi"])),
+    "column.value_count": ({}, lambda c, one, vk: _count_if(c == F.lit(vk["value"]))),
+    # the non-null values outside ``values``
+    "column.value_count.other": (
+        {}, lambda c, one, vk: _count_if(c.isNotNull() & ~c.isin(list(vk["values"])))
+    ),
+}
+
+
+def metric_term(
+    df: DataFrame,
+    name: str,
+    column: str | None = None,
+    row_condition: str | None = None,
+    **value_kwargs: Any,
+) -> AggTerm:
+    """The fused aggregate of catalog metric ``name`` over ``column`` of
+    ``df``, scoped to the rows the Spark SQL ``row_condition`` keeps.
+
+    The alias is the name, the column, the row condition and the value
+    kwargs (defaults filled in) and nothing else, so every caller that asks
+    for the same metric shares one term. A float/double NaN counts as NULL
+    for every metric (``nan_as_null``): min, max, mean, sum, median,
+    standard deviation and quantiles skip it, the null count counts it, and
+    the non-null count, distinct count, histogram and value counts drop it."""
+    defaults, lower = _METRICS[name]
+    vk = {**defaults, **value_kwargs}
+    on: dict[str, Any] = {} if column is None else {"column": column}
+    values, one = (F.lit(1) if column is None else nan_as_null(df, column)), F.lit(1)
+    if row_condition is not None:
+        on["rc"] = row_condition
+        rc = F.expr(row_condition)
+        values, one = F.when(rc, values), F.when(rc, one)
+    return AggTerm(metric_alias(name, **on, **vk), lower(values, one, vk))
 
 
 @dataclass

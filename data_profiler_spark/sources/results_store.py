@@ -42,6 +42,15 @@ from data_profiler_spark.core.session import arrow_schema, arrow_table, local_fr
 DONE_SENTINEL = "__partition_done__"
 
 
+def _fsync(path: str) -> None:
+    """Flush ``path`` (a file, or a directory's entries) to the disk."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def arrow_append_rows(
     path: str,
     rows: list[tuple],
@@ -61,9 +70,11 @@ def arrow_append_rows(
     Crash safety: the part file is written under a ``.``-prefixed name,
     which Spark's file listing skips, and renamed into place, so a crash
     mid-write leaves no partial part file and all of ``rows`` commit in
-    one ``os.replace``. An overwrite deletes the old parts only after the
-    new one is in place: a crash in between leaves the old parts next to
-    the new one, never an empty store."""
+    one ``os.replace``. The part file is fsynced before the rename and the
+    directory after it, so a commit that returned survives a power loss.
+    An overwrite deletes the old parts only after the new one is in place:
+    a crash in between leaves the old parts next to the new one, never an
+    empty store."""
     import pyarrow.parquet as pq
 
     table = arrow_table(rows, schema)
@@ -73,7 +84,9 @@ def arrow_append_rows(
     tmp = os.path.join(path, "." + name)
     try:
         pq.write_table(table, tmp)
+        _fsync(tmp)
         os.replace(tmp, os.path.join(path, name))
+        _fsync(path)
     except BaseException:
         if os.path.exists(tmp):
             os.remove(tmp)

@@ -15,31 +15,37 @@ def pdf(typed_small) -> pd.DataFrame:
 
 
 def test_fused_suite_aggregates(typed_small, pdf):
-    """All aggregate constraints resolve from ONE fused pass."""
-    nn = pdf["ints"].dropna()
-    suite = (
-        ConstraintSuite("agg")
-        .add("expect_column_min_to_be_between", column="ints", min_value=0, max_value=2)
-        .add("expect_column_max_to_be_between", column="ints", min_value=10, max_value=10)
-        .add("expect_column_mean_to_be_between", column="ints",
-             min_value=nn.mean() - 0.01, max_value=nn.mean() + 0.01)
-        .add("expect_column_median_to_be_between", column="ints",
-             min_value=nn.median(), max_value=nn.median())
-        .add("expect_column_stdev_to_be_between", column="ints",
-             min_value=nn.std(ddof=1) - 0.01, max_value=nn.std(ddof=1) + 0.01)
-        .add("expect_column_sum_to_be_between", column="ints",
-             min_value=nn.sum(), max_value=nn.sum())
-        .add("expect_column_unique_value_count_to_be_between", column="ints",
-             min_value=10, max_value=10)
-        .add("expect_table_row_count_to_equal", value=30)
-    )
-    res = Validator(typed_small).validate(suite)
-    by_type = {r.constraint_type: r for r in res.results}
-    for t, r in by_type.items():
-        assert r.success, (t, r.observed_value, r.exception_info)
-    assert by_type["expect_column_mean_to_be_between"].observed_value == pytest.approx(nn.mean())
-    assert by_type["expect_column_median_to_be_between"].observed_value == pytest.approx(nn.median())
-    assert by_type["expect_column_stdev_to_be_between"].observed_value == pytest.approx(nn.std(ddof=1))
+    """All aggregate constraints resolve from ONE fused pass. ``floats``
+    holds a NaN, which reads as NULL (pandas skipna)."""
+    for col in ("ints", "floats"):
+        nn = pdf[col].dropna()
+        tol = 1e-6
+        suite = (
+            ConstraintSuite("agg")
+            .add("expect_column_min_to_be_between", column=col,
+                 min_value=nn.min(), max_value=nn.min())
+            .add("expect_column_max_to_be_between", column=col,
+                 min_value=nn.max(), max_value=nn.max())
+            .add("expect_column_mean_to_be_between", column=col,
+                 min_value=nn.mean() - 0.01, max_value=nn.mean() + 0.01)
+            .add("expect_column_median_to_be_between", column=col,
+                 min_value=nn.median(), max_value=nn.median())
+            .add("expect_column_stdev_to_be_between", column=col,
+                 min_value=nn.std(ddof=1) - 0.01, max_value=nn.std(ddof=1) + 0.01)
+            .add("expect_column_sum_to_be_between", column=col,
+                 min_value=nn.sum() - tol, max_value=nn.sum() + tol)
+            .add("expect_column_unique_value_count_to_be_between", column=col,
+                 min_value=nn.nunique(), max_value=nn.nunique())
+            .add("expect_table_row_count_to_equal", value=30)
+        )
+        res = Validator(typed_small).validate(suite)
+        by_type = {r.constraint_type: r for r in res.results}
+        for t, r in by_type.items():
+            assert r.success, (col, t, r.observed_value, r.exception_info)
+        observed = {t: r.observed_value for t, r in by_type.items()}
+        assert observed["expect_column_mean_to_be_between"] == pytest.approx(nn.mean())
+        assert observed["expect_column_median_to_be_between"] == pytest.approx(nn.median())
+        assert observed["expect_column_stdev_to_be_between"] == pytest.approx(nn.std(ddof=1))
 
 
 def test_quantiles_exact(typed_small, pdf):
@@ -58,14 +64,54 @@ def test_quantiles_exact(typed_small, pdf):
 
 
 def test_unique_proportion(typed_small, pdf):
-    nn = pdf["ints"].dropna()
-    expected = nn.nunique() / len(nn)
-    r = Validator(typed_small).expect(
-        "expect_column_proportion_of_unique_values_to_be_between",
-        column="ints", min_value=expected - 1e-9, max_value=expected + 1e-9,
-    )
-    assert r.success is True
-    assert r.observed_value == pytest.approx(expected)
+    for col in ("ints", "floats"):
+        nn = pdf[col].dropna()
+        expected = nn.nunique() / len(nn)
+        r = Validator(typed_small).expect(
+            "expect_column_proportion_of_unique_values_to_be_between",
+            column=col, min_value=expected - 1e-9, max_value=expected + 1e-9,
+        )
+        assert r.success is True, col
+        assert r.observed_value == pytest.approx(expected)
+
+
+def test_nan_reads_as_null(spark):
+    """A NaN is a NULL to every column aggregate, as to pandas: the median
+    of [1, 2, NaN] is 1.5 and [1, 2, NaN, NULL, 2] has 2 distinct values."""
+    nan = float("nan")
+    v = Validator(spark.createDataFrame([(1.0,), (2.0,), (nan,), (None,), (2.0,)], "x double"))
+    median = v.expect("expect_column_median_to_be_between", column="x", max_value=9)
+    distinct = v.expect("expect_column_unique_value_count_to_be_between", column="x")
+    assert median.observed_value == pytest.approx(pd.Series([1.0, 2.0, nan, 2.0]).median())
+    assert distinct.observed_value == 2 == pd.Series([1.0, 2.0, nan, None, 2.0]).nunique()
+    v = Validator(spark.createDataFrame([(1.0,), (2.0,), (nan,)], "x double"))
+    median = v.expect("expect_column_median_to_be_between", column="x", max_value=9)
+    assert median.observed_value == 1.5
+
+
+def test_nan_satisfies_no_bound(spark):
+    """An observed NaN fails every bound, strict or not: the mean and sum
+    of [inf, -inf, 1] are NaN even with NaN masked. On [1, 2, NaN, NULL]
+    the NaN is masked, so each aggregate is a number and the check is a
+    real one."""
+    inf, nan = float("inf"), float("nan")
+    v = Validator(spark.createDataFrame([(inf,), (-inf,), (1.0,)], "x double"))
+    for t in ("mean", "sum"):
+        for strict in (False, True):
+            r = v.expect(f"expect_column_{t}_to_be_between", column="x",
+                         min_value=100, max_value=200, strict_min=strict, strict_max=strict)
+            assert r.observed_value != r.observed_value, t  # NaN
+            assert r.success is False, (t, strict)
+        for bounds in ({"min_value": 100}, {"max_value": 200}):
+            r = v.expect(f"expect_column_{t}_to_be_between", column="x", **bounds)
+            assert r.success is False, (t, bounds)
+    v = Validator(spark.createDataFrame([(1.0,), (2.0,), (nan,), (None,)], "x double"))
+    want = {"mean": 1.5, "max": 2.0, "sum": 3.0, "stdev": 2 ** -0.5}
+    for t, value in want.items():
+        r = v.expect(f"expect_column_{t}_to_be_between", column="x",
+                     min_value=100, max_value=200)
+        assert r.observed_value == pytest.approx(value), t
+        assert r.success is False, t
 
 
 def test_most_common(typed_small):

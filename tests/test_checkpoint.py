@@ -543,6 +543,35 @@ def test_arrow_append_crash_leaves_no_partial_part(spark, tmp_path, monkeypatch,
         results_store.arrow_append_rows(str(tmp_path / "m"), [(1,)], interval)
 
 
+def test_arrow_append_fsyncs_part_then_directory(tmp_path, monkeypatch):
+    """A commit is durable once it returns: the staged part file is
+    fsynced before the rename, and the directory after it."""
+    import os
+    import stat
+
+    from data_profiler_spark.sources import results_store
+    from data_profiler_spark.sources.results_store import RESULT_SCHEMA
+
+    calls: list[str] = []
+    fsync, replace = os.fsync, os.replace
+
+    def traced_fsync(fd):
+        calls.append("fsync dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "fsync file")
+        fsync(fd)
+
+    def traced_replace(src, dst):
+        calls.append("replace")
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", traced_fsync)
+    monkeypatch.setattr(os, "replace", traced_replace)
+    row = tuple(None for _ in RESULT_SCHEMA.fields)
+    for mode in ("append", "overwrite"):
+        calls.clear()
+        results_store.arrow_append_rows(str(tmp_path / "store"), [row], RESULT_SCHEMA, mode)
+        assert calls == ["fsync file", "replace", "fsync dir"], mode
+
+
 class _Killed(BaseException):
     """A kill -9: not an ``Exception``, so no handler in the store catches
     it."""

@@ -1,0 +1,102 @@
+"""The metric catalog (``plans/fused.metric_term``) is the one place a fused
+column metric gets its alias, its NaN rule and its Column: equal metrics
+share one term whoever asks for them, and no other package code masks NaN
+or names a catalog metric on its own."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+from data_profiler_spark.core.suite import ConstraintSuite
+from data_profiler_spark.plans import fused
+from data_profiler_spark.plans.fused import dedup_terms, metric_term
+from data_profiler_spark.validator import Validator
+
+PACKAGE = Path(__file__).resolve().parents[1] / "data_profiler_spark"
+CATALOG = Path(fused.__file__).resolve()
+
+
+def bypasses(src: str, names: set[str]) -> list[str]:
+    """``line: call`` of every ``F.isnan(...)`` call in ``src``, and every
+    ``metric_alias(...)`` call whose metric name is one of ``names``."""
+    out = []
+    for n in ast.walk(ast.parse(src)):
+        if not isinstance(n, ast.Call):
+            continue
+        f = n.func
+        if isinstance(f, ast.Attribute) and f.attr == "isnan" \
+                and isinstance(f.value, ast.Name) and f.value.id == "F":
+            out.append((n.lineno, "F.isnan"))
+        elif isinstance(f, ast.Name) and f.id == "metric_alias" and n.args \
+                and isinstance(n.args[0], ast.Constant) and n.args[0].value in names:
+            out.append((n.lineno, f"metric_alias({n.args[0].value!r})"))
+    return [f"{line}: {call}" for line, call in sorted(out)]
+
+
+def test_scan_flags_a_probe():
+    src = (
+        "import numpy as np\n"
+        "a = F.when(~F.isnan(c), c)\n"
+        "b = np.isnan(x)\n"
+        "m = metric_alias('column.mean', column='x')\n"
+        "u = metric_alias('unexpected_count', constraint_id='c')\n"
+    )
+    assert bypasses(src, {"column.mean"}) == ["2: F.isnan", "4: metric_alias('column.mean')"]
+
+
+def test_no_package_code_bypasses_the_catalog():
+    names = set(fused._METRICS)
+    found = {
+        str(p.relative_to(PACKAGE)): hits
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p.resolve() != CATALOG and (hits := bypasses(p.read_text(), names))
+    }
+    assert found == {}
+
+
+def test_equal_metrics_share_one_term(typed_small):
+    """Two drift checks on the same bins, a mean range and a z-score fuse
+    9 terms: 2 bins, the tails and the non-null count once for both drift
+    checks, one mean for the range and the z-score, and the z-score's
+    element, missing and stdev terms."""
+    baseline = {"bins": [0.0, 15.0, 30.0], "weights": [0.5, 0.5], "n": 30}
+    suite = (
+        ConstraintSuite("shared")
+        .add("expect_column_distribution_to_match_baseline",
+             column="floats", baseline=baseline, p=0.05)
+        .add("expect_column_distribution_to_match_baseline",
+             column="floats", baseline=baseline, p=0.01)
+        .add("expect_column_mean_to_be_between", column="floats", min_value=0, max_value=30)
+        .add("expect_column_value_z_scores_to_be_less_than", column="floats", threshold=3)
+    )
+    assert len(dedup_terms(Validator(typed_small).compile(suite))) == 9
+
+
+def test_profile_suite_and_rule_profiler_name_a_metric_alike(typed_small, monkeypatch):
+    """``column.mean`` of a column is one alias for a constraint, a rule
+    profiler parameter and ``profile()``."""
+    from data_profiler_spark.operators import profile as profile_mod
+    from data_profiler_spark.operators.rule_profiler import MetricParameterBuilder, _column_domain
+
+    alias = metric_term(typed_small, "column.mean", "floats").alias
+    suite = ConstraintSuite("m").add(
+        "expect_column_mean_to_be_between", column="floats", min_value=0
+    )
+    (compiled,) = Validator(typed_small).compile(suite)
+    assert [t.alias for t in compiled.agg_terms] == [alias]
+    pb = MetricParameterBuilder("mean", "column.mean")
+    assert pb.term(typed_small, _column_domain("floats"), {}).alias == alias
+
+    passes = []
+    run = profile_mod.run_fused_pass
+
+    def traced(df, terms, group_by):
+        passes.append({t.alias for t in terms})
+        return run(df, terms, group_by)
+
+    monkeypatch.setattr(profile_mod, "run_fused_pass", traced)
+    (tp,) = profile_mod.profile(typed_small, columns=["floats"], hist_bins=0)
+    assert alias in passes[0]
+    (r,) = Validator(typed_small).validate(suite).results
+    assert tp.columns["floats"].mean_v == r.observed_value

@@ -33,6 +33,12 @@ def test_profile_typed_small(typed_small):
     counts, _ = np.histogram(nn, bins=ints.hist_bins)
     assert ints.hist_weights == pytest.approx(list(counts / counts.sum()))
 
+    # floats holds one NaN: a NULL to the profile, as to pandas
+    floats = tp.columns["floats"]
+    assert floats.null_count == pdf["floats"].isna().sum() == 1
+    assert floats.approx_distinct == pdf["floats"].nunique()
+    assert floats.max_v == pytest.approx(pdf["floats"].max())
+
     cat = tp.columns["cat"]
     assert cat.top_k is not None
     assert cat.top_k[0] == {"value": "a", "count": 12}
