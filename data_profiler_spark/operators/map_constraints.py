@@ -14,7 +14,9 @@ share this lowering (``compile_map_constraint``) and its verdict; their
 unexpected count is not a row predicate, so they supply a count plan,
 which one post pass collects per group. Null handling composes exactly like the reference's
 ``column_condition_partial`` Spark branch (map_metric_provider.py:478-490):
-``column.isNotNull() & ~expected_condition``.
+``column.isNotNull() & ~expected_condition``. In single-column domains a
+float NaN is NULL (``nan_as_null``), as in every catalog metric; pair,
+multicolumn and key domains read the columns as they are.
 
 Verdict semantics (expectation.py:1321-1369, 1760-1825):
     success  = (denominator - unexpected)/denominator >= mostly,
@@ -50,6 +52,7 @@ from data_profiler_spark.plans.fused import (
     GroupKey,
     metric_alias,
     metric_term,
+    nan_as_null,
 )
 
 
@@ -137,6 +140,7 @@ UnexpectedCount = Callable[
 
 def compile_map_constraint(
     constraint: Constraint,
+    df: DataFrame,
     *,
     domain_nonnull: Column,
     unexpected: Column | None = None,
@@ -155,7 +159,9 @@ def compile_map_constraint(
     in the fused pass, or an ``unexpected_count`` plan, which one post pass
     counts per group with ``groupBy(*group_by)`` (no keys: Spark's global
     aggregate). The row condition scopes the element and missing terms, the
-    count plan and the ``violations`` plan alike.
+    count plan and the ``violations`` plan alike. The element count is the
+    catalog's ``table.row_count`` of ``df`` under that condition, so it is
+    one term with the table row-count constraints'.
 
     ``violations_from(frame, group_by, counted)`` plans the violation rows
     from the frame the post pass counted (the duplicate or orphan keys).
@@ -165,12 +171,13 @@ def compile_map_constraint(
     rc = _row_condition(constraint)
     rc_key = _row_condition_sql(constraint)
 
-    elem_a = metric_alias("element_count", rc=rc_key)
+    elem_t = metric_term(df, "table.row_count", row_condition=rc_key)
+    elem_a = elem_t.alias
     miss_a = metric_alias("missing_count", domain=str(domain_nonnull), rc=rc_key)
     unex_a = metric_alias("unexpected_count", constraint_id=constraint.id)
 
     terms = [
-        AggTerm(elem_a, F.count(F.when(rc, F.lit(1)) if rc is not None else F.lit(1))),
+        elem_t,
         AggTerm(miss_a, F.sum(F.when(_guard(rc, ~domain_nonnull), 1).otherwise(0))),
         *(extra_terms or []),
     ]
@@ -247,10 +254,12 @@ def compile_map_constraint(
 
 @register("expect_column_values_to_not_be_null")
 def c_not_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    """ref: column_values_non_null.py:36; domain = ALL rows (no null filter)."""
-    col = F.col(constraint.kwargs["column"])
+    """ref: column_values_non_null.py:36; domain = ALL rows (no null filter).
+    A float NaN is NULL here, as in every catalog metric."""
+    col = nan_as_null(df, constraint.kwargs["column"])
     return compile_map_constraint(
         constraint,
+        df,
         unexpected=col.isNull(),
         domain_nonnull=F.lit(True),
         denominator="element",
@@ -259,9 +268,10 @@ def c_not_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
 
 @register("expect_column_values_to_be_null")
 def c_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    col = F.col(constraint.kwargs["column"])
+    col = nan_as_null(df, constraint.kwargs["column"])
     return compile_map_constraint(
         constraint,
+        df,
         unexpected=col.isNotNull(),
         domain_nonnull=F.lit(True),
         denominator="element",
@@ -273,10 +283,11 @@ def c_null(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstrai
 # --------------------------------------------------------------------------
 
 
-def _std_map(constraint: Constraint, expected: Column) -> CompiledConstraint:
-    col = F.col(constraint.kwargs["column"])
+def _std_map(constraint: Constraint, df: DataFrame, expected: Column) -> CompiledConstraint:
+    """The domain is the column's non-null values; a float NaN is NULL."""
+    col = nan_as_null(df, constraint.kwargs["column"])
     return compile_map_constraint(
-        constraint, unexpected=~expected, domain_nonnull=col.isNotNull()
+        constraint, df, unexpected=~expected, domain_nonnull=col.isNotNull()
     )
 
 
@@ -291,7 +302,7 @@ def c_between(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConst
     if kw.get("max_value") is not None:
         conds.append(col < kw["max_value"] if kw.get("strict_max") else col <= kw["max_value"])
     expected = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-    return _std_map(constraint, expected)
+    return _std_map(constraint, df, expected)
 
 
 @register("expect_column_values_to_be_in_set")
@@ -300,7 +311,7 @@ def c_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
     kw = constraint.kwargs
     vs = list(kw.get("value_set") or [])
     expected = F.col(kw["column"]).isin(vs) if vs else F.lit(True)
-    return _std_map(constraint, expected)
+    return _std_map(constraint, df, expected)
 
 
 @register("expect_column_values_to_not_be_in_set")
@@ -308,20 +319,20 @@ def c_not_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCo
     kw = constraint.kwargs
     vs = list(kw.get("value_set") or [])
     expected = ~F.col(kw["column"]).isin(vs) if vs else F.lit(True)
-    return _std_map(constraint, expected)
+    return _std_map(constraint, df, expected)
 
 
 @register("expect_column_values_to_match_regex")
 def c_match_regex(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_values_match_regex.py:39-40 (rlike)."""
     kw = constraint.kwargs
-    return _std_map(constraint, F.col(kw["column"]).rlike(kw["regex"]))
+    return _std_map(constraint, df, F.col(kw["column"]).rlike(kw["regex"]))
 
 
 @register("expect_column_values_to_not_match_regex")
 def c_not_match_regex(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    return _std_map(constraint, ~F.col(kw["column"]).rlike(kw["regex"]))
+    return _std_map(constraint, df, ~F.col(kw["column"]).rlike(kw["regex"]))
 
 
 @register("expect_column_values_to_match_regex_list")
@@ -331,7 +342,7 @@ def c_match_regex_list(constraint: Constraint, df: DataFrame, ctx: dict) -> Comp
     col = F.col(kw["column"])
     conds = [col.rlike(r) for r in kw["regex_list"]]
     op = (lambda a, b: a & b) if kw.get("match_on", "any") == "all" else (lambda a, b: a | b)
-    return _std_map(constraint, reduce(op, conds))
+    return _std_map(constraint, df, reduce(op, conds))
 
 
 @register("expect_column_values_to_not_match_regex_list")
@@ -339,7 +350,7 @@ def c_not_match_regex_list(constraint: Constraint, df: DataFrame, ctx: dict) -> 
     """ref: column_values_not_match_regex_list.py:55-61 (must match none)."""
     kw = constraint.kwargs
     col = F.col(kw["column"])
-    return _std_map(constraint, reduce(lambda a, b: a & b, [~col.rlike(r) for r in kw["regex_list"]]))
+    return _std_map(constraint, df, reduce(lambda a, b: a & b, [~col.rlike(r) for r in kw["regex_list"]]))
 
 
 @register("expect_column_values_to_match_like_pattern")
@@ -348,13 +359,13 @@ def c_like(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstrai
     (column_values_match_like_pattern.py:21-59); Spark's Column.like fills
     the gap."""
     kw = constraint.kwargs
-    return _std_map(constraint, F.col(kw["column"]).like(kw["like_pattern"]))
+    return _std_map(constraint, df, F.col(kw["column"]).like(kw["like_pattern"]))
 
 
 @register("expect_column_values_to_not_match_like_pattern")
 def c_not_like(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    return _std_map(constraint, ~F.col(kw["column"]).like(kw["like_pattern"]))
+    return _std_map(constraint, df, ~F.col(kw["column"]).like(kw["like_pattern"]))
 
 
 @register("expect_column_values_to_match_like_pattern_list")
@@ -369,7 +380,7 @@ def c_like_list(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCon
         else (lambda a, b: a | b),
         conds,
     )
-    return _std_map(constraint, comb)
+    return _std_map(constraint, df, comb)
 
 
 @register("expect_column_values_to_not_match_like_pattern_list")
@@ -379,7 +390,7 @@ def c_not_like_list(constraint: Constraint, df: DataFrame, ctx: dict) -> Compile
     kw = constraint.kwargs
     col = F.col(kw["column"])
     comb = reduce(lambda a, b: a | b, [col.like(p) for p in kw["like_pattern_list"]])
-    return _std_map(constraint, ~comb)
+    return _std_map(constraint, df, ~comb)
 
 
 @register("expect_column_value_lengths_to_be_between")
@@ -393,13 +404,13 @@ def c_length_between(constraint: Constraint, df: DataFrame, ctx: dict) -> Compil
     if kw.get("max_value") is not None:
         conds.append(ln < kw["max_value"] if kw.get("strict_max") else ln <= kw["max_value"])
     expected = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-    return _std_map(constraint, expected)
+    return _std_map(constraint, df, expected)
 
 
 @register("expect_column_value_lengths_to_equal")
 def c_length_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     kw = constraint.kwargs
-    return _std_map(constraint, F.length(F.col(kw["column"])) == kw["value"])
+    return _std_map(constraint, df, F.length(F.col(kw["column"])) == kw["value"])
 
 
 _STRFTIME_TO_SPARK = {
@@ -519,11 +530,11 @@ def c_strftime(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
         expected = _strptime_fallback_udf(kw["strftime_format"])(
             col.cast("string")
         )
-        return _std_map(constraint, expected)
+        return _std_map(constraint, df, expected)
     expected = F.try_to_timestamp(col, F.lit(fmt)).isNotNull() & (
         F.length(col) == F.length(F.date_format(F.try_to_timestamp(col, F.lit(fmt)), fmt))
     )
-    return _std_map(constraint, expected)
+    return _std_map(constraint, df, expected)
 
 
 @F.pandas_udf(T.BooleanType())
@@ -560,7 +571,7 @@ def c_dateutil(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
             | F.try_to_timestamp(col, F.lit("yyyy/MM/dd")).isNotNull()
             | F.try_to_timestamp(col, F.lit("MM/dd/yyyy")).isNotNull()
         )
-        return _std_map(constraint, expected)
+        return _std_map(constraint, df, expected)
     if not isinstance(df.schema[kw["column"]].dataType, T.StringType):
         raise TypeError(
             "Values passed to expect_column_values_to_be_dateutil_parseable "
@@ -568,7 +579,7 @@ def c_dateutil(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
             "dates or timestamps, please call the expectation before "
             "converting from string format."
         )
-    return _std_map(constraint, _dateutil_parseable_udf(col))
+    return _std_map(constraint, df, _dateutil_parseable_udf(col))
 
 
 @F.pandas_udf(T.BooleanType())
@@ -590,7 +601,7 @@ def c_json_parseable(constraint: Constraint, df: DataFrame, ctx: dict) -> Compil
     """Arrow-batched replacement for the row UDF at
     column_values_json_parseable.py:29-39."""
     kw = constraint.kwargs
-    return _std_map(constraint, _json_parseable_udf(F.col(kw["column"])))
+    return _std_map(constraint, df, _json_parseable_udf(F.col(kw["column"])))
 
 
 @register("expect_column_values_to_match_json_schema")
@@ -621,7 +632,7 @@ def c_json_schema(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
 
         return s.map(ok)
 
-    return _std_map(constraint, matches(F.col(kw["column"])))
+    return _std_map(constraint, df, matches(F.col(kw["column"])))
 
 
 # --------------------------------------------------------------------------
@@ -639,7 +650,7 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
     """
     kw = constraint.kwargs
     colname = kw["column"]
-    col = F.col(colname)
+    col = nan_as_null(df, colname)  # a NaN row is outside the domain
     threshold = float(kw["threshold"])
     double_sided = bool(kw.get("double_sided", True))
     # the catalog terms: with no row condition, the mean and stdev
@@ -674,6 +685,7 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
 
     return compile_map_constraint(
         constraint,
+        df,
         domain_nonnull=col.isNotNull(),
         unexpected_count=unexpected_count,
         extra_terms=[mean_t, std_t],
@@ -687,7 +699,7 @@ def c_zscore(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstr
 # --------------------------------------------------------------------------
 
 
-def _monotonic(constraint: Constraint, increasing: bool) -> CompiledConstraint:
+def _monotonic(constraint: Constraint, df: DataFrame, increasing: bool) -> CompiledConstraint:
     """ref: column_values_increasing.py:51-120 / decreasing.py:46-112.
 
     The reference orders by a CONSTANT window (single partition — its own
@@ -720,6 +732,7 @@ def _monotonic(constraint: Constraint, increasing: bool) -> CompiledConstraint:
 
     return compile_map_constraint(
         constraint,
+        df,
         domain_nonnull=col.isNotNull(),
         unexpected_count=lambda frame, group_by, groups: (
             _diff_frame(frame, group_by), F.sum(F.col("__bad").cast("long"))
@@ -732,12 +745,12 @@ def _monotonic(constraint: Constraint, increasing: bool) -> CompiledConstraint:
 
 @register("expect_column_values_to_be_increasing")
 def c_increasing(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    return _monotonic(constraint, increasing=True)
+    return _monotonic(constraint, df, increasing=True)
 
 
 @register("expect_column_values_to_be_decreasing")
 def c_decreasing(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    return _monotonic(constraint, increasing=False)
+    return _monotonic(constraint, df, increasing=False)
 
 
 # --------------------------------------------------------------------------
@@ -762,7 +775,7 @@ def c_pair_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCo
     kw = constraint.kwargs
     a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
     return compile_map_constraint(
-        constraint, unexpected=~a.eqNullSafe(b), domain_nonnull=_pair_domain(kw)
+        constraint, df, unexpected=~a.eqNullSafe(b), domain_nonnull=_pair_domain(kw)
     )
 
 
@@ -773,7 +786,7 @@ def c_pair_greater(constraint: Constraint, df: DataFrame, ctx: dict) -> Compiled
     a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
     expected = (a >= b) if kw.get("or_equal") else (a > b)
     return compile_map_constraint(
-        constraint, unexpected=~expected, domain_nonnull=_pair_domain(kw)
+        constraint, df, unexpected=~expected, domain_nonnull=_pair_domain(kw)
     )
 
 
@@ -788,7 +801,7 @@ def c_pair_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
         [a.eqNullSafe(F.lit(va)) & b.eqNullSafe(F.lit(vb)) for va, vb in pairs],
     ) if pairs else F.lit(True)
     return compile_map_constraint(
-        constraint, unexpected=~expected, domain_nonnull=_pair_domain(kw)
+        constraint, df, unexpected=~expected, domain_nonnull=_pair_domain(kw)
     )
 
 
@@ -809,7 +822,7 @@ def c_multicol_sum(constraint: Constraint, df: DataFrame, ctx: dict) -> Compiled
     total = kw["sum_total"]
     expected = reduce(lambda a, b: a + b, [F.col(c) for c in kw["column_list"]]) == F.lit(total)
     return compile_map_constraint(
-        constraint, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
+        constraint, df, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
     )
 
 
@@ -826,5 +839,5 @@ def c_unique_within_record(constraint: Constraint, df: DataFrame, ctx: dict) -> 
     nn = F.filter(arr, lambda x: x.isNotNull())
     expected = F.size(F.array_distinct(nn)) == F.size(nn)
     return compile_map_constraint(
-        constraint, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
+        constraint, df, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
     )

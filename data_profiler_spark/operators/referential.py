@@ -65,6 +65,7 @@ def c_referential(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
 
     return compile_map_constraint(
         constraint,
+        df,
         domain_nonnull=key_nonnull,
         unexpected_count=orphan_keys,
         violations=orphans,

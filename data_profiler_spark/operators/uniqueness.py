@@ -54,7 +54,9 @@ def duplicate_key_counts(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledConstraint:
+def _compile_unique(
+    constraint: Constraint, df: DataFrame, key_cols: list[str]
+) -> CompiledConstraint:
     """Unexpected rows: rows whose key, with no NULL part, occurs more than
     once. Counted per group as the summed ``key_count`` of the duplicate
     keys (group scope) or as the rows a semi-join against the duplicate
@@ -96,6 +98,7 @@ def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledCons
 
     return compile_map_constraint(
         constraint,
+        df,
         domain_nonnull=key_nonnull,
         unexpected_count=unexpected_count,
         violations=dup_rows,
@@ -106,9 +109,9 @@ def _compile_unique(constraint: Constraint, key_cols: list[str]) -> CompiledCons
 
 @register("expect_column_values_to_be_unique")
 def c_unique(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    return _compile_unique(constraint, [constraint.kwargs["column"]])
+    return _compile_unique(constraint, df, [constraint.kwargs["column"]])
 
 
 @register("expect_compound_columns_to_be_unique")
 def c_compound_unique(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    return _compile_unique(constraint, list(constraint.kwargs["column_list"]))
+    return _compile_unique(constraint, df, list(constraint.kwargs["column_list"]))

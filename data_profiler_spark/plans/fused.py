@@ -156,10 +156,11 @@ class CompiledConstraint:
     (partial_unexpected_list / counts / unexpected_list).
     ``post_pass_needs_metrics=False`` marks a post pass that never reads the
     fused-pass results (uniqueness, referential, monotonicity, mode-set,
-    exact KS) — the Validator starts it CONCURRENTLY with the fused pass
-    (passing ``groups=[]``), shortening the serial job chain; two-phase
-    metrics that consume pass-1 aggregates (z-score mean/stddev, the
-    Cramér's-phi cardinality guard) keep the default True and run after.
+    exact KS, Cramér's V) — the Validator starts it CONCURRENTLY with the
+    fused pass (passing ``groups=[]``), shortening the serial job chain;
+    two-phase metrics that consume pass-1 aggregates (z-score mean/stddev,
+    the bootstrapped KS's non-null counts) keep the default True and run
+    after.
     """
 
     constraint: Constraint

@@ -183,7 +183,7 @@ class Validator:
         # parallelism). Post passes that never read the fused metrics
         # (post_pass_needs_metrics=False) start BEFORE the fused pass so
         # they overlap it too; metric-consuming ones (z-score phase 2,
-        # crosstab guard) run after pass 1 resolves. Each constraint
+        # bootstrapped KS) run after pass 1 resolves. Each constraint
         # writes its own metric aliases, so merges are conflict-free.
         post = [c for c in compiled if c.post_pass_fn is not None]
         early = [c for c in post if not c.post_pass_needs_metrics]

@@ -68,6 +68,61 @@ def test_ks_test_sketch(typed_small):
     assert r.success is True  # uniform-ish data vs uniform expected
 
 
+def test_ks_test_reads_its_tails(spark):
+    """The plain KS compares ``[below] + bins + [above]`` against
+    ``[tail_lo] + weights + [tail_hi]``: 40 values spread evenly over the
+    bins and 360 above the last edge fail it, as they fail drift; on the
+    bins alone they match exactly (D = 0)."""
+    from data_profiler_spark.core.session import local_frame
+
+    rows = [((i + 0.5) / 40,) for i in range(40)] + [(2.0 + i,) for i in range(360)]
+    df = local_frame(spark, rows, "v double")
+    po = {"bins": [0.0, 0.25, 0.5, 0.75, 1.0], "weights": [0.25] * 4}
+    r = Validator(df).expect(
+        "expect_column_ks_test_p_value_to_be_greater_than",
+        column="v", partition_object=po, p=0.05,
+    )
+    assert r.success is False
+    assert r.details["ks_d"] == pytest.approx(0.9)
+    drift = Validator(df).expect(
+        "expect_column_distribution_to_match_baseline",
+        column="v", baseline={**po, "n": 400}, p=0.05,
+    )
+    assert (drift.success, drift.observed_value) == (False, r.observed_value)
+    # the same mass expected in the upper tail: no difference at all
+    r_tail = Validator(df).expect(
+        "expect_column_ks_test_p_value_to_be_greater_than",
+        column="v", partition_object={**po, "weights": [0.025] * 4,
+                                      "tail_weights": [0.0, 0.9]},
+        p=0.05,
+    )
+    assert r_tail.success is True
+    assert r_tail.details["ks_d"] == pytest.approx(0.0, abs=1e-12)
+
+
+def test_plain_ks_refuses_resampling_kwargs(typed_small):
+    """The constraint type picks the KS test: a ``bootstrap*`` kwarg on the
+    plain type fails at compile and names the bootstrapped type."""
+    r = Validator(typed_small).expect(
+        "expect_column_ks_test_p_value_to_be_greater_than",
+        column="floats",
+        partition_object={"bins": [0.0, 15.0, 30.0], "weights": [0.5, 0.5]},
+        bootstrap_samples=100,
+    )
+    assert r.success is False
+    assert "bootstrap_samples" in r.exception_info
+    assert "expect_column_bootstrapped_ks_test_p_value_to_be_greater_than" in r.exception_info
+    # a partition of the other shape fails at compile too, naming what is missing
+    for type_, po in (
+        ("expect_column_ks_test_p_value_to_be_greater_than",
+         {"values": ["a"], "weights": [1.0]}),
+        ("expect_column_chisquare_test_p_value_to_be_greater_than",
+         {"bins": [0.0, 1.0], "weights": [1.0]}),
+    ):
+        r = Validator(typed_small).expect(type_, column="cat", partition_object=po)
+        assert r.success is False and "compile error" in r.exception_info
+
+
 def test_cramers_phi(typed_small):
     r = Validator(typed_small).expect(
         "expect_column_pair_cramers_phi_value_to_be_less_than",
@@ -164,21 +219,12 @@ def test_cramers_phi_sparse_over_cap_computes(spark):
     for x in rows:
         t[ai[x["a"]], bi[x["b"]]] = x["count"]
     assert r.observed_value == pytest.approx(S.cramers_v(t), rel=1e-9)
-    # the ultimate guard still exists for pathological cardinality, with a
-    # hint naming the knob (VERDICT r3 #10)
-    bad = Validator(df).expect(
-        "expect_column_pair_cramers_phi_value_to_be_less_than",
-        column_A="a", column_B="b", threshold=0.5, max_distributed_cells=1_000,
-    )
-    assert bad.success is False
-    assert bad.exception_info and "max_distributed_cells" in bad.exception_info
 
 
 def test_cramers_phi_grouped_mixed_paths(spark):
-    """Grouped: computed and guarded groups coexist in one run. Each
-    computed group matches the numpy oracle on its own table, a group with
-    no row holding both values reads 0.0, and a guarded group fails with
-    the knob named."""
+    """Grouped: every group is computed in one run, a near-diagonal group of
+    ~3000 x 3000 categories too. Each group matches the numpy oracle on its
+    own table, and a group with no row holding both values reads 0.0."""
     import numpy as np
     import pyspark.sql.functions as SF
 
@@ -208,12 +254,12 @@ def test_cramers_phi_grouped_mixed_paths(spark):
 
     suite = ConstraintSuite("phi_mixed").add(
         "expect_column_pair_cramers_phi_value_to_be_less_than",
-        column_A="a", column_B="b", threshold=1.01, max_distributed_cells=1_000_000,
+        column_A="a", column_B="b", threshold=1.01,
     )
     df = big.unionByName(small).unionByName(no_pairs).unionByName(huge)
     res = Validator(df).validate(suite, group_by=["g"])
     by_g = {r.group["g"]: r for r in res.results}
-    for g, frame in (("g_big", big), ("g_small", small)):
+    for g, frame in (("g_big", big), ("g_small", small), ("g_huge", huge)):
         rows = frame.groupBy("a", "b").count().collect()
         avals = sorted({x["a"] for x in rows})
         bvals = sorted({x["b"] for x in rows})
@@ -224,8 +270,6 @@ def test_cramers_phi_grouped_mixed_paths(spark):
         assert by_g[g].observed_value == pytest.approx(S.cramers_v(t), rel=1e-9)
     assert by_g["g_none"].success is True
     assert by_g["g_none"].observed_value == 0.0
-    assert by_g["g_huge"].success is False  # guarded
-    assert "max_distributed_cells" in by_g["g_huge"].exception_info
     # ungrouped, no row holding both values: no pair to count, no failure
     (flat,) = Validator(no_pairs).validate(suite).results
     assert (flat.success, flat.observed_value, flat.exception_info) == (True, 0.0, None)
@@ -300,10 +344,9 @@ def test_parameterized_ks_grouped_int_key(spark):
 
 
 def test_bootstrapped_ks_seeded_resampling(spark):
-    """VERDICT r3 #5: the bootstrapped-KS name now honors
-    bootstrap_samples via a seeded distributed Poisson bootstrap matching
-    the reference's (1 + #{p_i >= p}) / (R + 1) statistic; the default run
-    still substitutes the asymptotic sketch and SAYS so in details."""
+    """The bootstrapped-KS type always runs the seeded distributed Poisson
+    bootstrap, matching the reference's (1 + #{p_i >= p}) / (R + 1)
+    statistic: by default R = 1000 resamples of size 2 x bins."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -311,15 +354,17 @@ def test_bootstrapped_ks_seeded_resampling(spark):
     good = spark.createDataFrame(
         [(float(x),) for x in rng.uniform(0, 1, 4000)], ["v"]
     )
-    # default: substitution + explicit note naming the opt-in knob
+    # default: the reference's R and s
     r_def = Validator(good).expect(
         "expect_column_bootstrapped_ks_test_p_value_to_be_greater_than",
         column="v", partition_object=po, p=0.05,
     )
     assert r_def.success is True
-    assert r_def.details["bootstrap"] == "replaced_by_asymptotic"
-    assert "bootstrap_samples" in r_def.details["hint"]
-    # opt-in: real resampling; matching data -> high aggregated p
+    assert r_def.details == {
+        "bootstrap_samples": 1000, "bootstrap_sample_size": 8,
+        "method": "poisson_bootstrap_distributed",
+    }
+    # matching data -> high aggregated p
     r_boot = Validator(good).expect(
         "expect_column_bootstrapped_ks_test_p_value_to_be_greater_than",
         column="v", partition_object=po, p=0.05,

@@ -207,6 +207,29 @@ def test_zscore(typed_small, pdf):
     assert r.details["stddev"] == pytest.approx(nn.std(ddof=1))
 
 
+def test_nan_is_null_in_single_column_domains(spark):
+    """A float NaN is NULL for the null checks, the value domain and the
+    z-score, as it is for every catalog metric."""
+    from data_profiler_spark.core.session import local_frame
+
+    df = local_frame(spark, [(1.0,), (float("nan"),), (None,)], "x double")
+    r = run_one(df, "expect_column_values_to_not_be_null", column="x")
+    assert (r.element_count, r.unexpected_count) == (3, 2)
+    r = run_one(df, "expect_column_values_to_be_null", column="x")
+    assert r.unexpected_count == 1
+    r = run_one(df, "expect_column_values_to_be_between", column="x",
+                min_value=0, max_value=5)
+    assert (r.success, r.unexpected_count, r.missing_count) == (True, 0, 2)
+
+    zdf = local_frame(
+        spark, [(1.0,), (2.0,), (float("nan"),), (None,), (2.0,)], "x double"
+    )
+    r = run_one(zdf, "expect_column_value_z_scores_to_be_less_than",
+                column="x", threshold=1.0)
+    # mean 5/3, stdev 0.577 over [1, 2, 2]: only the 1.0 row is |z| >= 1
+    assert (r.unexpected_count, r.missing_count) == (1, 2)
+
+
 def test_increasing(spark):
     df = spark.createDataFrame(
         [(1, 1.0), (2, 2.0), (3, 1.5), (4, 3.0), (5, None)], ["ord", "v"]

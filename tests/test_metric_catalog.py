@@ -73,6 +73,74 @@ def test_equal_metrics_share_one_term(typed_small):
     assert len(dedup_terms(Validator(typed_small).compile(suite))) == 9
 
 
+def test_map_constraints_share_the_row_count_term(typed_small):
+    """A map constraint's element count is the catalog's ``table.row_count``:
+    a row-count check and a not-null check fuse 3 terms (the row count, and
+    the not-null check's missing and unexpected counts), not 4."""
+    suite = (
+        ConstraintSuite("rows")
+        .add("expect_table_row_count_to_equal", value=30)
+        .add("expect_column_values_to_not_be_null", column="ints")
+    )
+    row_count = metric_term(typed_small, "table.row_count").alias
+    terms = dedup_terms(Validator(typed_small).compile(suite))
+    assert len(terms) == 3 and row_count in {t.alias for t in terms}
+    r_rows, r_null = Validator(typed_small).validate(suite).results
+    assert (r_rows.observed_value, r_null.element_count) == (30, 30)
+
+
+def _compile_jobless(spark, df, suite, tables=None):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    compiled = Validator(df, tables=tables).compile(suite)
+    assert set(tracker.getJobIdsForGroup()) == before  # compiling runs no job
+    return compiled
+
+
+def test_north_plan(spark):
+    """The north suite (``bench_scaling._pipeline``'s, with a drift baseline
+    over ``code_table.LANGS``) fuses 18 terms: the shared row count, 2
+    missing and 2 unexpected terms of the null and length checks, the
+    missing terms of the unique and referential checks, and 9 value counts,
+    the unlisted remainder and the non-null count of the drift check. Its
+    two post passes, uniqueness and referential, read no fused metric, so
+    both start alongside the fused pass."""
+    from data_profiler_spark.core.session import local_frame
+    from data_profiler_spark.sources.code_table import LANG_WEIGHTS, LANGS
+
+    files = local_frame(
+        spark, [], "repo string, path string, commit string, lang string, "
+        "content string, partition_id int",
+    )
+    commits = local_frame(spark, [], "repo string, commit string")
+    suite = (
+        ConstraintSuite("north_bench")
+        .add("expect_column_values_to_not_be_null", column="content", mostly=0.98)
+        .add("expect_column_value_lengths_to_be_between",
+             column="content", min_value=0, max_value=1_000_000)
+        .add("expect_compound_columns_to_be_unique",
+             column_list=["repo", "path", "commit"])
+        .add("expect_compound_columns_to_exist_in_table",
+             column_list=["repo", "commit"], other_table_name="commits",
+             mostly=0.99)
+        .add("expect_column_distribution_to_match_baseline", column="lang",
+             baseline={"values": LANGS, "weights": LANG_WEIGHTS, "n": 100_000},
+             p=0.001)
+    )
+    compiled = _compile_jobless(spark, files, suite, {"commits": commits})
+    assert len(dedup_terms(compiled)) == 18
+    post = [(c.constraint.type, c.post_pass_needs_metrics)
+            for c in compiled if c.post_pass_fn is not None]
+    assert post == [("expect_compound_columns_to_be_unique", False),
+                    ("expect_compound_columns_to_exist_in_table", False)]
+
+    (phi,) = _compile_jobless(spark, files, ConstraintSuite("phi").add(
+        "expect_column_pair_cramers_phi_value_to_be_less_than",
+        column_A="lang", column_B="repo",
+    ))
+    assert (phi.agg_terms, phi.post_pass_needs_metrics) == ([], False)
+
+
 def test_profile_suite_and_rule_profiler_name_a_metric_alike(typed_small, monkeypatch):
     """``column.mean`` of a column is one alias for a constraint, a rule
     profiler parameter and ``profile()``."""

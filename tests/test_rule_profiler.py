@@ -134,20 +134,15 @@ def test_profile_generates_min_max_suite(spark, typed_small):
 
     # The generated suite validates against the data it came from. Metric
     # resolution skips NaN (pandas-skipna parity), so floats gets
-    # min=0/max=29 — and the NaN row then fails the generated between
-    # constraint, because the reference's Spark engine only injects the
-    # NaN filter for increasing/decreasing maps
-    # (sparkdf_execution_engine.py:617-623, column_values_between has
-    # filter_null only). Everything else is green.
+    # min=0/max=29, and the between constraint's domain skips the NaN row
+    # too (a NaN is NULL there as well): every verdict is green.
     result = Validator(typed_small).validate(suite)
     by_cid = {c.id: c for c in suite.constraints}
     for r in result.results:
         c = by_cid[r.constraint_id]
+        assert r.success, c
         if c.kwargs.get("column") == "floats":
-            assert not r.success
-            assert r.unexpected_count == 1  # the NaN row
-        else:
-            assert r.success, c
+            assert (r.unexpected_count, r.missing_count) == (0, 1)  # the NaN row
 
 
 def test_profile_is_one_fused_pass(spark, typed_small, monkeypatch):
