@@ -22,10 +22,10 @@ from __future__ import annotations
 
 from typing import Any
 
+import pyspark.sql.types as SparkTypes
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_profiler_spark.core.result import ConstraintResult
 from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.registry import register
@@ -56,52 +56,23 @@ def _agg_between(
     """Observed value: the term's; verdict: ``success(value, kwargs)``."""
     kw = constraint.kwargs
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         v = metrics.get(term.alias)
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=success(v, kw),
-            group=group,
-            observed_value=v,
-        )
+        return {"success": success(v, kw), "observed_value": v}
 
     return CompiledConstraint(constraint=constraint, agg_terms=[term], verdict_fn=verdict)
-
-
-def _numeric_gate(constraint: Constraint, df: DataFrame) -> CompiledConstraint | None:
-    """Compile-time dtype check mirroring the reference's numeric whitelist
-    (column_mean.py:35-38): non-numeric columns fail cleanly instead of
-    blowing up the whole fused pass with a CAST error."""
-    from pyspark.sql.types import NumericType
-
-    colname = constraint.kwargs["column"]
-    if isinstance(df.schema[colname].dataType, NumericType):
-        return None
-
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(constraint.kwargs),
-            success=False,
-            group=group,
-            exception_info=f"column {colname!r} is not numeric "
-            f"({df.schema[colname].dataType.simpleString()})",
-        )
-
-    return CompiledConstraint(constraint=constraint, agg_terms=[], verdict_fn=verdict)
 
 
 def _simple_agg_registrar(type_name: str, metric: str, numeric: bool = False) -> None:
     @register(type_name)
     def _compile(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-        if numeric:
-            gate = _numeric_gate(constraint, df)
-            if gate is not None:
-                return gate
-        return _agg_between(constraint, metric_term(df, metric, constraint.kwargs["column"]))
+        colname = constraint.kwargs["column"]
+        dtype = df.schema[colname].dataType
+        # the reference's numeric whitelist (column_mean.py:35-38): a failed
+        # verdict naming the column, not a CAST error failing the fused pass
+        if numeric and not isinstance(dtype, SparkTypes.NumericType):
+            raise TypeError(f"column {colname!r} is not numeric ({dtype.simpleString()})")
+        return _agg_between(constraint, metric_term(df, metric, colname))
 
 
 # ref files: column_min.py:32, column_max.py:28, column_sum.py:28,
@@ -131,20 +102,15 @@ def c_quantiles(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCon
         accuracy=None if kw.get("exact") else int(kw.get("accuracy", 10000)),
     )
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         vals = metrics.get(t.alias)
-        ok = vals is not None and all(
-            (lo is None or v >= lo) and (hi is None or v <= hi)
-            for v, (lo, hi) in zip(vals, ranges)
-        )
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(ok),
-            group=group,
-            observed_value={"quantiles": qs, "values": list(vals) if vals else None},
-        )
+        return {
+            "success": vals is not None and all(
+                (lo is None or v >= lo) and (hi is None or v <= hi)
+                for v, (lo, hi) in zip(vals, ranges)
+            ),
+            "observed_value": {"quantiles": qs, "values": list(vals) if vals else None},
+        }
 
     return CompiledConstraint(constraint=constraint, agg_terms=[t], verdict_fn=verdict)
 
@@ -168,17 +134,10 @@ def c_unique_proportion(constraint: Constraint, df: DataFrame, ctx: dict) -> Com
     )
     nn_t = metric_term(df, "column_values.nonnull.count", kw["column"])
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         d, nn = metrics.get(d_t.alias) or 0, metrics.get(nn_t.alias) or 0
         v = (d / nn) if nn else 0.0
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=_between_success(v, kw),
-            group=group,
-            observed_value=v,
-        )
+        return {"success": _between_success(v, kw), "observed_value": v}
 
     return CompiledConstraint(constraint=constraint, agg_terms=[d_t, nn_t], verdict_fn=verdict)
 
@@ -278,7 +237,7 @@ def c_most_common(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
                     out[()][any_a] = bool(r["__any"])
         return out
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         modes = metrics.get(mode_a) or []
         truncated = len(modes) > max_modes
         modes = modes[:max_modes]
@@ -303,15 +262,7 @@ def c_most_common(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
                     "so the verdict fails closed"
                 )
             )
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(success),
-            group=group,
-            observed_value=modes,
-            details=details,
-        )
+        return {"success": success, "observed_value": modes, "details": details}
 
     return CompiledConstraint(
         constraint=constraint,
@@ -334,16 +285,12 @@ def _distinct_set_constraint(type_name: str, check) -> None:
         # emits it, basic_dataset_profiler.py:171-175): succeed, record
         expected = None if vs is None else set(vs)
 
-        def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+        def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
             observed = set(metrics.get(a) or [])
-            return ConstraintResult(
-                constraint_id=constraint.id,
-                constraint_type=constraint.type,
-                kwargs=dict(kw),
-                success=True if expected is None else check(observed, expected),
-                group=group,
-                observed_value=sorted(observed, key=str),
-            )
+            return {
+                "success": expected is None or check(observed, expected),
+                "observed_value": sorted(observed, key=str),
+            }
 
         return CompiledConstraint(
             constraint=constraint,
@@ -392,37 +339,22 @@ def c_row_count_other(constraint: Constraint, df: DataFrame, ctx: dict) -> Compi
     other: DataFrame = ctx["tables"][kw["other_table_name"]]
     other_count = other.count()
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         v = metrics.get(t.alias)
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs={k: v2 for k, v2 in kw.items()},
-            success=v == other_count,
-            group=group,
-            observed_value={"self": v, "other": other_count},
-        )
+        return {"success": v == other_count, "observed_value": {"self": v, "other": other_count}}
 
     return CompiledConstraint(constraint=constraint, agg_terms=[t], verdict_fn=verdict)
 
 
 def _schema_constraint(type_name: str, check) -> None:
+    """A metadata check: ``check(df, kwargs) -> (observed, success)`` runs at
+    compile time, so every group gets the same verdict and no term."""
+
     @register(type_name)
     def _compile(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-        kw = constraint.kwargs
-        observed, success = check(df, kw)
-
-        def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-            return ConstraintResult(
-                constraint_id=constraint.id,
-                constraint_type=constraint.type,
-                kwargs=dict(kw),
-                success=success,
-                group=group,
-                observed_value=observed,
-            )
-
-        return CompiledConstraint(constraint=constraint, agg_terms=[], verdict_fn=verdict)
+        observed, success = check(df, constraint.kwargs)
+        fields = {"success": success, "observed_value": observed}
+        return CompiledConstraint(constraint=constraint, verdict_fn=lambda metrics: fields)
 
 
 # ref: table_column_count.py:20-57, table_columns.py:25-62
@@ -463,50 +395,19 @@ _schema_constraint(
 )
 
 
-@register("expect_column_values_to_be_of_type")
-def c_of_type(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    """Metadata check, not a row scan — exactly the reference's Spark
-    behavior (expect_column_values_to_be_of_type.py:311-332)."""
-    import pyspark.sql.types as SparkTypes
+def _type_check(type_names):
+    """A metadata check, not a row scan — exactly the reference's Spark
+    behavior (expect_column_values_to_be_of_type.py:311-332): the column's
+    Spark type is one of ``type_names(kwargs)``; an unknown name matches
+    nothing."""
 
-    kw = constraint.kwargs
-    actual = dict(df.dtypes).get(kw["column"])
-    field = df.schema[kw["column"]]
-    expected_cls = getattr(SparkTypes, kw["type_"], None)
-    success = expected_cls is not None and isinstance(field.dataType, expected_cls)
+    def check(df: DataFrame, kw: dict[str, Any]) -> tuple[str, bool]:
+        dtype = df.schema[kw["column"]].dataType
+        classes = tuple(c for c in (getattr(SparkTypes, t, None) for t in type_names(kw)) if c)
+        return dtype.simpleString(), isinstance(dtype, classes)
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=success,
-            group=group,
-            observed_value=actual,
-        )
-
-    return CompiledConstraint(constraint=constraint, agg_terms=[], verdict_fn=verdict)
+    return check
 
 
-@register("expect_column_values_to_be_in_type_list")
-def c_in_type_list(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    import pyspark.sql.types as SparkTypes
-
-    kw = constraint.kwargs
-    field = df.schema[kw["column"]]
-    classes = tuple(
-        c for c in (getattr(SparkTypes, t, None) for t in kw["type_list"]) if c
-    )
-    success = isinstance(field.dataType, classes) if classes else False
-
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=success,
-            group=group,
-            observed_value=dict(df.dtypes).get(kw["column"]),
-        )
-
-    return CompiledConstraint(constraint=constraint, agg_terms=[], verdict_fn=verdict)
+_schema_constraint("expect_column_values_to_be_of_type", _type_check(lambda kw: [kw["type_"]]))
+_schema_constraint("expect_column_values_to_be_in_type_list", _type_check(lambda kw: kw["type_list"]))

@@ -36,7 +36,6 @@ from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_profiler_spark.core.result import ConstraintResult
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.functions import stats
 from data_profiler_spark.operators.registry import register
@@ -78,7 +77,8 @@ def compile_partition_constraint(
     The fused terms come from the metric catalog: a count per listed value
     and the unlisted remainder, or a count per bin (last bin right-inclusive)
     and the below/above tails; and the non-null count. An empty domain (no
-    non-null value) is a vacuous pass; otherwise ``statistic`` decides."""
+    non-null value) is a vacuous pass; otherwise ``statistic``'s triple is
+    the verdict's observed value, success and details."""
     if "values" in partition:
         values = list(partition["values"])
         cells = [metric_term(df, "column.value_count", column, value=v) for v in values]
@@ -98,22 +98,15 @@ def compile_partition_constraint(
         ]
     nonnull = metric_term(df, "column_values.nonnull.count", column)
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         def read(terms):
             return [float(metrics.get(t.alias) or 0) for t in terms]
 
         observed = ObservedPartition(read(cells), read(tails), read([nonnull])[0])
-        value, success, details = (
-            (None, True, {}) if observed.nonnull == 0 else statistic(observed)
-        )
-        return ConstraintResult(
-            constraint_id=constraint.id, constraint_type=constraint.type,
-            kwargs=dict(constraint.kwargs),
-            success=bool(success),
-            group=group,
-            observed_value=value,
-            details=details,
-        )
+        if observed.nonnull == 0:
+            return {"success": True}
+        value, success, details = statistic(observed)
+        return {"success": success, "observed_value": value, "details": details}
 
     return CompiledConstraint(
         constraint=constraint, agg_terms=[*cells, *tails, nonnull], verdict_fn=verdict
@@ -392,25 +385,19 @@ def c_bootstrapped_ks(constraint: Constraint, df: DataFrame, ctx: dict) -> Compi
         )
         return {g: {boot_a: pv} for g, pv in res.items()}
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         pv = metrics.get(boot_a)
         if pv is None:  # all-null group
-            return ConstraintResult(
-                constraint_id=constraint.id, constraint_type=constraint.type,
-                kwargs=dict(kw), success=True, group=group, observed_value=None,
-            )
-        return ConstraintResult(
-            constraint_id=constraint.id, constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(pv > p_threshold),
-            group=group,
-            observed_value=pv,
-            details={
+            return {"success": True}
+        return {
+            "success": pv > p_threshold,
+            "observed_value": pv,
+            "details": {
                 "bootstrap_samples": R,
                 "bootstrap_sample_size": s,
                 "method": "poisson_bootstrap_distributed",
             },
-        )
+        }
 
     return CompiledConstraint(
         constraint=constraint, agg_terms=[nn_t], verdict_fn=verdict,
@@ -626,22 +613,12 @@ def c_parameterized_ks(constraint: Constraint, df: DataFrame, ctx: dict) -> Comp
         # instead of extending the serial F term; VERDICT r4 #5).
         return {g: {ks_a: res[g]} for g in res}
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         triple = metrics.get(ks_a)
         if triple is None:
-            return ConstraintResult(
-                constraint_id=constraint.id, constraint_type=constraint.type,
-                kwargs=dict(kw), success=True, group=group, observed_value=None,
-            )
+            return {"success": True}
         d, p, n = triple
-        return ConstraintResult(
-            constraint_id=constraint.id, constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(p > p_threshold),
-            group=group,
-            observed_value=p,
-            details={"ks_d": d, "n": n},
-        )
+        return {"success": p > p_threshold, "observed_value": p, "details": {"ks_d": d, "n": n}}
 
     return CompiledConstraint(
         constraint=constraint, agg_terms=[], verdict_fn=verdict,
@@ -734,15 +711,9 @@ def c_cramers_phi(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
             for g, res in sparse_chi2_cramers(frame, a_col, b_col, group_by).items()
         }
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         v = metrics.get(phi_a, 0.0)
-        return ConstraintResult(
-            constraint_id=constraint.id, constraint_type=constraint.type,
-            kwargs=dict(kw),
-            success=bool(v < threshold),
-            group=group,
-            observed_value=v,
-        )
+        return {"success": v < threshold, "observed_value": v}
 
     return CompiledConstraint(
         constraint=constraint, verdict_fn=verdict, post_pass_fn=post_pass,

@@ -14,9 +14,9 @@ share this lowering (``compile_map_constraint``) and its verdict; their
 unexpected count is not a row predicate, so they supply a count plan,
 which one post pass collects per group. Null handling composes exactly like the reference's
 ``column_condition_partial`` Spark branch (map_metric_provider.py:478-490):
-``column.isNotNull() & ~expected_condition``. In single-column domains a
-float NaN is NULL (``nan_as_null``), as in every catalog metric; pair,
-multicolumn and key domains read the columns as they are.
+``column.isNotNull() & ~expected_condition``. A float NaN is NULL
+(``nan_as_null``) in single-column, pair, multicolumn and key domains
+alike, as in every catalog metric.
 
 Verdict semantics (expectation.py:1321-1369, 1760-1825):
     success  = (denominator - unexpected)/denominator >= mostly,
@@ -42,7 +42,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_profiler_spark.core.result import ConstraintResult
 from data_profiler_spark.core.session import local_frame
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.registry import register
@@ -166,7 +165,10 @@ def compile_map_constraint(
     ``violations_from(frame, group_by, counted)`` plans the violation rows
     from the frame the post pass counted (the duplicate or orphan keys).
     A kind that gives it lets that frame be kept: a post pass handed a
-    ``ValidationPlan`` keeps it there, and sampling plans from it."""
+    ``ValidationPlan`` keeps it there, and sampling plans from it.
+
+    The verdict returns the success and the element, missing and unexpected
+    counts with their percents, plus ``details(metrics)`` when given."""
     kw = constraint.kwargs
     rc = _row_condition(constraint)
     rc_key = _row_condition_sql(constraint)
@@ -207,27 +209,23 @@ def compile_map_constraint(
 
     mostly = float(kw.get("mostly", 1.0))
 
-    def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
+    def verdict(metrics: dict[str, Any]) -> dict[str, Any]:
         element_count = int(metrics.get(elem_a) or 0)
         missing = int(metrics.get(miss_a) or 0)
         unexpected_n = int(metrics.get(unex_a) or 0)
         denom = element_count - missing if denominator == "nonnull" else element_count
-        return ConstraintResult(
-            constraint_id=constraint.id,
-            constraint_type=constraint.type,
-            kwargs=dict(kw),
+        return {
             # vacuous truth on an empty domain (expectation.py:1354-1356)
-            success=denom <= 0 or (denom - unexpected_n) / denom >= mostly,
-            group=group,
-            element_count=element_count,
-            unexpected_count=unexpected_n,
-            missing_count=missing,
-            unexpected_percent=(100.0 * unexpected_n / denom) if denom else None,
-            unexpected_percent_total=(
+            "success": denom <= 0 or (denom - unexpected_n) / denom >= mostly,
+            "element_count": element_count,
+            "unexpected_count": unexpected_n,
+            "missing_count": missing,
+            "unexpected_percent": (100.0 * unexpected_n / denom) if denom else None,
+            "unexpected_percent_total": (
                 (100.0 * unexpected_n / element_count) if element_count else None
             ),
-            details=details(metrics) if details else {},
-        )
+            "details": details(metrics) if details else {},
+        }
 
     def violations_fn(
         frame: DataFrame, group_by: list[str], counted: DataFrame | None = None
@@ -560,18 +558,8 @@ def c_dateutil(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
     column_values_dateutil_parseable.py:13-31; its TypeError-on-non-string
     contract is enforced here at compile time against the Spark schema, so
     the verdict carries exception_info instead of a runtime executor
-    error). ``native_approximation=True`` keeps the previous JVM-side
-    fixed-format fast path for hot paths that can tolerate it."""
+    error)."""
     kw = constraint.kwargs
-    col = F.col(kw["column"])
-    if bool(kw.get("native_approximation", False)):
-        expected = (
-            F.try_to_timestamp(col).isNotNull()
-            | F.try_to_date(col).isNotNull()  # try_*: ANSI casts would throw
-            | F.try_to_timestamp(col, F.lit("yyyy/MM/dd")).isNotNull()
-            | F.try_to_timestamp(col, F.lit("MM/dd/yyyy")).isNotNull()
-        )
-        return _std_map(constraint, df, expected)
     if not isinstance(df.schema[kw["column"]].dataType, T.StringType):
         raise TypeError(
             "Values passed to expect_column_values_to_be_dateutil_parseable "
@@ -579,7 +567,7 @@ def c_dateutil(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCons
             "dates or timestamps, please call the expectation before "
             "converting from string format."
         )
-    return _std_map(constraint, df, _dateutil_parseable_udf(col))
+    return _std_map(constraint, df, _dateutil_parseable_udf(F.col(kw["column"])))
 
 
 @F.pandas_udf(T.BooleanType())
@@ -759,70 +747,79 @@ def c_decreasing(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledCo
 # --------------------------------------------------------------------------
 
 
-def _pair_domain(kw: dict[str, Any]) -> Column:
-    a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
+def _compile_pair(
+    constraint: Constraint, df: DataFrame, expected: Callable[[Column, Column], Column]
+) -> CompiledConstraint:
+    """The domain and the ``expected(a, b)`` condition read both columns
+    with a float NaN as NULL."""
+    kw = constraint.kwargs
+    a, b = nan_as_null(df, kw["column_A"]), nan_as_null(df, kw["column_B"])
     mode = kw.get("ignore_row_if", "both_values_are_missing")
     if mode == "both_values_are_missing":
-        return ~(a.isNull() & b.isNull())
-    if mode == "either_value_is_missing":
-        return a.isNotNull() & b.isNotNull()
-    return F.lit(True)  # "neither" / "never"
+        domain = ~(a.isNull() & b.isNull())
+    elif mode == "either_value_is_missing":
+        domain = a.isNotNull() & b.isNotNull()
+    else:  # "neither" / "never"
+        domain = F.lit(True)
+    return compile_map_constraint(
+        constraint, df, unexpected=~expected(a, b), domain_nonnull=domain
+    )
 
 
 @register("expect_column_pair_values_to_be_equal")
 def c_pair_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_pair_values_equal.py:41-43."""
-    kw = constraint.kwargs
-    a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
-    return compile_map_constraint(
-        constraint, df, unexpected=~a.eqNullSafe(b), domain_nonnull=_pair_domain(kw)
-    )
+    return _compile_pair(constraint, df, lambda a, b: a.eqNullSafe(b))
 
 
 @register("expect_column_pair_values_a_to_be_greater_than_b")
 def c_pair_greater(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_pair_values_greater.py:74-94."""
-    kw = constraint.kwargs
-    a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
-    expected = (a >= b) if kw.get("or_equal") else (a > b)
-    return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_pair_domain(kw)
-    )
+    or_equal = constraint.kwargs.get("or_equal")
+    return _compile_pair(constraint, df, lambda a, b: (a >= b) if or_equal else (a > b))
 
 
 @register("expect_column_pair_values_to_be_in_set")
 def c_pair_in_set(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: column_pair_values_in_set.py:78-96 (OR over eqNullSafe pairs)."""
+    pairs = list(constraint.kwargs["value_pairs_set"])
+
+    def expected(a: Column, b: Column) -> Column:
+        if not pairs:
+            return F.lit(True)
+        return reduce(
+            lambda x, y: x | y,
+            [a.eqNullSafe(F.lit(va)) & b.eqNullSafe(F.lit(vb)) for va, vb in pairs],
+        )
+
+    return _compile_pair(constraint, df, expected)
+
+
+def _compile_multicol(
+    constraint: Constraint, df: DataFrame, expected: Callable[[list[Column]], Column]
+) -> CompiledConstraint:
+    """The domain and the ``expected(columns)`` condition read every column
+    of ``column_list`` with a float NaN as NULL."""
     kw = constraint.kwargs
-    a, b = F.col(kw["column_A"]), F.col(kw["column_B"])
-    pairs = list(kw["value_pairs_set"])
-    expected = reduce(
-        lambda x, y: x | y,
-        [a.eqNullSafe(F.lit(va)) & b.eqNullSafe(F.lit(vb)) for va, vb in pairs],
-    ) if pairs else F.lit(True)
-    return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_pair_domain(kw)
-    )
-
-
-def _multicol_domain(kw: dict[str, Any]) -> Column:
-    cols = [F.col(c) for c in kw["column_list"]]
+    cols = [nan_as_null(df, c) for c in kw["column_list"]]
     mode = kw.get("ignore_row_if", "all_values_are_missing")
     if mode == "all_values_are_missing":
-        return ~reduce(lambda a, b: a & b, [c.isNull() for c in cols])
-    if mode == "any_value_is_missing":
-        return reduce(lambda a, b: a & b, [c.isNotNull() for c in cols])
-    return F.lit(True)
+        domain = ~reduce(lambda a, b: a & b, [c.isNull() for c in cols])
+    elif mode == "any_value_is_missing":
+        domain = reduce(lambda a, b: a & b, [c.isNotNull() for c in cols])
+    else:
+        domain = F.lit(True)
+    return compile_map_constraint(
+        constraint, df, unexpected=~expected(cols), domain_nonnull=domain
+    )
 
 
 @register("expect_multicolumn_sum_to_equal")
 def c_multicol_sum(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
     """ref: multicolumn_sum_equal.py:39-45."""
-    kw = constraint.kwargs
-    total = kw["sum_total"]
-    expected = reduce(lambda a, b: a + b, [F.col(c) for c in kw["column_list"]]) == F.lit(total)
-    return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
+    total = constraint.kwargs["sum_total"]
+    return _compile_multicol(
+        constraint, df, lambda cols: reduce(lambda a, b: a + b, cols) == F.lit(total)
     )
 
 
@@ -834,10 +831,9 @@ def c_unique_within_record(constraint: Constraint, df: DataFrame, ctx: dict) -> 
     check). Also registered under the reference's deprecated
     ``expect_multicolumn_values_to_be_unique`` name
     (expect_multicolumn_values_to_be_unique.py — same semantics)."""
-    kw = constraint.kwargs
-    arr = F.array(*[F.col(c) for c in kw["column_list"]])
-    nn = F.filter(arr, lambda x: x.isNotNull())
-    expected = F.size(F.array_distinct(nn)) == F.size(nn)
-    return compile_map_constraint(
-        constraint, df, unexpected=~expected, domain_nonnull=_multicol_domain(kw)
-    )
+
+    def expected(cols: list[Column]) -> Column:
+        nn = F.filter(F.array(*cols), lambda x: x.isNotNull())
+        return F.size(F.array_distinct(nn)) == F.size(nn)
+
+    return _compile_multicol(constraint, df, expected)

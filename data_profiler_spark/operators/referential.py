@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.map_constraints import compile_map_constraint
 from data_profiler_spark.operators.registry import register
-from data_profiler_spark.plans.fused import CompiledConstraint
+from data_profiler_spark.plans.fused import CompiledConstraint, nan_as_null
 
 
 @register("expect_compound_columns_to_exist_in_table")
@@ -48,7 +48,10 @@ def c_referential(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledC
     dim = other.select(
         *[F.col(o).alias(k) for o, k in zip(other_cols, key_cols)]
     )
-    key_nonnull = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols])
+    # a float NaN key part is NULL: the row is missing, never an orphan
+    key_nonnull = reduce(
+        lambda a, b: a & b, [nan_as_null(df, c).isNotNull() for c in key_cols]
+    )
 
     def orphans(frame: DataFrame, group_by: list[str]) -> DataFrame:
         return frame.where(key_nonnull).join(dim, on=key_cols, how="left_anti")

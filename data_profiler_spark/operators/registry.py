@@ -1,7 +1,9 @@
 """Constraint-type registry: type name -> compiler.
 
 A compiler lowers a declarative ``Constraint`` to a ``CompiledConstraint``
-(fused agg terms + verdict fn + optional violations/post-pass jobs).
+(fused agg terms + verdict fn + optional violations/post-pass jobs). The
+verdict fn returns only what it observed (``success`` and the observed
+fields); ``CompiledConstraint.verdict`` builds the ``ConstraintResult``.
 Mirrors the reference's expectation-class registry
 (/root/reference/src/data_profiler/expectations/registry.py) without the
 metaclass machinery: registration is an explicit decorator.

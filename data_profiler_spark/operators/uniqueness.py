@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from data_profiler_spark.core.suite import Constraint
 from data_profiler_spark.operators.map_constraints import compile_map_constraint
 from data_profiler_spark.operators.registry import register
-from data_profiler_spark.plans.fused import CompiledConstraint
+from data_profiler_spark.plans.fused import CompiledConstraint, nan_as_null
 
 
 def duplicate_key_counts(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -57,29 +57,18 @@ def duplicate_key_counts(df: DataFrame, key_cols: list[str]) -> DataFrame:
 def _compile_unique(
     constraint: Constraint, df: DataFrame, key_cols: list[str]
 ) -> CompiledConstraint:
-    """Unexpected rows: rows whose key, with no NULL part, occurs more than
-    once. Counted per group as the summed ``key_count`` of the duplicate
-    keys (group scope) or as the rows a semi-join against the duplicate
-    keys keeps (table scope); the violations plan is that semi-join.
-
-    The ``scope`` kwarg pins what "duplicate" means under grouped validation:
-
-    - ``"group"`` (default): a key is duplicated iff it repeats WITHIN the
-      verdict group. Verdicts are a pure function of each group's rows —
-      independent of chunk boundaries and resume history (the CheckpointRunner
-      validates pending partitions in arbitrary chunks).
-    - ``"table"``: duplicated anywhere in the validated frame. Only meaningful
-      when the frame is the whole table in one pass.
-    """
-    kw = constraint.kwargs
-    by_group = str(kw.get("scope", "group")) == "group"
-    key_nonnull = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols])
-
-    def keys(group_by: list[str]) -> list[str]:
-        return group_by + key_cols if by_group else key_cols
+    """Unexpected rows: rows whose key, with no NULL part (a float NaN is
+    NULL), occurs more than once WITHIN the verdict group, so a group's
+    verdict is a function of its own rows alone, whatever chunk of groups
+    the pass validates (FIXTURES.md §5). Counted per group as the summed
+    ``key_count`` of the duplicate keys; the violations plan is a semi-join
+    against them."""
+    key_nonnull = reduce(
+        lambda a, b: a & b, [nan_as_null(df, c).isNotNull() for c in key_cols]
+    )
 
     def dup_keys(frame: DataFrame, group_by: list[str]) -> DataFrame:
-        return duplicate_key_counts(frame.where(key_nonnull), keys(group_by))
+        return duplicate_key_counts(frame.where(key_nonnull), group_by + key_cols)
 
     def dup_rows(
         frame: DataFrame, group_by: list[str], dups: DataFrame | None = None
@@ -87,23 +76,19 @@ def _compile_unique(
         """``dups``: the duplicate keys, when a post pass kept them."""
         if dups is None:
             dups = dup_keys(frame, group_by)
-        dups = dups.select(*keys(group_by))
-        # the equi-join drops NULL keys itself
-        return frame.join(dups, on=keys(group_by), how="left_semi")
-
-    def unexpected_count(frame: DataFrame, group_by: list[str], groups):
-        if by_group:
-            return dup_keys(frame, group_by), F.sum("key_count")
-        return dup_rows(frame, group_by), F.count(F.lit(1))
+        keys = group_by + key_cols
+        # the equi-join drops NULL keys itself, and no NaN key is a dup key
+        return frame.join(dups.select(*keys), on=keys, how="left_semi")
 
     return compile_map_constraint(
         constraint,
         df,
         domain_nonnull=key_nonnull,
-        unexpected_count=unexpected_count,
+        unexpected_count=lambda frame, group_by, groups: (
+            dup_keys(frame, group_by), F.sum("key_count")
+        ),
         violations=dup_rows,
-        # a table-scope count is of the duplicate rows, too wide to keep
-        violations_from=dup_rows if by_group else None,
+        violations_from=dup_rows,
     )
 
 

@@ -142,7 +142,13 @@ def metric_term(
 class CompiledConstraint:
     """A constraint lowered to: fused agg terms + a pure verdict function.
 
-    ``verdict(metrics, group)`` consumes the resolved per-group metric dict.
+    ``verdict_fn(metrics)`` reads the group's resolved metric dict and
+    returns only what it observed: ``success`` and any of the result's
+    observed fields (``observed_value``, ``details``, ``element_count``,
+    ``unexpected_count``, ``missing_count``, ``unexpected_percent``,
+    ``unexpected_percent_total``, ``exception_info``). ``verdict`` stamps on
+    the constraint's id, type, a copy of its kwargs and the group, and is
+    the one place a ``ConstraintResult`` is built.
     ``violations(df, group_by, kept=None)`` (optional) returns the
     violating rows as a DataFrame — only planned/executed for failed
     constraints; ``kept`` is the frame its post pass kept, if any.
@@ -165,7 +171,7 @@ class CompiledConstraint:
 
     constraint: Constraint
     agg_terms: list[AggTerm] = field(default_factory=list)
-    verdict_fn: Callable[[dict[str, Any], dict[str, Any]], ConstraintResult] | None = None
+    verdict_fn: Callable[[dict[str, Any]], dict[str, Any]] | None = None
     violations_fn: Callable[..., DataFrame] | None = None
     value_column: str | None = None
     post_pass_fn: (
@@ -178,16 +184,16 @@ class CompiledConstraint:
     def verdict(self, metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
         assert self.verdict_fn is not None
         try:
-            return self.verdict_fn(metrics, group)
+            observed = self.verdict_fn(metrics)
         except Exception as exc:  # mirror EVR exception_info capture
-            return ConstraintResult(
-                constraint_id=self.constraint.id,
-                constraint_type=self.constraint.type,
-                kwargs=self.constraint.kwargs,
-                success=False,
-                group=group,
-                exception_info=f"{type(exc).__name__}: {exc}",
-            )
+            observed = {"success": False, "exception_info": f"{type(exc).__name__}: {exc}"}
+        return ConstraintResult(
+            constraint_id=self.constraint.id,
+            constraint_type=self.constraint.type,
+            kwargs=dict(self.constraint.kwargs),
+            group=group,
+            **{**observed, "success": bool(observed["success"])},
+        )
 
 
 def dedup_terms(compiled: list[CompiledConstraint]) -> list[AggTerm]:

@@ -64,17 +64,10 @@ class Validator:
 
     @staticmethod
     def _failed_compile(c: Constraint, exc: Exception) -> CompiledConstraint:
-        def verdict(metrics: dict[str, Any], group: dict[str, Any]) -> ConstraintResult:
-            return ConstraintResult(
-                constraint_id=c.id,
-                constraint_type=c.type,
-                kwargs=dict(c.kwargs),
-                success=False,
-                group=group,
-                exception_info=f"compile error: {type(exc).__name__}: {exc}",
-            )
-
-        return CompiledConstraint(constraint=c, agg_terms=[], verdict_fn=verdict)
+        info = f"compile error: {type(exc).__name__}: {exc}"
+        return CompiledConstraint(
+            constraint=c, verdict_fn=lambda metrics: {"success": False, "exception_info": info}
+        )
 
     def _resolve_parameters(self, c: Constraint) -> Constraint:
         """Substitute {"$PARAMETER": name} kwarg values from

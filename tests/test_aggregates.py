@@ -255,3 +255,17 @@ def test_most_common_ties_okay_truncated_probe(spark):
     assert r2.success is False
     # truncation hints name the unlocking knob (VERDICT r3 #10)
     assert "max_modes" in r2.details.get("hint", "")
+
+
+def test_grouped_non_numeric_mean_fails_per_group(spark):
+    """A numeric aggregate over a string column fails at compile: one failed
+    verdict per group, naming the column."""
+    df = spark.createDataFrame([("g1", "a"), ("g1", "b"), ("g2", "c")], ["g", "s"])
+    res = Validator(df).validate(
+        ConstraintSuite("nn").add("expect_column_mean_to_be_between", column="s", min_value=0),
+        group_by=["g"],
+    )
+    assert sorted(r.group["g"] for r in res.results) == ["g1", "g2"]
+    for r in res.results:
+        assert r.success is False and r.observed_value is None
+        assert r.exception_info == "compile error: TypeError: column 's' is not numeric (string)"

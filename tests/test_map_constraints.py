@@ -152,12 +152,6 @@ def test_dateutil_parseable_exact(spark):
     ints = spark.range(3).selectExpr("id AS d")
     r2 = run_one(ints, "expect_column_values_to_be_dateutil_parseable", column="d")
     assert r2.success is False and "must be of type string" in (r2.exception_info or "")
-    # native fast-path approximation still available
-    r3 = run_one(
-        df, "expect_column_values_to_be_dateutil_parseable",
-        column="d", native_approximation=True,
-    )
-    assert r3.element_count == len(vals)
 
 
 def test_json_parseable(spark):
@@ -228,6 +222,25 @@ def test_nan_is_null_in_single_column_domains(spark):
                 column="x", threshold=1.0)
     # mean 5/3, stdev 0.577 over [1, 2, 2]: only the 1.0 row is |z| >= 1
     assert (r.unexpected_count, r.missing_count) == (1, 2)
+
+
+def test_nan_is_null_in_pair_multicolumn_and_key_domains(spark):
+    """A float NaN is NULL in the pair, multicolumn and uniqueness-key
+    domains and conditions too."""
+    from data_profiler_spark.core.session import local_frame
+
+    nan = float("nan")
+    df = local_frame(
+        spark, [(1.0, 1.0), (nan, None), (nan, nan), (None, None)], "a double, b double"
+    )
+    r = run_one(df, "expect_column_pair_values_to_be_equal", column_A="a",
+                column_B="b", ignore_row_if="either_value_is_missing")
+    assert (r.success, r.unexpected_count, r.missing_count) == (True, 0, 3)
+    r = run_one(df, "expect_multicolumn_sum_to_equal", column_list=["a", "b"],
+                sum_total=2, ignore_row_if="any_value_is_missing")
+    assert (r.success, r.unexpected_count, r.missing_count) == (True, 0, 3)
+    r = run_one(df, "expect_column_values_to_be_unique", column="a")
+    assert (r.success, r.unexpected_count, r.missing_count) == (True, 0, 3)
 
 
 def test_increasing(spark):

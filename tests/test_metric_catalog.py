@@ -1,7 +1,8 @@
 """The metric catalog (``plans/fused.metric_term``) is the one place a fused
 column metric gets its alias, its NaN rule and its Column: equal metrics
 share one term whoever asks for them, and no other package code masks NaN
-or names a catalog metric on its own."""
+or names a catalog metric on its own. Likewise ``CompiledConstraint.verdict``
+is the one place a ``ConstraintResult`` is built."""
 
 from __future__ import annotations
 
@@ -53,6 +54,29 @@ def test_no_package_code_bypasses_the_catalog():
         if p.resolve() != CATALOG and (hits := bypasses(p.read_text(), names))
     }
     assert found == {}
+
+
+def result_constructions(src: str) -> list[int]:
+    """The line of every ``ConstraintResult(...)`` call in ``src``."""
+    return sorted(
+        n.lineno for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Call) and (
+            (isinstance(n.func, ast.Name) and n.func.id == "ConstraintResult")
+            or (isinstance(n.func, ast.Attribute) and n.func.attr == "ConstraintResult")
+        )
+    )
+
+
+def test_only_the_verdict_constructor_builds_results():
+    probe = "r = ConstraintResult(**f)\nx = result.ConstraintResult(a)\ny = ConstraintResult\n"
+    assert result_constructions(probe) == [1, 2]
+    found = {
+        str(p.relative_to(PACKAGE)): lines
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p.resolve() != CATALOG and (lines := result_constructions(p.read_text()))
+    }
+    assert found == {}
+    assert len(result_constructions(CATALOG.read_text())) == 1
 
 
 def test_equal_metrics_share_one_term(typed_small):

@@ -102,9 +102,8 @@ def test_zscore_grouped_empty_input_is_vacuous(spark):
 
 
 def test_uniqueness_scope_chunk_independent(spark):
-    """ADVICE r1 (medium): with scope='group' (default), a group's verdict is
-    a pure function of its own rows — identical whether validated alone or
-    together with other groups."""
+    """A group's uniqueness verdict is a pure function of its own rows —
+    identical whether validated alone or together with other groups."""
     from data_profiler_spark.core.suite import ConstraintSuite
     from data_profiler_spark.validator import Validator
 
@@ -129,15 +128,6 @@ def test_uniqueness_scope_chunk_independent(spark):
     assert {
         r.group["pid"]: (r.success, r.unexpected_count) for r in solo.results
     } == {"p1": full["p1"]}
-    # table scope restores the old global semantics
-    suite_t = ConstraintSuite("ut").add(
-        "expect_column_values_to_be_unique", column="key", scope="table"
-    )
-    tbl = {
-        r.group["pid"]: r.unexpected_count
-        for r in Validator(df).validate(suite_t, group_by=["pid"]).results
-    }
-    assert tbl == {"p0": 2, "p1": 1, "p2": 1}
 
 
 def test_like_pattern_lists(spark):
@@ -313,3 +303,32 @@ def test_experimental_condition_dsl_translation(typed_small):
     )
     r = Validator(typed_small).validate(pandas_suite).results[0]
     assert not r.success and "condition_parser" in (r.exception_info or "")
+
+
+def test_result_kwargs_are_a_copy(spark):
+    """Writing to a verdict's kwargs leaves the suite, and so its
+    fingerprint, unchanged: on a compile error, on an exception raised by
+    the verdict (a row-count equality with no ``value``) and on a normal
+    verdict."""
+    from data_profiler_spark.core.suite import ConstraintSuite
+    from data_profiler_spark.validator import Validator
+
+    df = spark.createDataFrame([(1,), (2,)], ["x"])
+    suite = (
+        ConstraintSuite("kw")
+        .add("expect_column_mean_to_be_between", column="missing", min_value=0)
+        .add("expect_table_row_count_to_equal")
+        .add("expect_table_row_count_to_be_between", min_value=1)
+    )
+    before = suite.fingerprint
+    compile_error, verdict_error, ok = Validator(df).validate(suite).results
+    assert compile_error.exception_info.startswith("compile error: ")
+    assert verdict_error.exception_info == "KeyError: 'value'"
+    assert (ok.success, ok.observed_value, ok.exception_info) == (True, 2, None)
+    for r in (compile_error, verdict_error, ok):
+        r.kwargs["min_value"] = 99
+        r.kwargs["tampered"] = True
+    assert suite.fingerprint == before
+    assert [c.kwargs for c in suite.constraints] == [
+        {"column": "missing", "min_value": 0}, {}, {"min_value": 1},
+    ]
