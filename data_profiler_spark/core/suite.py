@@ -9,6 +9,7 @@ stable fingerprints for metric dedup and checkpointing.
 
 from __future__ import annotations
 
+import copy
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -19,24 +20,32 @@ from data_profiler_spark.core.identity import fingerprint
 class Constraint:
     """One declarative constraint: a type name + its kwargs.
 
-    ``mostly`` (map constraints), ``min_value``/``max_value`` (aggregates),
-    ``result_format`` etc. all live in ``kwargs`` — same shape as the
-    reference's ExpectationConfiguration kwargs.
+    ``mostly`` (map constraints), ``min_value``/``max_value`` (aggregates)
+    etc. all live in ``kwargs`` — same shape as the reference's
+    ExpectationConfiguration kwargs. The result format is not a kwarg:
+    ``Validator.validate``'s argument sets it for the whole suite.
+
+    A constraint is a value. ``kwargs`` is deep-copied once, here, so no
+    later write to the caller's dict or lists reaches it, and ``id`` (the
+    fingerprint of type + kwargs) is computed once. ``to_dict`` hands out a
+    deep copy too. Do not write to ``kwargs`` after construction: ``id``
+    would no longer match it.
     """
 
     type: str
     kwargs: dict[str, Any] = field(default_factory=dict)
+    id: str = field(init=False, repr=False, compare=False)
 
-    @property
-    def id(self) -> str:
-        return fingerprint({"type": self.type, "kwargs": self.kwargs})
+    def __post_init__(self) -> None:
+        object.__setattr__(self, "kwargs", copy.deepcopy(self.kwargs))
+        object.__setattr__(self, "id", fingerprint({"type": self.type, "kwargs": self.kwargs}))
 
     def to_dict(self) -> dict[str, Any]:
-        return {"type": self.type, "kwargs": dict(self.kwargs)}
+        return {"type": self.type, "kwargs": copy.deepcopy(self.kwargs)}
 
     @staticmethod
     def from_dict(d: dict[str, Any]) -> "Constraint":
-        return Constraint(type=d["type"], kwargs=dict(d.get("kwargs", {})))
+        return Constraint(type=d["type"], kwargs=d.get("kwargs", {}))
 
 
 @dataclass
@@ -86,7 +95,7 @@ class ConstraintSuite:
             suite.meta["evaluation_parameters"] = dict(d["evaluation_parameters"])
         for e in d.get("expectations", []):
             suite.constraints.append(
-                Constraint(type=e["expectation_type"], kwargs=dict(e.get("kwargs", {})))
+                Constraint(type=e["expectation_type"], kwargs=e.get("kwargs", {}))
             )
         return suite
 
@@ -94,7 +103,7 @@ class ConstraintSuite:
         return {
             "expectation_suite_name": self.name,
             "expectations": [
-                {"expectation_type": c.type, "kwargs": dict(c.kwargs), "meta": {}}
+                {"expectation_type": c.type, "kwargs": copy.deepcopy(c.kwargs), "meta": {}}
                 for c in self.constraints
             ],
             "meta": {k: v for k, v in self.meta.items() if k != "evaluation_parameters"},

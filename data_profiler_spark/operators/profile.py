@@ -84,7 +84,6 @@ class ColumnProfile:
     mean_v: float | None = None
     stddev_v: float | None = None
     quantiles: list[float] | None = None
-    quantile_qs: list[float] | None = None
     hist_bins: list[float] | None = None
     hist_weights: list[float] | None = None
     top_k: list[dict[str, Any]] | None = None
@@ -264,7 +263,6 @@ def profile(
                 if qs:
                     qv = m[(c, "quantiles")]
                     cp.quantiles = [float(x) for x in qv] if qv is not None else None
-                    cp.quantile_qs = qs
             tp.columns[c] = cp
         profiles[key] = tp
 

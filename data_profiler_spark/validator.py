@@ -36,6 +36,8 @@ from data_profiler_spark.plans.fused import (
     run_fused_pass,
 )
 
+RESULT_FORMATS = ("BOOLEAN_ONLY", "BASIC", "SUMMARY", "COMPLETE")
+
 
 class Validator:
     def __init__(
@@ -59,7 +61,8 @@ class Validator:
                 resolved = self._resolve_parameters(c)
                 out.append(compile_constraint(resolved, self.df, self.ctx))
             except Exception as exc:  # compile-time failure -> failed verdict
-                out.append(self._failed_compile(c, exc))
+                # a fresh copy: a result's kwargs never alias the suite's
+                out.append(self._failed_compile(Constraint(c.type, c.kwargs), exc))
         return out
 
     @staticmethod
@@ -92,7 +95,7 @@ class Validator:
             isinstance(v, (dict, list)) for v in c.kwargs.values()
         ):
             return c
-        return Constraint(type=c.type, kwargs=sub(dict(c.kwargs)))
+        return Constraint(type=c.type, kwargs=sub(c.kwargs))
 
     def validate(
         self,
@@ -119,7 +122,10 @@ class Validator:
         ``violation_samples_unioned`` to sample from. ``keep_violations=True``
         also keeps there the frames the post passes can keep for sampling,
         checkpointed; call ``result.plan.release()`` after sampling. Without
-        it nothing stays persisted."""
+        it nothing stays persisted. Any other ``result_format`` raises
+        ``ValueError`` before a Spark job runs."""
+        if result_format not in RESULT_FORMATS:
+            raise ValueError(f"result_format must be one of {RESULT_FORMATS}, got {result_format!r}")
         group_by = list(group_by or [])
         compiled = self.compile(suite)
         plan = ValidationPlan(self, compiled, group_by)

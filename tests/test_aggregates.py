@@ -16,7 +16,8 @@ def pdf(typed_small) -> pd.DataFrame:
 
 def test_fused_suite_aggregates(typed_small, pdf):
     """All aggregate constraints resolve from ONE fused pass. ``floats``
-    holds a NaN, which reads as NULL (pandas skipna)."""
+    holds a NaN, which reads as NULL (pandas skipna). With ``None`` bounds
+    each one only observes: it passes and records the same value."""
     for col in ("ints", "floats"):
         nn = pdf[col].dropna()
         tol = 1e-6
@@ -46,6 +47,19 @@ def test_fused_suite_aggregates(typed_small, pdf):
         assert observed["expect_column_mean_to_be_between"] == pytest.approx(nn.mean())
         assert observed["expect_column_median_to_be_between"] == pytest.approx(nn.median())
         assert observed["expect_column_stdev_to_be_between"] == pytest.approx(nn.std(ddof=1))
+        open_suite = ConstraintSuite("observe").add(
+            "expect_table_row_count_to_be_between", min_value=None, max_value=None
+        )
+        for c in suite.constraints[:-1]:
+            open_suite.add(c.type, column=col, min_value=None, max_value=None)
+        res = Validator(typed_small).validate(open_suite)
+        assert all(r.success for r in res.results), col
+        observed["expect_table_row_count_to_be_between"] = observed.pop(
+            "expect_table_row_count_to_equal"
+        )
+        assert {r.constraint_type: r.observed_value for r in res.results} == (
+            pytest.approx(observed)
+        )
 
 
 def test_quantiles_exact(typed_small, pdf):
@@ -61,6 +75,15 @@ def test_quantiles_exact(typed_small, pdf):
     assert r.success is True
     vals = r.observed_value["values"]
     assert len(vals) == 3
+    # the approximate path with open ranges only observes, too
+    qs = [0.05, 0.25, 0.5, 0.75, 0.95]
+    r = Validator(typed_small).expect(
+        "expect_column_quantile_values_to_be_between",
+        column="ints",
+        quantile_ranges={"quantiles": qs, "value_ranges": [[None, None]] * 5},
+    )
+    assert r.success is True
+    assert r.observed_value == {"quantiles": qs, "values": [1, 3, 5, 8, 10]}
 
 
 def test_unique_proportion(typed_small, pdf):
@@ -180,15 +203,23 @@ def test_distinct_sets(typed_small):
         "expect_column_distinct_values_to_equal_set",
         column="cat", value_set=["a", "b"],
     ).success
+    # no set: observe-only, the distinct values are recorded
+    r = v.expect(
+        "expect_column_distinct_values_to_be_in_set", column="cat", value_set=None
+    )
+    assert r.success is True and r.observed_value == ["a", "b", "c"]
 
 
 def test_table_shape(typed_small):
     v = Validator(typed_small)
+    columns = ["ints", "floats", "strings", "dates", "cat", "pair_a", "pair_b"]
     assert v.expect("expect_table_column_count_to_equal", value=7).success
     assert v.expect(
-        "expect_table_columns_to_match_ordered_list",
-        column_list=["ints", "floats", "strings", "dates", "cat", "pair_a", "pair_b"],
+        "expect_table_columns_to_match_ordered_list", column_list=columns
     ).success
+    # no list: observe-only, the columns are recorded in order
+    r = v.expect("expect_table_columns_to_match_ordered_list", column_list=None)
+    assert r.success is True and r.observed_value == columns
     assert v.expect(
         "expect_table_columns_to_match_set",
         column_set=["cat", "ints", "floats", "strings", "dates", "pair_a", "pair_b"],

@@ -24,10 +24,6 @@ REGISTRIES = {"register", "register_query"}
 
 # Kept although only tests call them; their helpers are reached through them.
 ALLOWED_TEST_ONLY = {
-    # operators/autoprofile.py is the reference's BasicDatasetProfiler /
-    # UserConfigurableProfiler, the profiling half of the engine
-    "build_suite_from_profile",
-    "build_basic_suite_from_profile",
     # the pure-Column PQ encode, the reference the numpy encode in
     # pq_encode is asserted against
     "_pq_encode_expr",

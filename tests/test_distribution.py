@@ -22,6 +22,15 @@ def test_kl_categorical(typed_small):
     )
     assert r.observed_value == pytest.approx(expected_kl, rel=1e-9)
     assert r.success is True
+    # no threshold: observe-only, the divergence is still recorded
+    r = Validator(typed_small).expect(
+        "expect_column_kl_divergence_to_be_less_than",
+        column="cat",
+        partition_object={"values": ["a", "b", "c"], "weights": exp_w},
+        threshold=None,
+    )
+    assert r.observed_value == pytest.approx(expected_kl, rel=1e-9)
+    assert r.success is True
 
 
 def test_kl_continuous(typed_small):

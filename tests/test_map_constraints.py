@@ -362,7 +362,9 @@ def test_violation_samples(typed_small):
 
 def test_result_format_ladder(spark):
     """VERDICT r1 #5: BOOLEAN_ONLY -> BASIC -> SUMMARY -> COMPLETE ladder
-    (ref _format_map_output, expectation.py:1760-1871)."""
+    (ref _format_map_output, expectation.py:1760-1871). A format off the
+    ladder fails loudly, as the reference's does, naming the four allowed
+    values, before any Spark job runs."""
     from data_profiler_spark.core.suite import ConstraintSuite
     from data_profiler_spark.validator import Validator
 
@@ -405,6 +407,14 @@ def test_result_format_ladder(spark):
     assert len(capped.unexpected_list) == 4
     assert capped.details["unexpected_list_truncated"] is True
     assert "complete_limit" in capped.details["hint"]
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    with pytest.raises(ValueError) as err:
+        Validator(df).validate(suite, result_format="summary")
+    assert set(tracker.getJobIdsForGroup()) == before
+    for name in ("BOOLEAN_ONLY", "BASIC", "SUMMARY", "COMPLETE", "'summary'"):
+        assert name in str(err.value)
 
 
 def test_result_format_grouped(spark):

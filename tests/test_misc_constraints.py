@@ -309,26 +309,73 @@ def test_result_kwargs_are_a_copy(spark):
     """Writing to a verdict's kwargs leaves the suite, and so its
     fingerprint, unchanged: on a compile error, on an exception raised by
     the verdict (a row-count equality with no ``value``) and on a normal
-    verdict."""
+    verdict. A nested value is a copy too: in a compile error's result,
+    against the caller's own list after ``add`` and in the suite's dict
+    forms."""
     from data_profiler_spark.core.suite import ConstraintSuite
     from data_profiler_spark.validator import Validator
 
     df = spark.createDataFrame([(1,), (2,)], ["x"])
+    vs = [1, 2]
     suite = (
         ConstraintSuite("kw")
         .add("expect_column_mean_to_be_between", column="missing", min_value=0)
         .add("expect_table_row_count_to_equal")
         .add("expect_table_row_count_to_be_between", min_value=1)
+        .add("expect_column_values_to_be_in_set", column="nope", value_set=vs)
     )
     before = suite.fingerprint
-    compile_error, verdict_error, ok = Validator(df).validate(suite).results
+    vs.append(4)
+    assert suite.fingerprint == before
+    compile_error, verdict_error, ok, nested = Validator(df).validate(suite).results
     assert compile_error.exception_info.startswith("compile error: ")
     assert verdict_error.exception_info == "KeyError: 'value'"
     assert (ok.success, ok.observed_value, ok.exception_info) == (True, 2, None)
-    for r in (compile_error, verdict_error, ok):
+    assert nested.exception_info.startswith("compile error: ")
+    for r in (compile_error, verdict_error, ok, nested):
         r.kwargs["min_value"] = 99
         r.kwargs["tampered"] = True
+    nested.kwargs["value_set"].append(3)
+    suite.to_dict()["constraints"][3]["kwargs"]["value_set"].append(5)
+    suite.to_ge_dict()["expectations"][3]["kwargs"]["value_set"].append(6)
     assert suite.fingerprint == before
     assert [c.kwargs for c in suite.constraints] == [
         {"column": "missing", "min_value": 0}, {}, {"min_value": 1},
+        {"column": "nope", "value_set": [1, 2]},
     ]
+
+
+def test_north_suite_fingerprint_is_pinned():
+    """A suite's fingerprint is the results store's key, so it must not
+    change with how a constraint is built: the north suite (perfbench's,
+    with a fixed drift baseline) keeps the fingerprint and constraint ids
+    it has always had, also after a dict round trip in either format."""
+    from data_profiler_spark.core.suite import ConstraintSuite
+
+    suite = (
+        ConstraintSuite("north_bench")
+        .add("expect_column_values_to_not_be_null", column="content", mostly=0.98)
+        .add("expect_column_value_lengths_to_be_between",
+             column="content", min_value=0, max_value=1_000_000)
+        .add("expect_compound_columns_to_be_unique", column_list=["repo", "path", "commit"])
+        .add("expect_compound_columns_to_exist_in_table", column_list=["repo", "commit"],
+             other_table_name="commits", mostly=0.99)
+        .add("expect_column_distribution_to_match_baseline", column="lang",
+             baseline={"values": ["py", "go", "rs"], "weights": [0.5, 0.3, 0.2]},
+             p=0.001)
+    )
+    fingerprint = "26ced9e4d9b2245e53adace836432c36"
+    ids = [
+        "0e3911d5cd93d861e92fb7cc8d1114d0",
+        "b98f90d427d4a89a90095517d0b8cf19",
+        "6c06a95869d93c456007167585c8ae88",
+        "96f08bf3bda880827f160daa4812a9da",
+        "278db28f0764c608a8d236713c7dfc58",
+    ]
+    for s in (
+        suite,
+        ConstraintSuite.from_dict(suite.to_dict()),
+        ConstraintSuite.from_ge_dict(suite.to_ge_dict()),
+    ):
+        assert s.fingerprint == fingerprint
+        assert [c.id for c in s.constraints] == ids

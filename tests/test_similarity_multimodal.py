@@ -1,4 +1,4 @@
-"""ANN similarity + multimodal plumbing + autoprofile."""
+"""ANN similarity + multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -136,93 +136,6 @@ def test_multimodal_image_features(spark):
     assert all(r["width"] >= 64 and r["content_sha"] for r in feats)
 
 
-def test_autoprofile_suite(typed_small):
-    from data_profiler_spark.operators.autoprofile import build_suite_from_profile
-    from data_profiler_spark.operators.profile import profile
-    from data_profiler_spark.validator import Validator
-
-    (tp,) = profile(
-        typed_small,
-        columns=["ints", "floats", "cat"],
-        categorical_columns=["cat"],
-        approx_distinct=False,
-    )
-    suite = build_suite_from_profile(tp)
-    types = {c.type for c in suite.constraints}
-    assert "expect_column_values_to_not_be_null" in types
-    assert "expect_column_distinct_values_to_be_in_set" in types
-    assert "expect_column_mean_to_be_between" in types
-    # the auto suite must PASS on the data it was built from
-    res = Validator(typed_small).validate(suite)
-    failed = [r for r in res.results if not r.success]
-    assert failed == [], [(r.constraint_type, r.kwargs, r.observed_value) for r in failed]
-
-
-def test_autoprofile_option_surface(typed_small):
-    """UserConfigurableProfiler option parity (VERDICT r2 #7; ref
-    user_configurable_profiler.py:56-147, 688-924, 1104-1133)."""
-    from data_profiler_spark.operators.autoprofile import build_suite_from_profile
-    from data_profiler_spark.operators.profile import profile
-    from data_profiler_spark.validator import Validator
-
-    (tp,) = profile(
-        typed_small,
-        columns=["ints", "floats", "cat"],
-        categorical_columns=["cat"],
-        approx_distinct=False,
-    )
-
-    # table_expectations_only -> exactly the two table-level expectations
-    t_only = build_suite_from_profile(tp, table_expectations_only=True)
-    assert sorted(c.type for c in t_only.constraints) == [
-        "expect_table_columns_to_match_set",
-        "expect_table_row_count_to_equal",
-    ]
-    assert Validator(typed_small).validate(t_only).success
-
-    # primary_or_compound_key: compound -> compound uniqueness, no per-column
-    key_suite = build_suite_from_profile(
-        tp, primary_or_compound_key=["ints", "cat"]
-    )
-    types = [c.type for c in key_suite.constraints]
-    assert "expect_compound_columns_to_be_unique" in types
-    single = build_suite_from_profile(tp, primary_or_compound_key=["cat"])
-    assert "expect_column_values_to_be_unique" in [
-        c.type for c in single.constraints
-    ]
-
-    # semantic_types_dict: VALUE_SET -> row-level in_set pinned to domain;
-    # NUMERIC bounds only for declared numeric columns
-    sem = build_suite_from_profile(
-        tp,
-        semantic_types_dict={"numeric": ["ints"], "value_set": ["cat"]},
-    )
-    by_type: dict[str, list] = {}
-    for c in sem.constraints:
-        by_type.setdefault(c.type, []).append(c.kwargs)
-    in_set = by_type["expect_column_values_to_be_in_set"]
-    assert in_set and in_set[0]["column"] == "cat"
-    assert sorted(in_set[0]["value_set"]) == ["a", "b", "c"]
-    numeric_cols = {k["column"] for k in by_type.get("expect_column_mean_to_be_between", [])}
-    assert numeric_cols == {"ints"}
-    res = Validator(typed_small).validate(sem)
-    assert [r for r in res.results if not r.success] == []
-
-    # invalid semantic type / threshold raise
-    with pytest.raises(ValueError):
-        build_suite_from_profile(tp, semantic_types_dict={"nope": ["cat"]})
-    with pytest.raises(ValueError):
-        build_suite_from_profile(tp, value_set_threshold="sometimes")
-
-    # excluded_expectations filters; not_null_only never emits be_null
-    excl = build_suite_from_profile(
-        tp, excluded_expectations=["expect_column_mean_to_be_between"]
-    )
-    assert "expect_column_mean_to_be_between" not in {c.type for c in excl.constraints}
-    nn = build_suite_from_profile(tp, not_null_only=True)
-    assert "expect_column_values_to_be_null" not in {c.type for c in nn.constraints}
-
-
 def test_splitters_samplers(spark):
     from data_profiler_spark.sources import splitters as S
 
@@ -350,208 +263,6 @@ def test_kmeans_refined_collects_once_per_iteration(spark, monkeypatch):
     assert list(refined.ids) == list(range(8))
     assert refined.vecs.shape == (8, 8)
     assert not np.allclose(refined.vecs, seed.vecs)
-
-
-def test_autoprofile_numeric_pinned_stats(typed_small):
-    """VERDICT r3 #9: the reference pins median / stdev / quantile values
-    at [.05,.25,.5,.75,.95] for numeric columns
-    (basic_dataset_profiler.py:180-207) — the auto suite must emit all
-    three from the existing profile sketch and pass self-validation."""
-    from data_profiler_spark.operators.autoprofile import build_suite_from_profile
-    from data_profiler_spark.operators.profile import profile
-    from data_profiler_spark.validator import Validator
-
-    (tp,) = profile(
-        typed_small, columns=["ints", "floats"], approx_distinct=False
-    )
-    suite = build_suite_from_profile(tp)
-    by_type: dict[str, list] = {}
-    for c in suite.constraints:
-        by_type.setdefault(c.type, []).append(c.kwargs)
-    for t in [
-        "expect_column_min_to_be_between",
-        "expect_column_max_to_be_between",
-        "expect_column_mean_to_be_between",
-        "expect_column_stdev_to_be_between",
-        "expect_column_median_to_be_between",
-        "expect_column_quantile_values_to_be_between",
-    ]:
-        assert {k["column"] for k in by_type[t]} == {"ints", "floats"}, t
-    qr = by_type["expect_column_quantile_values_to_be_between"][0][
-        "quantile_ranges"
-    ]
-    assert qr["quantiles"] == [0.05, 0.25, 0.5, 0.75, 0.95]
-    assert len(qr["value_ranges"]) == 5
-    assert all(lo <= hi for lo, hi in qr["value_ranges"])
-    res = Validator(typed_small).validate(suite)
-    failed = [r for r in res.results if not r.success]
-    assert failed == [], [(r.constraint_type, r.kwargs) for r in failed]
-
-
-# ===========================================================================
-# BasicDatasetProfiler shape parity (VERDICT r4 #9;
-# ref basic_dataset_profiler.py:129-330)
-# ===========================================================================
-
-# Independent transcription of the reference's per-(type, cardinality)
-# expectation table. _COMMON prefixes every column class (:156-160).
-_COMMON = [
-    "expect_column_values_to_not_be_null",
-    "expect_column_values_to_be_in_set",
-]
-_DESCRIBE = [
-    "expect_column_min_to_be_between",
-    "expect_column_max_to_be_between",
-    "expect_column_mean_to_be_between",
-    "expect_column_median_to_be_between",
-]
-_REF_BASIC_TABLE = {
-    # INT (:161-213)
-    ("INT", "UNIQUE"): ["expect_column_values_to_be_unique"],
-    ("INT", "ONE"): ["expect_column_distinct_values_to_be_in_set"],
-    ("INT", "TWO"): ["expect_column_distinct_values_to_be_in_set"],
-    ("INT", "VERY_FEW"): ["expect_column_distinct_values_to_be_in_set"],
-    ("INT", "FEW"): ["expect_column_distinct_values_to_be_in_set"],
-    ("INT", "MANY"): _DESCRIBE + [
-        "expect_column_stdev_to_be_between",
-        "expect_column_quantile_values_to_be_between",
-        "expect_column_kl_divergence_to_be_less_than",
-    ],
-    ("INT", "VERY_MANY"): _DESCRIBE + [
-        "expect_column_stdev_to_be_between",
-        "expect_column_quantile_values_to_be_between",
-        "expect_column_kl_divergence_to_be_less_than",
-    ],
-    ("INT", "NONE"): [],
-    # FLOAT (:215-249) — no stdev
-    ("FLOAT", "UNIQUE"): ["expect_column_values_to_be_unique"],
-    ("FLOAT", "VERY_FEW"): ["expect_column_distinct_values_to_be_in_set"],
-    ("FLOAT", "FEW"): ["expect_column_distinct_values_to_be_in_set"],
-    ("FLOAT", "MANY"): _DESCRIBE + [
-        "expect_column_quantile_values_to_be_between",
-        "expect_column_kl_divergence_to_be_less_than",
-    ],
-    ("FLOAT", "VERY_MANY"): _DESCRIBE + [
-        "expect_column_quantile_values_to_be_between",
-        "expect_column_kl_divergence_to_be_less_than",
-    ],
-    ("FLOAT", "NONE"): [],
-    # STRING (:251-270) — whitespace regex always, no numeric describe
-    ("STRING", "UNIQUE"): [
-        "expect_column_values_to_not_match_regex",
-        "expect_column_values_to_be_unique",
-    ],
-    ("STRING", "VERY_FEW"): [
-        "expect_column_values_to_not_match_regex",
-        "expect_column_distinct_values_to_be_in_set",
-    ],
-    ("STRING", "MANY"): ["expect_column_values_to_not_match_regex"],
-    ("STRING", "VERY_MANY"): ["expect_column_values_to_not_match_regex"],
-    # DATETIME (:272-305) — min/max always, NO unique even at UNIQUE
-    ("DATETIME", "UNIQUE"): _DESCRIBE[:2],
-    ("DATETIME", "VERY_FEW"): _DESCRIBE[:2] + [
-        "expect_column_distinct_values_to_be_in_set"
-    ],
-    ("DATETIME", "MANY"): _DESCRIBE[:2],
-    # BOOLEAN / UNKNOWN (:307-330)
-    ("BOOLEAN", "TWO"): ["expect_column_distinct_values_to_be_in_set"],
-    ("BOOLEAN", "UNIQUE"): ["expect_column_values_to_be_unique"],
-    ("UNKNOWN", "MANY"): [],
-    ("UNKNOWN", "FEW"): ["expect_column_distinct_values_to_be_in_set"],
-}
-
-
-@pytest.mark.parametrize("ptype,card", sorted(_REF_BASIC_TABLE))
-def test_basic_shape_matches_reference_table(ptype, card):
-    from data_profiler_spark.operators.autoprofile import basic_expectation_shape
-
-    assert basic_expectation_shape(ptype, card) == _COMMON + _REF_BASIC_TABLE[
-        (ptype, card)
-    ]
-
-
-def test_basic_shape_rejects_unknown_class():
-    from data_profiler_spark.operators.autoprofile import basic_expectation_shape
-
-    with pytest.raises(ValueError):
-        basic_expectation_shape("DOUBLE", "MANY")
-    with pytest.raises(ValueError):
-        basic_expectation_shape("INT", "SOME")
-
-
-def test_basic_suite_end_to_end(spark):
-    """build_basic_suite_from_profile over a mixed-type frame: per-column
-    expectation lists match the reference table for the classified
-    (type, cardinality), and the observe-only suite validates green."""
-    import datetime as dt
-
-    import pyspark.sql.types as T
-
-    from data_profiler_spark.operators.autoprofile import (
-        basic_expectation_shape,
-        build_basic_suite_from_profile,
-        classify_cardinality,
-        classify_profiler_type,
-    )
-    from data_profiler_spark.operators.profile import profile
-    from data_profiler_spark.validator import Validator
-
-    n = 120
-    rows = [
-        (
-            i,                                    # id: INT UNIQUE
-            i % 3,                                # int_few: INT VERY_FEW
-            float(i) + 0.5,                       # flt: FLOAT UNIQUE-ish
-            f"s{i % 4}",                          # cat: STRING VERY_FEW
-            dt.datetime(2024, 1, 1) + dt.timedelta(hours=i),  # ts: DATETIME
-            i % 2 == 0,                           # flag: BOOLEAN TWO
-        )
-        for i in range(n)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("int_few", T.IntegerType()),
-            T.StructField("flt", T.DoubleType()),
-            T.StructField("cat", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("flag", T.BooleanType()),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    (tp,) = profile(df, approx_distinct=False, categorical_columns=["cat"])
-
-    suite = build_basic_suite_from_profile(tp)
-    types = [c.type for c in suite.constraints]
-    # table-level pair first (ref :134-135)
-    assert types[:2] == [
-        "expect_table_row_count_to_be_between",
-        "expect_table_columns_to_match_ordered_list",
-    ]
-    # per-column lists match the reference table for the classified class
-    by_col: dict[str, list[str]] = {}
-    for c in suite.constraints[2:]:
-        by_col.setdefault(c.kwargs["column"], []).append(c.type)
-    for colname, cp in tp.columns.items():
-        expected = basic_expectation_shape(
-            classify_profiler_type(cp.spark_type), classify_cardinality(cp)
-        )
-        # KL may be dropped when the profile has no sketch for the column
-        got = by_col.get(colname, [])
-        assert got == expected or got == [
-            t for t in expected
-            if t != "expect_column_kl_divergence_to_be_less_than"
-        ], colname
-    assert classify_profiler_type(tp.columns["id"].spark_type) == "INT"
-    assert classify_cardinality(tp.columns["id"]) == "UNIQUE"
-    assert classify_profiler_type(tp.columns["ts"].spark_type) == "DATETIME"
-    assert classify_profiler_type(tp.columns["flag"].spark_type) == "BOOLEAN"
-    assert classify_cardinality(tp.columns["flag"]) == "TWO"
-
-    # observe-only semantics: the whole suite is green on its own data
-    res = Validator(df).validate(suite)
-    failed = [r for r in res.results if not r.success]
-    assert failed == [], [(r.constraint_type, r.kwargs) for r in failed]
 
 
 def test_kmeans_centroids_are_lowest_id_rows(spark):
