@@ -33,6 +33,8 @@ per-row Python.
 from __future__ import annotations
 
 import json
+import numbers
+import operator
 import re
 from functools import reduce
 from typing import Any, Callable
@@ -391,24 +393,58 @@ def c_not_like_list(constraint: Constraint, df: DataFrame, ctx: dict) -> Compile
     return _std_map(constraint, df, ~comb)
 
 
+def _length_bound(col: Column, op: Callable[[Column, Any], Column], bound: Any) -> Column:
+    """``op(length(col), bound)`` as the CASE chain ``c_length_between``
+    describes: decided from the byte length, counting characters last."""
+    if not isinstance(bound, numbers.Real):
+        # 4 * bound must be the number four times the bound, not a repeat
+        raise TypeError(f"a length bound must be a number, got {bound!r}")
+    nbytes = F.octet_length(col)
+    upper = op in (operator.lt, operator.le)
+    passes_at, needs_at = (bound, 4 * bound) if upper else (4 * bound, bound)
+    return (
+        F.when(op(nbytes, passes_at), True)
+        .when(~op(nbytes, needs_at), False)
+        .otherwise(op(F.length(col), bound))
+    )
+
+
 @register("expect_column_value_lengths_to_be_between")
 def c_length_between(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
-    """ref: column_value_lengths.py:174-207."""
+    """ref: column_value_lengths.py:174-207, each bound decided from the
+    byte length where it can.
+
+    Spark's ``length`` (``UTF8String.numChars``) walks every byte and
+    counts one character per 1-4 bytes (an invalid lead byte counts as
+    one), so for every string ``chars <= bytes <= 4*chars``. An upper bound
+    passes when ``op(bytes, bound)`` and fails unless ``op(bytes, 4*bound)``;
+    a lower bound passes when ``op(bytes, 4*bound)`` and fails unless
+    ``op(bytes, bound)``. Only the values in between count characters. This
+    holds for float, negative and strict bounds, and a binary column's
+    length is its byte length. ``length`` sits alone in each bound's last
+    CASE branch because subexpression elimination hoists only what every
+    branch evaluates, so the character count is never computed up front.
+    A NULL stays NULL."""
     kw = constraint.kwargs
-    ln = F.length(F.col(kw["column"]))
+    col = F.col(kw["column"])
     conds = []
     if kw.get("min_value") is not None:
-        conds.append(ln > kw["min_value"] if kw.get("strict_min") else ln >= kw["min_value"])
+        op = operator.gt if kw.get("strict_min") else operator.ge
+        conds.append(_length_bound(col, op, kw["min_value"]))
     if kw.get("max_value") is not None:
-        conds.append(ln < kw["max_value"] if kw.get("strict_max") else ln <= kw["max_value"])
+        op = operator.lt if kw.get("strict_max") else operator.le
+        conds.append(_length_bound(col, op, kw["max_value"]))
     expected = reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
     return _std_map(constraint, df, expected)
 
 
 @register("expect_column_value_lengths_to_equal")
 def c_length_equal(constraint: Constraint, df: DataFrame, ctx: dict) -> CompiledConstraint:
+    """Both bounds at ``value``."""
     kw = constraint.kwargs
-    return _std_map(constraint, df, F.length(F.col(kw["column"])) == kw["value"])
+    col, v = F.col(kw["column"]), kw["value"]
+    expected = _length_bound(col, operator.ge, v) & _length_bound(col, operator.le, v)
+    return _std_map(constraint, df, expected)
 
 
 _STRFTIME_TO_SPARK = {

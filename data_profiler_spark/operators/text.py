@@ -34,7 +34,7 @@ def token_count(col: Column) -> Column:
     string on \\s+ leaves no interior/edge empties, so size(split(trim))
     counts tokens exactly (empty/blank input special-cased to 0)."""
     t = F.trim(col)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
+    return F.when(F.octet_length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, TOKEN_PATTERN))
     )
 

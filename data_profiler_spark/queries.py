@@ -832,7 +832,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     c = F.col("text")
     n_chars = F.length(c)
-    return d.where(F.length(c) > 0).select(
+    return d.where(F.octet_length(c) > 0).select(
         "doc_id",
         n_chars.cast("long").alias("n_chars"),
         F.size(F.split(F.trim(c), r"\s+")).cast("long").alias("n_tokens"),

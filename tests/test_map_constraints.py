@@ -114,6 +114,55 @@ def test_value_lengths(typed_small, pdf):
     assert r2.success is True
 
 
+def test_value_lengths_exact(spark):
+    """The length checks decide most values from the byte length and count
+    characters only in between; per value they agree with Python ``len``
+    on 1- to 4-byte characters, NULL and "", for every bound and strict
+    flag, and with the byte count on a binary column."""
+    import itertools
+
+    import pyspark.sql.types as T
+
+    chars = ["a", "é", "€", "😀"]
+    words = [""] + ["".join(p) for n in (1, 2, 3) for p in itertools.product(chars, repeat=n)]
+    words += [c * n for c in chars for n in range(4, 11)] + [None]
+    df = spark.createDataFrame(
+        [(i, w, None if w is None else bytearray(w.encode())) for i, w in enumerate(words)],
+        T.StructType([
+            T.StructField("i", T.IntegerType()),
+            T.StructField("s", T.StringType()),
+            T.StructField("b", T.BinaryType()),
+        ]),
+    )
+    sizes = {"s": len, "b": lambda w: len(w.encode())}
+    sweeps = {"s": [None, 0, 2, 2.5, 3, 4.5, 8, -1], "b": [None, 2, 4.5]}
+    suite, oracle = ConstraintSuite("lengths"), []
+    for column, bounds in sweeps.items():
+        for lo, hi, smin, smax in itertools.product(bounds, bounds, (False, True), (False, True)):
+            suite.add("expect_column_value_lengths_to_be_between", column=column,
+                      min_value=lo, max_value=hi, strict_min=smin, strict_max=smax)
+            oracle.append(lambda n, lo=lo, hi=hi, smin=smin, smax=smax: (
+                (lo is None or (n > lo if smin else n >= lo))
+                and (hi is None or (n < hi if smax else n <= hi))
+            ))
+        for v in (1, 3, 3.0):
+            suite.add("expect_column_value_lengths_to_equal", column=column, value=v)
+            oracle.append(lambda n, v=v: n == v)
+    results = Validator(df).validate(suite, group_by=["i"]).results
+    got = {(r.constraint_id, r.group["i"]): r for r in results}
+    mismatches = []
+    for c, ok in zip(suite.constraints, oracle):
+        for i, w in enumerate(words):
+            r = got[(c.id, i)]
+            want = (0, 1) if w is None else (int(not ok(sizes[c.kwargs["column"]](w))), 0)
+            if (r.unexpected_count, r.missing_count) != want:
+                mismatches.append((c.type, c.kwargs, w))
+    assert len(suite.constraints) == (8 * 8 + 3 * 3) * 4 + 2 * 3
+    assert mismatches == []
+    r = run_one(df, "expect_column_value_lengths_to_be_between", column="s", max_value="3")
+    assert r.success is False and "TypeError" in (r.exception_info or "")
+
+
 def test_strftime(typed_small, pdf):
     r = run_one(
         typed_small, "expect_column_values_to_match_strftime_format",

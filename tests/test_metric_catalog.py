@@ -7,11 +7,12 @@ is the one place a ``ConstraintResult`` is built."""
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 from data_profiler_spark.core.suite import ConstraintSuite
 from data_profiler_spark.plans import fused
-from data_profiler_spark.plans.fused import dedup_terms, metric_term
+from data_profiler_spark.plans.fused import dedup_terms, metric_alias, metric_term
 from data_profiler_spark.validator import Validator
 
 PACKAGE = Path(__file__).resolve().parents[1] / "data_profiler_spark"
@@ -126,9 +127,11 @@ def test_north_plan(spark):
     over ``code_table.LANGS``) fuses 18 terms: the shared row count, 2
     missing and 2 unexpected terms of the null and length checks, the
     missing terms of the unique and referential checks, and 9 value counts,
-    the unlisted remainder and the non-null count of the drift check. Its
-    two post passes, uniqueness and referential, read no fused metric, so
-    both start alongside the fused pass."""
+    the unlisted remainder and the non-null count of the drift check. The
+    length check reads each value's byte length and counts its characters
+    only when the byte length cannot decide a bound. Its two post passes,
+    uniqueness and referential, read no fused metric, so both start
+    alongside the fused pass."""
     from data_profiler_spark.core.session import local_frame
     from data_profiler_spark.sources.code_table import LANG_WEIGHTS, LANGS
 
@@ -153,6 +156,14 @@ def test_north_plan(spark):
     )
     compiled = _compile_jobless(spark, files, suite, {"commits": commits})
     assert len(dedup_terms(compiled)) == 18
+    length = compiled[1]
+    (unexpected,) = [t for t in length.agg_terms if t.alias == metric_alias(
+        "unexpected_count", constraint_id=length.constraint.id)]
+    sql = str(unexpected.column)
+    assert "octet_length(content)" in sql
+    # the per-row character count runs only in each bound's last CASE branch
+    assert len(re.findall(r"(?<!octet_)length\(content\)", sql)) == 2
+    assert re.findall(r"(\w+) [<>]=?\(length\(content\)", sql) == ["ELSE", "ELSE"]
     post = [(c.constraint.type, c.post_pass_needs_metrics)
             for c in compiled if c.post_pass_fn is not None]
     assert post == [("expect_compound_columns_to_be_unique", False),
